@@ -27,6 +27,18 @@ from pdf_extractor_spark.functions.query_catalog import CATALOG  # noqa: E402
 from pdf_extractor_spark.plans.session import build_session  # noqa: E402
 
 
+def latest_full_record(root: pathlib.Path) -> list[pathlib.Path]:
+    """The ``BENCH_FULL_R<n>.json`` under ``root`` with the highest
+    round number ``n`` (R10 is newer than R5), as a list of at most
+    one path."""
+    rounds = []
+    for p in root.glob("BENCH_FULL_R*.json"):
+        n = p.stem[len("BENCH_FULL_R"):]
+        if n.isdigit():
+            rounds.append((int(n), p))
+    return [max(rounds)[1]] if rounds else []
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -103,11 +115,7 @@ def main() -> None:
     ref_path = os.environ.get("SPARK_GRAFT_BENCH_REF")
     candidates = (
         [pathlib.Path(ref_path)] if ref_path
-        else sorted(
-            pathlib.Path(__file__).resolve().parent.glob(
-                "BENCH_FULL_R*.json"
-            )
-        )[-1:]
+        else latest_full_record(pathlib.Path(__file__).resolve().parent)
     )
     for ref_file in candidates:
         try:

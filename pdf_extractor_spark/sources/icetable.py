@@ -24,10 +24,12 @@ Iceberg, Delta, Hudi — shares, reimplemented over plain files):
   skipping, and the reason a 10^12-row table with a time-clustered
   layout (see ``functions/zorder.py``) answers host- or time-scoped
   queries from a sliver of its files.
-- **MERGE is copy-on-write**: only files whose key RANGE overlaps
-  the incoming keys are rewritten (manifest pruning applied to the
-  write side); untouched files carry over into the new snapshot by
-  reference.
+- **MERGE is copy-on-write**: the incoming rows are written as data
+  files first, and the merge is planned from THEIR footers: only
+  files whose key RANGE overlaps the incoming [min, max] are
+  rewritten (manifest pruning applied to the write side); untouched
+  files carry over into the new snapshot by reference. One atomic
+  flip commits the carried-over, rewritten and incoming files.
 
 Deliberately minimal: single table version lineage (optimistic
 last-writer-wins with a staleness check), no partition spec (the
@@ -40,12 +42,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class CommitConflict(RuntimeError):
@@ -252,6 +254,14 @@ def read_table(
     return spark.read.parquet(*[e["path"] for e in files])
 
 
+def _drop_empty(entries: list[dict]) -> list[dict]:
+    """Delete zero-row data files and return the remaining entries."""
+    for e in entries:
+        if not e["n_rows"]:
+            os.remove(e["path"])
+    return [e for e in entries if e["n_rows"]]
+
+
 def merge_upsert(
     spark: SparkSession,
     df: DataFrame,
@@ -259,36 +269,47 @@ def merge_upsert(
     key: str,
     stat_cols: list[str],
 ) -> int:
-    """Copy-on-write MERGE on ``key``: files whose [min, max] key
-    range overlaps the incoming keys are rewritten without their
-    matched rows; all other files carry over BY REFERENCE. Incoming
-    rows are appended as new files. One atomic snapshot flip."""
+    """Copy-on-write MERGE on ``key``. The incoming rows are written
+    as data files FIRST, so ``df`` is evaluated exactly once; the
+    merge is then planned from those files: the incoming key range
+    [lo, hi] comes from their footer stats, files whose key range
+    overlaps it are rewritten without the rows whose key was just
+    written, and all other files carry over BY REFERENCE. One atomic
+    snapshot flip commits untouched + survivors + incoming; a crash
+    before it leaves only unreferenced files for
+    :func:`remove_orphan_files`."""
     parent = current_snapshot_id(path)
     manifest = read_snapshot(path)["manifest"]
-    lo, hi = df.agg(
-        F.min(key).alias("lo"), F.max(key).alias("hi")
-    ).collect()[0]
-    touched = [
-        e for e in manifest if _overlaps(e["stats"].get(key), lo, hi)
-    ]
+    incoming = _drop_empty(_write_data_files(df, path, stat_cols))
+    ranges = [e["stats"].get(key) for e in incoming]
+    if not all(ranges):
+        touched = manifest  # no stats: cannot prune (fail-safe)
+    elif ranges:
+        lo = min(r["min"] for r in ranges)
+        hi = max(r["max"] for r in ranges)
+        touched = [
+            e for e in manifest
+            if _overlaps(e["stats"].get(key), lo, hi)
+        ]
+    else:
+        touched = []  # empty batch
     # set-difference on file paths: a list-membership scan is O(n^2)
     # dict compares, quadratic at production manifest sizes
     touched_paths = {e["path"] for e in touched}
     untouched = [
         e for e in manifest if e["path"] not in touched_paths
     ]
-    new_entries = []
+    survivors = []
     if touched:
         old = spark.read.parquet(*[e["path"] for e in touched])
-        keys = df.select(key).distinct()
-        survivors = old.join(keys, key, "left_anti")
-        if survivors.limit(1).count() > 0:
-            new_entries += _write_data_files(
-                survivors, path, stat_cols
-            )
-    new_entries += _write_data_files(df, path, stat_cols)
+        keys = spark.read.parquet(
+            *[e["path"] for e in incoming]
+        ).select(key)
+        survivors = _drop_empty(_write_data_files(
+            old.join(keys, key, "left_anti"), path, stat_cols
+        ))
     return _commit(
-        path, untouched + new_entries, parent, "merge"
+        path, untouched + survivors + incoming, parent, "merge"
     )
 
 
@@ -329,7 +350,6 @@ N_CHUNKS = 5
 
 
 def table_pruning_catalog(spark, sf_dir: str):
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
@@ -588,9 +608,8 @@ def remove_orphan_files(
         f = os.path.join(path, name)
         if name.startswith("_staging-") and os.path.isdir(f) \
                 and _old(f):
-            for leftover in os.listdir(f):
-                os.remove(os.path.join(f, leftover))
-            os.rmdir(f)
+            # a writer killed mid-write leaves _temporary/ subtrees
+            shutil.rmtree(f)
             counts["staging_removed"] += 1
     return counts
 

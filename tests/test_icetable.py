@@ -195,6 +195,60 @@ class TestExtractToTable:
         assert ops == ["create", "append", "merge"]
 
 
+def _counted(spark, df):
+    """``df`` behind an identity mapInPandas that adds each batch's
+    row count to an accumulator: the accumulator then counts how many
+    rows of ``df`` were evaluated, summed over every evaluation."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_batches(batches):
+        for b in batches:
+            acc.add(len(b))
+            yield b
+
+    return df.mapInPandas(count_batches, df.schema), acc
+
+
+class TestOnePassUpsert:
+    """merge_upsert evaluates the incoming frame exactly once: the
+    written data files, not re-runs of the frame, plan the merge."""
+
+    def test_merge_upsert_evaluates_incoming_once(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        it.create_table(_df(spark, 0, 100), path, STATS)
+        incoming, acc = _counted(spark, _df(spark, 40, 60, host="new.com"))
+        it.merge_upsert(spark, incoming, path, "doc_id", STATS)
+        assert acc.value == 20
+        got = it.read_table(spark, path)
+        assert got.count() == 100
+        assert got.where("host = 'new.com'").count() == 20
+
+    def test_extract_to_table_upsert_extracts_once(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from pdf_extractor_spark.fixtures.corpus import build_pages_frame
+        from pdf_extractor_spark.plans import pipeline
+        from pdf_extractor_spark.sources.pages import pages_from_pandas
+
+        path = str(tmp_path / "extracted")
+        w1 = build_pages_frame().iloc[:10]
+        it.extract_to_table(spark, pages_from_pandas(spark, w1), path, 2)
+        real = pipeline.extract_pages
+        accs = []
+
+        def counted_extract(*a, **k):
+            df, acc = _counted(spark, real(*a, **k))
+            accs.append(acc)
+            return df
+
+        monkeypatch.setattr(pipeline, "extract_pages", counted_extract)
+        it.extract_to_table(
+            spark, pages_from_pandas(spark, w1), path, 2, upsert=True
+        )
+        assert [a.value for a in accs] == [10]
+        assert it.read_table(spark, path).count() == 10
+
+
 class TestMaintenance:
     def test_compact_is_data_neutral(self, spark, tmp_path):
         path = str(tmp_path / "t")
@@ -400,6 +454,45 @@ class TestTornCommitChaos:
         it.merge_upsert(spark, incoming, path, "doc_id", STATS)
         self._assert_exactly_once(spark, path)
 
+    def test_incoming_without_key_stats_rewrites_every_file(
+        self, spark, tmp_path, monkeypatch
+    ):
+        path = str(tmp_path / "t")
+        it.create_table(_df(spark, 0, 25), path, STATS)
+        for lo in (25, 50, 75):
+            it.append(_df(spark, lo, lo + 25), path, STATS)
+        before = {e["path"] for e in it.plan_files(path)}
+        # files written from here on carry no footer stats: the merge
+        # cannot know the incoming key range, so nothing may be pruned
+        monkeypatch.setattr(it, "_file_stats", lambda fpath, cols: {})
+        it.merge_upsert(
+            spark, _df(spark, 40, 60, host="new.com"), path, "doc_id", STATS
+        )
+        after = {e["path"] for e in it.plan_files(path)}
+        assert not before & after  # all four files rewritten
+        self._assert_exactly_once(spark, path)
+
+    def test_fully_replaced_file_leaves_no_empty_file(
+        self, spark, tmp_path
+    ):
+        import pyarrow.parquet as pq
+
+        path = str(tmp_path / "t")
+        it.create_table(_df(spark, 0, 40), path, STATS)
+        it.append(_df(spark, 40, 60), path, STATS)
+        it.append(_df(spark, 60, 100), path, STATS)
+        # every row of the 40..59 file is replaced: its rewrite is empty
+        it.merge_upsert(
+            spark, _df(spark, 40, 60, host="new.com"), path, "doc_id", STATS
+        )
+        self._assert_exactly_once(spark, path)
+        manifest = it.read_snapshot(path)["manifest"]
+        assert len(manifest) == 3
+        assert all(e["n_rows"] > 0 for e in manifest)
+        ddir = it._data_dir(path)
+        for name in os.listdir(ddir):
+            assert pq.ParquetFile(os.path.join(ddir, name)).metadata.num_rows
+
 
 class TestRemoveOrphanFiles:
     """remove_orphan_files: the cleanup pass that makes torn-commit
@@ -475,6 +568,21 @@ class TestRemoveOrphanFiles:
         got = it.read_table(spark, path)
         assert got.count() == 100
         assert got.where("host = 'new.com'").count() == 20
+
+    def test_nested_staging_tree_is_removed(self, spark, tmp_path):
+        # a writer killed mid-write leaves the committer's _temporary/
+        # subtree under its staging dir
+        path = str(tmp_path / "t")
+        it.create_table(_df(spark, 0, 10), path, STATS)
+        stag = os.path.join(path, "_staging-dead")
+        task = os.path.join(stag, "_temporary", "0", "_temporary", "t0")
+        os.makedirs(task)
+        with open(os.path.join(task, "part-0.parquet"), "wb") as fh:
+            fh.write(b"partial")
+        counts = it.remove_orphan_files(path, grace_sec=0)
+        assert counts["staging_removed"] == 1
+        assert not os.path.exists(stag)
+        assert it.read_table(spark, path).count() == 10
 
 
 def test_commit_conflict_retry_succeeds(spark, tmp_path):
