@@ -157,20 +157,23 @@ def _collect_frames(
     data: bytes,
     pos: int,
     end: int,
+    video: tuple[bytes, bytes],
     frames: list[bytes],
     audio: list[bytes] | None = None,
 ) -> None:
     """Video (and, when requested, audio) chunks from a movi body,
     descending into ``LIST 'rec '`` groups (interleave muxers batch
     one frame-time of chunks per rec list); JUNK/other chunks are
-    skipped."""
+    skipped. ``video`` holds the video stream's chunk ids."""
     for fourcc, body, size in _iter_chunks(data, pos, end):
-        if fourcc in (b"00dc", b"00db"):
+        if fourcc in video:
             frames.append(data[body : body + size])
         elif audio is not None and fourcc[2:4] == b"wb":
             audio.append(data[body : body + size])
         elif fourcc == b"LIST" and data[body : body + 4] == b"rec ":
-            _collect_frames(data, body + 4, body + size, frames, audio)
+            _collect_frames(
+                data, body + 4, body + size, video, frames, audio
+            )
 
 
 def _demux(
@@ -178,10 +181,12 @@ def _demux(
 ) -> tuple[list[bytes], list[bytes], dict]:
     """Shared container walk → (video chunks, audio chunks, meta).
 
-    Frames come from the ``00dc``/``00db`` chunks of the movi list in
-    stream order — the idx1 index, when present, is cross-checked but
-    the movi walk is authoritative (real files ship broken indexes;
-    broken MOVI data is unrecoverable either way)."""
+    Frames come from the ``NNdc``/``NNdb`` chunks of the movi list in
+    stream order, NN being the position of the ``vids`` strl in hdrl
+    (muxers may list an ``auds`` stream first). The idx1 index, when
+    present, is cross-checked but the movi walk is authoritative (real
+    files ship broken indexes; broken MOVI data is unrecoverable
+    either way)."""
     if len(payload) < 12 or payload[:4] != b"RIFF":
         raise AviError("not a RIFF file")
     (riff_size,) = struct.unpack_from("<I", payload, 4)
@@ -194,11 +199,14 @@ def _demux(
     a_tag = a_chan = a_rate = 0
     frames: list[bytes] = []
     audio: list[bytes] = []
-    n_indexed = -1
+    v_stream = -1
+    movis: list[tuple[int, int]] = []
+    idx1 = None
     for fourcc, body, size in _iter_chunks(payload, 12, end):
         if fourcc == b"LIST":
             ltype = payload[body : body + 4]
             if ltype == b"hdrl":
+                n_strl = -1
                 for f2, b2, s2 in _iter_chunks(
                     payload, body + 4, body + size
                 ):
@@ -211,6 +219,7 @@ def _demux(
                     elif f2 == b"LIST" and payload[
                         b2 : b2 + 4
                     ] == b"strl":
+                        n_strl += 1
                         s_type = b""
                         for f3, b3, s3 in _iter_chunks(
                             payload, b2 + 4, b2 + s2
@@ -220,6 +229,7 @@ def _demux(
                                     raise AviError("short strh")
                                 s_type = payload[b3 : b3 + 4]
                                 if s_type == b"vids" and not handler:
+                                    v_stream = n_strl
                                     handler = payload[b3 + 4 : b3 + 8]
                                     scale, rate = struct.unpack_from(
                                         "<2I", payload, b3 + 20
@@ -240,17 +250,24 @@ def _demux(
                                     )
                                 )
             elif ltype == b"movi":
-                _collect_frames(
-                    payload, body + 4, body + size, frames, audio
-                )
+                movis.append((body + 4, body + size))
         elif fourcc == b"idx1":
-            n_indexed = sum(
-                1
-                for off in range(body, body + size - 15, 16)
-                if payload[off : off + 4] in (b"00dc", b"00db")
-            )
+            idx1 = (body, size)
     if not handler:
         raise AviError("no vids stream header")
+    # chunk ids name their stream (NNdc/NNdb, NN = the vids strl's
+    # position), so the movi/idx1 scans wait until hdrl has been read
+    video = (b"%02ddc" % v_stream, b"%02ddb" % v_stream)
+    for lo, hi in movis:
+        _collect_frames(payload, lo, hi, video, frames, audio)
+    n_indexed = -1
+    if idx1 is not None:
+        body, size = idx1
+        n_indexed = sum(
+            1
+            for off in range(body, body + size - 15, 16)
+            if payload[off : off + 4] in video
+        )
     if handler not in (b"MJPG", b"mjpg"):
         raise AviError(f"unsupported codec {handler!r}")
     if width <= 0 or height <= 0:

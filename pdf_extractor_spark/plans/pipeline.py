@@ -246,7 +246,7 @@ def partition_pages(
     return normal, oversized
 
 
-def _routing_key(num_partitions: int, cfg: ExtractConfig):
+def _routing_key(cfg: ExtractConfig):
     """Skew-defusing shuffle key, evaluated in ONE scan, at FULL hash
     cardinality.
 
@@ -271,12 +271,25 @@ def _routing_key(num_partitions: int, cfg: ExtractConfig):
     ).otherwise(F.xxhash64("url"))
 
 
+def fan_out(df: DataFrame, num_partitions: int | None) -> int:
+    """Task count of an extraction stage over ``df``: ``num_partitions``
+    when given, else one task per task slot (``defaultParallelism``:
+    all executor cores), so the stage runs ONE Python wave. Every
+    Python task pays a fixed hand-off latency on top of its kernel
+    time, so a second wave costs that latency again on every core."""
+    return num_partitions or df.sparkSession.sparkContext.defaultParallelism
+
+
 def extract_pages(
     pages: DataFrame,
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     cfg: ExtractConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """pages(url, warc_ts, html, ...) → extracted DataFrame.
+
+    ``num_partitions=None`` (the default) routes into one partition per
+    task slot, so the extraction stage runs one Python wave
+    (:func:`fan_out`); an explicit count is honoured as given.
 
     Column-prunes to exactly (url, warc_ts, html) before the exchange so
     the shuffle and the Arrow transfer never carry unused columns. ONE
@@ -287,7 +300,7 @@ def extract_pages(
     """
     pruned = pages.select("url", "warc_ts", "html")
     routed = pruned.repartition(
-        num_partitions, _routing_key(num_partitions, cfg)
+        fan_out(pages, num_partitions), _routing_key(cfg)
     )
     fn = _make_extract_iter(cfg)
     return routed.mapInPandas(fn, OUTPUT_SCHEMA)
@@ -296,11 +309,14 @@ def extract_pages(
 def metrics_from_extracted(extracted: DataFrame) -> DataFrame:
     """Per-partition metrics rollup (FIXTURES.md §6 shape).
 
-    ``batch_ms`` is constant within a (part_id, batch_id) group, so wall
-    time per partition = Σ over distinct batches — a two-level partial
-    aggregation, all map-side combinable.
+    ``batch_ms`` is constant within one Arrow batch, so wall time per
+    partition = Σ over distinct batches — a two-level partial
+    aggregation, all map-side combinable. A batch is keyed by
+    (part_id, batch_id, extracted_at): every extraction call restarts
+    part_id and batch_id at 0, so on a table fed by several calls only
+    the batch's timestamp tells their batches apart.
     """
-    per_batch = extracted.groupBy("part_id", "batch_id").agg(
+    per_batch = extracted.groupBy("part_id", "batch_id", "extracted_at").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.col("ok").cast("long")).alias("n_ok"),
         F.sum((~F.col("ok")).cast("long")).alias("n_failed"),

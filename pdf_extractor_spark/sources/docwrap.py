@@ -203,12 +203,15 @@ def _roundtrip_iter(wrapper):
 def _spread(docs: DataFrame, num_partitions: int | None) -> DataFrame:
     """Hash-repartition by doc id before the Arrow stage — a small
     parquet table arrives as ONE input split, which would serialize the
-    whole extraction onto one task. Same layout rule as the production
+    whole extraction onto one task. Same fan-out rule as the production
     pipeline's url-hash repartition (plans/pipeline.py)."""
-    n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     from pyspark.sql import functions as F
 
-    return docs.select("doc_id", "text").repartition(n, F.col("doc_id"))
+    from ..plans.pipeline import fan_out
+
+    return docs.select("doc_id", "text").repartition(
+        fan_out(docs, num_partitions), F.col("doc_id")
+    )
 
 
 def _html_transport_iter(batches: Iterator[pd.DataFrame]):

@@ -438,11 +438,14 @@ def extract_to_table(
     spark: SparkSession,
     pages: DataFrame,
     table_path: str,
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
     upsert: bool = False,
 ) -> int | None:
     """Resume-aware extraction into a snapshot table. Returns the new
-    snapshot id, or None when nothing new needed extracting."""
+    snapshot id, or None when nothing new needed extracting.
+
+    ``num_partitions=None`` extracts with one task per task slot, so
+    the call runs one Python wave (``plans.pipeline.extract_pages``)."""
     from ..plans.pipeline import extract_pages
 
     exists = os.path.exists(_version_file(table_path))

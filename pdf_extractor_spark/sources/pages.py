@@ -225,12 +225,14 @@ def run_extraction_job(
     pages: DataFrame,
     out_path: str,
     metrics_path: str | None = None,
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
 ) -> None:
     """End-to-end job: resume-filter → extract → append + metrics.
 
     This is the body that ``spark-submit --py-files`` runs on a cluster
-    (``scripts/submit_job.py``).
+    (``scripts/submit_job.py``). ``num_partitions=None`` extracts with
+    one task per task slot, so one Python wave
+    (``plans.pipeline.extract_pages``).
     """
     from ..plans.pipeline import extract_pages, metrics_from_extracted
 

@@ -55,11 +55,13 @@ def stream_extract(
     pages_path: str,
     out_path: str,
     checkpoint_path: str,
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Start an availableNow incremental extraction over a pages
     directory. Returns the query; call ``awaitTermination()``.
+    ``num_partitions=None`` extracts each micro-batch with one task per
+    task slot, so one Python wave (``plans.pipeline.extract_pages``).
 
     New parquet files dropped under ``pages_path`` after a run are
     picked up by the next run; completed files are skipped via the
@@ -88,11 +90,12 @@ def stream_extract_upsert(
     pages_path: str,
     out_path: str,
     checkpoint_path: str,
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
 ) -> StreamingQuery:
     """Re-crawl-aware incremental extraction: the MERGE ``WHEN
     MATCHED`` counterpart of :func:`stream_extract` (which covers only
-    first-crawl inserts). Each micro-batch:
+    first-crawl inserts). ``num_partitions`` defaults to one task per
+    task slot, as there. Each micro-batch:
 
     1. skips rows whose url already exists with a same-or-newer
        ``warc_ts`` (no wasted extraction on stale replays — the skip

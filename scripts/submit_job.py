@@ -36,7 +36,11 @@ def main() -> None:
     ap.add_argument("--pages", required=True, help="pages table path")
     ap.add_argument("--out", required=True, help="extracted output path")
     ap.add_argument("--metrics", default=None, help="metrics output path")
-    ap.add_argument("--partitions", type=int, default=32)
+    ap.add_argument(
+        "--partitions", type=int, default=None,
+        help="extraction tasks (default: one per task slot, so one "
+             "Python wave)",
+    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

@@ -298,6 +298,55 @@ class TestAudioStream:
         with pytest.raises(AviError, match="without an auds"):
             avi_demux(bytes(rebuilt))
 
+    @staticmethod
+    def _audio_listed_first(avi: bytes) -> bytes:
+        """Re-mux a video-first A/V file with its auds strl listed
+        first: the two strl lists swap places in hdrl, and the chunk
+        ids follow their streams (00dc → 01dc, 01wb → 00wb) in movi
+        and idx1."""
+        from pdf_extractor_spark.operators.avi_codec import _iter_chunks
+
+        out = bytearray(avi)
+        hdrl = avi.find(b"hdrl")
+        (hsize,) = struct.unpack_from("<I", avi, hdrl - 4)
+        (v_lo, v_hi), (a_lo, a_hi) = [
+            (body - 8, body + size + (size & 1))
+            for fourcc, body, size in _iter_chunks(avi, hdrl + 4, hdrl + hsize)
+            if fourcc == b"LIST"
+        ]
+        assert v_hi == a_lo  # adjacent, so the swap keeps every offset
+        out[v_lo:a_hi] = avi[a_lo:a_hi] + avi[v_lo:v_hi]
+        rename = {b"00dc": b"01dc", b"01wb": b"00wb"}
+        movi = avi.find(b"movi")
+        (msize,) = struct.unpack_from("<I", avi, movi - 4)
+        for fourcc, body, _size in _iter_chunks(avi, movi + 4, movi + msize):
+            out[body - 8 : body - 4] = rename[fourcc]
+        idx1 = avi.find(b"idx1", movi + msize)
+        (isize,) = struct.unpack_from("<I", avi, idx1 + 4)
+        for off in range(idx1 + 8, idx1 + 8 + isize, 16):
+            out[off : off + 4] = rename[avi[off : off + 4]]
+        return bytes(out)
+
+    @pytest.mark.parametrize("tag", [1, 7])
+    def test_audio_stream_listed_first_decodes_the_same(self, tag):
+        # the video stream's chunk ids come from its strl position,
+        # not a hard-coded 00dc: an auds-first file demuxes alike
+        from pdf_extractor_spark.operators.avi_codec import (
+            avi_decode_audio_samples,
+            avi_demux,
+        )
+
+        avi, frames, data, _, _ = self._av(tag)
+        swapped = self._audio_listed_first(avi)
+        assert swapped != avi and b"01dc" in swapped
+        vid, audio, meta = avi_demux(swapped)
+        assert (vid, audio, meta) == avi_demux(avi)
+        assert vid == frames and audio == data
+        pcm, _ = avi_decode_audio_samples(swapped)
+        assert np.array_equal(pcm, avi_decode_audio_samples(avi)[0])
+        planes, _ = avi_decode_luma_frames(swapped)
+        assert len(planes) == len(frames)
+
     def test_misaligned_audio_rejected_at_mux(self):
         frames = _flat_jpegs(1, 24, 20)
         with pytest.raises(AviError, match="block-aligned"):

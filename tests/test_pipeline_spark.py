@@ -139,6 +139,78 @@ def test_metrics_invariants(spark, pages_df):
         extracted.unpersist()
 
 
+def test_metrics_rollup_keeps_batches_of_every_call(spark, tmp_path):
+    """Every extraction call restarts part_id and batch_id at 0, so a
+    table fed by two calls holds two batches under each (part_id,
+    batch_id): the rollup must count both calls' batch_ms, keyed by
+    the batch's extracted_at as well."""
+    from pdf_extractor_spark.sources.icetable import (
+        extract_to_table,
+        read_table,
+    )
+
+    frame = build_pages_frame()
+    half = len(frame) // 2
+    table = str(tmp_path / "table")
+    for part in (frame.iloc[:half], frame.iloc[half:]):
+        extract_to_table(spark, pages_from_pandas(spark, part), table)
+    stored = read_table(spark, table)
+    batches = stored.select(
+        "part_id", "batch_id", "extracted_at", "batch_ms"
+    ).distinct().collect()
+    # the two calls do reuse (part_id, batch_id) pairs
+    assert len({(r["part_id"], r["batch_id"]) for r in batches}) \
+        < len(batches)
+    m = metrics_from_extracted(stored).collect()
+    assert sum(r["wall_ms"] for r in m) == sum(r["batch_ms"] for r in batches)
+    assert sum(r["n_docs"] for r in m) == len(frame)
+
+
+def _stage_task_counts(spark, group: str) -> list[int]:
+    """Task count of every stage the jobs of ``group`` ran."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store caught up
+    tracker = sc.statusTracker()
+    infos = [
+        tracker.getStageInfo(stage)
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    return [i.numTasks for i in infos if i is not None]
+
+
+@pytest.mark.parametrize("num_partitions", [None, 3])
+def test_extract_to_table_runs_one_python_wave(
+    spark, tmp_path, num_partitions
+):
+    """The default fan-out is one extraction task per task slot
+    (defaultParallelism), so the MapInPandas stage runs one wave; an
+    explicit count is honoured. The pages table is one parquet file,
+    so every other stage of the call (scan, emptiness probe) has a
+    single task and the MapInPandas stage is the only wider one."""
+    from pdf_extractor_spark.sources.icetable import extract_to_table
+
+    sc = spark.sparkContext
+    write_pages(
+        pages_from_pandas(spark, build_pages_frame()).coalesce(1),
+        str(tmp_path / "pages"),
+    )
+    pages = read_pages(spark, str(tmp_path / "pages"))
+    group = f"one-wave-{num_partitions}"
+    explicit = {} if num_partitions is None else {
+        "num_partitions": num_partitions
+    }
+    sc.setJobGroup(group, "extract_to_table task count")
+    try:
+        extract_to_table(spark, pages, str(tmp_path / "table"), **explicit)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    want = num_partitions or sc.defaultParallelism
+    assert want > 1
+    wide = [n for n in _stage_task_counts(spark, group) if n > 1]
+    assert wide == [want]
+
+
 def test_oversized_docs_routed_separately(spark):
     big_payload = b"<html><body>" + b"<p>" + b"x" * 100 + b"</p>" * 1 + \
         b"y" * (DEFAULT_CONFIG.oversize_bytes + 1024) + b"</body></html>"
@@ -177,9 +249,7 @@ def test_routing_key_balances_partitions(spark):
         ]
     )
     df = pages_from_pandas(spark, frame)
-    routed = df.repartition(
-        n_parts, _routing_key(n_parts, DEFAULT_CONFIG)
-    )
+    routed = df.repartition(n_parts, _routing_key(DEFAULT_CONFIG))
     sizes = routed.rdd.glom().map(len).collect()
     assert len(sizes) == n_parts
     assert min(sizes) > 0, sizes                  # no empty partitions
