@@ -293,24 +293,6 @@ def fixture_audio(doc_id: int) -> bytes:
     return wav_encode(samples, sample_rate=rate)
 
 
-def attach_audio_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, payload binary): a real PCM WAV per row."""
-    return docs.select("doc_id").mapInPandas(
-        lambda batches: (
-            pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "payload": [
-                        fixture_audio(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-            for pdf in batches
-        ),
-        "doc_id long, payload binary",
-    )
-
-
 def audio_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     """Distributed WAV decode (the audio leg of the multimodal
     battery): rate/frames/channels plus the MEASURED sample sum from

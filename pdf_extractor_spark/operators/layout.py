@@ -89,13 +89,3 @@ def column_texts(words: pd.DataFrame, cfg) -> list[str]:
             )
         out.append("\n".join(line_strs))
     return out
-
-
-def group_bands(words: pd.DataFrame, tolerance: float) -> pd.DataFrame:
-    """C3 (reference ``extractor.py:665-689``): horizontal bands by top
-    proximity, used for super/subscript attachment."""
-    w = words.sort_values(["top", "x0"], kind="mergesort").reset_index(
-        drop=True
-    )
-    w["band_id"] = gap_cluster(w["top"], tolerance)
-    return w

@@ -58,16 +58,6 @@ def _chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _filter_row(
     ftype: int, raw: np.ndarray, prev: np.ndarray, bpp: int
 ) -> np.ndarray:

@@ -231,21 +231,6 @@ def _make_extract_iter(cfg: ExtractConfig):
     return extract_iter
 
 
-def partition_pages(
-    pages: DataFrame,
-    num_partitions: int,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-) -> tuple[DataFrame, DataFrame]:
-    """Size classifier — returns the (normal, oversized) split used by
-    the routing key. Kept as an inspectable API; the execution path is
-    :func:`extract_pages`'s single-scan composite key, NOT a physical
-    two-branch plan (which would scan the 100 TB pages table twice)."""
-    size = F.length(F.col("html"))
-    normal = pages.where(size <= cfg.oversize_bytes)
-    oversized = pages.where(size > cfg.oversize_bytes)
-    return normal, oversized
-
-
 def _routing_key(cfg: ExtractConfig):
     """Skew-defusing shuffle key, evaluated in ONE scan, at FULL hash
     cardinality.

@@ -184,13 +184,14 @@ def wrap_pdf_layout(text: str, doc_id: int) -> bytes:
                      ocg_layers=ocg_layers, encrypt=encrypt)
 
 
-def _roundtrip_iter(wrapper):
+def _roundtrip_iter(text_of):
+    """``mapInPandas`` body: ``text_of(doc_id, text)`` per row →
+    (doc_id, extracted_text)."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [wrapper(t) for t in pdf["text"]]
             texts = [
-                extract_document(p, DEFAULT_CONFIG)["extracted_text"]
-                for p in payloads
+                text_of(int(d), t)
+                for d, t in zip(pdf["doc_id"], pdf["text"])
             ]
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"].to_numpy(),
@@ -198,6 +199,10 @@ def _roundtrip_iter(wrapper):
             )
 
     return fn
+
+
+def _extracted_text(payload: bytes) -> str:
+    return extract_document(payload, DEFAULT_CONFIG)["extracted_text"]
 
 
 def _spread(docs: DataFrame, num_partitions: int | None) -> DataFrame:
@@ -214,41 +219,16 @@ def _spread(docs: DataFrame, num_partitions: int | None) -> DataFrame:
     )
 
 
-def _html_transport_iter(batches: Iterator[pd.DataFrame]):
-    for pdf in batches:
-        texts = [
-            extract_document(
-                wrap_html_transport(t, int(d)), DEFAULT_CONFIG
-            )["extracted_text"]
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].to_numpy(),
-             "extracted_text": texts}
-        )
-
-
 def html_roundtrip(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """documents → synth HTML (transport container rotating plain /
     HTTP+gzip / HTTP+chunked / BOM'd UTF-16LE with a lying meta /
     bare-gzip by doc_id) → extract → (doc_id, extracted_text)."""
     return _spread(docs, num_partitions).mapInPandas(
-        _html_transport_iter, ROUNDTRIP_SCHEMA
+        _roundtrip_iter(
+            lambda d, t: _extracted_text(wrap_html_transport(t, d))
+        ),
+        ROUNDTRIP_SCHEMA,
     )
-
-
-def _pdf_layout_iter(batches: Iterator[pd.DataFrame]):
-    for pdf in batches:
-        texts = [
-            extract_document(
-                wrap_pdf_layout(t, int(d)), DEFAULT_CONFIG
-            )["extracted_text"]
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].to_numpy(),
-             "extracted_text": texts}
-        )
 
 
 def pdf_roundtrip(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -256,7 +236,10 @@ def pdf_roundtrip(docs: DataFrame, num_partitions: int | None = None) -> DataFra
     xref-stream / hybrid-reference by doc_id) → extract →
     (doc_id, extracted_text)."""
     return _spread(docs, num_partitions).mapInPandas(
-        _pdf_layout_iter, ROUNDTRIP_SCHEMA
+        _roundtrip_iter(
+            lambda d, t: _extracted_text(wrap_pdf_layout(t, d))
+        ),
+        ROUNDTRIP_SCHEMA,
     )
 
 
@@ -363,20 +346,6 @@ def full_extract_stats(docs: DataFrame, num_partitions: int | None = None) -> Da
     )
 
 
-def _svg_iter(batches: Iterator[pd.DataFrame]):
-    from ..operators.svg_extract import build_svg, svg_extract_text
-
-    for pdf in batches:
-        texts = [
-            svg_extract_text(build_svg(t, int(d)))
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].to_numpy(),
-             "extracted_text": texts}
-        )
-
-
 def svg_roundtrip(docs: DataFrame,
                   num_partitions: int | None = None) -> DataFrame:
     """documents → synth SVG (words on a coordinate grid EMITTED
@@ -385,6 +354,9 @@ def svg_roundtrip(docs: DataFrame,
     extraction (operators/svg_extract.py) → (doc_id,
     extracted_text): the shown text must reassemble byte-identical
     from geometry, not document order."""
+    from ..operators.svg_extract import build_svg, svg_extract_text
+
     return _spread(docs, num_partitions).mapInPandas(
-        _svg_iter, ROUNDTRIP_SCHEMA
+        _roundtrip_iter(lambda d, t: svg_extract_text(build_svg(t, d))),
+        ROUNDTRIP_SCHEMA,
     )

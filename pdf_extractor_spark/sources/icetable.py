@@ -66,6 +66,11 @@ def _version_file(path: str) -> str:
     return os.path.join(_meta_dir(path), "VERSION")
 
 
+def table_exists(path: str) -> bool:
+    """True once the table's first snapshot has been committed."""
+    return os.path.exists(_version_file(path))
+
+
 def current_snapshot_id(path: str) -> int:
     with open(_version_file(path)) as fh:
         return int(fh.read().strip())
@@ -444,11 +449,19 @@ def extract_to_table(
     """Resume-aware extraction into a snapshot table. Returns the new
     snapshot id, or None when nothing new needed extracting.
 
+    Every row of ``pages`` that is extracted is committed: callers pass
+    one row per url. On append, urls already stored are skipped; on
+    ``upsert=True``, every incoming row replaces the stored row of its
+    url, so a batch holding two crawls of one url would commit both.
+    ``streaming.incremental.stream_extract_upsert`` de-duplicates its
+    micro-batches (newest ``warc_ts`` per url, nothing older than what
+    is stored) before calling this.
+
     ``num_partitions=None`` extracts with one task per task slot, so
     the call runs one Python wave (``plans.pipeline.extract_pages``)."""
     from ..plans.pipeline import extract_pages
 
-    exists = os.path.exists(_version_file(table_path))
+    exists = table_exists(table_path)
     todo = pages
     if exists and not upsert:
         done = read_table(spark, table_path).select("url")

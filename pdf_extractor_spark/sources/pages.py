@@ -1,21 +1,25 @@
-"""Pages-table sources + checkpoint-resume sink (SURVEY.md §2.1).
+"""Pages-table sources, report sinks and the batch extraction job
+(SURVEY.md §2.1).
 
 The production design targets an Iceberg table (``MERGE INTO ... WHEN
-NOT MATCHED THEN INSERT`` keyed on url — S5); this sandbox has no
-Iceberg runtime jars, so the sink is a parquet directory with the SAME
-merge semantics realized as **anti-join before compute + append after**
-(documented fallback, SURVEY.md §7.2 stage 5). The resume contract is
-identical: a re-run processes only urls absent from the output, so
-re-runs are idempotent — no duplicates, no loss.
+NOT MATCHED THEN INSERT`` keyed on url — S5). This sandbox has no
+Iceberg runtime jars, so the pages are a parquet directory and the
+extraction output is the snapshot table of ``sources/icetable.py``:
+:func:`run_extraction_job` commits through
+:func:`icetable.extract_to_table`, which anti-joins the work list
+against the stored urls before compute and commits in one atomic
+snapshot flip. A re-run processes only urls absent from the table, so
+re-runs are idempotent — no duplicates, no loss, and a re-run with
+nothing new commits no snapshot.
 """
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import icetable
 
 PAGES_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -35,28 +39,6 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
 
 def write_pages(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").parquet(path)
-
-
-def _output_exists(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        name.endswith(".parquet") for name in os.listdir(path)
-    )
-
-
-def resume_filter(
-    pages: DataFrame, spark: SparkSession, out_path: str
-) -> DataFrame:
-    """S5/S6 checkpoint resume: anti-join the work list against already-
-    extracted urls. Equivalent to Iceberg MERGE's NOT MATCHED branch.
-
-    The completed-url side projects a single string column before the
-    join; at 10^12 rows this is a shuffled left-anti hash join on the
-    url key — never a broadcast of the big side.
-    """
-    if not _output_exists(out_path):
-        return pages
-    done = spark.read.parquet(out_path).select("url")
-    return pages.join(done, "url", "left_anti")
 
 
 def read_pages_binary(
@@ -84,62 +66,6 @@ def read_pages_binary(
         F.lit(None).cast("string").alias("text"),
         F.lit(None).cast("string").alias("lang"),
     )
-
-
-def append_extracted(extracted: DataFrame, out_path: str) -> None:
-    """Append new results (the INSERT branch of the MERGE)."""
-    extracted.write.mode("append").parquet(out_path)
-
-
-def upsert_extracted(
-    spark: SparkSession, batch: DataFrame, out_path: str
-) -> None:
-    """The MERGE ``WHEN MATCHED`` branch for RE-CRAWLED pages: a new
-    extraction of an existing url replaces the stored row iff its
-    ``warc_ts`` is strictly newer; otherwise the stored row wins.
-    (``run_extraction_job``'s anti-join covers only the NOT MATCHED
-    insert path — first-crawl semantics.)
-
-    Iceberg would express this as ``MERGE INTO extracted USING batch
-    ON url WHEN MATCHED AND batch.warc_ts > extracted.warc_ts THEN
-    UPDATE WHEN NOT MATCHED THEN INSERT``; the parquet stand-in
-    resolves per-url winners with one window over the union (over the
-    batch alone on first write — a batch carrying several crawls of
-    one url still keeps exactly the newest) and swaps directories via
-    two renames, so the merged data always exists on disk: a crash
-    between the renames leaves it in ``<out>.__merge_old__`` /
-    ``.__merge_tmp__`` rather than lost. Deterministic tie-break:
-    newer warc_ts wins, then the incoming row."""
-    import shutil
-
-    from pyspark.sql.window import Window
-
-    incoming = batch.withColumn("_src", F.lit(1))
-    if _output_exists(out_path):
-        existing = spark.read.parquet(out_path).withColumn(
-            "_src", F.lit(0)
-        )
-        union = existing.unionByName(incoming)
-    else:
-        union = incoming
-    w = Window.partitionBy("url").orderBy(
-        F.desc("warc_ts"), F.desc("_src")
-    )
-    merged = (
-        union.withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .drop("_rn", "_src")
-    )
-    tmp = out_path.rstrip("/") + ".__merge_tmp__"
-    old = out_path.rstrip("/") + ".__merge_old__"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(out_path):
-        os.rename(out_path, old)
-    os.rename(tmp, out_path)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
 
 
 def write_report_csv(extracted: DataFrame, path: str) -> None:
@@ -227,18 +153,24 @@ def run_extraction_job(
     metrics_path: str | None = None,
     num_partitions: int | None = None,
 ) -> None:
-    """End-to-end job: resume-filter → extract → append + metrics.
+    """End-to-end job: resume anti-join → extract → one atomic commit
+    into the snapshot table at ``out_path``
+    (:func:`icetable.extract_to_table`), then the metrics rollup over
+    the whole table. Before the first commit there is no table, and so
+    no metrics are written.
 
     This is the body that ``spark-submit --py-files`` runs on a cluster
     (``scripts/submit_job.py``). ``num_partitions=None`` extracts with
     one task per task slot, so one Python wave
     (``plans.pipeline.extract_pages``).
     """
-    from ..plans.pipeline import extract_pages, metrics_from_extracted
+    from ..plans.pipeline import metrics_from_extracted
 
-    todo = resume_filter(pages, spark, out_path)
-    extracted = extract_pages(todo, num_partitions=num_partitions)
-    append_extracted(extracted, out_path)
-    if metrics_path:
-        metrics = metrics_from_extracted(spark.read.parquet(out_path))
+    icetable.extract_to_table(
+        spark, pages, out_path, num_partitions=num_partitions
+    )
+    if metrics_path and icetable.table_exists(out_path):
+        metrics = metrics_from_extracted(
+            icetable.read_table(spark, out_path)
+        )
         metrics.write.mode("overwrite").parquet(metrics_path)

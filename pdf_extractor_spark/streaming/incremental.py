@@ -8,12 +8,14 @@ skip-existing, ``large_doc_extractor.py:147-199``,
    ``checkpointLocation`` — Spark's streaming checkpoint records which
    input files each micro-batch consumed, so a restarted query never
    re-reads completed batches (exactly-once source tracking).
-2. **Sink idempotence**: inside ``foreachBatch``, the batch is
-   anti-joined against the already-extracted urls before compute and
-   appended after (the Iceberg ``MERGE INTO ... WHEN NOT MATCHED``
-   semantics, same as the batch pipeline's resume — S5/S6). Even if a
-   batch is replayed after a crash mid-write, re-extraction is skipped
-   for urls that landed, and duplicates cannot enter the output.
+2. **Sink idempotence**: inside ``foreachBatch``, each micro-batch is
+   committed through :func:`icetable.extract_to_table`, the same call
+   the batch job makes: the batch is anti-joined against the urls the
+   snapshot table already stores before compute, and committed in one
+   atomic snapshot flip after (the Iceberg ``MERGE INTO ... WHEN NOT
+   MATCHED`` semantics — S5/S6). Even if a batch is replayed after a
+   crash mid-write, re-extraction is skipped for urls that landed, and
+   duplicates cannot enter the table.
 
 ``trigger(availableNow=True)`` drains everything currently available
 then stops — the batch-job-with-streaming-bookkeeping mode, which is
@@ -39,15 +41,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.window import Window
 
-from ..plans.pipeline import extract_pages
-from ..sources.pages import (
-    PAGES_SCHEMA_DDL,
-    _output_exists,
-    append_extracted,
-    resume_filter,
-    upsert_extracted,
-)
+from ..sources.icetable import extract_to_table, read_table, table_exists
+from ..sources.pages import PAGES_SCHEMA_DDL
 
 
 def stream_extract(
@@ -63,9 +60,11 @@ def stream_extract(
     ``num_partitions=None`` extracts each micro-batch with one task per
     task slot, so one Python wave (``plans.pipeline.extract_pages``).
 
-    New parquet files dropped under ``pages_path`` after a run are
-    picked up by the next run; completed files are skipped via the
-    streaming checkpoint, completed urls via the MERGE-style anti-join.
+    Each micro-batch is committed to the snapshot table at
+    ``out_path`` by :func:`icetable.extract_to_table`. New parquet
+    files dropped under ``pages_path`` after a run are picked up by the
+    next run; completed files are skipped via the streaming checkpoint,
+    completed urls via the table's resume anti-join.
     """
     reader = spark.readStream.schema(PAGES_SCHEMA_DDL)
     if max_files_per_trigger is not None:
@@ -73,15 +72,43 @@ def stream_extract(
     stream = reader.parquet(pages_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        todo = resume_filter(batch_df, batch_df.sparkSession, out_path)
-        extracted = extract_pages(todo, num_partitions=num_partitions)
-        append_extracted(extracted, out_path)
+        extract_to_table(
+            batch_df.sparkSession, batch_df, out_path,
+            num_partitions=num_partitions,
+        )
 
     return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def _newest_unseen(batch: DataFrame, table_path: str) -> DataFrame:
+    """The rows of ``batch`` an upsert should extract: the newest crawl
+    of each url in the batch, dropped when the table at ``table_path``
+    already stores that url with the same or a newer ``warc_ts``. The
+    stored side is one (url, warc_ts) projection of the table, joined
+    on url — a shuffled equi-join, never a broadcast of the big side."""
+    newest = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
+    todo = (
+        batch.withColumn("_rn", F.row_number().over(newest))
+        .where("_rn = 1")
+        .drop("_rn")
+    )
+    if not table_exists(table_path):
+        return todo
+    stored = read_table(batch.sparkSession, table_path).select(
+        "url", F.col("warc_ts").alias("_seen_ts")
+    )
+    return (
+        todo.join(stored, "url", "left")
+        .where(
+            F.col("_seen_ts").isNull()
+            | (F.col("warc_ts") > F.col("_seen_ts"))
+        )
+        .drop("_seen_ts")
     )
 
 
@@ -97,39 +124,23 @@ def stream_extract_upsert(
     first-crawl inserts). ``num_partitions`` defaults to one task per
     task slot, as there. Each micro-batch:
 
-    1. skips rows whose url already exists with a same-or-newer
-       ``warc_ts`` (no wasted extraction on stale replays — the skip
-       is a shuffled equi-join on url, never a broadcast of the big
-       side);
-    2. extracts the remaining rows;
-    3. merges with newest-wins semantics (``upsert_extracted`` — one
-       window over the union, atomic directory swap).
+    1. keeps, per url, only the newest crawl in the batch, and only if
+       the table does not already store that url with a same-or-newer
+       ``warc_ts`` (:func:`_newest_unseen`: no wasted extraction on
+       stale replays, and one row per url, which
+       ``extract_to_table`` requires);
+    2. extracts the remaining rows and commits them with
+       ``extract_to_table(..., upsert=True)``: a copy-on-write MERGE on
+       url in one atomic snapshot flip.
 
-    A batch carrying several crawls of the same url extracts them all;
-    the merge window keeps the newest. Idempotent under batch replay:
-    re-running a landed batch finds every url up to date and skips."""
+    Idempotent under batch replay: re-running a landed batch finds
+    every url up to date, extracts nothing and commits no snapshot."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        todo = batch_df
-        if _output_exists(out_path):
-            existing = s.read.parquet(out_path).select(
-                "url", F.col("warc_ts").alias("_seen_ts")
-            )
-            todo = (
-                batch_df.join(existing, "url", "left")
-                .where(
-                    F.col("_seen_ts").isNull()
-                    | (F.col("warc_ts") > F.col("_seen_ts"))
-                )
-                .drop("_seen_ts")
-            )
-        # replayed / all-stale batches: nothing survived the skip-join,
-        # so do NOT pay a full read+rewrite of the store for a no-op
-        if todo.isEmpty():
-            return
-        extracted = extract_pages(todo, num_partitions=num_partitions)
-        upsert_extracted(s, extracted, out_path)
+        extract_to_table(
+            batch_df.sparkSession, _newest_unseen(batch_df, out_path),
+            out_path, num_partitions=num_partitions, upsert=True,
+        )
 
     return (
         spark.readStream.schema(PAGES_SCHEMA_DDL)

@@ -11,15 +11,18 @@ multi-executor cluster):
         --conf spark.sql.execution.arrow.maxRecordsPerBatch=64 \
         scripts/submit_job.py \
         --pages  <pages parquet/iceberg path> \
-        --out    <extracted output path> \
+        --out    <extracted snapshot table path> \
         --metrics <metrics output path> \
         --partitions 2048
 
 On a cluster the session comes from ``spark-submit``'s master/conf (we
 call ``getOrCreate`` without forcing ``local[...]``); locally the same
-script runs standalone through the tuned builder. Re-running with the
-same ``--out`` resumes: completed urls are anti-joined away before any
-compute (MERGE semantics, ``sources/pages.py``).
+script runs standalone through the tuned builder. ``--out`` is a
+snapshot table (``sources/icetable.py``): each run commits its
+extraction in one atomic snapshot flip. Re-running with the same
+``--out`` resumes: completed urls are anti-joined away before any
+compute (MERGE semantics, ``run_extraction_job`` in
+``sources/pages.py``), and a run with nothing new commits no snapshot.
 """
 
 from __future__ import annotations

@@ -22,6 +22,7 @@ from pdf_extractor_spark.fixtures.corpus import build_pages_frame
 from pdf_extractor_spark.functions.packing import pack_sequences
 from pdf_extractor_spark.functions.recipe import pretraining_filter
 from pdf_extractor_spark.functions.sampling import holdout_split_report
+from pdf_extractor_spark.sources.icetable import read_table
 from pdf_extractor_spark.sources.pages import (
     pages_from_pandas,
     read_pages,
@@ -48,7 +49,7 @@ def extracted(spark, tmp_path_factory):
         str(tmp / "metrics"),
         num_partitions=4,
     )
-    return spark.read.parquet(str(tmp / "out")), len(frame)
+    return read_table(spark, str(tmp / "out")), len(frame)
 
 
 class TestFullCycle:

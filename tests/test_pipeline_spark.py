@@ -13,14 +13,18 @@ from pyspark.sql import functions as F
 from pdf_extractor_spark.config import DEFAULT_CONFIG
 from pdf_extractor_spark.fixtures.corpus import build_pages_frame
 from pdf_extractor_spark.plans.pipeline import (
+    _routing_key,
     extract_pages,
     metrics_from_extracted,
-    partition_pages,
+)
+from pdf_extractor_spark.sources.icetable import (
+    current_snapshot_id,
+    read_table,
+    snapshot_log,
 )
 from pdf_extractor_spark.sources.pages import (
     pages_from_pandas,
     read_pages,
-    resume_filter,
     run_extraction_job,
     write_pages,
 )
@@ -53,9 +57,11 @@ def test_resume_is_idempotent(spark, pages_df, tmp_path):
     pages = read_pages(spark, str(tmp_path / "pages"))
 
     run_extraction_job(spark, pages, out, num_partitions=4)
-    n1 = spark.read.parquet(out).count()
+    n1 = read_table(spark, out).count()
+    snap = current_snapshot_id(out)
     run_extraction_job(spark, pages, out, num_partitions=4)
-    e = spark.read.parquet(out)
+    assert current_snapshot_id(out) == snap  # nothing new, no commit
+    e = read_table(spark, out)
     assert e.count() == n1
     assert e.select("url").distinct().count() == n1
 
@@ -69,60 +75,96 @@ def test_resume_processes_only_missing(spark, tmp_path):
     run_extraction_job(
         spark, pages_from_pandas(spark, half), out, num_partitions=2
     )
-    n_half = spark.read.parquet(out).count()
+    n_half = read_table(spark, out).count()
     assert n_half == len(half)
 
     full = pages_from_pandas(spark, frame)
-    todo = resume_filter(full, spark, out)
-    assert todo.count() == len(frame) - len(half)
     run_extraction_job(spark, full, out, num_partitions=2)
-    e = spark.read.parquet(out)
+    created, appended = snapshot_log(out)
+    assert appended["operation"] == "append"
+    assert appended["n_rows"] - created["n_rows"] \
+        == len(frame) - len(half)
+    e = read_table(spark, out)
     assert e.count() == len(frame)
     assert e.select("url").distinct().count() == len(frame)
 
 
-def test_upsert_replaces_only_newer_recrawls(spark, tmp_path):
-    """MERGE WHEN MATCHED semantics (re-crawl): a newer warc_ts replaces
-    the stored row, an older one loses, an unseen url inserts, and the
-    url set stays unique."""
-    from pdf_extractor_spark.sources.pages import upsert_extracted
+def test_job_with_nothing_to_extract_writes_nothing(spark, tmp_path):
+    """No input and no table yet: nothing is committed, so there is no
+    table to roll metrics up from, and the job neither writes metrics
+    nor raises."""
+    out, metrics = str(tmp_path / "extracted"), str(tmp_path / "metrics")
+    empty = pages_from_pandas(spark, build_pages_frame().iloc[:0])
+    run_extraction_job(spark, empty, out, metrics)
+    assert not pathlib.Path(out).exists()
+    assert not pathlib.Path(metrics).exists()
 
-    frame = build_pages_frame().iloc[:4]
-    out = str(tmp_path / "extracted")
-    run_extraction_job(
-        spark, pages_from_pandas(spark, frame), out, num_partitions=2
-    )
-    base = spark.read.parquet(out)
-    n0 = base.count()
-    urls = sorted(r["url"] for r in base.select("url").collect())
-    newer_url, older_url = urls[0], urls[1]
 
-    newer = base.where(F.col("url") == newer_url).withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
-    ).withColumn("extracted_text", F.lit("RECRAWLED"))
-    older = base.where(F.col("url") == older_url).withColumn(
-        "warc_ts", F.col("warc_ts") - F.expr("INTERVAL 1 DAY")
-    ).withColumn("extracted_text", F.lit("STALE"))
-    fresh = base.where(F.col("url") == urls[2]).withColumn(
-        "url", F.lit("https://fixture.test/brand-new")
-    )
-    upsert_extracted(
-        spark, newer.unionByName(older).unionByName(fresh), out
+def _recrawl(row: pd.DataFrame, days: int, n: int) -> pd.DataFrame:
+    """A re-crawl of ``row``'s url, ``days`` after it, whose page
+    extracts to text naming crawl ``n``."""
+    out = row.copy()
+    out["warc_ts"] = out["warc_ts"] + dt.timedelta(days=days)
+    out["html"] = [
+        f"<html><body><p>recrawled body text, crawl {n}, entirely new"
+        " content here</p></body></html>".encode()
+    ]
+    return out
+
+
+def _drain_upsert(spark, tmp_path, wave: pd.DataFrame) -> str:
+    """Land ``wave`` as new pages files and drain them through
+    ``stream_extract_upsert`` (one micro-batch); returns the table."""
+    from pdf_extractor_spark.streaming.incremental import (
+        stream_extract_upsert,
     )
 
-    after = spark.read.parquet(out)
-    assert after.count() == n0 + 1
-    assert after.select("url").distinct().count() == n0 + 1
-    got = {
+    pages, out, ckpt = (
+        str(tmp_path / name) for name in ("pages", "table", "ckpt")
+    )
+    pages_from_pandas(spark, wave).write.mode("append").parquet(pages)
+    stream_extract_upsert(
+        spark, pages, out, ckpt, num_partitions=2
+    ).awaitTermination()
+    return out
+
+
+def _texts(spark, table: str) -> dict[str, str]:
+    stored = read_table(spark, table)
+    assert stored.count() == stored.select("url").distinct().count()
+    return {
         r["url"]: r["extracted_text"]
-        for r in after.where(
-            F.col("url").isin(newer_url, older_url)
-        ).collect()
+        for r in stored.select("url", "extracted_text").collect()
     }
-    assert got[newer_url] == "RECRAWLED"   # newer re-crawl wins
-    assert got[older_url] != "STALE"       # stored row beats older crawl
-    assert after.where(F.col("url") == "https://fixture.test/brand-new") \
-        .count() == 1                      # NOT MATCHED insert
+
+
+def test_upsert_replaces_only_newer_recrawls(spark, tmp_path):
+    """MERGE WHEN MATCHED semantics (re-crawl) through the upsert
+    stream: of two newer crawls of one url in a later micro-batch the
+    newest replaces the stored row, an older crawl loses, an unseen
+    url inserts, and the url set stays unique."""
+    frame = build_pages_frame().iloc[:4].reset_index(drop=True)
+    table = _drain_upsert(spark, tmp_path, frame)
+    before = _texts(spark, table)
+    assert len(before) == len(frame)
+    newer_url, older_url = sorted(frame["url"])[:2]
+    newer = frame[frame["url"] == newer_url]
+    fresh = _recrawl(frame.iloc[[2]], 0, 3)
+    fresh["url"] = "https://fixture.test/brand-new"
+
+    table = _drain_upsert(spark, tmp_path, pd.concat([
+        _recrawl(newer, 2, 2),
+        _recrawl(frame[frame["url"] == older_url], -1, 0),
+        _recrawl(newer, 1, 1),
+        fresh,
+    ]))
+
+    after = _texts(spark, table)
+    assert len(after) == len(frame) + 1
+    assert "crawl 2," in after[newer_url]    # newest re-crawl wins
+    assert after[older_url] == before[older_url]  # stored beats older
+    assert "crawl 3," in after["https://fixture.test/brand-new"]
+    assert snapshot_log(table)[-1]["operation"] == "merge"
 
 
 def test_metrics_invariants(spark, pages_df):
@@ -144,10 +186,7 @@ def test_metrics_rollup_keeps_batches_of_every_call(spark, tmp_path):
     table fed by two calls holds two batches under each (part_id,
     batch_id): the rollup must count both calls' batch_ms, keyed by
     the batch's extracted_at as well."""
-    from pdf_extractor_spark.sources.icetable import (
-        extract_to_table,
-        read_table,
-    )
+    from pdf_extractor_spark.sources.icetable import extract_to_table
 
     frame = build_pages_frame()
     half = len(frame) // 2
@@ -211,6 +250,16 @@ def test_extract_to_table_runs_one_python_wave(
     assert wide == [want]
 
 
+def _salted_urls(pages) -> list[str]:
+    """Urls the routing key sends to the salted (oversized) key space:
+    their key differs from the plain url hash."""
+    key = _routing_key(DEFAULT_CONFIG)
+    return [
+        r["url"]
+        for r in pages.where(key != F.xxhash64("url")).collect()
+    ]
+
+
 def test_oversized_docs_routed_separately(spark):
     big_payload = b"<html><body>" + b"<p>" + b"x" * 100 + b"</p>" * 1 + \
         b"y" * (DEFAULT_CONFIG.oversize_bytes + 1024) + b"</body></html>"
@@ -226,10 +275,7 @@ def test_oversized_docs_routed_separately(spark):
         ]
     )
     df = pages_from_pandas(spark, frame)
-    normal, oversized = partition_pages(df, 4)
-    assert normal.count() == 1
-    assert oversized.count() == 1
-    assert oversized.select("url").first()["url"].endswith("huge")
+    assert _salted_urls(df) == ["https://fixture.test/html/huge"]
 
 
 def test_routing_key_balances_partitions(spark):
@@ -237,8 +283,6 @@ def test_routing_key_balances_partitions(spark):
     pre-modded ~2P-value key left ~1/3 of partitions empty and stacked
     bucket-groups. With 512 urls over 16 partitions, every partition
     must be non-empty and no partition grossly overloaded."""
-    from pdf_extractor_spark.plans.pipeline import _routing_key
-
     n_parts = 16
     frame = pd.DataFrame(
         [
@@ -328,8 +372,8 @@ def test_oversized_doc_extracts_end_to_end(spark):
     }])
     pages = pages_from_pandas(spark, pd.concat([frame, big],
                                                ignore_index=True))
-    _normal, oversized = partition_pages(pages, 4)
-    assert oversized.count() == 1  # actually crosses oversize_bytes
+    # actually crosses oversize_bytes
+    assert _salted_urls(pages) == ["http://fixture.example/huge-doc"]
     rows = extract_pages(pages, num_partitions=4).collect()
     assert len(rows) == len(frame) + 1
     huge = [r for r in rows if r["url"].endswith("huge-doc")][0]
@@ -372,26 +416,14 @@ def test_eta_from_metrics(spark, pages_df):
 
 
 def test_upsert_bootstrap_dedups_first_batch(spark, tmp_path):
-    """First write (no existing store) must STILL resolve per-url
-    winners: a batch carrying two crawls of one url keeps exactly the
-    newest (code-review r2 finding)."""
-    from pdf_extractor_spark.sources.pages import upsert_extracted
-
-    frame = build_pages_frame().iloc[:2]
-    out = str(tmp_path / "extracted")
-    run_extraction_job(
-        spark, pages_from_pandas(spark, frame), out, num_partitions=2
-    )
-    seed = spark.read.parquet(out)
-    url0 = seed.select("url").orderBy("url").first()["url"]
-    one = seed.where(F.col("url") == url0)
-    newer = one.withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 DAY")
-    ).withColumn("extracted_text", F.lit("NEWEST"))
-    batch = one.unionByName(newer)
-
-    fresh_out = str(tmp_path / "fresh")
-    upsert_extracted(spark, batch, fresh_out)
-    got = spark.read.parquet(fresh_out)
-    assert got.count() == 1
-    assert got.first()["extracted_text"] == "NEWEST"
+    """First write (no table yet) must STILL resolve per-url winners:
+    a first micro-batch carrying two crawls of one url keeps exactly
+    the newest (code-review r2 finding)."""
+    frame = build_pages_frame().iloc[:2].reset_index(drop=True)
+    url0 = frame.loc[0, "url"]
+    table = _drain_upsert(spark, tmp_path, pd.concat([
+        _recrawl(frame.iloc[[0]], 1, 1), frame,
+    ]))
+    got = _texts(spark, table)
+    assert len(got) == len(frame)
+    assert "crawl 1," in got[url0]

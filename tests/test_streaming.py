@@ -13,6 +13,10 @@ import pandas as pd
 import pytest
 
 from pdf_extractor_spark.fixtures.corpus import build_pages_frame
+from pdf_extractor_spark.sources.icetable import (
+    current_snapshot_id,
+    read_table,
+)
 from pdf_extractor_spark.sources.pages import pages_from_pandas
 from pdf_extractor_spark.streaming.incremental import stream_extract
 
@@ -43,21 +47,23 @@ def test_incremental_two_waves_no_dup_no_loss(spark, dirs):
         dirs["pages"]
     )
     _drain(spark, dirs)
-    out1 = spark.read.parquet(dirs["out"])
+    out1 = read_table(spark, dirs["out"])
     assert out1.count() == len(wave1)
 
     pages_from_pandas(spark, wave2).write.mode("append").parquet(
         dirs["pages"]
     )
     _drain(spark, dirs)
-    out2 = spark.read.parquet(dirs["out"])
+    out2 = read_table(spark, dirs["out"])
     assert out2.count() == len(frame)
     assert out2.select("url").distinct().count() == len(frame)
 
     # wave-1 rows were not re-extracted (attempt/extraction identity is
     # irrelevant; count per url == 1 is the MERGE guarantee)
+    snap = current_snapshot_id(dirs["out"])
     _drain(spark, dirs)  # third run: nothing new
-    out3 = spark.read.parquet(dirs["out"])
+    assert current_snapshot_id(dirs["out"]) == snap
+    out3 = read_table(spark, dirs["out"])
     assert out3.count() == len(frame)
 
 
@@ -71,7 +77,7 @@ def test_streaming_matches_batch_pipeline(spark, dirs, tmp_path):
     _drain(spark, dirs)
     streamed = {
         r["url"]: r["extracted_text"]
-        for r in spark.read.parquet(dirs["out"])
+        for r in read_table(spark, dirs["out"])
         .select("url", "extracted_text")
         .collect()
     }
@@ -216,13 +222,13 @@ def test_streaming_upsert_replaces_recrawls(spark, dirs):
         dirs["pages"]
     )
     drain()
-    n0 = spark.read.parquet(dirs["out"]).count()
+    n0 = read_table(spark, dirs["out"]).count()
     assert n0 == len(frame)
     urls = sorted(frame["url"])
     newer_url, older_url = urls[0], urls[1]
     old_text = {
         r["url"]: r["extracted_text"]
-        for r in spark.read.parquet(dirs["out"]).select(
+        for r in read_table(spark, dirs["out"]).select(
             "url", "extracted_text"
         ).collect()
     }
@@ -243,7 +249,7 @@ def test_streaming_upsert_replaces_recrawls(spark, dirs):
     )
     drain()
 
-    after = spark.read.parquet(dirs["out"])
+    after = read_table(spark, dirs["out"])
     assert after.count() == n0 + 1
     assert after.select("url").distinct().count() == n0 + 1
     got = {

@@ -27,6 +27,10 @@ def test_spark_submit_pyfiles_extraction_and_resume(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from pdf_extractor_spark.fixtures.corpus import build_pages_frame
+    from pdf_extractor_spark.sources.icetable import (
+        current_snapshot_id,
+        read_table,
+    )
     from pdf_extractor_spark.sources.pages import (
         pages_from_pandas,
         write_pages,
@@ -62,16 +66,19 @@ def test_spark_submit_pyfiles_extraction_and_resume(spark, tmp_path):
         k: v for k, v in os.environ.items() if k != "PYTHONPATH"
     }  # the zip, not the checkout, must supply the package
     env["PYSPARK_PYTHON"] = sys.executable
+    snaps = []
     for attempt in ("fresh", "resume"):
         run = subprocess.run(
             cmd, cwd=str(tmp_path), env=env,
             capture_output=True, text=True, timeout=600,
         )
         assert run.returncode == 0, (attempt, run.stderr[-2000:])
-        got = spark.read.parquet(out)
+        got = read_table(spark, out)
         n = got.count()
         assert n == got.select("url").distinct().count() == len(pdf), (
             attempt, n
         )
+        snaps.append(current_snapshot_id(out))
+    assert snaps[1] == snaps[0]  # the resume run committed nothing
     met = spark.read.parquet(metrics)
     assert met.agg(F.sum("n_docs")).first()[0] == len(pdf)
