@@ -20,6 +20,13 @@ Layering:
   n-gram Jaccard / SimHash), similarity search, text statistics.
 - ``streaming/``  Structured Streaming ingestion (foreachBatch merge).
 - ``fixtures/``   deterministic synthetic corpus + golden builder.
+
+Importing the package installs :mod:`pdf_extractor_spark.zipguard`, so
+a Python worker stops re-reading its zip archives on every task.
 """
+
+from pdf_extractor_spark import zipguard
+
+zipguard.install()
 
 __version__ = "0.1.0"

@@ -261,7 +261,10 @@ def fan_out(df: DataFrame, num_partitions: int | None) -> int:
     when given, else one task per task slot (``defaultParallelism``:
     all executor cores), so the stage runs ONE Python wave. Every
     Python task pays a fixed hand-off latency on top of its kernel
-    time, so a second wave costs that latency again on every core."""
+    time (about 50 ms per wave with ``zipguard`` installed: identity
+    ``mapInPandas`` at ``local[4]`` on a 4-core box takes 0.16-0.23 s
+    for 4 tasks, 0.30-0.36 s for 16), so a second wave costs that
+    latency again on every core."""
     return num_partitions or df.sparkSession.sparkContext.defaultParallelism
 
 

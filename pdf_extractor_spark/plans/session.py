@@ -37,8 +37,13 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
+    """A ``local[cores]`` session. ``cores`` defaults to
+    ``$SPARK_GRAFT_CPUS``, else this machine's ``os.cpu_count()``;
+    ``shuffle_partitions`` defaults to ``max(cores, 8)``."""
     _ensure_worker_pythonpath()
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)
+    )
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")

@@ -250,6 +250,43 @@ def test_extract_to_table_runs_one_python_wave(
     assert wide == [want]
 
 
+def test_reused_worker_keeps_its_zip_directory(spark):
+    """Once a Python worker has imported the package, its tasks stop
+    re-reading pyspark.zip's central directory (``zipguard``): after
+    its first task, every task on one worker sees the same ``_files``
+    dict of the pyspark.zip importer. Without the guard every task
+    builds a new one."""
+    def report(batches):
+        import os
+        import sys
+        import time
+
+        import pdf_extractor_spark  # noqa: F401  (installs the guard)
+
+        zips = [v for k, v in sys.path_importer_cache.items()
+                if k.endswith("pyspark.zip")]
+        for _ in batches:
+            pass
+        yield pd.DataFrame({
+            "pid": [os.getpid()],
+            "t": [time.monotonic_ns()],
+            "files": [id(zips[0]._files) if zips else 0],
+        })
+
+    rows = []
+    for _ in range(2):
+        rows += spark.range(64, numPartitions=8).mapInPandas(
+            report, "pid long, t long, files long"
+        ).collect()
+    assert all(r["files"] for r in rows), "no pyspark.zip importer"
+    by_pid: dict[int, list[int]] = {}
+    for r in sorted(rows, key=lambda r: r["t"]):
+        by_pid.setdefault(r["pid"], []).append(r["files"])
+    later = {pid: ids[1:] for pid, ids in by_pid.items()}
+    assert max(len(ids) for ids in later.values()) >= 2
+    assert all(len(set(ids)) <= 1 for ids in later.values()), later
+
+
 def _salted_urls(pages) -> list[str]:
     """Urls the routing key sends to the salted (oversized) key space:
     their key differs from the plain url hash."""
