@@ -75,7 +75,11 @@ class ExtractConfig:
     footnote_type_bonus: float = 0.2        # J3 +same marker family
 
     # --- z-order overlap scan (reference error_handler.py:277-312) ---
-    zorder_max_words: int = 2000         # skip O(n^2) scan above this
+    # Pages with more words skip J5. The candidate-pair count is no
+    # longer O(n^2) on real layouts, but the cap stays: lifting it would
+    # add z_order warnings to the errors of pages above it, and a page
+    # of stacked boxes still has n^2/2 candidates.
+    zorder_max_words: int = 2000
 
     # --- sidebars / textboxes (reference layout_analyzer.py:584-661) ---
     sidebar_strip_frac: float = 0.20     # left/right 20% strips

@@ -50,7 +50,7 @@ from .inventory import (
     zorder_overlap_count,
 )
 from .layout import column_texts
-from .pdf_tokenizer import parse_pdf
+from .pdf_tokenizer import PdfDoc, parse_pdf
 from .quality import score_quality
 from .scripts import attach_scripts
 from .spacing import cleanup_text
@@ -101,11 +101,10 @@ def _dechunk(body: bytes) -> bytes:
     return bytes(out)
 
 
-def _extract_pdf_once(
-    payload: bytes, cfg: ExtractConfig
-) -> dict[str, Any]:
-    """PDF branch, single pass: parse → per-page filter/cluster/serialize."""
-    doc = parse_pdf(payload)
+def _extract_pdf_once(doc: PdfDoc, cfg: ExtractConfig) -> dict[str, Any]:
+    """PDF branch, single pass over a parsed document: per-page
+    filter/cluster/serialize. Reads ``doc`` and never changes it, so
+    remediation runs it again on the same parse."""
     errors: list[dict] = list(doc.errors)
     inventory = element_inventory(
         [p.words for p in doc.pages], [p.height for p in doc.pages]
@@ -326,8 +325,11 @@ def extract_pdf_document(
     ``remediation_min_score``, re-extract with each alternate config in
     a FIXED order and keep the best score (keep-first on ties —
     deterministic). Config is an immutable struct per attempt, never the
-    reference's mutated module globals (SURVEY.md §7.4 trap 5)."""
-    rec = _extract_pdf_once(payload, cfg)
+    reference's mutated module globals (SURVEY.md §7.4 trap 5). The
+    strategies change only layout config, so the payload is parsed
+    once and every attempt starts from that parse."""
+    doc = parse_pdf(payload)
+    rec = _extract_pdf_once(doc, cfg)
     if (
         not cfg.remediation_enabled
         or rec["quality"]["score"] >= cfg.remediation_min_score
@@ -335,7 +337,7 @@ def extract_pdf_document(
         return rec
     best, best_name = rec, None
     for name, alt in _remediation_strategies(cfg):
-        cand = _extract_pdf_once(payload, alt)
+        cand = _extract_pdf_once(doc, alt)
         if cand["quality"]["score"] > best["quality"]["score"]:
             best, best_name = cand, name
     if best_name is not None:

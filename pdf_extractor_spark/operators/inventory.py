@@ -17,8 +17,10 @@ chain is expressible as native ``regexp_replace`` at dataset level —
 the kernel version here keeps the fused single-pass pipeline pure.
 
 J5 (``error_handler.py:277-312``): overlapping-word (z-order) detection
-— pairs of boxes overlapping > 50% of the smaller area. Vectorized
-pairwise interval math (n ≈ 10³/page).
+— pairs of boxes overlapping > 50% of the smaller area. Candidate pairs
+are the boxes whose intervals meet on one axis (found with a sort and a
+``searchsorted``), tested in fixed-size numpy blocks: no per-word
+Python loop and no n² matrix.
 
 D1 (``error_handler.py:542-574``): dedup words on rounded position.
 """
@@ -124,51 +126,71 @@ def dedup_words(words: pd.DataFrame) -> pd.DataFrame:
     return words.loc[keep]
 
 
+# Candidate pairs tested per numpy block: a block's transient arrays
+# (about a dozen int64/float64 columns) stay at a few MB however many
+# candidates a page has.
+_ZORDER_PAIRS_PER_BLOCK = 65_536
+
+
 def zorder_overlap_count(words: pd.DataFrame) -> int:
     """J5: number of word pairs whose bboxes overlap by more than 50% of
-    the smaller box's area — a plane sweep over x-sorted boxes. Only
-    boxes whose x-intervals intersect can overlap, so the active set at
-    any sweep position is ~(words per x-slice) ≈ number of text lines,
-    giving O(n·lines) typical instead of the O(n²) full pairwise matrix
-    (which allocates n² floats — unusable on a pathological 10⁵-word
-    page). Count-identical to the matrix formulation (asserted in
-    tests). Used only to FLAG (the reference reports, never repairs)."""
+    the smaller box's area. Used only to FLAG (the reference reports,
+    never repairs).
+
+    Candidate pairs come from one axis: with boxes sorted by their low
+    edge, ``searchsorted(lo, hi, "left")`` gives each box the exact
+    number of later boxes whose interval starts before it ends. Every
+    overlapping pair is among them (an overlap needs both intervals to
+    meet), and each unordered pair appears once. The axis with fewer
+    candidates is used: x on one long line, y on a page of full-width
+    lines, where every word's x-interval meets about one word of each
+    other line. The candidates are then tested with the same array
+    math as ``zorder_overlap_count_matrix`` (count-identical, asserted
+    in tests), in blocks of at most ``_ZORDER_PAIRS_PER_BLOCK`` pairs,
+    so no n² matrix is built."""
     n = len(words)
     if n < 2:
         return 0
-    x0a = words["x0"].to_numpy()
-    x1a = words["x1"].to_numpy()
-    ta = words["top"].to_numpy()
-    ba = words["bottom"].to_numpy()
-    order = np.argsort(x0a, kind="stable").tolist()
-    # python-float lists: the sweep's scalar min/max/compare loop is
-    # ~2x faster on C doubles than on numpy scalar views
-    x0 = x0a.tolist()
-    x1 = x1a.tolist()
-    t = ta.tolist()
-    b = ba.tolist()
-    area = ((x1a - x0a) * (ba - ta)).tolist()
+    x0 = words["x0"].to_numpy()
+    x1 = words["x1"].to_numpy()
+    t = words["top"].to_numpy()
+    b = words["bottom"].to_numpy()
+    later = np.arange(1, n + 1)
+    best = None
+    for lo, hi in ((x0, x1), (t, b)):
+        order = np.argsort(lo, kind="stable")
+        reach = np.searchsorted(lo[order], hi[order], "left")
+        counts = np.maximum(reach - later, 0)
+        total = int(counts.sum())
+        if best is None or total < best[0]:
+            best = (total, order, counts)
+    total, order, counts = best
+    if total == 0:
+        return 0
+    # candidate p belongs to sorted position k with ends[k-1] <= p <
+    # ends[k]; its partner is the (p - starts[k])-th box after k
+    ends = np.cumsum(counts)
+    starts = ends - counts
+    area = (x1 - x0) * (b - t)
     count = 0
-    active: list[int] = []
-    for j in order:
-        xj = x0[j]
-        if active:
-            active = [i for i in active if x1[i] > xj]
-        for i in active:
-            ih = min(b[i], b[j]) - max(t[i], t[j])
-            if ih <= 0:
-                continue
-            iw = min(x1[i], x1[j]) - xj  # x0[j] >= x0[i] by sweep order
-            smaller = min(area[i], area[j])
-            if smaller > 0 and iw * ih / smaller > 0.5:
-                count += 1
-        active.append(j)
+    for lo_p in range(0, total, _ZORDER_PAIRS_PER_BLOCK):
+        p = np.arange(lo_p, min(lo_p + _ZORDER_PAIRS_PER_BLOCK, total))
+        k = np.searchsorted(ends, p, "right")
+        i = order[k]
+        j = order[k + 1 + (p - starts[k])]
+        iw = np.minimum(x1[i], x1[j]) - np.maximum(x0[i], x0[j])
+        ih = np.minimum(b[i], b[j]) - np.maximum(t[i], t[j])
+        inter = np.clip(iw, 0, None) * np.clip(ih, 0, None)
+        smaller = np.minimum(area[i], area[j])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            frac = np.where(smaller > 0, inter / smaller, 0.0)
+        count += int(np.count_nonzero(frac > 0.5))
     return count
 
 
 def zorder_overlap_count_matrix(words: pd.DataFrame) -> int:
     """Reference O(n²) matrix formulation — kept as the test oracle for
-    the sweep implementation above."""
+    the candidate-pair implementation above."""
     n = len(words)
     if n < 2:
         return 0

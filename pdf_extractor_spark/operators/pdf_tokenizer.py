@@ -624,6 +624,17 @@ def _stream_bytes(
 # Group index IS the token class (m.lastindex) — classification falls
 # out of the match instead of costing a fullmatch + prefix probes per
 # token in the hot loop.
+#
+# Alternative 7 matches a bare ``(`` only where alternative 1 failed
+# there (alternatives are tried in order, and 2-6 never start with
+# ``(``): a literal the flat grammar cannot close — nested balanced
+# parens, or an unbalanced one. No alternative matches between the
+# scan position and that ``(``, so the search stops at the first
+# ``(`` before the next flat token — the one
+# ``stream.find(b"(", pos, m.start())`` would return — and the hand
+# scan in ``_scan_stream`` starts there. A ``(`` after the last flat
+# token is scanned and pushed as an operand too, but no operator
+# follows to use it, so the words are the same.
 _TOKEN_RE = re.compile(
     rb"(\((?:[^()\\]|\\.)*\))"   # 1: literal string (non-nested)
     rb"|(<[0-9A-Fa-f\s]*>)"      # 2: hex string
@@ -631,6 +642,7 @@ _TOKEN_RE = re.compile(
     rb"|([\[\]])"                # 4: array delims
     rb"|(-?\d+(?:\.\d+)?)"       # 5: number
     rb"|([A-Za-z'\"*]+)"         # 6: operator
+    rb"|(\()"                    # 7: '(' that 1 cannot close
     , re.DOTALL,  # \\. must span \<EOL> line continuations (§7.3.4.2)
 )
 
@@ -666,7 +678,7 @@ def _scan_nested_literal(stream: bytes, start: int) -> int:
     ends = [e + 1 for e in (first_close, stream.find(b"\n", start))
             if e >= 0]
     return min(ends) if ends else n
-_T_STR, _T_HEX, _T_NAME, _T_ARR, _T_NUM, _T_OP = 1, 2, 3, 4, 5, 6
+_T_STR, _T_HEX, _T_NAME, _T_ARR, _T_NUM, _T_OP, _T_OPEN = range(1, 8)
 
 _LIT_ESCAPES = {b"n": "\n", b"r": "\r", b"t": "\t", b"b": "\b", b"f": "\f",
                 b"(": "(", b")": ")", b"\\": "\\"}
@@ -1535,16 +1547,14 @@ class _WordSink:
 # Canonical single-show text block, the form word-processor-style PDF
 # writers emit one-per-word/run: BT <font> <size> Tf <tx> <ty> Td
 # (text|hex) Tj ET. A stream consisting ONLY of such blocks (modulo
-# whitespace) takes the one-match-per-word fast path below — ~3x fewer
-# Python dispatches than the general operator loop; ANY other
-# construct falls back to the general grammar.
+# whitespace) takes the one-split-per-stream fast path below; ANY
+# other construct falls back to the general grammar.
 _SIMPLE_BLOCK_RE = re.compile(
     rb"BT\s+/[A-Za-z0-9_.]+\s+(-?\d+(?:\.\d+)?)\s+Tf"
     rb"\s+(-?\d+(?:\.\d+)?)\s+(-?\d+(?:\.\d+)?)\s+Td"
     rb"\s+(\((?:[^()\\]|\\.)*\)|<[0-9A-Fa-f\s]*>)\s+Tj\s+ET",
     re.DOTALL,  # \\. must span \<EOL> line continuations (§7.3.4.2)
 )
-_WS_ONLY = re.compile(rb"[\s]*\Z")
 
 
 def _parse_simple_blocks(
@@ -1555,23 +1565,53 @@ def _parse_simple_blocks(
     the stream is covered by block matches separated by whitespace —
     so the result is exactly what the general grammar would produce:
     each block resets the text matrix (BT), sets its own size (Tf),
-    positions once (Td), shows once (Tj)."""
+    positions once (Td), shows once (Tj).
+
+    One ``split`` yields the gaps (every fifth item) and the four
+    groups of each block. The arithmetic is the general loop's, written
+    out so that it stays bit-identical: Td adds its operands to a zeroed
+    line matrix and ``_emit_words`` runs with ``tc = tw = 0`` and
+    ``tz = 1``, so each ``+ 0.0`` turns a ``-0.0`` into ``0.0``. Top
+    and bottom are computed once per run of blocks on one line."""
+    parts = _SIMPLE_BLOCK_RE.split(stream)
+    # bytes.strip() drops exactly the bytes regex \s matches
+    if len(parts) == 1 or b"".join(parts[::5]).strip():
+        return None  # no blocks, or non-block content somewhere
     rows = _WordSink()
-    pos = 0
-    for m in _SIMPLE_BLOCK_RE.finditer(stream):
-        if not _WS_ONLY.match(stream, pos, m.start()):
-            return None  # non-block content between matches
-        size = float(m.group(1))
-        x = float(m.group(2))
-        y = float(m.group(3))
-        s = m.group(4)
+    t_app = rows.texts.append
+    x0_app = rows.x0s.append
+    x1_app = rows.x1s.append
+    top_app = rows.tops.append
+    bot_app = rows.bottoms.append
+    size_app = rows.sizes.append
+    line = None
+    for size_b, x_b, y_b, s in zip(
+        parts[1::5], parts[2::5], parts[3::5], parts[4::5]
+    ):
+        if (size_b, y_b) != line:
+            line = (size_b, y_b)
+            size = float(size_b)
+            y = float(y_b) + 0.0
+            top = round(height - y - _ASCENT * size, 3)
+            bottom = round(height - y + _DESCENT * size, 3)
+            space_adv = (0.5 * size + 0.0 + 0.0) * 1.0
+        cx = float(x_b) + 0.0
         text = _decode_literal(s) if s[:1] == b"(" else _decode_hex(s)
-        _emit_words(text, x, y, size, height, rows)
-        pos = m.end()
-    if pos == 0 or not _WS_ONLY.match(stream, pos):
-        return None  # no matches, or trailing non-block content
+        for piece in text.split(" "):
+            if piece == "":
+                cx += space_adv  # bare space advance
+                continue
+            w = (_advance_units(piece) * size + 0.0 * len(piece)) * 1.0
+            t_app(piece)
+            x0_app(round(cx, 3))
+            x1_app(round(cx + w, 3))
+            top_app(top)
+            bot_app(bottom)
+            size_app(size)
+            cx += w + space_adv
     if not rows.texts:
         return empty_word_frame()
+    rows.verts = [False] * len(rows.texts)
     return rows.frame(page_no)
 
 
@@ -1729,16 +1769,16 @@ def _scan_stream(
         m = _TOKEN_RE.search(stream, pos)
         if m is None:
             break
-        # an unconsumed '(' BEFORE the next regex token is a literal
-        # string the flat grammar could not span — nested balanced
-        # parens — so hand-scan it to its balanced close
-        p = stream.find(b"(", pos, m.start())
-        if p >= 0:
+        kind = m.lastindex
+        if kind == _T_OPEN:
+            # a literal string the flat grammar could not span —
+            # nested balanced parens — so hand-scan it to its
+            # balanced close
             kind = _T_STR
+            p = m.start()
             pos = _scan_nested_literal(stream, p)
             tok = stream[p:pos]
         else:
-            kind = m.lastindex
             tok = m.group(0)
             pos = m.end()
         if kind == _T_ARR:

@@ -355,6 +355,67 @@ class TestRemediation:
         assert a["extracted_text"] == b["extracted_text"]
         assert a["quality"] == b["quality"]
 
+    def test_remediation_parses_once(self, monkeypatch):
+        from pdf_extractor_spark.operators import document
+
+        calls = []
+        real_parse = document.parse_pdf
+
+        def counting_parse(payload):
+            calls.append(1)
+            return real_parse(payload)
+
+        monkeypatch.setattr(document, "parse_pdf", counting_parse)
+        rec = document.extract_pdf_document(self._low_quality_pdf(), CFG)
+        assert rec["errors"][-1]["type"] == "remediation"
+        assert len(calls) == 1
+
+    def test_parse_once_record_equals_fresh_parse_per_strategy(self):
+        from pdf_extractor_spark.operators.document import (
+            _extract_pdf_once,
+            _remediation_strategies,
+            extract_pdf_document,
+        )
+        from pdf_extractor_spark.operators.pdf_tokenizer import parse_pdf
+
+        payload = self._low_quality_pdf()
+        best = _extract_pdf_once(parse_pdf(payload), CFG)
+        best_name = None
+        for name, alt in _remediation_strategies(CFG):
+            cand = _extract_pdf_once(parse_pdf(payload), alt)
+            if cand["quality"]["score"] > best["quality"]["score"]:
+                best, best_name = cand, name
+        assert best_name is not None
+        got = extract_pdf_document(payload, CFG)
+        assert best_name in got["errors"][-1]["message"]
+        assert got == dict(best, errors=best["errors"] + got["errors"][-1:])
+
+    def test_extraction_pass_leaves_the_parse_unchanged(self):
+        from pdf_extractor_spark.operators.document import (
+            _extract_pdf_once,
+            _remediation_strategies,
+        )
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            WORD_COLUMNS,
+            parse_pdf,
+        )
+
+        doc = parse_pdf(self._low_quality_pdf())
+
+        def snapshot():
+            return [
+                [(c, p.words[c].tolist(), p.words[c].tobytes()
+                  if c != "text" else None) for c in WORD_COLUMNS]
+                for p in doc.pages
+            ]
+
+        before = snapshot()
+        errors_before = list(doc.errors)
+        for _name, cfg in ((None, CFG), *_remediation_strategies(CFG)):
+            _extract_pdf_once(doc, cfg)
+            assert snapshot() == before
+            assert doc.errors == errors_before
+
     def test_good_doc_skips_remediation(self):
         from pdf_extractor_spark.fixtures.corpus import _pdf_single_col
         from pdf_extractor_spark.operators.document import (
@@ -481,3 +542,97 @@ class TestInventory:
 
     def test_clean_text_scans_empty(self):
         assert hallucination_scan("ordinary extracted text") == []
+
+
+# ------------------------------------------------- z-order candidates J5
+
+def _boxes(x0, x1, top, bottom):
+    n = len(x0)
+    return pd.DataFrame(
+        {"text": ["w"] * n, "x0": x0, "x1": x1, "top": top,
+         "bottom": bottom, "size": 12.0, "page": 1}
+    )
+
+
+def _line_page(n_lines, words_per_line, width, gap, y_step=14.0):
+    """Full-width lines of touching-but-not-overlapping words, with
+    every fifth word duplicated 2 pt to the right (a real overlap)."""
+    x0, x1, top, bottom = [], [], [], []
+    for line in range(n_lines):
+        t = 60.0 + y_step * line
+        for k in range(words_per_line):
+            a = 72.0 + k * (width + gap)
+            for dx in ((0.0, 2.0) if k % 5 == 0 else (0.0,)):
+                x0.append(a + dx)
+                x1.append(a + dx + width)
+                top.append(t)
+                bottom.append(t + 10.0)
+    return _boxes(x0, x1, top, bottom)
+
+
+class TestZorderCandidatePairs:
+    """``zorder_overlap_count`` against the O(n²) matrix oracle on the
+    shapes its candidate enumeration has to get right."""
+
+    def _check(self, frame):
+        from pdf_extractor_spark.operators.inventory import (
+            zorder_overlap_count_matrix,
+        )
+
+        got = zorder_overlap_count(frame)
+        assert got == zorder_overlap_count_matrix(frame)
+        return got
+
+    def test_degenerate_duplicate_and_tied_boxes_match_matrix(self):
+        import numpy as np
+
+        rng = np.random.RandomState(11)
+        nonzero = 0
+        for _ in range(200):
+            n = rng.randint(2, 50)
+            # coarse grids make ties on x0 and top, and duplicates
+            x0 = rng.randint(0, 12, n) * 5.0
+            top = rng.randint(0, 12, n) * 5.0
+            w = rng.choice([-8.0, -1.0, 0.0, 3.0, 5.0, 7.5, 20.0], n)
+            h = rng.choice([-4.0, 0.0, 2.0, 5.0, 10.0], n)
+            dup = rng.randint(0, n, n // 3)
+            x0 = np.concatenate([x0, x0[dup]])
+            top = np.concatenate([top, top[dup]])
+            w = np.concatenate([w, w[dup]])
+            h = np.concatenate([h, h[dup]])
+            nonzero += self._check(_boxes(x0, x0 + w, top, top + h)) > 0
+        assert nonzero > 100  # the oracle is not compared on empties only
+
+    def test_negative_extent_boxes_never_count(self):
+        # x1 < x0 and bottom < top: a positive "area" that is not a box
+        frame = _boxes([10.0, 10.0, 12.0], [0.0, 0.0, 2.0],
+                       [10.0, 10.0, 11.0], [0.0, 0.0, 1.0])
+        assert self._check(frame) == 0
+
+    def test_identical_boxes_count_every_pair(self):
+        frame = _boxes([5.0] * 6, [9.0] * 6, [1.0] * 6, [3.0] * 6)
+        assert self._check(frame) == 15
+
+    def test_page_of_full_width_lines(self):
+        assert self._check(_line_page(40, 12, 36.0, 4.0)) == 40 * 3
+
+    def test_single_long_line(self):
+        frame = _line_page(1, 1250, 5.0, 1.0)
+        assert len(frame) == 1500
+        assert self._check(frame) == 250
+
+    def test_block_boundaries(self, monkeypatch):
+        import numpy as np
+
+        from pdf_extractor_spark.operators import inventory
+
+        monkeypatch.setattr(inventory, "_ZORDER_PAIRS_PER_BLOCK", 7)
+        assert self._check(_line_page(6, 9, 30.0, 2.0)) == 6 * 2
+        rng = np.random.RandomState(5)
+        for _ in range(40):
+            n = rng.randint(2, 60)
+            x0 = rng.uniform(0, 100, n).round(1)
+            top = rng.uniform(0, 100, n).round(1)
+            frame = _boxes(x0, x0 + rng.uniform(0, 30, n), top,
+                           top + rng.uniform(0, 12, n))
+            self._check(frame)

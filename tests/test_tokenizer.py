@@ -2352,3 +2352,103 @@ class TestOptionalContent:
              b"BT /F1 12 Tf 72 600 Td (kept) Tj ET")
         w = _parse_content(s, 792.0, 1, hidden_ocs=frozenset({"oc0"}))
         assert list(w["text"]) == ["kept"]
+
+
+class TestSimpleBlockFastPath:
+    """``_parse_simple_blocks`` must give the same frame, bit for bit,
+    as the general operator loop it short-cuts, and must decline
+    (``None``) any stream that is not blocks and whitespace only."""
+
+    BLOCKS = [
+        b"BT /F1 12 Tf 72 700 Td (alpha beta gamma) Tj ET",
+        b"BT /F1 12 Tf 150 700 Td (runs   of  spaces) Tj ET",
+        b"BT /F1 12 Tf 300 700 Td ( leading and trailing ) Tj ET",
+        b"BT /F2 12.0 Tf 400 700 Td <48656C6C6F20776F726C64> Tj ET",
+        b"BT /F2 11 Tf 72 700 Td <65E5 672C 8A9E> Tj ET",
+        b"BT /F1 9.5 Tf -3.25 680.75 Td (esc \\(paren\\) \\\\ \\101\\102"
+        b" \\n tab\\t) Tj ET",
+        b"BT /F1 9.5 Tf 200 680.75 Td (split\\\nword con\\\r\ntinued) Tj ET",
+        b"BT /F1 10 Tf 72 -20.5 Td (below the page) Tj ET",
+        b"BT /F1 -8 Tf 72 640 Td (negative size) Tj ET",
+        b"BT /F1 -0 Tf -0 620 Td (zero size) Tj ET",
+        b"BT /F1 12 Tf 72 600 Td () Tj ET",
+        b"BT /F1 12 Tf 72 600 Td (   ) Tj ET",
+        b"BT /F1 12 Tf 90 600 Td <> Tj ET",
+    ]
+
+    @staticmethod
+    def _general(stream: bytes, height: float):
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            _scan_stream,
+            _WordSink,
+        )
+
+        rows = _WordSink()
+        _scan_stream(stream, height, None, None, rows, 0)
+        return rows.frame(3)
+
+    @staticmethod
+    def _columns(words):
+        from pdf_extractor_spark.operators.pdf_tokenizer import WORD_COLUMNS
+
+        return {c: (words[c].tolist(), None if c == "text"
+                    else words[c].tobytes()) for c in WORD_COLUMNS}
+
+    def _assert_same(self, stream: bytes, height: float = 792.0):
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            _parse_simple_blocks,
+        )
+
+        fast = _parse_simple_blocks(stream, height, 3)
+        assert fast is not None
+        assert self._columns(fast) == self._columns(
+            self._general(stream, height)
+        )
+        return fast
+
+    def test_each_block_alone(self):
+        for block in self.BLOCKS:
+            self._assert_same(block)
+
+    def test_all_blocks_with_whitespace_separators(self):
+        seps = [b" ", b"\n", b"\r\n", b"\t \x0c", b"\x0b", b"  \n  "]
+        stream = b"\n".join(self.BLOCKS)
+        words = self._assert_same(stream, 612.5)
+        assert "gamma" in words["text"].tolist()
+        mixed = b"".join(
+            block + seps[i % len(seps)] for i, block in enumerate(self.BLOCKS)
+        )
+        self._assert_same(b"  \r\n" + mixed)
+
+    def test_runs_on_one_line_and_line_changes(self):
+        # consecutive blocks sharing (size, y), then a size change on
+        # the same y, then the same size on a new y
+        stream = b" ".join([
+            b"BT /F1 12 Tf 72 700 Td (one) Tj ET",
+            b"BT /F1 12 Tf 100 700 Td (two) Tj ET",
+            b"BT /F1 12 Tf 130 700 Td (three four) Tj ET",
+            b"BT /F1 14 Tf 200 700 Td (bigger) Tj ET",
+            b"BT /F1 12 Tf 72 680 Td (next line) Tj ET",
+            b"BT /F1 12.0 Tf 140 680 Td (same size, other spelling) Tj ET",
+        ])
+        words = self._assert_same(stream)
+        assert words["top"].tolist()[:5] == [82.4] * 4 + [80.8]
+
+    def test_non_block_content_declines(self):
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            _parse_simple_blocks,
+        )
+
+        a = b"BT /F1 12 Tf 72 700 Td (a) Tj ET"
+        b = b"BT /F1 12 Tf 90 700 Td (b) Tj ET"
+        for stream in (
+            a + b" q " + b,              # operator between blocks
+            a + b" " + b + b" Q",        # after the last block
+            a + b"\x00" + b,             # non-whitespace byte
+            b"0 g " + a,                 # before the first block
+            a + b" BT /F1 12 Tf 1 2 Td (c) Tj",  # truncated block
+            b"",
+            b"  \n ",
+            b"q Q",
+        ):
+            assert _parse_simple_blocks(stream, 792.0, 1) is None, stream
