@@ -23,7 +23,7 @@ here every phase derives from a SINGLE parse. Phase order per page
 Routing: content sniffing on the payload magic (``%PDF-`` ⇒ PDF branch,
 else HTML branch), per SURVEY.md §1.3.
 
-This module is pure Python/pandas (no Spark): the Spark layer batches
+This module is pure Python/NumPy (no Spark): the Spark layer batches
 documents through it inside ``mapInPandas`` Arrow batches.
 """
 
@@ -168,7 +168,7 @@ def _extract_pdf_once(doc: PdfDoc, cfg: ExtractConfig) -> dict[str, Any]:
         )
         all_textboxes.extend(boxes)
         if len(box_consumed):
-            words = words.drop(index=box_consumed)
+            words = words.drop(box_consumed)
             kept_words += len(box_consumed)
         all_markers.extend(
             find_markers(words, page.page_number, page.height, cfg)
@@ -178,7 +178,7 @@ def _extract_pdf_once(doc: PdfDoc, cfg: ExtractConfig) -> dict[str, Any]:
         )
         all_defs.extend(defs)
         if len(consumed):
-            words = words.drop(index=consumed)
+            words = words.drop(consumed)
             kept_words += len(consumed)
         words = filter_metadata(words, page.height, headers, footers, cfg)
         kept_words += len(words)

@@ -13,9 +13,9 @@ import re
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 
 from ..config import ExtractConfig
+from .words import Words
 
 # P3 — section-number battery (reference extractor.py:66-74,315-336)
 SECTION_NUMBER_RE = re.compile(
@@ -73,7 +73,7 @@ def is_footnote_marker(text: str) -> bool:
 
 
 def detect_repeating_elements(
-    pages: list[pd.DataFrame],
+    pages: list[Words],
     page_heights: list[float],
     cfg: ExtractConfig,
 ) -> tuple[set[str], set[str]]:
@@ -105,18 +105,16 @@ def detect_repeating_elements(
         for words, h in zip(sample, heights):
             if len(words) == 0:
                 continue
-            top = words["top"].to_numpy()
+            top = words["top"]
             if top_band:
                 mask = top < cfg.header_band_frac * h
             else:
-                mask = words["bottom"].to_numpy() > (
-                    1 - cfg.footer_band_frac
-                ) * h
+                mask = words["bottom"] > (1 - cfg.footer_band_frac) * h
             if not mask.any():
                 continue
             t = top[mask]
-            x = words["x0"].to_numpy()[mask]
-            txt = words["text"].to_numpy()[mask]
+            x = words["x0"][mask]
+            txt = words["text"][mask]
             order = np.lexsort((x, t))  # stable, ties keep input order
             t = t[order]
             txt = txt[order]
@@ -147,7 +145,7 @@ _NEARBY_MATRIX_MAX = 1024    # full-matrix path below this (≈ 8 MB)
 _NEARBY_TILE = (256, 4096)   # member × candidate tile (≈ 8 MB)
 
 
-def has_nearby_content(words: pd.DataFrame, cfg: ExtractConfig) -> np.ndarray:
+def has_nearby_content(words: Words, cfg: ExtractConfig) -> np.ndarray:
     """P10 (reference ``extractor.py:385-418``): True per word if
     another word's center lies within ``isolation_dist``.
 
@@ -161,8 +159,8 @@ def has_nearby_content(words: pd.DataFrame, cfg: ExtractConfig) -> np.ndarray:
     n = len(words)
     if n <= 1:
         return np.zeros(n, dtype=bool)
-    cx = ((words["x0"] + words["x1"]) / 2).to_numpy(dtype=np.float64)
-    cy = ((words["top"] + words["bottom"]) / 2).to_numpy(dtype=np.float64)
+    cx = (words["x0"] + words["x1"]) / 2
+    cy = (words["top"] + words["bottom"]) / 2
     d2 = cfg.isolation_dist**2
     if n <= _NEARBY_MATRIX_MAX:
         dx = cx[:, None] - cx[None, :]
@@ -208,12 +206,12 @@ def has_nearby_content(words: pd.DataFrame, cfg: ExtractConfig) -> np.ndarray:
 
 
 def filter_metadata(
-    words: pd.DataFrame,
+    words: Words,
     page_height: float,
     headers: set[str],
     footers: set[str],
     cfg: ExtractConfig,
-) -> pd.DataFrame:
+) -> Words:
     """P2 — the 6-rule metadata filter (reference ``extractor.py:218-313``),
     include-by-default. Priority order (first hit wins), replicated:
 
@@ -230,10 +228,9 @@ def filter_metadata(
         return words
     # NumPy hot path: pages are ~10² words, where pandas per-op overhead
     # (not the arithmetic) dominates — identical decision table, array ops
-    text = words["text"].to_numpy()
-    texts = [str(t) for t in text]
-    top = words["top"].to_numpy()
-    bottom = words["bottom"].to_numpy()
+    texts = [str(t) for t in words["text"]]
+    top = words["top"]
+    bottom = words["bottom"]
 
     cls = [_classify_token(t) for t in texts]
     keep_always = np.fromiter(
@@ -279,7 +276,7 @@ def filter_metadata(
     drop_pagenum_band = np.zeros(len(texts), dtype=bool)
     midx = np.flatnonzero(in_margin)
     if len(midx) > 0:
-        x0 = words["x0"].to_numpy()
+        x0 = words["x0"]
         order = midx[np.lexsort((x0[midx], top[midx]))]
         new_band = np.empty(len(order), dtype=bool)
         new_band[0] = False
@@ -296,10 +293,10 @@ def filter_metadata(
         drop_pagenum | drop_header | drop_footer | drop_top
         | drop_isolated_digit | drop_pagenum_band
     ) & ~keep_always
-    return words.loc[~drop]
+    return words.take(~drop)
 
 
-def is_scanned_page(words: pd.DataFrame, cfg: ExtractConfig) -> bool:
+def is_scanned_page(words: Words, cfg: ExtractConfig) -> bool:
     """P12 (reference ``error_handler.py:210-221``): too few words ⇒
     treat as scanned raster page."""
     return 0 < len(words) < cfg.scanned_word_threshold

@@ -25,9 +25,10 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-import pandas as pd
+import numpy as np
 
 from ..config import ExtractConfig
+from .words import Words
 
 # P7 definition-start forms (marker + optional colon) — a definition is
 # a bottom-region line whose FIRST word matches one of these.
@@ -77,23 +78,21 @@ def marker_type(m: str) -> str:
 
 
 def find_markers(
-    words: pd.DataFrame, page_no: int, page_height: float, cfg: ExtractConfig
+    words: Words, page_no: int, page_height: float, cfg: ExtractConfig
 ) -> list[Marker]:
     """P7: body-region words matching the marker battery. Bottom-region
     hits are definition starts, not references — excluded here."""
     if len(words) == 0:
         return []
-    import numpy as np
-
-    top = words["top"].to_numpy()
-    texts = words["text"].to_numpy()
+    top = words["top"]
+    texts = words["text"]
     body = top < (1 - cfg.footnote_region_frac) * page_height
     hits = [
         i for i in np.flatnonzero(body) if _MARKER_RE.match(str(texts[i]))
     ]
     if not hits:
         return []
-    x0 = words["x0"].to_numpy()
+    x0 = words["x0"]
     hits.sort(key=lambda i: (top[i], x0[i]))  # stable: ties keep input order
     return [
         Marker(str(texts[i]), page_no, float(top[i]), float(x0[i]))
@@ -102,55 +101,51 @@ def find_markers(
 
 
 def find_definitions(
-    words: pd.DataFrame, page_no: int, page_height: float, cfg: ExtractConfig
-) -> tuple[list[Definition], pd.Index]:
+    words: Words, page_no: int, page_height: float, cfg: ExtractConfig
+) -> tuple[list[Definition], np.ndarray]:
     """P5 + C4 + W5: group bottom-region words into lines (Y-tolerance,
     then X-sort — ``footnote_extractor.py:278-301``), start a definition
     at each def-start line, absorb following non-start lines.
 
-    Returns (definitions, index-of-consumed-words) so the caller can
-    remove definition words from the body stream.
+    Returns (definitions, positions of the consumed words) so the
+    caller can remove definition words from the body stream.
     """
+    no_words = np.empty(0, dtype=np.intp)
     if len(words) == 0:
-        return [], pd.Index([])
-    import numpy as np
-
-    top_arr = words["top"].to_numpy()
+        return [], no_words
+    top_arr = words["top"]
     in_region = top_arr >= (1 - cfg.footnote_region_frac) * page_height
     if not in_region.any():
-        return [], pd.Index([])
+        return [], no_words
     # fast exit (the overwhelmingly common page): no region word is a
     # definition-start form, so no line grouping is needed at all
-    texts_arr = words["text"].to_numpy()
+    texts_arr = words["text"]
     if not any(
         _DEF_START_RE.match(str(texts_arr[i]))
         for i in np.flatnonzero(in_region)
     ):
-        return [], pd.Index([])
+        return [], no_words
     # NumPy line grouping (stable lexsort + run split) — identical to
     # the former sort_values/groupby chain, minus small-frame overhead
-    idx_all = words.index.to_numpy()
     reg = np.flatnonzero(in_region)
     t = top_arr[reg]
-    x = words["x0"].to_numpy()[reg]
+    x = words["x0"][reg]
     order = np.lexsort((x, t))  # stable (top, x0) sort
     t_s = t[order]
     x_s = x[order]
     reg_s = reg[order]
     brk = np.diff(t_s) >= cfg.footnote_line_tol
-    lines: list[tuple[float, str, list]] = []  # (y, first_word, words_idx)
+    lines: list[tuple[float, str, np.ndarray]] = []  # (y, first, positions)
     texts: list[list[str]] = []
     for seg in np.split(np.arange(len(reg_s)), np.flatnonzero(brk) + 1):
         g = seg[np.argsort(x_s[seg], kind="stable")]  # x-sort within line
         rows = reg_s[g]
         toks = [str(texts_arr[i]) for i in rows]
-        lines.append(
-            (float(top_arr[rows[0]]), toks[0], list(idx_all[rows]))
-        )
+        lines.append((float(top_arr[rows[0]]), toks[0], rows))
         texts.append(toks)
 
     defs: list[Definition] = []
-    consumed: list = []
+    consumed: list[np.ndarray] = []
     current: Definition | None = None
     for (y, first, idx), toks in zip(lines, texts):
         if _DEF_START_RE.match(first):
@@ -158,13 +153,13 @@ def find_definitions(
                 marker=first, text=" ".join(toks[1:]), page=page_no, y=y
             )
             defs.append(current)
-            consumed.extend(idx)
+            consumed.append(idx)
         elif current is not None:
             # W5: continuation line absorbed into the open definition
             current.text = (current.text + " " + " ".join(toks)).strip()
-            consumed.extend(idx)
+            consumed.append(idx)
         # lines before any def-start stay in the body
-    return defs, pd.Index(consumed)
+    return defs, np.concatenate(consumed) if consumed else no_words
 
 
 def match_markers(

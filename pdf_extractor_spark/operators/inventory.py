@@ -30,7 +30,8 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
+
+from .words import Words
 
 # P9 — suspicious-content battery (reference anti_hallucination.py:51-70)
 HALLUCINATION_PATTERNS: list[tuple[str, re.Pattern]] = [
@@ -61,7 +62,7 @@ def remove_suspicious(text: str) -> str:
 
 
 def element_inventory(
-    pages: list[pd.DataFrame], page_heights: list[float]
+    pages: list[Words], page_heights: list[float]
 ) -> dict[str, int]:
     """A3: whole-document inventory map (per-page counts summed).
 
@@ -79,13 +80,13 @@ def element_inventory(
         if n == 0:
             continue
         inv["total"] += n
-        top = words["top"].to_numpy()
+        top = words["top"]
         inv["region_top"] += int((top < 0.15 * h).sum())
         inv["region_bottom"] += int((top > 0.85 * h).sum())
         inv["region_middle"] += int(
             ((top >= 0.15 * h) & (top <= 0.85 * h)).sum()
         )
-        size = words["size"].to_numpy()
+        size = words["size"]
         inv["size_large"] += int((size > 18).sum())
         inv["size_standard"] += int(((size >= 10) & (size <= 18)).sum())
         inv["size_small"] += int(((size >= 6) & (size < 10)).sum())
@@ -102,16 +103,16 @@ def coverage_status(coverage: float) -> str:
     return "POOR"
 
 
-def dedup_words(words: pd.DataFrame) -> pd.DataFrame:
+def dedup_words(words: Words) -> Words:
     """D1: drop duplicate boxes on (round(x0,1), round(top,1), text) —
     keep first (stable)."""
     if len(words) < 2:
         return words
     # plain-object loop: .tolist() converts once so the hot tuple keys
     # are python floats (hash/eq in C) instead of numpy scalars
-    rx = np.round(words["x0"].to_numpy(), 1).tolist()
-    ry = np.round(words["top"].to_numpy(), 1).tolist()
-    texts = words["text"].to_numpy().tolist()
+    rx = np.round(words["x0"], 1).tolist()
+    ry = np.round(words["top"], 1).tolist()
+    texts = words["text"].tolist()
     seen: set = set()
     dups: list[int] = []
     for i, key in enumerate(zip(rx, ry, texts)):
@@ -121,9 +122,7 @@ def dedup_words(words: pd.DataFrame) -> pd.DataFrame:
             seen.add(key)
     if not dups:
         return words
-    keep = np.ones(len(words), dtype=bool)
-    keep[dups] = False
-    return words.loc[keep]
+    return words.drop(dups)
 
 
 # Candidate pairs tested per numpy block: a block's transient arrays
@@ -132,7 +131,7 @@ def dedup_words(words: pd.DataFrame) -> pd.DataFrame:
 _ZORDER_PAIRS_PER_BLOCK = 65_536
 
 
-def zorder_overlap_count(words: pd.DataFrame) -> int:
+def zorder_overlap_count(words: Words) -> int:
     """J5: number of word pairs whose bboxes overlap by more than 50% of
     the smaller box's area. Used only to FLAG (the reference reports,
     never repairs).
@@ -151,10 +150,10 @@ def zorder_overlap_count(words: pd.DataFrame) -> int:
     n = len(words)
     if n < 2:
         return 0
-    x0 = words["x0"].to_numpy()
-    x1 = words["x1"].to_numpy()
-    t = words["top"].to_numpy()
-    b = words["bottom"].to_numpy()
+    x0 = words["x0"]
+    x1 = words["x1"]
+    t = words["top"]
+    b = words["bottom"]
     later = np.arange(1, n + 1)
     best = None
     for lo, hi in ((x0, x1), (t, b)):
@@ -188,16 +187,16 @@ def zorder_overlap_count(words: pd.DataFrame) -> int:
     return count
 
 
-def zorder_overlap_count_matrix(words: pd.DataFrame) -> int:
+def zorder_overlap_count_matrix(words: Words) -> int:
     """Reference O(n²) matrix formulation — kept as the test oracle for
     the candidate-pair implementation above."""
     n = len(words)
     if n < 2:
         return 0
-    x0 = words["x0"].to_numpy()
-    x1 = words["x1"].to_numpy()
-    t = words["top"].to_numpy()
-    b = words["bottom"].to_numpy()
+    x0 = words["x0"]
+    x1 = words["x1"]
+    t = words["top"]
+    b = words["bottom"]
     iw = np.minimum(x1[:, None], x1[None, :]) - np.maximum(
         x0[:, None], x0[None, :]
     )

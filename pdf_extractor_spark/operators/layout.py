@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import pandas as pd
 
+from .words import Words
+
 
 def gap_cluster(sorted_vals: pd.Series, threshold: float) -> pd.Series:
     """Generic 1-D sessionization: new cluster when the gap from the
@@ -52,7 +54,7 @@ def group_lines(col_words: pd.DataFrame, line_threshold: float) -> pd.DataFrame:
     )
 
 
-def column_texts(words: pd.DataFrame, cfg) -> list[str]:
+def column_texts(words: Words, cfg) -> list[str]:
     """Fused C1 → C2 → O1/O2 → W2 body serialization on raw arrays —
     byte-identical to the detect_columns/group_lines/
     join_words_with_spacing pandas chain (asserted in tests), minus the
@@ -62,10 +64,10 @@ def column_texts(words: pd.DataFrame, cfg) -> list[str]:
 
     from .spacing import join_tokens
 
-    x0 = words["x0"].to_numpy()
-    x1 = words["x1"].to_numpy()
-    top = words["top"].to_numpy()
-    texts = words["text"].to_numpy()
+    x0 = words["x0"]
+    x1 = words["x1"]
+    top = words["top"]
+    texts = words["text"]
 
     order = np.argsort(x0, kind="stable")                    # C1 x-sort
     gaps = x0[order][1:] - x1[order][:-1]

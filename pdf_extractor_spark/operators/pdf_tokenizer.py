@@ -35,17 +35,15 @@ import re
 from dataclasses import dataclass, field
 from functools import lru_cache
 
-import pandas as pd
+import numpy as np
 
 from .charclass import is_wide_char
-from .words import Words, empty_words
+from .words import WORD_COLUMNS, Words, empty_words  # noqa: F401
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b")
 _NUM_RE = re.compile(rb"-?\d+(?:\.\d+)?")
 _ASCENT = 0.8
 _DESCENT = 0.2
-
-WORD_COLUMNS = ["text", "x0", "x1", "top", "bottom", "size", "page"]
 
 
 @dataclass
@@ -89,10 +87,6 @@ class PdfDoc:
     # ``/Name Do`` scan of the page content stream (top level;
     # form-nested draws are out of scope by design).
     images: list[tuple] = field(default_factory=list)
-
-
-def empty_word_frame() -> Words:
-    return empty_words()
 
 
 # ----------------------------------------------------------------- xref
@@ -631,10 +625,10 @@ def _stream_bytes(
 # parens, or an unbalanced one. No alternative matches between the
 # scan position and that ``(``, so the search stops at the first
 # ``(`` before the next flat token — the one
-# ``stream.find(b"(", pos, m.start())`` would return — and the hand
-# scan in ``_scan_stream`` starts there. A ``(`` after the last flat
-# token is scanned and pushed as an operand too, but no operator
-# follows to use it, so the words are the same.
+# ``stream.find(b"(", pos, m.start())`` would return — and
+# ``_LiteralEnds`` finds where that literal ends. A ``(`` after the
+# last flat token is scanned and pushed as an operand too, but no
+# operator follows to use it, so the words are the same.
 _TOKEN_RE = re.compile(
     rb"(\((?:[^()\\]|\\.)*\))"   # 1: literal string (non-nested)
     rb"|(<[0-9A-Fa-f\s]*>)"      # 2: hex string
@@ -647,37 +641,73 @@ _TOKEN_RE = re.compile(
 )
 
 
-def _scan_nested_literal(stream: bytes, start: int) -> int:
-    """End index (exclusive) of the literal string opening at
-    ``start``, honoring BALANCED unescaped parentheses — legal
-    without escapes per §7.3.4.2 and emitted by real writers; the
-    token regex above only spans the flat form.
+class _LiteralEnds:
+    """End offsets of the literal strings opening at the ``(`` bytes of
+    one content stream — the literals the token regex above cannot
+    span, because they nest BALANCED unescaped parentheses (legal
+    without escapes per §7.3.4.2 and emitted by real writers).
 
-    An UNBALANCED ``(`` (malformed writer) must not swallow the rest
-    of the page: salvage by ending at the first unescaped ``)``
-    (flat-string semantics) or at the end of the physical line,
-    whichever comes first — the damage stays local and every later
-    show operator still emits."""
-    depth = 0
-    i, n = start, len(stream)
-    first_close = -1
-    while i < n:
-        c = stream[i]
-        if c == 0x5C:  # backslash: the next byte is never a delimiter
-            i += 2
-            continue
-        if c == 0x28:
-            depth += 1
-        elif c == 0x29:
-            if first_close < 0:
-                first_close = i
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    ends = [e + 1 for e in (first_close, stream.find(b"\n", start))
-            if e >= 0]
-    return min(ends) if ends else n
+    ``end(start)`` is the end index (exclusive) of the literal opening
+    at ``start``: just past the ``)`` that brings the nesting depth
+    back to zero. An UNBALANCED ``(`` (malformed writer) must not
+    swallow the rest of the page: salvage by ending at the first
+    unescaped ``)`` after it (flat-string semantics) or at the end of
+    the physical line, whichever comes first — the damage stays local
+    and every later show operator still emits.
+
+    A backslash escapes the byte after it, so a byte is escaped exactly
+    when the run of backslashes before it has odd length; a walk from
+    any ``(`` sees the same escapes as a walk from the stream's start
+    from the next byte on. So one vectorised pass finds the unescaped
+    parentheses and the running depth after each, and a literal closes
+    at the first later one where the depth drops below its value at
+    ``start``. Each ``end`` is a few binary searches, so a stream of
+    many unbalanced ``(`` costs linear time, not a walk to the end of
+    the stream per ``(``."""
+
+    def __init__(self, stream: bytes) -> None:
+        b = np.frombuffer(stream, dtype=np.uint8)
+        self._n = len(b)
+        par = np.flatnonzero((b == 0x28) | (b == 0x29))
+        bs = np.flatnonzero(b == 0x5C)
+        if len(bs):
+            run_no = np.arange(len(bs))
+            new_run = np.ones(len(bs), dtype=bool)
+            new_run[1:] = np.diff(bs) != 1
+            run_len = run_no - np.maximum.accumulate(
+                np.where(new_run, run_no, 0)
+            ) + 1  # length of the backslash run ending at bs[i]
+            k = np.minimum(np.searchsorted(bs, par - 1), len(bs) - 1)
+            escaped = (bs[k] == par - 1) & (run_len[k] % 2 == 1)
+            par = par[~escaped]
+        opens = b[par] == 0x28
+        self._par = par
+        self._depth = np.cumsum(np.where(opens, 1, -1))
+        # (depth, paren number) pairs as one sorted key, so "the first
+        # paren at or after number j at depth d" is one binary search
+        self._stride = len(par) + 1
+        self._keys = np.sort(
+            self._depth * self._stride + np.arange(len(par))
+        )
+        self._closes = par[~opens]
+        self._newlines = np.flatnonzero(b == 0x0A)
+
+    def end(self, start: int) -> int:
+        j = int(np.searchsorted(self._par, start, "right"))
+        target = (int(self._depth[j - 1]) if j else 0) - 1
+        k = int(np.searchsorted(self._keys, target * self._stride + j))
+        if k < len(self._keys) and self._keys[k] // self._stride == target:
+            return int(self._par[self._keys[k] - target * self._stride]) + 1
+        ends = []
+        c = int(np.searchsorted(self._closes, start, "right"))
+        if c < len(self._closes):
+            ends.append(int(self._closes[c]) + 1)
+        nl = int(np.searchsorted(self._newlines, start))
+        if nl < len(self._newlines):
+            ends.append(int(self._newlines[nl]) + 1)
+        return min(ends) if ends else self._n
+
+
 _T_STR, _T_HEX, _T_NAME, _T_ARR, _T_NUM, _T_OP, _T_OPEN = range(1, 8)
 
 _LIT_ESCAPES = {b"n": "\n", b"r": "\r", b"t": "\t", b"b": "\b", b"f": "\f",
@@ -1505,8 +1535,6 @@ class _WordSink:
         self.invisible_shows: int = 0
 
     def frame(self, page_no: int) -> Words:
-        import numpy as np
-
         n = len(self.texts)
         x0 = np.asarray(self.x0s, dtype=float)
         x1 = np.asarray(self.x1s, dtype=float)
@@ -1565,7 +1593,9 @@ def _parse_simple_blocks(
     the stream is covered by block matches separated by whitespace —
     so the result is exactly what the general grammar would produce:
     each block resets the text matrix (BT), sets its own size (Tf),
-    positions once (Td), shows once (Tj).
+    positions once (Td), shows once (Tj). The whitespace between two
+    blocks must not be empty: the general grammar reads ``ETBT`` as
+    one unknown operator, so the second block's BT never resets.
 
     One ``split`` yields the gaps (every fifth item) and the four
     groups of each block. The arithmetic is the general loop's, written
@@ -1577,6 +1607,8 @@ def _parse_simple_blocks(
     # bytes.strip() drops exactly the bytes regex \s matches
     if len(parts) == 1 or b"".join(parts[::5]).strip():
         return None  # no blocks, or non-block content somewhere
+    if b"" in parts[5:-1:5]:
+        return None  # ET and the next BT fused into one token
     rows = _WordSink()
     t_app = rows.texts.append
     x0_app = rows.x0s.append
@@ -1610,7 +1642,7 @@ def _parse_simple_blocks(
             size_app(size)
             cx += w + space_adv
     if not rows.texts:
-        return empty_word_frame()
+        return empty_words()
     rows.verts = [False] * len(rows.texts)
     return rows.frame(page_no)
 
@@ -1653,7 +1685,7 @@ def _parse_content(
     width: float = 612.0,
     hidden_ocs: frozenset[str] | None = None,
     flags: dict | None = None,
-) -> pd.DataFrame:
+) -> Words:
     has_cmaps = fonts is not None and any(
         c is not None for c, _w, _v, _m in fonts.values()
     )
@@ -1679,7 +1711,7 @@ def _parse_content(
     if flags is not None and rows.invisible_shows:
         flags["invisible_shows"] = rows.invisible_shows
     if not rows.texts:
-        return empty_word_frame()
+        return empty_words()
     return rows.frame(page_no)
 
 
@@ -1764,6 +1796,7 @@ def _scan_stream(
     stack: list[bytes] = []  # pending operands
     in_array: list = []
     array_mode = False
+    literal_ends: _LiteralEnds | None = None  # built at the first nested one
     pos = 0
     while True:
         m = _TOKEN_RE.search(stream, pos)
@@ -1772,11 +1805,12 @@ def _scan_stream(
         kind = m.lastindex
         if kind == _T_OPEN:
             # a literal string the flat grammar could not span —
-            # nested balanced parens — so hand-scan it to its
-            # balanced close
+            # nested balanced parens — so find its balanced close
             kind = _T_STR
             p = m.start()
-            pos = _scan_nested_literal(stream, p)
+            if literal_ends is None:
+                literal_ends = _LiteralEnds(stream)
+            pos = literal_ends.end(p)
             tok = stream[p:pos]
         else:
             tok = m.group(0)
@@ -2786,7 +2820,7 @@ def parse_pdf(data: bytes) -> PdfDoc:
                     {"type": "corruption", "severity": "error", "page": idx,
                      "message": f"content parse failed: {exc}"}
                 )
-                words = empty_word_frame()
+                words = empty_words()
             if rotation:
                 doc.errors.append(
                     {"type": "rotation", "severity": "warning", "page": idx,

@@ -11,15 +11,15 @@ and merged into the base word. The base word's ``x1`` is extended mid-loop
 (reference mutates it the same way — SURVEY.md §7.4 trap 4 — which makes
 later gap tests see the merged extent; replicated as-is).
 
-Pure pandas/NumPy — runs inside the Arrow batch, never per-row Spark.
+Pure NumPy — runs inside the Arrow batch, never per-row Spark.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from ..config import ExtractConfig
+from .words import Words
 
 
 # F4 — Unicode translation maps (reference extractor.py:757-792)
@@ -35,14 +35,13 @@ def to_subscript(text: str) -> str:
     return text.translate(SUBSCRIPT_MAP)
 
 
-def trimmed_mean_size(sizes: pd.Series) -> float:
+def trimmed_mean_size(sizes: np.ndarray) -> float:
     """A2 (reference ``superscript_detector.py:161-177``): drop the top
-    and bottom 10% then mean. NumPy path (pandas sort_values/iloc cost
-    ~0.45 ms per page-sized Series — hot in the kernel profile); the
-    mean is over the same sorted value multiset in the same order, so
-    the result is bit-identical to the pandas form (both sum via
-    NumPy pairwise summation)."""
-    vals = sizes.to_numpy(dtype=float, copy=False)
+    and bottom 10% then mean. The mean is over the same sorted value
+    multiset in the same order as a pandas ``sort_values``/``iloc``
+    form, so the result is bit-identical to it (both sum via NumPy
+    pairwise summation)."""
+    vals = np.asarray(sizes, dtype=float)
     vals = vals[~np.isnan(vals)]
     n = len(vals)
     if n == 0:
@@ -54,18 +53,18 @@ def trimmed_mean_size(sizes: pd.Series) -> float:
     return float(vals.mean())
 
 
-def attach_scripts(words: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
+def attach_scripts(words: Words, cfg: ExtractConfig) -> Words:
     """W3 (reference ``extractor.py:691-755``): merge script-sized words
     into their base word within each horizontal band.
 
-    Returns a new frame (WORD_COLUMNS shape) with script words consumed.
+    Returns new word boxes with the script words consumed.
     Bands are ~10 words, so the per-band merge loop is bounded; the
     banding itself is the vectorized C3 sessionization.
     """
     if len(words) < 2:
         return words
-    sizes = words["size"].to_numpy()
-    avg_size = trimmed_mean_size(words["size"])
+    sizes = words["size"]
+    avg_size = trimmed_mean_size(sizes)
     threshold = cfg.script_size_ratio * avg_size
     small = sizes < threshold
     if not small.any():
@@ -74,12 +73,12 @@ def attach_scripts(words: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
     # NumPy band walk — same C3 banding (stable (top, x0) sort, gap
     # breaks) and the same mid-loop x1 extension (trap 4), minus the
     # per-band groupby/to_dict overhead of the former pandas form
-    top = words["top"].to_numpy()
-    bottom = words["bottom"].to_numpy()
-    x0 = words["x0"].to_numpy()
-    x1 = words["x1"].to_numpy()
-    texts = words["text"].to_numpy()
-    page = words["page"].to_numpy()
+    top = words["top"]
+    bottom = words["bottom"]
+    x0 = words["x0"]
+    x1 = words["x1"]
+    texts = words["text"]
+    page = words["page"]
     order = np.lexsort((x0, top))
     brk = np.diff(top[order]) >= cfg.band_tolerance
 
@@ -113,14 +112,12 @@ def attach_scripts(words: pd.DataFrame, cfg: ExtractConfig) -> pd.DataFrame:
             bot_out.append(bottom[i])
             size_out.append(sizes[i])
             page_out.append(page[i])
-    return pd.DataFrame(
-        {
-            "text": pd.Series(t_out, dtype=object),
-            "x0": np.asarray(x0_out, dtype=float),
-            "x1": np.asarray(x1_out, dtype=float),
-            "top": np.asarray(top_out, dtype=float),
-            "bottom": np.asarray(bot_out, dtype=float),
-            "size": np.asarray(size_out, dtype=float),
-            "page": np.asarray(page_out, dtype=page.dtype),
-        }
+    return Words(
+        text=np.array(t_out, dtype=object),
+        x0=np.asarray(x0_out, dtype=float),
+        x1=np.asarray(x1_out, dtype=float),
+        top=np.asarray(top_out, dtype=float),
+        bottom=np.asarray(bot_out, dtype=float),
+        size=np.asarray(size_out, dtype=float),
+        page=np.asarray(page_out, dtype=page.dtype),
     )

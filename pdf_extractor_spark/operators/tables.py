@@ -8,7 +8,7 @@ serialization, ``layout_analyzer.py:59-138``), J4 (overlap dedup keeping
 highest confidence, ``layout_analyzer.py:440-469``), and J1/P8
 (word-in-table containment exclusion, ``extractor.py:819-842``).
 
-All pure pandas — per-document work inside the Arrow batch. The
+All pure NumPy — per-document work inside the Arrow batch. The
 containment test (J1) is the point-in-rectangle range-join shape: with
 ≤~10 tables per page it is a broadcast-nested-loop over vectorized
 interval masks, never an O(n²) Python loop over words.
@@ -20,9 +20,9 @@ import re
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 from ..config import ExtractConfig
+from .words import Words
 
 _NUMERIC_RE = re.compile(r"^[\d,.\-+%¥$€()]+$")
 
@@ -62,16 +62,16 @@ def _cluster_1d(vals, tol: float, min_members: int) -> list[float]:
 
 
 def _grid_text(
-    words: pd.DataFrame,
+    words: Words,
     col_pos: list[float],
     row_pos: list[float],
     tol: float,
 ) -> tuple[str, int, bool]:
     """Assign words to (row, col) cells, serialize pipe-style (F6) and
     apply the header heuristic (F10). Returns (text, populated, header)."""
-    cx = words["x0"].to_numpy()
-    cy = words["top"].to_numpy()
-    txt = words["text"].to_numpy()
+    cx = words["x0"]
+    cy = words["top"]
+    txt = words["text"]
     cols = np.abs(cx[:, None] - np.array(col_pos)[None, :]).argmin(axis=1)
     rows = np.abs(cy[:, None] - np.array(row_pos)[None, :]).argmin(axis=1)
     # stable (row, col, x0) sort then run-split on (row, col) — same
@@ -133,7 +133,7 @@ def _match_count(a: np.ndarray, b: np.ndarray, tol: float) -> int:
 
 
 def detect_tables(
-    words: pd.DataFrame, page_no: int, cfg: ExtractConfig
+    words: Words, page_no: int, cfg: ExtractConfig
 ) -> list[Table]:
     """Grid detection via consecutive-line compatibility.
 
@@ -160,8 +160,8 @@ def detect_tables(
     """
     if len(words) < cfg.table_min_cells:
         return []
-    top_a = words["top"].to_numpy()
-    x0_a = words["x0"].to_numpy()
+    top_a = words["top"]
+    x0_a = words["x0"]
     order = np.lexsort((x0_a, top_a))  # stable (top, x0) sort
     sorted_top = top_a[order]
     breaks = np.flatnonzero(np.diff(sorted_top) > cfg.table_align_tol) + 1
@@ -196,21 +196,21 @@ def detect_tables(
         i = j + 1
         if len(run) < cfg.table_min_rows:
             continue
-        # build the pandas block only for qualifying runs (rare path)
-        block = words.iloc[np.concatenate(run)]
+        # build the block only for qualifying runs (rare path)
+        block = words.take(np.concatenate(run))
+        cx = block["x0"]
         col_pos = _cluster_1d(
-            block["x0"], cfg.table_align_tol, cfg.table_min_rows - 1
+            cx, cfg.table_align_tol, cfg.table_min_rows - 1
         )
         if len(col_pos) < cfg.table_min_cols:
             continue
-        cx = block["x0"].to_numpy()
         on_col = (
             np.abs(cx[:, None] - np.array(col_pos)[None, :])
             <= cfg.table_align_tol
         ).any(axis=1)
         if on_col.mean() < cfg.table_occupancy_min:
             continue  # flowing text: words mostly off-grid
-        member = block.loc[on_col]
+        member = block.take(on_col)
         if len(member) < cfg.table_min_cells:
             continue
         row_pos = [float(top_a[ln].mean()) for ln in run]
@@ -262,19 +262,17 @@ def dedup_tables(tables: list[Table]) -> list[Table]:
     return kept
 
 
-def exclude_table_words(
-    words: pd.DataFrame, tables: list[Table]
-) -> pd.DataFrame:
+def exclude_table_words(words: Words, tables: list[Table]) -> Words:
     """J1/P8 (reference ``extractor.py:819-842``): drop words whose
     CENTER lies inside any detected table bbox — vectorized
     point-in-rect containment per table (broadcast-nested-loop)."""
     if not tables or len(words) == 0:
         return words
-    cx = ((words["x0"] + words["x1"]) / 2).to_numpy()
-    cy = ((words["top"] + words["bottom"]) / 2).to_numpy()
+    cx = (words["x0"] + words["x1"]) / 2
+    cy = (words["top"] + words["bottom"]) / 2
     inside = np.zeros(len(words), dtype=bool)
     for t in tables:
         inside |= (
             (cx >= t.x0) & (cx <= t.x1) & (cy >= t.top) & (cy <= t.bottom)
         )
-    return words.loc[~inside]
+    return words.take(~inside)

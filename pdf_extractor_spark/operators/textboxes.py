@@ -18,9 +18,9 @@ import re
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 
 from ..config import ExtractConfig
+from .words import Words
 
 # F11 keyword → box_type (first hit wins; reference order)
 _BOX_TYPES: list[tuple[str, re.Pattern]] = [
@@ -49,13 +49,13 @@ def classify_textbox(text: str) -> str:
     return "generic"
 
 
-def _strip_lines(strip, cfg: ExtractConfig) -> str:
+def _strip_lines(strip: Words, cfg: ExtractConfig) -> str:
     """Stable (top, x0) sort → gap-break lines → x-sort per line —
     NumPy form of the former sort_values/groupby chain (same stable
     tie order)."""
-    top = strip["top"].to_numpy()
-    x0 = strip["x0"].to_numpy()
-    txt = strip["text"].to_numpy()
+    top = strip["top"]
+    x0 = strip["x0"]
+    txt = strip["text"]
     order = np.lexsort((x0, top))
     brk = np.diff(top[order]) >= cfg.line_height_threshold
     lines = []
@@ -66,10 +66,10 @@ def _strip_lines(strip, cfg: ExtractConfig) -> str:
 
 
 def detect_sidebars(
-    words: pd.DataFrame, page_no: int, page_width: float,
+    words: Words, page_no: int, page_width: float,
     cfg: ExtractConfig,
-) -> tuple[list[TextBox], pd.Index]:
-    """C7: returns (sidebar boxes, index of consumed words).
+) -> tuple[list[TextBox], np.ndarray]:
+    """C7: returns (sidebar boxes, positions of the consumed words).
 
     A strip qualifies only when (a) it holds ≥ ``sidebar_min_words``
     words fully inside the margin fraction, (b) main content exists
@@ -78,15 +78,15 @@ def detect_sidebars(
     strip boundary (gap ≈ word spacing) never qualifies.
     """
     if len(words) < cfg.sidebar_min_words:
-        return [], pd.Index([])
-    x0 = words["x0"].to_numpy()
-    x1 = words["x1"].to_numpy()
+        return [], np.empty(0, dtype=np.intp)
+    x0 = words["x0"]
+    x1 = words["x1"]
     left_mask = x1 <= cfg.sidebar_strip_frac * page_width
     right_mask = x0 >= (1 - cfg.sidebar_strip_frac) * page_width
     main_mask = ~(left_mask | right_mask)
     n_main = int(main_mask.sum())
     boxes: list[TextBox] = []
-    consumed: list = []
+    consumed: list[np.ndarray] = []
     for side, mask in (("left", left_mask), ("right", right_mask)):
         n_strip = int(mask.sum())
         if n_strip < cfg.sidebar_min_words or n_main == 0:
@@ -97,9 +97,8 @@ def detect_sidebars(
             gap = float(x0[mask].min() - x1[main_mask].max())
         if gap <= cfg.sidebar_gap_min:
             continue
-        strip = words.loc[mask]
+        strip = words.take(mask)
         text = _strip_lines(strip, cfg)
-        strip_labels = words.index.to_numpy()[mask]
         boxes.append(
             TextBox(
                 page=page_no,
@@ -111,8 +110,7 @@ def detect_sidebars(
                 bottom=float(strip["bottom"].max()),
             )
         )
-        # labels taken from the PARENT frame's index (mask-selected):
-        # identical to strip.index for pandas, and correct positional
-        # labels for Words (whose subsets reset their index)
-        consumed.extend(strip_labels)
-    return boxes, pd.Index(consumed)
+        consumed.append(np.flatnonzero(mask))
+    if not consumed:
+        return boxes, np.empty(0, dtype=np.intp)
+    return boxes, np.concatenate(consumed)

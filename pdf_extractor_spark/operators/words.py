@@ -1,98 +1,30 @@
-"""Columnar word-box container for the per-page kernel hot path.
+"""Columnar word boxes: the one container of the per-page kernel.
 
-The extraction kernel used to pass a pandas DataFrame of word boxes
-between every per-page operator. The operators themselves are all
-NumPy (they pull columns out via ``words["x0"].to_numpy()``), so the
-frames only paid pandas *container* costs — ~170 µs to construct,
-~100-270 µs per ``.loc``/``.drop`` subset — which at 3-5 subsets per
-page was ~25% of kernel wall time.
+Every page operator from the tokenizer to ``layout.column_texts``
+takes a :class:`Words` and, where it keeps a subset, returns one. A
+Words is a struct of NumPy columns, one entry per word:
 
-:class:`Words` is a plain struct of NumPy arrays exposing exactly the
-container surface the operators and tests use — ``len``,
-``words["col"]`` (returns the array), ``.loc[bool_mask]``,
-``.iloc[i]`` / ``.iloc[positions]``, ``.index``, ``.drop(index=…)``,
-``.equals`` — so every operator keeps accepting EITHER a DataFrame
-(tests construct those) or a Words (the pipeline), unchanged. Subsets
-cost one fancy-index per column (~10 µs total) instead of a frame
-materialization.
+- ``words["x0"]`` is the column itself, a plain ndarray
+- ``take(mask_or_positions)`` keeps the words a boolean mask or an
+  array of positions selects
+- ``drop(positions)`` removes words by position
 
-Positional semantics: a Words' index is always ``arange(len)``; a
-subset resets it. This matches the pipeline's use of pandas (every
-consumer reads ``.index`` of the same object it subsets and hands the
-labels straight back to ``.drop`` on that object), asserted end-to-end
-by the golden byte-equality suite.
+Positions are always ``0 .. len - 1``, and every subset numbers its
+words afresh. An operator that consumes words (sidebars, footnote
+definitions) returns their positions as an intp array, taken in the
+Words it was given, and the caller drops them from that same Words.
+A subset costs one fancy-index per column.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable
-
 import numpy as np
-import pandas as pd
 
 WORD_COLUMNS = ["text", "x0", "x1", "top", "bottom", "size", "page"]
 
 
-class _Col(np.ndarray):
-    """ndarray view with a ``to_numpy()`` method, so operator code
-    written against pandas Series (``words["x0"].to_numpy()``) works
-    on Words columns verbatim. Arithmetic on _Col returns _Col, so
-    chained forms like ``((w["x0"] + w["x1"]) / 2).to_numpy()`` work
-    too. ``min``/``max``/``sum``/``tolist`` are inherited."""
-
-    def to_numpy(
-        self, dtype: Any = None, copy: bool = False
-    ) -> np.ndarray:
-        arr = self.view(np.ndarray)
-        if dtype is not None and arr.dtype != np.dtype(dtype):
-            return arr.astype(dtype)
-        return arr.copy() if copy else arr
-
-
-def _col(arr: np.ndarray) -> _Col:
-    return arr.view(_Col)
-
-
-class _Row:
-    """``words.iloc[i]`` result: scalar access by column name."""
-
-    __slots__ = ("_w", "_i")
-
-    def __init__(self, w: "Words", i: int) -> None:
-        self._w = w
-        self._i = i
-
-    def __getitem__(self, col: str):
-        return getattr(self._w, col)[self._i]
-
-
-class _ILoc:
-    __slots__ = ("_w",)
-
-    def __init__(self, w: "Words") -> None:
-        self._w = w
-
-    def __getitem__(self, key):
-        if isinstance(key, (int, np.integer)):
-            return _Row(self._w, int(key))
-        return self._w._take(np.asarray(key))
-
-
-class _Loc:
-    __slots__ = ("_w",)
-
-    def __init__(self, w: "Words") -> None:
-        self._w = w
-
-    def __getitem__(self, mask):
-        m = np.asarray(mask)
-        if m.dtype == bool:
-            return self._w._take(np.flatnonzero(m))
-        return self._w._take(m)
-
-
 class Words:
-    """Columnar word boxes: ``text`` (object), ``x0 x1 top bottom
+    """Word boxes of one page: ``text`` (object), ``x0 x1 top bottom
     size`` (float64), ``page`` (int64)."""
 
     __slots__ = ("text", "x0", "x1", "top", "bottom", "size", "page")
@@ -115,40 +47,25 @@ class Words:
         self.size = size
         self.page = page
 
-    # -- container surface -------------------------------------------
     def __len__(self) -> int:
         return len(self.text)
 
-    def __getitem__(self, col: str) -> _Col:
-        return _col(getattr(self, col))
+    def __getitem__(self, col: str) -> np.ndarray:
+        return getattr(self, col)
 
-    @property
-    def columns(self) -> list[str]:
-        return list(WORD_COLUMNS)
-
-    @property
-    def index(self) -> _Col:
-        return _col(np.arange(len(self.text)))
-
-    @property
-    def loc(self) -> _Loc:
-        return _Loc(self)
-
-    @property
-    def iloc(self) -> _ILoc:
-        return _ILoc(self)
-
-    def _take(self, idx: np.ndarray) -> "Words":
+    def take(self, idx: np.ndarray) -> "Words":
+        """The words a boolean mask or a position array selects, in
+        the order it selects them."""
         return Words(
             self.text[idx], self.x0[idx], self.x1[idx], self.top[idx],
             self.bottom[idx], self.size[idx], self.page[idx],
         )
 
-    def drop(self, index: Iterable[int]) -> "Words":
-        """Positional removal (a Words' labels ARE positions)."""
+    def drop(self, positions: np.ndarray) -> "Words":
+        """The words not at ``positions``, in their order."""
         keep = np.ones(len(self.text), dtype=bool)
-        keep[np.asarray(index, dtype=np.intp)] = False
-        return self._take(np.flatnonzero(keep))
+        keep[positions] = False
+        return self.take(keep)
 
     def equals(self, other: "Words") -> bool:
         if not isinstance(other, Words) or len(self) != len(other):
@@ -158,9 +75,10 @@ class Words:
             for c in WORD_COLUMNS
         )
 
-    # -- converters ---------------------------------------------------
     @classmethod
-    def from_frame(cls, df: pd.DataFrame) -> "Words":
+    def from_frame(cls, df) -> "Words":
+        """From a table with the ``WORD_COLUMNS`` (a pandas DataFrame
+        in tests)."""
         return cls(
             text=df["text"].to_numpy(),
             x0=df["x0"].to_numpy(dtype=float),
@@ -169,19 +87,6 @@ class Words:
             bottom=df["bottom"].to_numpy(dtype=float),
             size=df["size"].to_numpy(dtype=float),
             page=df["page"].to_numpy(),
-        )
-
-    def to_frame(self) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "text": pd.Series(self.text, dtype=object),
-                "x0": self.x0,
-                "x1": self.x1,
-                "top": self.top,
-                "bottom": self.bottom,
-                "size": self.size,
-                "page": self.page,
-            }
         )
 
 

@@ -34,12 +34,17 @@ from pdf_extractor_spark.operators.spacing import (
     join_lines,
     join_words_with_spacing,
 )
+from pdf_extractor_spark.operators.words import WORD_COLUMNS, Words
+
+
+def _frame(rows):
+    """A pandas frame, for the pandas oracles in ``layout``/``spacing``."""
+    return pd.DataFrame(rows, columns=WORD_COLUMNS)
 
 
 def _words(rows):
-    return pd.DataFrame(
-        rows, columns=["text", "x0", "x1", "top", "bottom", "size", "page"]
-    )
+    """The page operators' input."""
+    return Words.from_frame(_frame(rows))
 
 
 # ---------------------------------------------------------- charclass
@@ -66,7 +71,7 @@ def test_gap_cluster_sessionization():
 
 
 def test_detect_columns_two_col():
-    w = _words(
+    w = _frame(
         [
             ("L1", 72, 100, 100, 112, 12, 1),
             ("L2", 72, 100, 120, 132, 12, 1),
@@ -81,7 +86,7 @@ def test_detect_columns_two_col():
 
 
 def test_group_lines_threshold():
-    w = _words(
+    w = _frame(
         [
             ("b", 100, 120, 100, 112, 12, 1),
             ("a", 72, 95, 100.5, 112, 12, 1),   # same line (|d|<15)
@@ -109,7 +114,7 @@ def test_group_lines_threshold():
 )
 def test_spacing_decision_table(gap, a, b, expect):
     x1a = 100.0
-    w = _words(
+    w = _frame(
         [
             (a, 50, x1a, 100, 112, 12, 1),
             (b, x1a + gap, x1a + gap + 20, 100, 112, 12, 1),
@@ -211,6 +216,34 @@ def test_filter_isolated_margin_digit_dropped():
     )
     out = filter_metadata(w, h, set(), set(), CFG)
     assert set(out["text"]) == {"body"}
+
+
+# ------------------------------------------------ page-kernel imports
+
+# Every module a page's word boxes pass through between the tokenizer
+# and the layout serializer: one container type (``words.Words``), so
+# none of them may import pandas.
+PAGE_KERNEL_MODULES = [
+    "document", "inventory", "filters", "footnotes", "tables",
+    "textboxes", "scripts", "words", "pdf_tokenizer",
+]
+
+
+@pytest.mark.parametrize("module", PAGE_KERNEL_MODULES)
+def test_page_kernel_module_does_not_import_pandas(module):
+    import ast
+    from pathlib import Path
+
+    import pdf_extractor_spark.operators as ops
+
+    path = Path(ops.__file__).parent / f"{module}.py"
+    imported = set()
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.Import):
+            imported.update(a.name.split(".")[0] for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            imported.add(node.module.split(".")[0])
+    assert "pandas" not in imported, module
 
 
 # --------------------------------------------------------------- html

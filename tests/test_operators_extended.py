@@ -39,13 +39,14 @@ from pdf_extractor_spark.operators.tables import (
     detect_tables,
     exclude_table_words,
 )
+from pdf_extractor_spark.operators.words import Words
 
 
 def _frame(rows):
-    """rows: (text, x0, x1, top, bottom, size)"""
-    return pd.DataFrame(
+    """rows: (text, x0, x1, top, bottom, size) → page-1 word boxes"""
+    return Words.from_frame(pd.DataFrame(
         rows, columns=["text", "x0", "x1", "top", "bottom", "size"]
-    ).assign(page=1)
+    ).assign(page=1))
 
 
 def _grid_frame(nrows=4, ncols=3, x_step=100.0, y_step=25.0):
@@ -176,19 +177,18 @@ class TestNearbyContentGuard:
 
     @staticmethod
     def _frame(xs, ys):
-        import pandas as pd
-
-        return pd.DataFrame(
+        return Words.from_frame(pd.DataFrame(
             {"text": ["w"] * len(xs), "x0": xs, "x1": [x + 8 for x in xs],
-             "top": ys, "bottom": [y + 10 for y in ys]}
-        )
+             "top": ys, "bottom": [y + 10 for y in ys], "size": 12.0,
+             "page": 1}
+        ))
 
     @staticmethod
     def _matrix_oracle(words, cfg):
         import numpy as np
 
-        cx = ((words["x0"] + words["x1"]) / 2).to_numpy()
-        cy = ((words["top"] + words["bottom"]) / 2).to_numpy()
+        cx = (words["x0"] + words["x1"]) / 2
+        cy = (words["top"] + words["bottom"]) / 2
         dx = cx[:, None] - cx[None, :]
         dy = cy[:, None] - cy[None, :]
         dist2 = dx * dx + dy * dy
@@ -270,6 +270,7 @@ class TestScripts:
                for i in range(8)]
         )
         out = attach_scripts(words, CFG)
+        assert isinstance(out, Words)  # a merge keeps the container type
         assert "x²" in set(out["text"])
         assert "2" not in set(out["text"])
 
@@ -282,11 +283,11 @@ class TestScripts:
                for i in range(8)]
         )
         out = attach_scripts(words, CFG)
-        row = out.loc[out["text"] == "H₂"]
+        row = out.take(out["text"] == "H₂")
         assert len(row) == 1
         # trap 4: base x1 extended to the script's x1, so the next gap
         # test sees the merged extent (116 - 115 = 1 < gap threshold...)
-        assert float(row["x1"].iloc[0]) == 115.0
+        assert float(row["x1"][0]) == 115.0
 
     def test_no_candidates_fast_path(self):
         words = _frame(
@@ -516,10 +517,10 @@ class TestInventory:
             w = rng.uniform(1, 60, n)
             top = rng.uniform(0, 700, n)
             h = rng.uniform(5, 15, n)
-            frame = pd.DataFrame(
+            frame = Words.from_frame(pd.DataFrame(
                 {"text": ["w"] * n, "x0": x0, "x1": x0 + w,
                  "top": top, "bottom": top + h, "size": 12.0, "page": 1}
-            )
+            ))
             assert zorder_overlap_count(frame) == (
                 zorder_overlap_count_matrix(frame)
             )
@@ -548,10 +549,10 @@ class TestInventory:
 
 def _boxes(x0, x1, top, bottom):
     n = len(x0)
-    return pd.DataFrame(
+    return Words.from_frame(pd.DataFrame(
         {"text": ["w"] * n, "x0": x0, "x1": x1, "top": top,
          "bottom": bottom, "size": 12.0, "page": 1}
-    )
+    ))
 
 
 def _line_page(n_lines, words_per_line, width, gap, y_step=14.0):

@@ -24,6 +24,7 @@ from pdf_extractor_spark.operators.spacing import (
     join_tokens,
     join_words_with_spacing,
 )
+from pdf_extractor_spark.operators.words import Words
 
 CFG = DEFAULT_CONFIG
 
@@ -103,7 +104,9 @@ def _unfused_column_texts(words: pd.DataFrame) -> list[str]:
 @settings(max_examples=150, deadline=None)
 @given(word_frames())
 def test_fused_column_texts_matches_pandas_chain(words):
-    assert column_texts(words, CFG) == _unfused_column_texts(words)
+    assert column_texts(Words.from_frame(words), CFG) == (
+        _unfused_column_texts(words)
+    )
 
 
 @settings(max_examples=150, deadline=None)
@@ -182,7 +185,9 @@ def test_cleanup_plain_ascii_single_line_stable(text):
 @settings(max_examples=60, deadline=None)
 @given(word_frames(max_words=25))
 def test_column_texts_two_run_determinism(words):
-    assert column_texts(words, CFG) == column_texts(words.copy(), CFG)
+    assert column_texts(Words.from_frame(words), CFG) == column_texts(
+        Words.from_frame(words.copy()), CFG
+    )
 
 
 @settings(max_examples=200, deadline=None)

@@ -18,9 +18,9 @@ def test_roundtrip_word_boxes():
     w = doc.pages[0].words
     assert w["text"].tolist() == ["Alpha", "Beta"]
     # known-by-construction geometry: Alpha = 5 ASCII chars * 6pt
-    assert w.iloc[0]["x0"] == 72.0 and w.iloc[0]["x1"] == 102.0
-    assert w.iloc[0]["top"] == 100.0  # put() places the top edge
-    assert w.iloc[0]["bottom"] == 112.0
+    assert w["x0"][0] == 72.0 and w["x1"][0] == 102.0
+    assert w["top"][0] == 100.0  # put() places the top edge
+    assert w["bottom"][0] == 112.0
 
 
 def test_roundtrip_cjk_hex_strings():
@@ -29,7 +29,7 @@ def test_roundtrip_cjk_hex_strings():
     doc = parse_pdf(build_pdf([p]))
     w = doc.pages[0].words
     assert w["text"].tolist() == ["日本語テキスト"]
-    assert w.iloc[0]["x1"] - w.iloc[0]["x0"] == 7 * 12.0  # wide glyphs
+    assert w["x1"][0] - w["x0"][0] == 7 * 12.0  # wide glyphs
 
 
 def test_space_splitting_inside_one_tj():
@@ -39,7 +39,7 @@ def test_space_splitting_inside_one_tj():
     w = doc.pages[0].words
     assert w["text"].tolist() == ["one", "two"]
     # "one" 3 chars -> x1=90; space 6pt; "two" starts at 96
-    assert w.iloc[1]["x0"] == 96.0
+    assert w["x0"][1] == 96.0
 
 
 def test_escaped_parentheses_literal():
@@ -2447,8 +2447,75 @@ class TestSimpleBlockFastPath:
             a + b"\x00" + b,             # non-whitespace byte
             b"0 g " + a,                 # before the first block
             a + b" BT /F1 12 Tf 1 2 Td (c) Tj",  # truncated block
+            a + b,                       # "ETBT": one unknown operator
             b"",
             b"  \n ",
             b"q Q",
         ):
             assert _parse_simple_blocks(stream, 792.0, 1) is None, stream
+
+
+def _scan_nested_literal_oracle(stream: bytes, start: int) -> int:
+    """The former per-``(`` walk, kept as the oracle: it walks to the
+    end of the stream for every unbalanced ``(``."""
+    depth = 0
+    i, n = start, len(stream)
+    first_close = -1
+    while i < n:
+        c = stream[i]
+        if c == 0x5C:  # backslash: the next byte is never a delimiter
+            i += 2
+            continue
+        if c == 0x28:
+            depth += 1
+        elif c == 0x29:
+            if first_close < 0:
+                first_close = i
+            depth -= 1
+            if depth == 0:
+                return i + 1
+        i += 1
+    ends = [e + 1 for e in (first_close, stream.find(b"\n", start))
+            if e >= 0]
+    return min(ends) if ends else n
+
+
+class TestNestedLiteralEnds:
+    """``_LiteralEnds.end`` gives the end offset the per-``(`` walk
+    gave, for every ``(`` of a stream, in linear time per stream."""
+
+    def test_matches_walk_on_paren_soup(self):
+        import random
+
+        from pdf_extractor_spark.operators.pdf_tokenizer import _LiteralEnds
+
+        rng = random.Random(20)
+        alphabet = [b"(", b")", b"\\", b"\n", b"x"]
+        checked = 0
+        for _ in range(600):
+            weights = [rng.random() for _ in alphabet]
+            stream = b"".join(rng.choices(
+                alphabet, weights, k=rng.randint(1, 60)
+            ))
+            ends = _LiteralEnds(stream)
+            for start in range(len(stream)):
+                if stream[start] == 0x28:
+                    assert ends.end(start) == _scan_nested_literal_oracle(
+                        stream, start
+                    ), (stream, start)
+                    checked += 1
+        assert checked > 3000
+
+    def test_many_unbalanced_lines_scan_in_linear_time(self):
+        import time
+
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            _scan_stream,
+            _WordSink,
+        )
+
+        stream = b"BT /F1 12 Tf 72 700 Td\n" + b"(x\n" * 8000 + b"ET"
+        rows = _WordSink()
+        t0 = time.perf_counter()
+        _scan_stream(stream, 792.0, None, None, rows, 0)
+        assert time.perf_counter() - t0 < 1.0
