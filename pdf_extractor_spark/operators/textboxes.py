@@ -82,7 +82,10 @@ def detect_sidebars(
     x0 = words["x0"]
     x1 = words["x1"]
     left_mask = x1 <= cfg.sidebar_strip_frac * page_width
-    right_mask = x0 >= (1 - cfg.sidebar_strip_frac) * page_width
+    # a reversed box (x1 < x0) can satisfy both tests: it joins the
+    # left strip only, so no word lands in two boxes
+    right_mask = (x0 >= (1 - cfg.sidebar_strip_frac) * page_width) \
+        & ~left_mask
     main_mask = ~(left_mask | right_mask)
     n_main = int(main_mask.sum())
     boxes: list[TextBox] = []

@@ -30,6 +30,15 @@ Iceberg, Delta, Hudi — shares, reimplemented over plain files):
   rewritten (manifest pruning applied to the write side); untouched
   files carry over into the new snapshot by reference. One atomic
   flip commits the carried-over, rewritten and incoming files.
+- **Writes come first, and an empty write commits nothing**: every
+  writer lands its data files, drops the zero-row ones, and commits
+  only if rows remain. "Is there anything to do?" is answered by the
+  write itself, never by a separate Spark job over the input.
+- **Reads carry their schema**: Spark writes the frame's schema into
+  every parquet footer it produces, and every data file here is
+  written by Spark, so a reader takes the schema from one footer
+  (pyarrow, no data read) instead of letting Spark run a
+  schema-inference job per read.
 
 Deliberately minimal: single table version lineage (optimistic
 last-writer-wins with a staleness check), no partition spec (the
@@ -48,6 +57,7 @@ import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(RuntimeError):
@@ -182,17 +192,32 @@ def _commit(
 
 def create_table(
     df: DataFrame, path: str, stat_cols: list[str]
-) -> int:
+) -> int | None:
+    """Create the table at ``path`` from the rows of ``df`` and return
+    its first snapshot id. When ``df`` has no rows nothing is
+    committed and the call returns None, after removing the
+    directories it made (``data/``, and ``path`` if it did not exist);
+    a directory that existed before the call is never removed."""
+    made = [d for d in (path, _data_dir(path)) if not os.path.exists(d)]
     os.makedirs(path, exist_ok=True)
-    entries = _write_data_files(df, path, stat_cols)
+    entries = _drop_empty(_write_data_files(df, path, stat_cols))
+    if not entries:
+        for d in reversed(made):
+            os.rmdir(d)
+        return None
     return _commit(path, entries, None, "create")
 
 
-def append(df: DataFrame, path: str, stat_cols: list[str]) -> int:
+def append(
+    df: DataFrame, path: str, stat_cols: list[str]
+) -> int | None:
+    """Append the rows of ``df`` and return the new snapshot id, or
+    None (nothing committed) when ``df`` has no rows."""
     parent = current_snapshot_id(path)
-    manifest = read_snapshot(path)["manifest"] + _write_data_files(
-        df, path, stat_cols
-    )
+    entries = _drop_empty(_write_data_files(df, path, stat_cols))
+    if not entries:
+        return None
+    manifest = read_snapshot(path, parent)["manifest"] + entries
     return _commit(path, manifest, parent, "append")
 
 
@@ -239,6 +264,20 @@ def plan_files(
     return keep
 
 
+# the footer key under which Spark's parquet writer stores the
+# frame's schema as StructType JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Read data files under the schema Spark wrote into the first
+    one's footer: a footer read here, instead of the schema-inference
+    Spark job that ``spark.read.parquet`` launches without a schema."""
+    footer = pq.read_metadata(paths[0]).metadata
+    schema = StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def read_table(
     spark: SparkSession,
     path: str,
@@ -246,17 +285,16 @@ def read_table(
     snap_id: int | None = None,
 ) -> DataFrame:
     """Read via the manifest (never by listing), after file-level
-    stats pruning. An empty plan returns an empty frame with the
-    table's schema (from any manifest file's footer)."""
+    stats pruning. The schema comes from a footer, so building the
+    frame runs no Spark job. An empty plan returns an empty frame with
+    the table's schema (from any manifest file's footer)."""
     files = plan_files(path, predicate, snap_id)
     manifest = read_snapshot(path, snap_id)["manifest"]
     if not manifest:
         raise ValueError("empty table has no schema source")
     if not files:
-        # schema from one existing file, zero rows
-        any_file = manifest[0]["path"]
-        return spark.read.parquet(any_file).limit(0)
-    return spark.read.parquet(*[e["path"] for e in files])
+        return _read(spark, [manifest[0]["path"]]).limit(0)
+    return _read(spark, [e["path"] for e in files])
 
 
 def _drop_empty(entries: list[dict]) -> list[dict]:
@@ -273,11 +311,12 @@ def merge_upsert(
     path: str,
     key: str,
     stat_cols: list[str],
-) -> int:
-    """Copy-on-write MERGE on ``key``. The incoming rows are written
-    as data files FIRST, so ``df`` is evaluated exactly once; the
-    merge is then planned from those files: the incoming key range
-    [lo, hi] comes from their footer stats, files whose key range
+) -> int | None:
+    """Copy-on-write MERGE on ``key``. Returns the new snapshot id, or
+    None (nothing committed) when ``df`` has no rows. The incoming rows
+    are written as data files FIRST, so ``df`` is evaluated exactly
+    once; the merge is then planned from those files: the incoming key
+    range [lo, hi] comes from their footer stats, files whose key range
     overlaps it are rewritten without the rows whose key was just
     written, and all other files carry over BY REFERENCE. One atomic
     snapshot flip commits untouched + survivors + incoming; a crash
@@ -286,10 +325,10 @@ def merge_upsert(
     parent = current_snapshot_id(path)
     manifest = read_snapshot(path)["manifest"]
     incoming = _drop_empty(_write_data_files(df, path, stat_cols))
+    if not incoming:
+        return None
     ranges = [e["stats"].get(key) for e in incoming]
-    if not all(ranges):
-        touched = manifest  # no stats: cannot prune (fail-safe)
-    elif ranges:
+    if all(ranges):
         lo = min(r["min"] for r in ranges)
         hi = max(r["max"] for r in ranges)
         touched = [
@@ -297,7 +336,7 @@ def merge_upsert(
             if _overlaps(e["stats"].get(key), lo, hi)
         ]
     else:
-        touched = []  # empty batch
+        touched = manifest  # no stats: cannot prune (fail-safe)
     # set-difference on file paths: a list-membership scan is O(n^2)
     # dict compares, quadratic at production manifest sizes
     touched_paths = {e["path"] for e in touched}
@@ -306,10 +345,8 @@ def merge_upsert(
     ]
     survivors = []
     if touched:
-        old = spark.read.parquet(*[e["path"] for e in touched])
-        keys = spark.read.parquet(
-            *[e["path"] for e in incoming]
-        ).select(key)
+        old = _read(spark, [e["path"] for e in touched])
+        keys = _read(spark, [e["path"] for e in incoming]).select(key)
         survivors = _drop_empty(_write_data_files(
             old.join(keys, key, "left_anti"), path, stat_cols
         ))
@@ -359,9 +396,9 @@ def table_pruning_catalog(spark, sf_dir: str):
 
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "source"
-    )
+    docs = spark.read.schema(
+        "doc_id long, lang string, source string"
+    ).parquet(f"{sf_dir}/documents.parquet")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
     chunk = (max_id + N_CHUNKS) // N_CHUNKS
     tmp = tempfile.mkdtemp(prefix="icetable_catalog_")
@@ -449,6 +486,12 @@ def extract_to_table(
     """Resume-aware extraction into a snapshot table. Returns the new
     snapshot id, or None when nothing new needed extracting.
 
+    ``pages`` is evaluated once: the call extracts and writes straight
+    away, and when no row was extracted the write leaves no file and
+    commits no snapshot (:func:`create_table`, :func:`append` and
+    :func:`merge_upsert` return None). No separate job checks for work
+    first.
+
     Every row of ``pages`` that is extracted is committed: callers pass
     one row per url. On append, urls already stored are skipped; on
     ``upsert=True``, every incoming row replaces the stored row of its
@@ -466,8 +509,6 @@ def extract_to_table(
     if exists and not upsert:
         done = read_table(spark, table_path).select("url")
         todo = pages.join(done, "url", "left_anti")
-    if todo.limit(1).count() == 0:
-        return None
     extracted = extract_pages(todo, num_partitions=num_partitions)
     if not exists:
         return create_table(extracted, table_path, TABLE_STAT_COLS)
@@ -514,10 +555,10 @@ def compact(
     if len(small) < 2:
         return None  # nothing to gain
     big = [e for e in manifest if e["n_rows"] >= min_rows]
-    merged = spark.read.parquet(
-        *[e["path"] for e in small]
+    merged = _read(
+        spark, [e["path"] for e in small]
     ).coalesce(target_partitions)
-    entries = _write_data_files(merged, path, stat_cols)
+    entries = _drop_empty(_write_data_files(merged, path, stat_cols))
     return _commit(path, big + entries, parent, "compact")
 
 

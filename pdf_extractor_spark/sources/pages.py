@@ -33,8 +33,9 @@ def pages_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """Iceberg stand-in: ``spark.read.format("iceberg").load(tbl)`` in
     production; parquet directory here. Partition/file pruning and
-    column pruning are native either way."""
-    return spark.read.parquet(path)
+    column pruning are native either way. The read carries the pages
+    schema, so building the frame runs no schema-inference job."""
+    return spark.read.schema(PAGES_SCHEMA_DDL).parquet(path)
 
 
 def write_pages(df: DataFrame, path: str) -> None:
@@ -156,8 +157,10 @@ def run_extraction_job(
     """End-to-end job: resume anti-join → extract → one atomic commit
     into the snapshot table at ``out_path``
     (:func:`icetable.extract_to_table`), then the metrics rollup over
-    the whole table. Before the first commit there is no table, and so
-    no metrics are written.
+    the whole table. ``pages`` is evaluated once, and a call with
+    nothing to extract commits no snapshot. Before the first commit
+    there is no table (a first call with nothing to extract leaves no
+    directory at ``out_path``), and so no metrics are written.
 
     This is the body that ``spark-submit --py-files`` runs on a cluster
     (``scripts/submit_job.py``). ``num_partitions=None`` extracts with

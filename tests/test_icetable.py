@@ -4,7 +4,9 @@ copy-on-write MERGE."""
 
 from __future__ import annotations
 
+import ast
 import os
+import uuid
 
 import pytest
 
@@ -247,6 +249,123 @@ class TestOnePassUpsert:
         )
         assert [a.value for a in accs] == [10]
         assert it.read_table(spark, path).count() == 10
+
+
+class TestOnePassExtract:
+    """extract_to_table evaluates its pages frame exactly once per call:
+    it writes first and lets an empty write commit nothing, instead of
+    probing the frame for rows before extracting."""
+
+    def test_pages_evaluated_once_on_create_and_resume(self, spark, tmp_path):
+        import pandas as pd
+
+        from pdf_extractor_spark.fixtures.corpus import build_pages_frame
+        from pdf_extractor_spark.sources.pages import pages_from_pandas
+
+        path = str(tmp_path / "extracted")
+        frame = build_pages_frame()
+        w1 = frame.iloc[:10]
+        both = pd.concat([w1, frame.iloc[10:20]], ignore_index=True)
+
+        pages, acc = _counted(spark, pages_from_pandas(spark, w1))
+        assert it.extract_to_table(spark, pages, path, 2) == 1
+        assert acc.value == 10
+
+        pages, acc = _counted(spark, pages_from_pandas(spark, both))
+        assert it.extract_to_table(spark, pages, path, 2) == 2
+        assert acc.value == 20
+        assert it.read_table(spark, path).count() == 20
+
+
+class TestEmptyWrites:
+    """A write with no rows commits nothing and returns None."""
+
+    def _empty(self, spark):
+        return _df(spark, 0, 0)
+
+    def test_empty_create_leaves_no_directory(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        assert it.create_table(self._empty(spark), path, STATS) is None
+        assert not os.path.exists(path)
+
+    def test_empty_create_keeps_a_directory_it_did_not_make(
+        self, spark, tmp_path
+    ):
+        path = tmp_path / "t"
+        path.mkdir()
+        (path / "keep.txt").write_text("x")
+        assert it.create_table(self._empty(spark), str(path), STATS) is None
+        assert sorted(os.listdir(path)) == ["keep.txt"]
+        assert not it.table_exists(str(path))
+
+    def test_empty_append_and_merge_commit_nothing(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        s1 = it.create_table(_df(spark, 0, 10), path, STATS)
+        n_files = len(os.listdir(it._data_dir(path)))
+        assert it.append(self._empty(spark), path, STATS) is None
+        assert it.merge_upsert(
+            spark, self._empty(spark), path, "doc_id", STATS
+        ) is None
+        assert it.current_snapshot_id(path) == s1
+        assert len(it.snapshot_log(path)) == 1
+        assert len(os.listdir(it._data_dir(path))) == n_files
+        assert [p for p in os.listdir(path) if p.startswith("_staging")] == []
+
+
+def _jobs_run_by(spark, fn):
+    """The ids of the Spark jobs that ``fn()`` launches."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs launched by one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSchemaCarryingReads:
+    """Table and pages reads take their schema from a footer or a
+    declared DDL, so building the frame launches no Spark job."""
+
+    def _table(self, spark, path):
+        it.create_table(_df(spark, 0, 50), path, STATS)
+        it.append(_df(spark, 50, 80), path, STATS)
+        it.merge_upsert(
+            spark, _df(spark, 40, 60, host="new.com"), path, "doc_id", STATS
+        )
+        assert it.compact(spark, path, STATS, min_rows=100) is not None
+
+    def test_read_table_launches_no_job(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        self._table(spark, path)
+        assert _jobs_run_by(spark, lambda: it.read_table(spark, path)) == []
+        assert _jobs_run_by(
+            spark, lambda: it.read_table(spark, path, ("doc_id", ">", 10**6))
+        ) == []
+
+    def test_read_pages_launches_no_job(self, spark, tmp_path):
+        from pdf_extractor_spark.fixtures.corpus import build_pages_frame
+        from pdf_extractor_spark.sources.pages import (
+            pages_from_pandas,
+            read_pages,
+            write_pages,
+        )
+
+        src = str(tmp_path / "pages")
+        write_pages(pages_from_pandas(spark, build_pages_frame()), src)
+        assert _jobs_run_by(spark, lambda: read_pages(spark, src)) == []
+        assert read_pages(spark, src).count() == len(build_pages_frame())
+
+    def test_read_table_matches_inferred_read(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        self._table(spark, path)
+        files = [e["path"] for e in it.plan_files(path)]
+        got = it.read_table(spark, path)
+        want = spark.read.parquet(*files)
+        assert got.dtypes == want.dtypes
+        assert sorted(got.collect()) == sorted(want.collect())
+        assert got.count() == 80
 
 
 class TestMaintenance:
@@ -622,3 +741,60 @@ def test_commit_conflict_retry_succeeds(spark, tmp_path):
     assert got.count() == got.select("doc_id").distinct().count() == 110
     assert got.where("host = 'b-retry.com'").count() == 20
     assert got.where("host = 'a-wins.com'").count() == 10  # A survived
+
+
+# ------------------------------------------------ schema-carrying reads
+
+# Every parquet read of the table and pages sources names its schema
+# (``.schema(...)`` on the reader): without one, Spark launches a
+# schema-inference job on every read. ``read_table_merged`` is the one
+# exception: it needs the union of the files' schemas, which only
+# inference (``mergeSchema``) gives.
+INFERRING_READS_ALLOWED = {"read_table_merged"}
+
+
+def _receiver_attrs(node) -> set[str]:
+    """Attribute names along a call chain's receiver:
+    ``spark.read.schema(s)`` gives {"read", "schema"}."""
+    names = set()
+    while True:
+        if isinstance(node, ast.Attribute):
+            names.add(node.attr)
+            node = node.value
+        elif isinstance(node, ast.Call):
+            node = node.func
+        else:
+            return names
+
+
+@pytest.mark.parametrize("module", ["icetable", "pages"])
+def test_parquet_reads_carry_a_schema(module):
+    from pathlib import Path
+
+    import pdf_extractor_spark.sources as sources
+
+    path = Path(sources.__file__).parent / f"{module}.py"
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    allowed = {
+        id(n)
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        and fn.name in INFERRING_READS_ALLOWED
+        for n in ast.walk(fn)
+    }
+    reads, inferring = 0, []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and id(node) not in allowed
+        ):
+            continue
+        chain = _receiver_attrs(node.func.value)
+        if chain & {"read", "readStream"}:
+            reads += 1
+            if "schema" not in chain:
+                inferring.append(node.lineno)
+    assert reads, f"{module}: no parquet read found"
+    assert inferring == [], f"{module}: reads without a schema at {inferring}"

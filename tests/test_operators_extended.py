@@ -451,6 +451,25 @@ class TestTextboxes:
         assert boxes[0].text == "Warning:\nhot\nsurface"
         assert len(consumed) == 3
 
+    def test_reversed_box_lands_in_one_strip(self):
+        from pdf_extractor_spark.operators.textboxes import detect_sidebars
+
+        # x1 < x0 (a negative font size): the box satisfies both the
+        # left-strip and the right-strip test
+        rows = self._page() + [
+            ("left", 20, 60, 100, 110, 10.0),
+            ("side", 20, 55, 115, 125, 10.0),
+            ("bar", 20, 50, 130, 140, 10.0),
+            ("right", 500, 550, 100, 110, 10.0),
+            ("side", 500, 545, 115, 125, 10.0),
+            ("bar", 500, 540, 130, 140, 10.0),
+            ("flipped", 590, 20, 145, 155, -10.0),
+        ]
+        boxes, consumed = detect_sidebars(_frame(rows), 1, 612.0, CFG)
+        assert len(boxes) == 2
+        assert len(consumed) == len(set(consumed.tolist())) == 7
+        assert sum("flipped" in b.text for b in boxes) == 1
+
     def test_continuous_text_never_a_sidebar(self):
         from pdf_extractor_spark.operators.textboxes import detect_sidebars
 

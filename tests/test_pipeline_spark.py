@@ -225,8 +225,8 @@ def test_extract_to_table_runs_one_python_wave(
     """The default fan-out is one extraction task per task slot
     (defaultParallelism), so the MapInPandas stage runs one wave; an
     explicit count is honoured. The pages table is one parquet file,
-    so every other stage of the call (scan, emptiness probe) has a
-    single task and the MapInPandas stage is the only wider one."""
+    so every other stage of the call (the scan) has a single task and
+    the MapInPandas stage is the only wider one."""
     from pdf_extractor_spark.sources.icetable import extract_to_table
 
     sc = spark.sparkContext
