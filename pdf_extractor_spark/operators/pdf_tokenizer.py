@@ -41,7 +41,6 @@ from .charclass import is_wide_char
 from .words import WORD_COLUMNS, Words, empty_words  # noqa: F401
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b")
-_NUM_RE = re.compile(rb"-?\d+(?:\.\d+)?")
 _ASCENT = 0.8
 _DESCENT = 0.2
 
@@ -629,12 +628,18 @@ def _stream_bytes(
 # ``_LiteralEnds`` finds where that literal ends. A ``(`` after the
 # last flat token is scanned and pushed as an operand too, but no
 # operator follows to use it, so the words are the same.
+#
+# Numbers follow §7.3.3: a real may omit the digits before or after
+# its point (``.5``, ``-.002``, ``4.``).
+_NUM = rb"-?(?:\.\d+|\d+(?:\.\d*)?)"
+_LITERAL = rb"\([^()\\]*(?:\\.[^()\\]*)*\)"  # (?:[^()\\]|\\.)*, unrolled
+_HEX = rb"<[0-9A-Fa-f\s]*>"
 _TOKEN_RE = re.compile(
-    rb"(\((?:[^()\\]|\\.)*\))"   # 1: literal string (non-nested)
-    rb"|(<[0-9A-Fa-f\s]*>)"      # 2: hex string
+    rb"(" + _LITERAL + rb")"      # 1: literal string (non-nested)
+    rb"|(" + _HEX + rb")"         # 2: hex string
     rb"|(/[A-Za-z0-9_.]+)"       # 3: name
     rb"|([\[\]])"                # 4: array delims
-    rb"|(-?\d+(?:\.\d+)?)"       # 5: number
+    rb"|(" + _NUM + rb")"         # 5: number
     rb"|([A-Za-z'\"*]+)"         # 6: operator
     rb"|(\()"                    # 7: '(' that 1 cannot close
     , re.DOTALL,  # \\. must span \<EOL> line continuations (§7.3.4.2)
@@ -762,11 +767,8 @@ def _decode_literal(tok: bytes) -> str:
 
 
 def _decode_hex(tok: bytes) -> str:
-    hexs = re.sub(rb"\s", b"", tok[1:-1])
-    if len(hexs) % 2:
-        hexs += b"0"
-    raw = bytes.fromhex(hexs.decode("ascii"))
-    # Identity-H 2-byte code path (our /F2); odd lengths padded above.
+    raw = _string_token_bytes(tok)
+    # Identity-H 2-byte code path (our /F2)
     if len(raw) % 2 == 0:
         try:
             return raw.decode("utf-16-be")
@@ -1433,7 +1435,6 @@ def _emit_words(
     top_app = sink.tops.append
     bot_app = sink.bottoms.append
     size_app = sink.sizes.append
-    vert_app = sink.verts.append
     for piece in text.split(" "):
         if piece == "":
             cx += space_adv  # bare space advance
@@ -1453,7 +1454,6 @@ def _emit_words(
         top_app(top)
         bot_app(bottom)
         size_app(size)
-        vert_app(False)
         cx += w + space_adv  # the splitting space's advance
     # we over-advance by one trailing space; harmless for layout, but
     # keep exact: remove it
@@ -1494,13 +1494,13 @@ def _emit_words_vertical(
             d += space_adv
             continue
         adv = _advance_units(piece) * size + tc * len(piece)
+        sink.verts.append(len(sink.texts))
         sink.texts.append(piece)
         sink.x0s.append(round(d, 3))
         sink.x1s.append(round(d + adv, 3))
         sink.tops.append(vt)
         sink.bottoms.append(vb)
         sink.sizes.append(size)
-        sink.verts.append(True)
         d += adv + space_adv
     d -= space_adv  # remove the trailing-space over-advance
     return y - (d - d0)
@@ -1523,10 +1523,10 @@ class _WordSink:
         self.tops: list[float] = []
         self.bottoms: list[float] = []
         self.sizes: list[float] = []
-        # per-word writing mode (True = emitted by the vertical path
-        # in the rotated virtual frame) — only consulted when a page
-        # mixes modes
-        self.verts: list[bool] = []
+        # row numbers of the words the vertical path emitted in the
+        # rotated virtual frame — only consulted when a page mixes
+        # writing modes
+        self.verts: list[int] = []
         # show operations executed under text rendering mode 3
         # (invisible — §9.3.6): the OCR text layer of scanned PDFs.
         # The text IS extracted (pdfminer-family behavior: that layer
@@ -1534,12 +1534,19 @@ class _WordSink:
         # flagged so quality scoring can treat OCR text differently.
         self.invisible_shows: int = 0
 
+    def truncate(self, n: int) -> None:
+        """Drop every word from row ``n`` on."""
+        for col in (self.texts, self.x0s, self.x1s, self.tops,
+                    self.bottoms, self.sizes):
+            del col[n:]
+        while self.verts and self.verts[-1] >= n:
+            self.verts.pop()
+
     def frame(self, page_no: int) -> Words:
         n = len(self.texts)
         x0 = np.asarray(self.x0s, dtype=float)
         x1 = np.asarray(self.x1s, dtype=float)
-        v = np.asarray(self.verts, dtype=bool)
-        if v.any() and not v.all():
+        if 0 < len(self.verts) < n:
             # Mixed writing modes: horizontal words carry real page
             # coordinates, vertical words the rotated virtual frame —
             # the two x-ranges overlap, so a single C1 pass would
@@ -1555,6 +1562,8 @@ class _WordSink:
             # the body's start: a vertical word's distance-from-top
             # is its virtual x0 (d = height - y); a horizontal
             # word's is its top.
+            v = np.zeros(n, dtype=bool)
+            v[self.verts] = True
             tops = np.asarray(self.tops, dtype=float)
             v_start = x0[v].min()
             group = np.where(v, 1, np.where(tops <= v_start, 0, 2))
@@ -1573,78 +1582,89 @@ class _WordSink:
 
 
 # Canonical single-show text block, the form word-processor-style PDF
-# writers emit one-per-word/run: BT <font> <size> Tf <tx> <ty> Td
-# (text|hex) Tj ET. A stream consisting ONLY of such blocks (modulo
-# whitespace) takes the one-split-per-stream fast path below; ANY
-# other construct falls back to the general grammar.
-_SIMPLE_BLOCK_RE = re.compile(
-    rb"BT\s+/[A-Za-z0-9_.]+\s+(-?\d+(?:\.\d+)?)\s+Tf"
-    rb"\s+(-?\d+(?:\.\d+)?)\s+(-?\d+(?:\.\d+)?)\s+Td"
-    rb"\s+(\((?:[^()\\]|\\.)*\)|<[0-9A-Fa-f\s]*>)\s+Tj\s+ET",
+# writers emit one per word or run: BT <font> <size> Tf <tx> <ty> Td
+# (text|hex) Tj ET, in the general grammar's tokens, ending only where
+# the byte after ET cannot extend the operator (``ETBT`` and ``ETq``
+# are one operator each). Group 1 is the block and the whitespace
+# after it, so a split leaves empty gaps inside a run of blocks.
+_BLOCK_RE = re.compile(
+    rb"(BT\s+/[A-Za-z0-9_.]+\s+(" + _NUM + rb")\s+Tf"
+    rb"\s+(" + _NUM + rb")\s+(" + _NUM + rb")\s+Td"
+    rb"\s+(" + _LITERAL + rb"|" + _HEX + rb")\s+Tj\s+ET"
+    rb"(?![A-Za-z'\"*])\s*)",
     re.DOTALL,  # \\. must span \<EOL> line continuations (§7.3.4.2)
 )
 
 
-def _parse_simple_blocks(
-    stream: bytes, height: float, page_no: int
-):
-    """Fast path for streams made solely of canonical show blocks.
-    Returns None (fall back to the general loop) unless every byte of
-    the stream is covered by block matches separated by whitespace —
-    so the result is exactly what the general grammar would produce:
-    each block resets the text matrix (BT), sets its own size (Tf),
-    positions once (Td), shows once (Tj). The whitespace between two
-    blocks must not be empty: the general grammar reads ``ETBT`` as
-    one unknown operator, so the second block's BT never resets.
+class _BlockRuns:
+    """The canonical blocks of one content stream, split out once and
+    shown a run at a time: ``_scan_stream`` calls ``emit`` at each
+    ``BT`` it reads under the default text state. Blocks the loop went
+    past (inside a string, behind ``ETBT``, under another text state)
+    are stepped over on the way, so each block is looked at once.
 
-    One ``split`` yields the gaps (every fifth item) and the four
-    groups of each block. The arithmetic is the general loop's, written
-    out so that it stays bit-identical: Td adds its operands to a zeroed
-    line matrix and ``_emit_words`` runs with ``tc = tw = 0`` and
-    ``tz = 1``, so each ``+ 0.0`` turns a ``-0.0`` into ``0.0``. Top
-    and bottom are computed once per run of blocks on one line."""
-    parts = _SIMPLE_BLOCK_RE.split(stream)
-    # bytes.strip() drops exactly the bytes regex \s matches
-    if len(parts) == 1 or b"".join(parts[::5]).strip():
-        return None  # no blocks, or non-block content somewhere
-    if b"" in parts[5:-1:5]:
-        return None  # ET and the next BT fused into one token
-    rows = _WordSink()
-    t_app = rows.texts.append
-    x0_app = rows.x0s.append
-    x1_app = rows.x1s.append
-    top_app = rows.tops.append
-    bot_app = rows.bottoms.append
-    size_app = rows.sizes.append
-    line = None
-    for size_b, x_b, y_b, s in zip(
-        parts[1::5], parts[2::5], parts[3::5], parts[4::5]
-    ):
-        if (size_b, y_b) != line:
-            line = (size_b, y_b)
-            size = float(size_b)
-            y = float(y_b) + 0.0
-            top = round(height - y - _ASCENT * size, 3)
-            bottom = round(height - y + _DESCENT * size, 3)
-            space_adv = (0.5 * size + 0.0 + 0.0) * 1.0
-        cx = float(x_b) + 0.0
-        text = _decode_literal(s) if s[:1] == b"(" else _decode_hex(s)
-        for piece in text.split(" "):
-            if piece == "":
-                cx += space_adv  # bare space advance
-                continue
-            w = (_advance_units(piece) * size + 0.0 * len(piece)) * 1.0
-            t_app(piece)
-            x0_app(round(cx, 3))
-            x1_app(round(cx + w, 3))
-            top_app(top)
-            bot_app(bottom)
-            size_app(size)
-            cx += w + space_adv
-    if not rows.texts:
-        return empty_words()
-    rows.verts = [False] * len(rows.texts)
-    return rows.frame(page_no)
+    The arithmetic is the general loop's, written out so that it stays
+    bit-identical: BT zeroes the line matrix, Td adds its operands to
+    it and ``_emit_words`` runs with ``tc = tw = 0`` and ``tz = 1``, so
+    each ``+ 0.0`` turns a ``-0.0`` into ``0.0``. Top and bottom are
+    computed once per run of blocks on one line."""
+
+    def __init__(self, stream: bytes) -> None:
+        parts = _BLOCK_RE.split(stream)
+        it = iter(parts)
+        self._start = len(next(it))  # next block's offset, or the end
+        # (block, size, x, y, string, gap after the block) per block
+        self._blocks = zip(it, it, it, it, it, it)
+
+    def emit(self, pos: int, height: float, sink: _WordSink):
+        """Show the run of blocks at offset ``pos``; return the loop's
+        state after it, ``(end, size, lx, ly, x, y)``, or None if none."""
+        start = self._start
+        while start < pos:
+            block, _size, _x, _y, _s, gap = next(self._blocks)
+            start += len(block) + len(gap)
+        self._start = start
+        if start != pos:
+            return None
+        t_app = sink.texts.append
+        x0_app = sink.x0s.append
+        x1_app = sink.x1s.append
+        top_app = sink.tops.append
+        bot_app = sink.bottoms.append
+        size_app = sink.sizes.append
+        line = None
+        for block, size_b, x_b, y_b, s, gap in self._blocks:
+            if (size_b, y_b) != line:
+                line = (size_b, y_b)
+                size = float(size_b)
+                ly = float(y_b) + 0.0
+                top = round(height - ly - _ASCENT * size, 3)
+                bottom = round(height - ly + _DESCENT * size, 3)
+                space_adv = (0.5 * size + 0.0 + 0.0) * 1.0
+            lx = cx = float(x_b) + 0.0
+            if s[:1] != b"(":
+                text = _decode_hex(s)
+            elif b"\\" in s or b"\r" in s:
+                text = _decode_literal(s)
+            else:  # _decode_literal's common case, without the call
+                text = s[1:-1].decode("latin-1")
+            for piece in text.split(" "):
+                if piece == "":
+                    cx += space_adv  # bare space advance
+                    continue
+                w = (_advance_units(piece) * size + 0.0 * len(piece)) * 1.0
+                t_app(piece)
+                x0_app(round(cx, 3))
+                x1_app(round(cx + w, 3))
+                top_app(top)
+                bot_app(bottom)
+                size_app(size)
+                cx += w + space_adv
+            pos += len(block)
+            if gap:
+                break
+        self._start = pos + len(gap)
+        return pos, size, lx, ly, cx - space_adv, ly
 
 
 # inline images (ISO 32000 §8.9.7): BI <dict> ID <binary> EI — the
@@ -1686,30 +1706,17 @@ def _parse_content(
     hidden_ocs: frozenset[str] | None = None,
     flags: dict | None = None,
 ) -> Words:
-    has_cmaps = fonts is not None and any(
-        c is not None for c, _w, _v, _m in fonts.values()
-    )
-    has_vert = fonts is not None and any(
-        v for _c, _w, v, _m in fonts.values()
-    )
-    has_metrics = fonts is not None and any(
-        m is not None for _c, _w, _v, m in fonts.values()
-    )
-    if not has_cmaps and not has_vert and not has_metrics and \
-            not xobjects and \
-            b"Tr" not in stream and \
-            stream.lstrip()[:5].startswith(b"BT"):
-        # the fast path ignores Tf font selection, so it is only valid
-        # when no font on the page carries a ToUnicode map, a custom
-        # /Widths table, or a vertical writing mode
-        fast = _parse_simple_blocks(stream, height, page_no)
-        if fast is not None:
-            return fast
+    """One page's content stream as word boxes. ``flags`` (when given)
+    receives ``invisible_shows`` and ``skipped_operators``, the counts
+    of Tr 3 shows and of operators dropped for a malformed operand."""
     rows = _WordSink()
-    _scan_stream(stream, height, fonts, xobjects, rows, 0,
-                 page_width=width, hidden_ocs=hidden_ocs)
-    if flags is not None and rows.invisible_shows:
-        flags["invisible_shows"] = rows.invisible_shows
+    skipped = _scan_stream(stream, height, fonts, xobjects, rows, 0,
+                           page_width=width, hidden_ocs=hidden_ocs)
+    if flags is not None:
+        if rows.invisible_shows:
+            flags["invisible_shows"] = rows.invisible_shows
+        if skipped:
+            flags["skipped_operators"] = skipped
     if not rows.texts:
         return empty_words()
     return rows.frame(page_no)
@@ -1723,13 +1730,18 @@ def _scan_stream(
     ctm_tx: float = 0.0, ctm_ty: float = 0.0,
     page_width: float = 612.0,
     hidden_ocs: frozenset[str] | None = None,
-) -> None:
+) -> int:
     """Token-scan one content stream into the shared sink; ``Do``
     recurses into form XObjects (their own resources, same sink) up
     to ``_XOBJ_MAX_DEPTH``. Text state is per-stream — our grammar's
     forms open with their own BT/Tf, so inheriting the caller's text
     state (which ISO 32000 §8.10.1 technically prescribes) would be
-    indistinguishable here and is deliberately not carried."""
+    indistinguishable here and is deliberately not carried.
+
+    A run of canonical blocks at a ``BT`` read under the default text
+    state is shown in one go (``_BlockRuns``). An operator with a
+    malformed operand (a name where a number belongs) is skipped on
+    its own; returns how many were, forms included."""
     if b"BI" in stream:
         stream = _INLINE_IMG_RE.sub(b" ", stream)
     # font tracking is needed when any font decodes through a CMap OR
@@ -1797,6 +1809,8 @@ def _scan_stream(
     in_array: list = []
     array_mode = False
     literal_ends: _LiteralEnds | None = None  # built at the first nested one
+    runs: _BlockRuns | None = None  # built at the first default-state BT
+    skipped = 0
     pos = 0
     while True:
         m = _TOKEN_RE.search(stream, pos)
@@ -1829,93 +1843,82 @@ def _scan_stream(
             stack.append(tok)
             continue
         # operator
-        if tok == b"BT":
-            x = y = lx = ly = 0.0
-            stack.clear()
-        elif tok == b"ET":
-            stack.clear()
-        elif tok == b"Tf" and len(stack) >= 2:
-            size = float(stack[-1])
-            if track_fonts and stack[-2][:1] == b"/":
-                cur_cmap, cur_width, cur_vert, cur_metrics = (
-                    fonts or {}
-                ).get(
-                    stack[-2][1:].decode("latin-1"),
-                    (None, 1, False, None),
-                )
-            stack.clear()
-        elif tok in (b"Td", b"TD") and len(stack) >= 2:
-            if tok == b"TD":      # TD also SETS leading = -ty (ISO
-                leading = -float(stack[-1])  # 32000 §9.4.2)
-            lx += float(stack[-2])
-            ly += float(stack[-1])
-            x, y = lx, ly
-            stack.clear()
-        elif tok == b"TL" and stack:
-            leading = float(stack[-1])
-            stack.clear()
-        elif tok == b"Tc" and stack:
-            tc = float(stack[-1])
-            stack.clear()
-        elif tok == b"Tw" and stack:
-            tw = float(stack[-1])
-            stack.clear()
-        elif tok == b"Tz" and stack:
-            tz = float(stack[-1]) / 100.0
-            stack.clear()
-        elif tok == b"Tr" and stack:
-            try:
-                tr_mode = int(float(stack[-1]))
-            except ValueError:
-                tr_mode = 0
-            stack.clear()
-        elif tok == b"q":
-            gstack.append((ctm_tx, ctm_ty))
-            stack.clear()
-        elif tok == b"Q":
-            if gstack:
-                ctm_tx, ctm_ty = gstack.pop()
-            stack.clear()
-        elif tok == b"cm" and len(stack) >= 6:
-            ctm_tx += float(stack[-2])
-            ctm_ty += float(stack[-1])
-            stack.clear()
-        elif tok == b"T*":
-            ly -= leading
-            x, y = lx, ly
-            stack.clear()
-        elif tok == b"Tm" and len(stack) >= 6:
-            lx, ly = float(stack[-2]), float(stack[-1])
-            x, y = lx, ly
-            stack.clear()
-        elif tok == b"Tj" and stack:
-            s = stack[-1]
-            if tr_mode == 3:
-                rows.invisible_shows += 1
-            if at_level >= 0 and at_pos is None:
-                at_pos = (x + ctm_tx, y + ctm_ty, size)
-            if cur_vert:
-                y = _emit_words_vertical(
-                    decode_tok(s), x + ctm_tx, y + ctm_ty, size,
-                    height, page_width, rows, tc, tw,
-                ) - ctm_ty
-            else:
-                x = _emit_words(
-                    decode_tok(s), x + ctm_tx, y + ctm_ty, size,
-                    height, rows, tc, tw, tz, cur_metrics,
-                ) - ctm_tx
-            stack.clear()
-        elif tok in (b"'", b'"') and stack:
-            # move-to-next-line-and-show; the " form's aw/ac operands
-            # SET the word/char spacing state (§9.4.3)
-            s = stack[-1]
-            if s[:1] in (b"(", b"<"):
-                if tr_mode == 3:
-                    rows.invisible_shows += 1
-                if tok == b'"' and len(stack) >= 3:
-                    tw, tc = float(stack[-3]), float(stack[-2])
+        try:
+            if tok == b"BT":
+                x = y = lx = ly = 0.0
+                stack.clear()
+                # the state _BlockRuns writes out: plain fonts, nothing
+                # to capture for /ActualText or Tr 3, no spacing, no CTM
+                if (not track_fonts and at_level < 0 and tr_mode != 3
+                        and tc == 0.0 and tw == 0.0 and tz == 1.0
+                        and ctm_tx == 0.0 and ctm_ty == 0.0):
+                    if runs is None:
+                        runs = _BlockRuns(stream)
+                    run = runs.emit(m.start(), height, rows)
+                    if run is not None:
+                        pos, size, lx, ly, x, y = run
+            elif tok == b"ET":
+                stack.clear()
+            elif tok == b"Tf" and len(stack) >= 2:
+                size = float(stack[-1])
+                if track_fonts and stack[-2][:1] == b"/":
+                    cur_cmap, cur_width, cur_vert, cur_metrics = (
+                        fonts or {}
+                    ).get(
+                        stack[-2][1:].decode("latin-1"),
+                        (None, 1, False, None),
+                    )
+                stack.clear()
+            elif tok in (b"Td", b"TD") and len(stack) >= 2:
+                tx, ty = float(stack[-2]), float(stack[-1])
+                if tok == b"TD":      # TD also SETS leading = -ty (ISO
+                    leading = -ty     # 32000 §9.4.2)
+                lx += tx
+                ly += ty
+                x, y = lx, ly
+                stack.clear()
+            elif tok == b"TL" and stack:
+                leading = float(stack[-1])
+                stack.clear()
+            elif tok == b"Tc" and stack:
+                tc = float(stack[-1])
+                stack.clear()
+            elif tok == b"Tw" and stack:
+                tw = float(stack[-1])
+                stack.clear()
+            elif tok == b"Tz" and stack:
+                tz = float(stack[-1]) / 100.0
+                stack.clear()
+            elif tok == b"Tr" and stack:
+                try:
+                    tr_mode = int(float(stack[-1]))
+                except (ValueError, OverflowError):
+                    tr_mode = 0
+                stack.clear()
+            elif tok == b"q":
+                gstack.append((ctm_tx, ctm_ty))
+                stack.clear()
+            elif tok == b"Q":
+                if gstack:
+                    ctm_tx, ctm_ty = gstack.pop()
+                stack.clear()
+            elif tok == b"cm" and len(stack) >= 6:
+                e, f = float(stack[-2]), float(stack[-1])
+                ctm_tx += e
+                ctm_ty += f
+                stack.clear()
+            elif tok == b"T*":
                 ly -= leading
                 x, y = lx, ly
+                stack.clear()
+            elif tok == b"Tm" and len(stack) >= 6:
+                lx, ly = float(stack[-2]), float(stack[-1])
+                x, y = lx, ly
+                stack.clear()
+            elif tok == b"Tj" and stack:
+                s = stack[-1]
+                if tr_mode == 3:
+                    rows.invisible_shows += 1
                 if at_level >= 0 and at_pos is None:
                     at_pos = (x + ctm_tx, y + ctm_ty, size)
                 if cur_vert:
@@ -1928,98 +1931,137 @@ def _scan_stream(
                         decode_tok(s), x + ctm_tx, y + ctm_ty, size,
                         height, rows, tc, tw, tz, cur_metrics,
                     ) - ctm_tx
-            stack.clear()
-        elif tok == b"TJ":
-            if tr_mode == 3 and in_array:
-                rows.invisible_shows += 1
-            if at_level >= 0 and at_pos is None and in_array:
-                at_pos = (x + ctm_tx, y + ctm_ty, size)
-            for item in in_array:
-                if item[:1] in (b"(", b"<"):
+                stack.clear()
+            elif tok in (b"'", b'"') and stack:
+                # move-to-next-line-and-show; the " form's aw/ac operands
+                # SET the word/char spacing state (§9.4.3)
+                s = stack[-1]
+                if s[:1] in (b"(", b"<"):
+                    if tok == b'"' and len(stack) >= 3:
+                        tw, tc = float(stack[-3]), float(stack[-2])
+                    if tr_mode == 3:
+                        rows.invisible_shows += 1
+                    ly -= leading
+                    x, y = lx, ly
+                    if at_level >= 0 and at_pos is None:
+                        at_pos = (x + ctm_tx, y + ctm_ty, size)
                     if cur_vert:
                         y = _emit_words_vertical(
-                            decode_tok(item), x + ctm_tx, y + ctm_ty,
-                            size, height, page_width, rows, tc, tw,
+                            decode_tok(s), x + ctm_tx, y + ctm_ty, size,
+                            height, page_width, rows, tc, tw,
                         ) - ctm_ty
                     else:
                         x = _emit_words(
-                            decode_tok(item), x + ctm_tx, y + ctm_ty,
-                            size, height, rows, tc, tw, tz,
-                            cur_metrics,
+                            decode_tok(s), x + ctm_tx, y + ctm_ty, size,
+                            height, rows, tc, tw, tz, cur_metrics,
                         ) - ctm_tx
-                elif cur_vert:
-                    # vertical kerning: positive values shorten the
-                    # DOWNWARD advance (§9.4.3; Tz is horizontal-only)
-                    y += float(item) / 1000.0 * size
-                else:  # kerning adjustment, thousandths of em
-                    x -= float(item) / 1000.0 * size * tz
-            in_array = []
-            stack.clear()
-        elif tok == b"Do" and stack:
-            nm = stack[-1]
-            if nm[:1] == b"/" and xobjects and depth < _XOBJ_MAX_DEPTH:
-                ent = xobjects.get(nm[1:].decode("latin-1"))
-                if ent is not None:
-                    xstream, xfonts, xxobjs = ent
-                    _scan_stream(
-                        xstream, height, xfonts or fonts, xxobjs,
-                        rows, depth + 1, ctm_tx, ctm_ty, page_width,
-                        hidden_ocs,
-                    )
-            stack.clear()
-        elif tok in (b"BMC", b"BDC"):
-            # operand order (§14.6): tag name first, then (BDC only)
-            # the property list — stack[0] IS the tag
-            hide = bool(stack) and stack[0] == b"/Artifact"
-            if (not hide and hidden_ocs and tok == b"BDC"
-                    and len(stack) >= 2 and stack[0] == b"/OC"
-                    and stack[1][:1] == b"/"
-                    and stack[1][1:].decode("latin-1") in hidden_ocs):
-                # optional content on a default-OFF layer (§8.11): a
-                # conforming reader does not draw it — same sink swap
-                hide = True
-            if (not hide and at_level < 0 and hide_depth == 0
-                    and tok == b"BDC" and b"/ActualText" in stack):
-                i = stack.index(b"/ActualText")
-                if i + 1 < len(stack) and stack[i + 1][:1] in (b"(", b"<"):
-                    at_level = len(mc_stack)
-                    at_text = _text_string(stack[i + 1])
-                    at_pos = None
-                    hide = True  # suppress the shown glyphs
-            mc_stack.append(hide)
-            if hide:
-                hide_depth += 1
-                if trash_rows is None:
-                    trash_rows = _WordSink()
-                rows = trash_rows
-            stack.clear()
-        elif tok == b"EMC":
-            # stray EMC (unbalanced writer) pops nothing and never
-            # un-hides — damage stays local to the malformed span
-            if mc_stack and mc_stack.pop():
-                hide_depth -= 1
-                if hide_depth == 0:
-                    rows = live_rows
-                if at_level == len(mc_stack):
-                    # replacement span closed: emit the TRUE text at
-                    # the first enclosed show's position (span-open
-                    # pen if the span showed nothing)
-                    ax, ay, asz = at_pos or (
-                        x + ctm_tx, y + ctm_ty, size
-                    )
-                    if at_text and hide_depth == 0:
-                        _emit_words(at_text, ax, ay, asz, height,
-                                    live_rows, tc, tw, tz)
-                    at_level = -1
-                    at_pos = None
-            stack.clear()
-        else:
-            if tok in (b"true", b"false", b"null"):
-                # keyword VALUES inside a BDC property list — operands,
-                # not operators; clearing here would drop the BDC tag
-                stack.append(tok)
-            else:
                 stack.clear()
+            elif tok == b"TJ":
+                # a malformed kerning item drops the whole TJ: take
+                # back what its earlier strings showed
+                x_0, y_0, n_0 = x, y, len(rows.texts)
+                try:
+                    for item in in_array:
+                        if item[:1] in (b"(", b"<"):
+                            if cur_vert:
+                                y = _emit_words_vertical(
+                                    decode_tok(item), x + ctm_tx,
+                                    y + ctm_ty, size, height, page_width,
+                                    rows, tc, tw,
+                                ) - ctm_ty
+                            else:
+                                x = _emit_words(
+                                    decode_tok(item), x + ctm_tx,
+                                    y + ctm_ty, size, height, rows, tc,
+                                    tw, tz, cur_metrics,
+                                ) - ctm_tx
+                        elif cur_vert:
+                            # vertical kerning: positive values shorten
+                            # the DOWNWARD advance (§9.4.3; Tz is
+                            # horizontal-only)
+                            y += float(item) / 1000.0 * size
+                        else:  # kerning adjustment, thousandths of em
+                            x -= float(item) / 1000.0 * size * tz
+                except ValueError:
+                    rows.truncate(n_0)
+                    x, y, in_array = x_0, y_0, []
+                    raise
+                if tr_mode == 3 and in_array:
+                    rows.invisible_shows += 1
+                if at_level >= 0 and at_pos is None and in_array:
+                    at_pos = (x_0 + ctm_tx, y_0 + ctm_ty, size)
+                in_array = []
+                stack.clear()
+            elif tok == b"Do" and stack:
+                nm = stack[-1]
+                if nm[:1] == b"/" and xobjects and depth < _XOBJ_MAX_DEPTH:
+                    ent = xobjects.get(nm[1:].decode("latin-1"))
+                    if ent is not None:
+                        xstream, xfonts, xxobjs = ent
+                        skipped += _scan_stream(
+                            xstream, height, xfonts or fonts, xxobjs,
+                            rows, depth + 1, ctm_tx, ctm_ty, page_width,
+                            hidden_ocs,
+                        )
+                stack.clear()
+            elif tok in (b"BMC", b"BDC"):
+                # operand order (§14.6): tag name first, then (BDC only)
+                # the property list — stack[0] IS the tag
+                hide = bool(stack) and stack[0] == b"/Artifact"
+                if (not hide and hidden_ocs and tok == b"BDC"
+                        and len(stack) >= 2 and stack[0] == b"/OC"
+                        and stack[1][:1] == b"/"
+                        and stack[1][1:].decode("latin-1") in hidden_ocs):
+                    # optional content on a default-OFF layer (§8.11): a
+                    # conforming reader does not draw it — same sink swap
+                    hide = True
+                if (not hide and at_level < 0 and hide_depth == 0
+                        and tok == b"BDC" and b"/ActualText" in stack):
+                    i = stack.index(b"/ActualText")
+                    if i + 1 < len(stack) and stack[i + 1][:1] in (b"(", b"<"):
+                        at_level = len(mc_stack)
+                        at_text = _text_string(stack[i + 1])
+                        at_pos = None
+                        hide = True  # suppress the shown glyphs
+                mc_stack.append(hide)
+                if hide:
+                    hide_depth += 1
+                    if trash_rows is None:
+                        trash_rows = _WordSink()
+                    rows = trash_rows
+                stack.clear()
+            elif tok == b"EMC":
+                # stray EMC (unbalanced writer) pops nothing and never
+                # un-hides — damage stays local to the malformed span
+                if mc_stack and mc_stack.pop():
+                    hide_depth -= 1
+                    if hide_depth == 0:
+                        rows = live_rows
+                    if at_level == len(mc_stack):
+                        # replacement span closed: emit the TRUE text at
+                        # the first enclosed show's position (span-open
+                        # pen if the span showed nothing)
+                        ax, ay, asz = at_pos or (
+                            x + ctm_tx, y + ctm_ty, size
+                        )
+                        if at_text and hide_depth == 0:
+                            _emit_words(at_text, ax, ay, asz, height,
+                                        live_rows, tc, tw, tz)
+                        at_level = -1
+                        at_pos = None
+                stack.clear()
+            else:
+                if tok in (b"true", b"false", b"null"):
+                    # keyword VALUES inside a BDC property list — operands,
+                    # not operators; clearing here would drop the BDC tag
+                    stack.append(tok)
+                else:
+                    stack.clear()
+        except ValueError:
+            # a malformed operand costs its operator, not the page
+            skipped += 1
+            stack.clear()
+    return skipped
 
 
 # --------------------------------------------------------------- parse
@@ -2807,6 +2849,15 @@ def parse_pdf(data: bytes) -> PdfDoc:
                              "text rendered invisible (Tr 3) — "
                              f"{page_flags['invisible_shows']} show ops; "
                              "likely OCR text layer of a scanned page"
+                         )}
+                    )
+                if page_flags.get("skipped_operators"):
+                    doc.errors.append(
+                        {"type": "corruption", "severity": "warning",
+                         "page": idx,
+                         "message": (
+                             f"{page_flags['skipped_operators']} content "
+                             "operators skipped: malformed operand"
                          )}
                     )
                 if any(v for _c, _w, v, _m in fonts.values()):

@@ -2354,10 +2354,21 @@ class TestOptionalContent:
         assert list(w["text"]) == ["kept"]
 
 
-class TestSimpleBlockFastPath:
-    """``_parse_simple_blocks`` must give the same frame, bit for bit,
-    as the general operator loop it short-cuts, and must decline
-    (``None``) any stream that is not blocks and whitespace only."""
+def _word_columns(words) -> dict:
+    """Every column of a word frame, floats as raw bytes (NaN- and
+    signed-zero-exact)."""
+    from pdf_extractor_spark.operators.pdf_tokenizer import WORD_COLUMNS
+
+    return {c: (words[c].tolist(), None if c == "text"
+                else words[c].tobytes()) for c in WORD_COLUMNS}
+
+
+class TestBlockRuns:
+    """Runs of canonical ``BT /F n Tf x y Td (s) Tj ET`` blocks are
+    shown by ``_BlockRuns`` inside the token loop. The oracle is the
+    same ``_parse_content`` with the block pattern patched to match
+    nothing, so that every block walks the per-token loop: the two
+    must give the same frame, bit for bit, and the same flags."""
 
     BLOCKS = [
         b"BT /F1 12 Tf 72 700 Td (alpha beta gamma) Tj ET",
@@ -2371,56 +2382,63 @@ class TestSimpleBlockFastPath:
         b"BT /F1 10 Tf 72 -20.5 Td (below the page) Tj ET",
         b"BT /F1 -8 Tf 72 640 Td (negative size) Tj ET",
         b"BT /F1 -0 Tf -0 620 Td (zero size) Tj ET",
+        b"BT /F1 -0 Tf 5 -0 Td (negative zero y) Tj ET",
+        b"BT /F1 .5 Tf -.25 610. Td (reals without digits) Tj ET",
         b"BT /F1 12 Tf 72 600 Td () Tj ET",
         b"BT /F1 12 Tf 72 600 Td (   ) Tj ET",
         b"BT /F1 12 Tf 90 600 Td <> Tj ET",
     ]
 
     @staticmethod
-    def _general(stream: bytes, height: float):
+    def _parse(stream: bytes, height: float = 792.0, **kw):
         from pdf_extractor_spark.operators.pdf_tokenizer import (
-            _scan_stream,
-            _WordSink,
+            _parse_content,
         )
 
-        rows = _WordSink()
-        _scan_stream(stream, height, None, None, rows, 0)
-        return rows.frame(3)
+        flags: dict = {}
+        words = _parse_content(stream, height, 3, flags=flags, **kw)
+        return _word_columns(words), flags
 
-    @staticmethod
-    def _columns(words):
-        from pdf_extractor_spark.operators.pdf_tokenizer import WORD_COLUMNS
+    def _assert_same(self, monkeypatch, stream: bytes,
+                     height: float = 792.0, **kw) -> int:
+        """Assert the run path matches the oracle on ``stream``; return
+        how many runs of blocks it showed."""
+        import re
 
-        return {c: (words[c].tolist(), None if c == "text"
-                    else words[c].tobytes()) for c in WORD_COLUMNS}
+        from pdf_extractor_spark.operators import pdf_tokenizer as pt
 
-    def _assert_same(self, stream: bytes, height: float = 792.0):
-        from pdf_extractor_spark.operators.pdf_tokenizer import (
-            _parse_simple_blocks,
-        )
+        shown = []
+        emit = pt._BlockRuns.emit
 
-        fast = _parse_simple_blocks(stream, height, 3)
-        assert fast is not None
-        assert self._columns(fast) == self._columns(
-            self._general(stream, height)
-        )
-        return fast
+        def counting_emit(self, *args):
+            run = emit(self, *args)
+            if run is not None:
+                shown.append(run)
+            return run
 
-    def test_each_block_alone(self):
+        with monkeypatch.context() as m:
+            m.setattr(pt._BlockRuns, "emit", counting_emit)
+            fast = self._parse(stream, height, **kw)
+        with monkeypatch.context() as m:
+            m.setattr(pt, "_BLOCK_RE", re.compile(rb"(?!)"))
+            oracle = self._parse(stream, height, **kw)
+        assert fast == oracle, stream
+        return len(shown)
+
+    def test_each_block_alone(self, monkeypatch):
         for block in self.BLOCKS:
-            self._assert_same(block)
+            assert self._assert_same(monkeypatch, block) == 1, block
 
-    def test_all_blocks_with_whitespace_separators(self):
+    def test_all_blocks_with_whitespace_separators(self, monkeypatch):
         seps = [b" ", b"\n", b"\r\n", b"\t \x0c", b"\x0b", b"  \n  "]
         stream = b"\n".join(self.BLOCKS)
-        words = self._assert_same(stream, 612.5)
-        assert "gamma" in words["text"].tolist()
+        assert self._assert_same(monkeypatch, stream, 612.5) == 1
         mixed = b"".join(
             block + seps[i % len(seps)] for i, block in enumerate(self.BLOCKS)
         )
-        self._assert_same(b"  \r\n" + mixed)
+        assert self._assert_same(monkeypatch, b"  \r\n" + mixed) == 1
 
-    def test_runs_on_one_line_and_line_changes(self):
+    def test_runs_on_one_line_and_line_changes(self, monkeypatch):
         # consecutive blocks sharing (size, y), then a size change on
         # the same y, then the same size on a new y
         stream = b" ".join([
@@ -2431,28 +2449,246 @@ class TestSimpleBlockFastPath:
             b"BT /F1 12 Tf 72 680 Td (next line) Tj ET",
             b"BT /F1 12.0 Tf 140 680 Td (same size, other spelling) Tj ET",
         ])
-        words = self._assert_same(stream)
-        assert words["top"].tolist()[:5] == [82.4] * 4 + [80.8]
-
-    def test_non_block_content_declines(self):
+        self._assert_same(monkeypatch, stream)
+        cols, _ = self._parse(stream)
+        assert cols["text"][0][:5] == ["one", "two", "three", "four",
+                                       "bigger"]
         from pdf_extractor_spark.operators.pdf_tokenizer import (
-            _parse_simple_blocks,
+            _parse_content,
         )
 
+        tops = _parse_content(stream, 792.0, 1)["top"].tolist()
+        assert tops[:5] == [82.4] * 4 + [80.8]
+
+    def test_blocks_mixed_with_other_content(self, monkeypatch):
         a = b"BT /F1 12 Tf 72 700 Td (a) Tj ET"
         b = b"BT /F1 12 Tf 90 700 Td (b) Tj ET"
-        for stream in (
-            a + b" q " + b,              # operator between blocks
-            a + b" " + b + b" Q",        # after the last block
-            a + b"\x00" + b,             # non-whitespace byte
-            b"0 g " + a,                 # before the first block
-            a + b" BT /F1 12 Tf 1 2 Td (c) Tj",  # truncated block
-            a + b,                       # "ETBT": one unknown operator
-            b"",
-            b"  \n ",
-            b"q Q",
+        for stream, runs in (
+            (a + b" q " + b, 2),          # operator between blocks
+            (a + b" " + b + b" Q", 1),    # after the last block
+            (a + b"\x00" + b, 2),         # non-whitespace byte
+            (b"0 g " + a, 1),             # before the first block
+            (a + b" BT /F1 12 Tf 1 2 Td (c) Tj", 1),  # truncated block
+            (a + b, 0),                   # "ETBT": one unknown operator
+            (a + b"q " + b, 1),           # "ETq": one unknown operator
+            (a + b"\n" + b + b"Q", 1),    # "ETQ" ends no block
+            (b"", 0),
+            (b"  \n ", 0),
+            (b"q Q", 0),
         ):
-            assert _parse_simple_blocks(stream, 792.0, 1) is None, stream
+            assert self._assert_same(monkeypatch, stream) == runs, stream
+
+    def test_blocks_in_and_around_marked_content(self, monkeypatch):
+        blk = b"BT /F1 12 Tf %d 700 Td (w%d) Tj ET\n"
+
+        def blocks(*xs):
+            return b"".join(blk % (x, x) for x in xs)
+
+        for stream in (
+            blocks(72, 90) + b"/Artifact <</Type /Pagination>> BDC "
+            + blocks(200, 220) + b"EMC\n" + blocks(300),
+            b"/Artifact BMC " + blocks(72) + b"EMC " + blocks(90, 110),
+            blocks(72) + b"/OC /oc0 BDC " + blocks(90, 100) + b"EMC "
+            + blocks(110),
+            b"/OC /oc1 BDC " + blocks(72, 90) + b"EMC",  # visible layer
+            b"/Span <</ActualText (first)>> BDC " + blocks(72, 90)
+            + b"EMC\n" + blocks(120, 140),
+            b"/P <</MCID 0>> BDC " + blocks(72, 90) + b"EMC",
+            b"/Artifact BMC /Span <</ActualText (x)>> BDC " + blocks(72)
+            + b"EMC EMC " + blocks(90),
+        ):
+            assert self._assert_same(
+                monkeypatch, stream, hidden_ocs=frozenset({"oc0"})
+            ) >= 1, stream
+
+    def test_blocks_after_text_and_graphics_state(self, monkeypatch):
+        blk = b"BT /F1 12 Tf 72 700 Td (two words) Tj ET "
+        for state, reset in (
+            (b"2 Tc ", b"0 Tc "),
+            (b"-0 Tc ", b"0 Tc "),
+            (b"1.5 Tw ", b"0 Tw "),
+            (b"-0 Tw ", b"0 Tw "),
+            (b"50 Tz ", b"100 Tz "),
+            (b"3 Tr ", b"0 Tr "),
+            (b"1 Tr ", b"0 Tr "),
+            (b"1 0 0 1 30 -40 cm ", b"1 0 0 1 -30 40 cm "),
+            (b"q 1 0 0 1 -0 0 cm ", b"Q "),
+            (b"1 0 0 1 0 0 cm ", b""),
+            (b"14 TL ", b""),
+        ):
+            self._assert_same(monkeypatch, blk + state + blk + reset + blk)
+            self._assert_same(monkeypatch, b"q " + state + blk + b"Q " + blk)
+
+    def test_blocks_inside_forms(self, monkeypatch):
+        form = (b"BT /F1 10 Tf 10 20 Td (in form) Tj ET\n"
+                b"BT /F1 10 Tf 60 20 Td (too) Tj ET")
+        xobjects = {"Fm0": (form, None, None)}
+        blk = b"BT /F1 12 Tf 72 700 Td (page) Tj ET\n"
+        for stream in (
+            blk + b"/Fm0 Do\n" + blk,
+            b"q 1 0 0 1 100 200 cm /Fm0 Do Q " + blk,
+            b"/Artifact BMC /Fm0 Do EMC " + blk,
+            b"/Fm0 Do /Fm0 Do",
+        ):
+            assert self._assert_same(
+                monkeypatch, stream, xobjects=xobjects
+            ) >= 1, stream
+
+    def test_token_soup_fuzz(self, monkeypatch):
+        import random
+
+        rng = random.Random(1212)
+        nums = [b"0", b"-0", b"12", b"9.5", b"-3.25", b".5", b"-.5", b"4.",
+                b"700", b"680.75"]
+        strs = [b"(a b)", b"(word)", b"()", b"( x )", b"(e\\)s\\\\c)",
+                b"(l\\\ni)", b"<48 69>", b"<>", b"(n(es)t)"]
+
+        def block():
+            return b"BT /F%d %s Tf %s %s Td %s Tj ET" % (
+                rng.randint(1, 2), rng.choice(nums), rng.choice(nums),
+                rng.choice(nums), rng.choice(strs),
+            )
+
+        other = [
+            b"q", b"Q", b"1 0 0 1 5 -3 cm", b"1 0 0 1 0 0 cm", b"2 Tc",
+            b"0 Tc", b"-0 Tc", b"1 Tw", b"0 Tw", b"50 Tz", b"100 Tz",
+            b"3 Tr", b"0 Tr", b"/Artifact BMC", b"EMC", b"/OC /oc0 BDC",
+            b"/Span <</ActualText (x)>> BDC", b"BT", b"ET", b"(s t) Tj",
+            b"[(a) -20 (b)] TJ", b"5 TL", b"T*", b"0 g", b"10 20 Td",
+            b"/F1 8 Tf", b"/Fm0 Do", b"(q) '", b"[", b"]",
+        ]
+        form = b"BT /F1 10 Tf 10 20 Td (f) Tj ET 2 Tc " + block()
+        xobjects = {"Fm0": (form, None, None)}
+        runs = 0
+        for _ in range(400):
+            toks = [block() if rng.random() < 0.5 else rng.choice(other)
+                    for _ in range(rng.randint(1, 14))]
+            seps = [rng.choice([b" ", b"\n", b"", b"  \r\n"])
+                    for _ in toks]
+            stream = b"".join(t + s for t, s in zip(toks, seps))
+            runs += self._assert_same(
+                monkeypatch, stream, hidden_ocs=frozenset({"oc0"}),
+                xobjects=xobjects,
+            )
+        assert runs > 400
+
+    def test_alternating_blocks_scan_in_linear_time(self):
+        import time
+
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            _parse_content,
+        )
+
+        blk = b"BT /F1 12 Tf 72 700 Td (x) Tj ET"
+        for other in (b" q ", b"0 g "):
+            stream = (blk + other) * 20_000
+            t0 = time.perf_counter()
+            words = _parse_content(stream, 792.0, 1)
+            assert time.perf_counter() - t0 < 1.0, other
+            assert len(words) == 20_000
+
+
+class TestRealsWithoutLeadingDigit:
+    """§7.3.3 reals may omit the digits before the point: ``.5`` is
+    0.5 and ``-.5`` is -0.5, in a canonical block and in the general
+    loop alike."""
+
+    @staticmethod
+    def _words(stream: bytes):
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            _parse_content,
+        )
+
+        return _parse_content(stream, 792.0, 1)
+
+    def test_td(self):
+        for head in (b"", b"2 Tc "):  # block path, then general loop
+            w = self._words(head + b"BT /F1 10 Tf .5 700 Td (a) Tj ET")
+            assert w["x0"].tolist() == [0.5]
+            w = self._words(head + b"BT /F1 10 Tf -.5 -.25 Td (a) Tj ET")
+            assert w["x0"].tolist() == [-0.5]
+            assert w["top"].tolist() == [792.25 - 8.0]
+
+    def test_tc(self):
+        w = self._words(b"BT /F1 10 Tf .5 Tc 72 700 Td (ab) Tj ET")
+        assert w["x1"].tolist() == [72 + 10.0 + 1.0]
+        w = self._words(b"BT /F1 10 Tf -.5 Tc 72 700 Td (ab) Tj ET")
+        assert w["x1"].tolist() == [72 + 10.0 - 1.0]
+
+    def test_tj_kerning(self):
+        w = self._words(b"BT /F1 10 Tf 0 700 Td [(a) -.5 (b)] TJ ET")
+        assert w["x0"].tolist() == [0.0, 5.005]
+        w = self._words(b"BT /F1 10 Tf 0 700 Td [(a) .5 (b)] TJ ET")
+        assert w["x0"].tolist() == [0.0, 4.995]
+
+
+class TestMalformedOperand:
+    """An operator whose operand is not a number is skipped on its
+    own: the page keeps every other word, exactly as if the operator
+    were absent, and the page records how many were skipped."""
+
+    CONTEXT = (b"BT /F1 10 Tf 2 Tc 1 Tw 50 Tz 7 TL 10 20 Td (a b) Tj "
+               b"%s (c d) Tj T* (e) Tj ET "
+               b"BT /F1 10 Tf 10 60 Td (f) Tj ET")
+    # operator: (malformed, well-formed) — the well-formed one changes
+    # the frame, so a skipped operator is told apart from an applied one
+    CASES = {
+        "Tf": (b"/F1 /X Tf", b"/F1 20 Tf"),
+        "Td": (b"5 /X Td", b"5 7 Td"),
+        "TD": (b"/X 5 TD", b"5 -7 TD"),
+        "TL": (b"/X TL", b"9 TL"),
+        "Tc": (b"/X Tc", b"3 Tc"),
+        "Tw": (b"/X Tw", b"4 Tw"),
+        "Tz": (b"/X Tz", b"80 Tz"),
+        "cm": (b"1 0 0 1 /X 50 cm", b"1 0 0 1 10 50 cm"),
+        "Tm": (b"1 0 0 1 /X 20 Tm", b"1 0 0 1 30 20 Tm"),
+        '"': (b"/X 3 (quoted) \"", b"2 3 (quoted) \""),
+        "TJ": (b"[(shown) 10 (then) /X (kern)] TJ",
+               b"[(shown) 10 (then) 20 (kern)] TJ"),
+    }
+
+    def test_each_operator_is_skipped_alone(self):
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            _parse_content,
+        )
+
+        def columns(fragment: bytes, flags: dict | None = None) -> dict:
+            return _word_columns(_parse_content(
+                self.CONTEXT % fragment, 792.0, 1, flags=flags
+            ))
+
+        without = columns(b"")
+        for op, (bad, good) in self.CASES.items():
+            assert columns(good) != without, op
+            flags: dict = {}
+            assert columns(bad, flags) == without, op
+            assert flags == {"skipped_operators": 1}, op
+
+    def test_huge_tr_operand_reads_as_mode_0(self):
+        from pdf_extractor_spark.operators.pdf_tokenizer import (
+            _parse_content,
+        )
+
+        # 400 digits parse to inf, which int() cannot take
+        stream = b"BT /F1 10 Tf %s Tr 10 20 Td (a) Tj ET" % (b"9" * 400)
+        flags: dict = {}
+        words = _parse_content(stream, 792.0, 1, flags=flags)
+        assert words["text"].tolist() == ["a"]
+        assert flags == {}
+
+    def test_bad_size_keeps_the_page(self):
+        p = PageSpec()
+        p.put_words(72, 100, 12, ["one", "two", "three", "four"])
+        payload = build_pdf([p])
+        assert payload.count(b"/F1 12 Tf") == 4
+        payload = payload.replace(b"/F1 12 Tf", b"/F1 /X Tf", 1)
+        doc = parse_pdf(payload)
+        assert doc.pages[0].words["text"].tolist() == [
+            "one", "two", "three", "four"]
+        assert [e for e in doc.errors if e["type"] == "corruption"] == [
+            {"type": "corruption", "severity": "warning", "page": 1,
+             "message": "1 content operators skipped: malformed operand"}
+        ]
 
 
 def _scan_nested_literal_oracle(stream: bytes, start: int) -> int:
