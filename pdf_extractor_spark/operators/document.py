@@ -20,8 +20,9 @@ here every phase derives from a SINGLE parse. Phase order per page
       → inventory (A3), coverage (A4), anti-hallucination scan (A7/P9),
         quality score (A6)
 
-Routing: content sniffing on the payload magic (``%PDF-`` ⇒ PDF branch,
-else HTML branch), per SURVEY.md §1.3.
+Routing: the transport layers (WARC, HTTP, chunked, gzip/deflate) are
+peeled by ``transport.unwrap``, then content sniffing on the body's
+magic (``%PDF-`` ⇒ PDF branch, else HTML branch), per SURVEY.md §1.3.
 
 This module is pure Python/NumPy (no Spark): the Spark layer batches
 documents through it inside ``mapInPandas`` Arrow batches.
@@ -29,7 +30,6 @@ documents through it inside ``mapInPandas`` Arrow batches.
 
 from __future__ import annotations
 
-import re
 from typing import Any
 
 from ..config import DEFAULT_CONFIG, ExtractConfig
@@ -56,6 +56,7 @@ from .scripts import attach_scripts
 from .spacing import cleanup_text
 from .tables import dedup_tables, detect_tables, exclude_table_words
 from .textboxes import detect_sidebars
+from .transport import ResourceLimitError, unwrap
 
 PDF_MAGIC = b"%PDF-"
 
@@ -68,37 +69,6 @@ _EMPTY_INVENTORY = {
 
 # A6 quality battery lives in operators/quality.py (reference
 # quality_scorer.py:81-413 five-dimension sub-batteries)
-
-
-def _dechunk(body: bytes) -> bytes:
-    """Undo chunked transfer coding (RFC 9112 §7.1); malformed
-    framing degrades to the raw remainder from the failure point
-    (never raises).  Owned here because a chunked capture can reach
-    the kernel directly as a page payload, not only through the WARC
-    reader (which imports this)."""
-    out = bytearray()
-    pos = 0
-    while True:
-        nl = body.find(b"\n", pos)
-        if nl < 0:
-            out += body[pos:]
-            break
-        size_tok = body[pos:nl].strip().split(b";")[0]
-        try:
-            n = int(size_tok, 16)
-        except ValueError:
-            out += body[pos:]
-            break
-        if n == 0:
-            break
-        chunk = body[nl + 1:nl + 1 + n]
-        out += chunk
-        pos = nl + 1 + n
-        if body[pos:pos + 2] == b"\r\n":
-            pos += 2
-        elif body[pos:pos + 1] == b"\n":
-            pos += 1
-    return bytes(out)
 
 
 def _extract_pdf_once(doc: PdfDoc, cfg: ExtractConfig) -> dict[str, Any]:
@@ -438,157 +408,51 @@ def extract_html_document(
     }
 
 
+def _failed(payload: bytes, error: dict) -> dict[str, Any]:
+    """The record of a document whose extraction stopped at ``error``."""
+    return {
+        "branch": "pdf" if payload[:5] == PDF_MAGIC else "html",
+        "extracted_text": "",
+        "spans": [],
+        "tables": [],
+        "footnotes": [],
+        "textboxes": [],
+        "quality": {"score": 0.0, "grade": "F", "coverage": 0.0,
+                    "status": "POOR",
+                    "dims": {"completeness": 0.0, "structure": 0.0,
+                             "accuracy": 0.0, "footnotes": 0.0,
+                             "readability": 0.0}},
+        "errors": [error],
+        "n_pages": 0,
+        "inventory": dict(_EMPTY_INVENTORY),
+        "footnote_stats": completeness([], [], []),
+    }
+
+
 def extract_document(
     payload: bytes, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> dict[str, Any]:
-    """Route by magic bytes and extract. Never raises — failures are
-    recorded in the ``errors`` array (reference recovery contract,
-    ``error_handler.py:418-479``).
-
-    A gzip transport wrapper (magic ``1f 8b`` — the layout WARC
-    bodies and mis-served Content-Encoding payloads arrive in) is
-    stripped before routing; an undecodable gzip member falls through
-    to the HTML branch raw, whose mojibake grading flags it."""
+    """Peel the transport layers (:func:`.transport.unwrap`), route by
+    magic bytes and extract. Never raises — failures are recorded in
+    the ``errors`` array (reference recovery contract,
+    ``error_handler.py:418-479``); each peeled layer leaves an info
+    note there."""
+    body = payload
     try:
-        gz_note = None
-        http_note = None
-        transport_charset = None
-        content_coding = None
-        if payload[:5] == b"HTTP/":
-            # WARC-response-style payload: HTTP status line + headers
-            # precede the body. Strip them (BEFORE gzip — a
-            # Content-Encoding body is compressed after the headers)
-            # and keep the Content-Type charset as the transport-
-            # layer hint (outranks <meta>, loses to a BOM — WHATWG).
-            head_end = payload.find(b"\r\n\r\n", 0, 16384)
-            sep = 4
-            if head_end < 0:
-                head_end = payload.find(b"\n\n", 0, 16384)
-                sep = 2
-            if head_end > 0:
-                head = payload[:head_end]
-                cm = re.search(
-                    rb"(?im)^content-type:[^\r\n]*charset="
-                    rb"[\"']?([A-Za-z0-9._:-]+)",
-                    head,
-                )
-                if cm:
-                    transport_charset = cm.group(1).decode(
-                        "ascii", "replace"
-                    )
-                ce = re.search(
-                    rb"(?im)^content-encoding:\s*([A-Za-z0-9-]+)",
-                    head,
-                )
-                if ce:
-                    content_coding = ce.group(1).lower().decode("ascii")
-                payload = payload[head_end + sep:]
-                if re.search(
-                    rb"(?im)^transfer-encoding:[^\r\n]*chunked", head
-                ):
-                    # chunked is a TRANSFER coding (RFC 9112 §7.1):
-                    # undone before the content coding, or the hex
-                    # size tokens leak into the extracted text
-                    payload = _dechunk(payload)
-                http_note = "http response headers stripped" + (
-                    f" (charset={transport_charset})"
-                    if transport_charset else ""
-                )
-        if payload[:2] == b"\x1f\x8b":
-            import gzip
-            import zlib
-
-            try:
-                payload = gzip.decompress(payload)
-                gz_note = "gzip transport wrapper stripped"
-            except Exception:
-                d = zlib.decompressobj(wbits=31)  # 31 = gzip framing
-                try:
-                    partial = d.decompress(payload)
-                except Exception:
-                    partial = b""
-                if partial:  # truncated member: salvage the prefix
-                    payload = partial
-                    gz_note = ("truncated gzip transport wrapper: "
-                               f"{len(partial)} bytes salvaged")
-                # else: not really gzip — grade the raw bytes
-        elif content_coding == "deflate":
-            # RFC 9110 deflate = zlib-wrapped DEFLATE, but legacy
-            # servers (old IIS) mis-serve the bare stream under the
-            # same header. No magic to route on — the header decides,
-            # and like browsers we try zlib framing first, then raw.
-            import zlib
-
-            for wbits in (15, -15):
-                try:
-                    payload = zlib.decompress(payload, wbits)
-                    gz_note = (
-                        "deflate content coding stripped"
-                        if wbits == 15
-                        else "raw-deflate content coding stripped "
-                             "(non-conformant server)"
-                    )
-                    break
-                except Exception:
-                    continue
-            # neither framing decodes → grade the raw bytes; the
-            # mojibake grading downstream flags the binary soup
-        if payload[:5] == b"WARC/":
-            # a whole WARC capture landed as the page payload (crawl
-            # dumps do this): unwrap the first response record and
-            # re-route — its payload is a full HTTP response, so the
-            # charset-hint / Content-Encoding paths above handle the
-            # rest on the recursive pass. Function-scope import: the
-            # sources layer imports operators at module load, not
-            # vice versa.
-            from ..sources.warc import first_response_http
-
-            inner = first_response_http(payload)
-            if inner is not None:
-                result = extract_document(inner, cfg)
-                result["errors"].append(
-                    {"type": "encoding", "severity": "info", "page": 0,
-                     "message": "warc response record unwrapped"}
-                )
-                for note in (http_note, gz_note):
-                    if note is not None:
-                        result["errors"].append(
-                            {"type": "encoding", "severity": "info",
-                             "page": 0, "message": note}
-                        )
-                return result
-            # no response record → grade the raw bytes below
-        if payload[: len(PDF_MAGIC)] == PDF_MAGIC:
-            result = extract_pdf_document(payload, cfg)
+        body, transport_charset, notes = unwrap(payload)
+        if body[: len(PDF_MAGIC)] == PDF_MAGIC:
+            result = extract_pdf_document(body, cfg)
         else:
-            result = extract_html_document(
-                payload, cfg, transport_charset
-            )
-        for note in (http_note, gz_note):
-            if note is not None:
-                result["errors"].append(
-                    {"type": "encoding", "severity": "info", "page": 0,
-                     "message": note}
-                )
+            result = extract_html_document(body, cfg, transport_charset)
+        result["errors"].extend(
+            {"type": "encoding", "severity": "info", "page": 0,
+             "message": note}
+            for note in notes
+        )
         return result
+    except ResourceLimitError as exc:
+        return _failed(body, {"type": "resource_limit", "severity": "error",
+                              "page": 0, "message": str(exc)})
     except Exception as exc:  # absolute backstop — a doc must never kill a task
-        return {
-            "branch": "pdf" if payload[:5] == PDF_MAGIC else "html",
-            "extracted_text": "",
-            "spans": [],
-            "tables": [],
-            "footnotes": [],
-            "textboxes": [],
-            "quality": {"score": 0.0, "grade": "F", "coverage": 0.0,
-                        "status": "POOR",
-                        "dims": {"completeness": 0.0, "structure": 0.0,
-                                 "accuracy": 0.0, "footnotes": 0.0,
-                                 "readability": 0.0}},
-            "errors": [
-                {"type": "unknown", "severity": "critical", "page": 0,
-                 "message": f"unhandled: {exc}"}
-            ],
-            "n_pages": 0,
-            "inventory": dict(_EMPTY_INVENTORY),
-            "footnote_stats": completeness([], [], []),
-        }
+        return _failed(body, {"type": "unknown", "severity": "critical",
+                              "page": 0, "message": f"unhandled: {exc}"})

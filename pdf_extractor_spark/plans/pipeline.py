@@ -9,11 +9,13 @@ Physical plan (SURVEY.md §3.4):
       → append extracted; metrics = groupBy(part_id) rollup
 
 Skew handling: AQE cannot split a straggler *map* task, so layout is
-explicit — documents larger than ``cfg.oversize_bytes`` are routed to
-their own repartition pass (few rows per partition) while the long tail
-hashes uniformly by ``xxhash64(url)``. At 100 TB the same layout holds:
-the oversized stream is a tiny fraction of rows and gets dedicated
-tasks instead of hiding inside hash buckets.
+explicit — the one exchange keys documents larger than
+``cfg.oversize_bytes`` on an independently salted hash of their url
+(``_routing_key``), so their placement does not follow their url's
+normal bucket, while the long tail hashes uniformly by
+``xxhash64(url)``. At 100 TB the same layout holds: the oversized rows
+are a tiny fraction and spread over the tasks instead of stacking in
+the buckets their urls would pick.
 
 Lineage: every output row carries (part_id, batch_id, batch_ms,
 attempt, host, extracted_at); per-partition metrics rows are an

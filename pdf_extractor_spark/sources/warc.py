@@ -10,12 +10,14 @@ member boundaries.  A ``response`` payload is a captured HTTP response
 (``Transfer-Encoding: chunked``) and/or compressed
 (``Content-Encoding: gzip``).
 
-This module owns the WIRE layer only: record framing, gzip member
-iteration, HTTP header parse, dechunking.  Charset sniffing, gzip body
-stripping and boilerplate removal stay in
-``operators/document.py:extract_document`` — the WARC reader hands it
-a normalized HTTP payload (headers preserved so the transport charset
-hint flows through the existing WHATWG path).
+This module owns the archive WRITERS and the Spark stages.  Reading —
+record framing, gzip members, the HTTP header block, dechunking and
+the content codings — is the one transport decoder in
+``operators/transport.py``: :func:`parse_warc` splits an archive into
+records, and each ``response`` record's captured HTTP payload goes to
+``extract_document`` as it is, which peels its layers with
+``transport.unwrap`` (the Content-Type charset flows on as the
+transport hint).
 
 The Spark stage is one Arrow ``mapInPandas`` pass, same shape as the
 HTML/PDF roundtrips in ``docwrap.py``: synthesize archives from the
@@ -29,7 +31,6 @@ from __future__ import annotations
 
 import gzip
 import re
-import zlib
 from collections.abc import Iterator
 from datetime import datetime, timedelta
 from hashlib import md5
@@ -38,7 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG
-from ..operators.document import _dechunk, extract_document
+from ..operators.document import extract_document
+from ..operators.transport import header_end, parse_headers, parse_warc
 from .docwrap import _spread, wrap_html
 
 WARC_EPOCH = datetime(2024, 1, 1)
@@ -168,133 +170,6 @@ def build_archive(pages: list[tuple[int, str]],
 
 # ============================================================== reader
 
-def _gunzip_members(data: bytes) -> bytes:
-    """Concatenate every gzip member (one record per member in the
-    Common-Crawl convention; a whole-file single member also lands
-    here).  A truncated trailing member contributes its decodable
-    prefix — framing recovery mirrors ``extract_document``'s
-    transport-gzip salvage."""
-    out = bytearray()
-    rest = data
-    while rest[:2] == b"\x1f\x8b":
-        d = zlib.decompressobj(wbits=31)
-        try:
-            out += d.decompress(rest)
-        except Exception:
-            break
-        if not d.eof:          # truncated final member: keep prefix
-            break
-        rest = d.unused_data
-    return bytes(out)
-
-
-def _header_end(data: bytes, pos: int) -> tuple[int, int]:
-    """(offset, separator width) of the EARLIEST blank line ending a
-    header block — CRLF-CRLF or bare LF-LF, whichever comes first.
-    Checking CRLF first without comparing offsets would let an
-    LF-terminated header block followed by a CRLF payload split at a
-    blank line INSIDE the payload, absorbing the payload's headers
-    (and their Content-Length) into the record's."""
-    crlf = data.find(b"\r\n\r\n", pos)
-    lf = data.find(b"\n\n", pos)
-    if crlf >= 0 and (lf < 0 or crlf < lf):
-        return crlf, 4
-    if lf >= 0:
-        return lf, 2
-    return -1, 0
-
-
-def _parse_headers(block: bytes) -> dict[str, str]:
-    """CRLF (or bare-LF) header block → lowercased-key dict, folding
-    obs-fold continuation lines into the previous value."""
-    headers: dict[str, str] = {}
-    last = None
-    for raw in block.split(b"\n"):
-        line = raw.rstrip(b"\r")
-        if not line:
-            continue
-        if line[:1] in (b" ", b"\t") and last is not None:
-            headers[last] += " " + line.strip().decode(
-                "latin-1")
-            continue
-        k, sep, v = line.partition(b":")
-        if not sep:
-            continue
-        last = k.strip().decode("latin-1").lower()
-        headers[last] = v.strip().decode("latin-1")
-    return headers
-
-
-def parse_warc(data: bytes) -> list[dict]:
-    """Archive bytes (plain or per-record-gzip) → list of records:
-    ``{"type", "url", "date", "headers", "payload"}``.  Records are
-    self-delimiting via ``Content-Length``; a record with a missing or
-    unparseable length ends the scan (nothing downstream is
-    trustworthy once framing is lost)."""
-    if data[:2] == b"\x1f\x8b":
-        data = _gunzip_members(data)
-    records: list[dict] = []
-    pos = 0
-    n = len(data)
-    while pos < n:
-        while data[pos:pos + 2] == _CRLF or data[pos:pos + 1] == b"\n":
-            pos += 2 if data[pos:pos + 2] == _CRLF else 1
-        if not data[pos:pos + 5] == b"WARC/":
-            break
-        head_end, sep = _header_end(data, pos)
-        if head_end < 0:
-            break
-        headers = _parse_headers(data[pos:head_end])
-        try:
-            length = int(headers.get("content-length", ""))
-        except ValueError:
-            break
-        payload = data[head_end + sep:head_end + sep + length]
-        records.append({
-            "type": headers.get("warc-type", ""),
-            "url": headers.get("warc-target-uri", ""),
-            "date": headers.get("warc-date", ""),
-            "headers": headers,
-            "payload": payload,
-        })
-        pos = head_end + sep + length
-    return records
-
-
-def normalized_http(payload: bytes) -> bytes:
-    """Captured HTTP response → normalized form for the kernel: the
-    transfer coding (chunking) is undone HERE — it is a wire property
-    the archive preserved — while headers and any Content-Encoding
-    body stay intact so ``extract_document``'s existing charset-hint
-    and gzip-strip paths do their jobs unchanged."""
-    if payload[:5] != b"HTTP/":
-        return payload
-    head_end, sep = _header_end(payload, 0)
-    if head_end < 0:
-        return payload
-    head = payload[:head_end]
-    body = payload[head_end + sep:]
-    headers = _parse_headers(head)
-    if "chunked" in headers.get("transfer-encoding", "").lower():
-        body = _dechunk(body)
-        lines = [ln for ln in head.split(b"\n")
-                 if not ln.lower().lstrip().startswith(
-                     b"transfer-encoding")]
-        head = b"\n".join(lines)
-    return head.rstrip(b"\r\n") + _CRLF + _CRLF + body
-
-
-def first_response_http(archive: bytes) -> bytes | None:
-    """First ``response`` record's normalized HTTP payload, or None
-    when the archive holds no parseable response.  This is the
-    single-document entry point ``extract_document`` routes through
-    when a page payload turns out to be a WARC capture."""
-    for rec in parse_warc(archive):
-        if rec["type"] == "response":
-            return normalized_http(rec["payload"])
-    return None
-
-
 def extract_responses(archive: bytes) -> list[dict]:
     """Parse an archive and run extraction over every ``response``
     record (warcinfo/request/metadata records are skipped), returning
@@ -306,9 +181,7 @@ def extract_responses(archive: bytes) -> list[dict]:
         m = _URL_RE.search(rec["url"])
         if not m:
             continue
-        result = extract_document(
-            normalized_http(rec["payload"]), DEFAULT_CONFIG
-        )
+        result = extract_document(rec["payload"], DEFAULT_CONFIG)
         rows.append({
             "doc_id": int(m.group(1)),
             "warc_ts": rec["date"],
@@ -414,7 +287,7 @@ def _wet_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows: list[dict] = []
         for gid, pages in groups.items():
             # the FULL loop: WARC write → record parse → HTTP
-            # normalize → kernel extraction → WET write → WET parse.
+            # unwrap → kernel extraction → WET write → WET parse.
             # Equality with the documents oracle gates every hop.
             archive = build_archive(pages, gzip_members=(gid % 2 == 0))
             extracted = extract_responses(archive)
@@ -552,9 +425,7 @@ def extract_captures(archive: bytes) -> list[dict]:
                 if not m:
                     continue
                 capture_id = doc_id = int(m.group(1))
-            result = extract_document(
-                normalized_http(rec["payload"]), DEFAULT_CONFIG
-            )
+            result = extract_document(rec["payload"], DEFAULT_CONFIG)
             rows.append({
                 "capture_id": capture_id, "doc_id": doc_id,
                 "kind": "response", "warc_ts": rec["date"],
@@ -777,8 +648,8 @@ def extract_recrawl(archive: bytes) -> list[dict]:
             continue
         sm = _STATUS_RE.match(rec["payload"])
         status = int(sm.group(1)) if sm else 200
-        head_end, sep = _header_end(rec["payload"], 0)
-        http_headers = _parse_headers(
+        head_end = header_end(rec["payload"])[0]
+        http_headers = parse_headers(
             rec["payload"][:head_end] if head_end >= 0
             else rec["payload"]
         )
@@ -786,7 +657,7 @@ def extract_recrawl(archive: bytes) -> list[dict]:
             text = None
         else:
             text = extract_document(
-                normalized_http(rec["payload"]), DEFAULT_CONFIG
+                rec["payload"], DEFAULT_CONFIG
             )["extracted_text"]
         rows.append({
             "doc_id": int(m.group(1)), "http_status": status,

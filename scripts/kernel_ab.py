@@ -10,14 +10,16 @@ process, alternating per document: the package as committed at
 directory under another name (its imports are relative), and the
 working tree's package is imported as usual.
 
-The documents are perfbench's ``pdf_mixed`` workload for ``--seed``
-(docwrap PDFs, fixture PDFs and long PDFs), built with the generator
-in ``perfbench/workloads.py``, which is only imported. On the first
-pass every record of the working tree must equal the parent's and its
-extracted text the page's oracle; the script exits 1 at the first
-difference. It prints, per page kind and in total, the seconds each
-side spent over all passes and the parent/working-tree speed-up.
-``--limit`` keeps the first N documents (a smoke run).
+The documents are perfbench's ``pdf_mixed`` and ``html_crawl``
+workloads for ``--seed`` (docwrap PDFs, fixture PDFs and long PDFs;
+docwrap HTML in every transport variant and the HTML fixtures), built
+with the generator in ``perfbench/workloads.py``, which is only
+imported. On the first pass every record of the working tree must
+equal the parent's and its extracted text the page's oracle; the
+script exits 1 at the first difference. It prints, per page kind and
+in total, the seconds each side spent over all passes and the
+parent/working-tree speed-up. ``--limit`` keeps the first N documents
+of each workload (a smoke run).
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ from collections import defaultdict
 REPO = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = "pdf_extractor_spark"
 PARENT_PACKAGE = "pes_parent"
+WORKLOADS = ("pdf_mixed", "html_crawl")
 
 
 def unpack_parent(ref: str, into: pathlib.Path) -> None:
@@ -60,9 +63,12 @@ def run(ref: str, seed: int, passes: int, limit: int | None) -> dict:
         change = importlib.import_module(f"{PACKAGE}.operators.document")
         import workloads
 
-        pages = workloads.generate(
-            "pdf_mixed", seed, str(REPO / "tests" / "golden"), 2
-        ).pages[:limit]
+        pages = [
+            page for name in WORKLOADS
+            for page in workloads.generate(
+                name, seed, str(REPO / "tests" / "golden"), 2
+            ).pages[:limit]
+        ]
         secs: dict[str, list[float]] = defaultdict(lambda: [0.0, 0.0])
         for p in range(passes):
             for i, page in enumerate(pages):
@@ -109,7 +115,8 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=1211)
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--limit", type=int, default=None,
-                    help="time only the first N documents")
+                    help="time only the first N documents of each "
+                         "workload")
     args = ap.parse_args()
     secs = run(args.ref, args.seed, args.passes, args.limit)
     print(f"ref {args.ref} seed {args.seed} passes {args.passes}")

@@ -1,5 +1,6 @@
 """Smoke test of ``scripts/kernel_ab.py``: the working tree against
-``HEAD`` on the first 30 documents of the pdf_mixed workload."""
+``HEAD`` on the first 30 documents of the pdf_mixed and html_crawl
+workloads."""
 
 from __future__ import annotations
 
@@ -36,4 +37,5 @@ def test_kernel_ab_smoke(tmp_path):
     assert lines[-1].startswith("total ")
     assert lines[-1].endswith("x")
     kinds = {line.split()[0] for line in lines[2:-1]}
-    assert kinds and kinds <= {"docwrap_pdf", "fixture_pdf", "long_pdf"}
+    assert kinds and kinds <= {"docwrap_pdf", "fixture_pdf", "long_pdf",
+                               "docwrap_html", "fixture_html"}

@@ -8,13 +8,15 @@ import re
 
 import pytest
 
+from pdf_extractor_spark.operators.transport import (
+    dechunk,
+    parse_headers,
+    unwrap,
+)
 from pdf_extractor_spark.sources.warc import (
-    _dechunk,
-    _parse_headers,
     build_archive,
     extract_responses,
     http_response,
-    normalized_http,
     parse_warc,
     warc_record,
 )
@@ -73,29 +75,28 @@ class TestFraming:
 class TestHttpLayer:
     def test_chunked_body_dechunks(self):
         payload = http_response(b"x" * 350, chunked=True)
-        norm = normalized_http(payload)
-        head, _, body = norm.partition(b"\r\n\r\n")
+        body, charset, notes = unwrap(payload)
         assert body == b"x" * 350
-        assert b"transfer-encoding" not in head.lower()
+        assert charset == "utf-8"
+        assert notes == ["http response headers stripped (charset=utf-8)"]
 
     def test_gzip_content_encoding_survives_normalize(self):
         payload = http_response(b"<p>hi</p>", gzip_body=True)
-        norm = normalized_http(payload)
-        _, _, body = norm.partition(b"\r\n\r\n")
-        assert gzip.decompress(body) == b"<p>hi</p>"
+        body, _, notes = unwrap(payload)
+        assert body == b"<p>hi</p>"
+        assert notes[1:] == ["gzip transport wrapper stripped"]
 
     def test_chunked_over_gzip_composes(self):
         # content coding applied first, transfer coding second
         payload = http_response(b"<p>deep</p>", chunked=True,
                                 gzip_body=True)
-        _, _, body = normalized_http(payload).partition(b"\r\n\r\n")
-        assert gzip.decompress(body) == b"<p>deep</p>"
+        assert unwrap(payload)[0] == b"<p>deep</p>"
 
     def test_dechunk_malformed_degrades_to_raw(self):
-        assert _dechunk(b"nothex\r\nabc") == b"nothex\r\nabc"
+        assert dechunk(b"nothex\r\nabc") == b"nothex\r\nabc"
 
     def test_header_folding_and_case(self):
-        h = _parse_headers(
+        h = parse_headers(
             b"WARC-Type: response\r\nX-Long: part one\r\n\tpart two\r\n"
         )
         assert h["warc-type"] == "response"
@@ -359,10 +360,8 @@ class TestKernelTransportCodings:
             assert rec["extracted_text"] == self._text(), doc_id
 
     def test_malformed_chunk_framing_degrades(self):
-        from pdf_extractor_spark.operators.document import _dechunk
-
         # garbage size token: raw remainder kept, never a raise
-        assert _dechunk(b"zz\r\npayload") == b"zz\r\npayload"
+        assert dechunk(b"zz\r\npayload") == b"zz\r\npayload"
 
     def test_bom_beats_lying_meta(self):
         from pdf_extractor_spark.operators.document import (
@@ -374,3 +373,103 @@ class TestKernelTransportCodings:
 
         rec = extract_document(wrap_html_transport(self._text(), 3))
         assert rec["extracted_text"] == self._text()
+
+
+class TestOneTransportDecoder:
+    """The kernel peels transport layers with the WARC reader's
+    decoder: one header-end rule, every gzip member, a bounded loop."""
+
+    A = "alpha words fill the first block of this page"
+    B = "bravo words fill the second block of this page"
+
+    @staticmethod
+    def _notes(rec):
+        return [e["message"] for e in rec["errors"]
+                if e["severity"] == "info"]
+
+    def _members(self):
+        return [f"<p>{w} {self.A} and {self.B}.</p>".encode()
+                for w in ("one", "two", "three")]
+
+    def test_lf_http_head_keeps_first_body_block(self):
+        from pdf_extractor_spark.operators.document import extract_document
+
+        # the head ends at its LF blank line, not at the CRLF blank
+        # line inside the body
+        payload = (b"HTTP/1.1 200 OK\nContent-Type: text/html\n\n"
+                   b"<html><body><p>" + self.A.encode() + b"</p>\r\n\r\n"
+                   b"<p>" + self.B.encode() + b"</p></body></html>")
+        rec = extract_document(payload)
+        assert rec["extracted_text"] == f"{self.A}\n\n{self.B}"
+
+    def test_cut_last_gzip_member_keeps_earlier_members(self):
+        from pdf_extractor_spark.operators.document import extract_document
+
+        members = self._members()
+        data = b"".join(gzip.compress(m, mtime=0) for m in members)
+        rec = extract_document(data[:-12])
+        assert rec["extracted_text"].startswith(
+            f"one {self.A} and {self.B}.\n\ntwo {self.A} and {self.B}.")
+        body = unwrap(data[:-12])[0]
+        assert body.startswith(members[0] + members[1])
+        assert self._notes(rec) == [
+            f"truncated gzip transport wrapper: {len(body)} bytes salvaged"]
+
+    def test_gzip_trailing_bytes_are_not_truncation(self):
+        from pdf_extractor_spark.operators.document import extract_document
+
+        members = self._members()
+        data = b"".join(gzip.compress(m, mtime=0) for m in members)
+        rec = extract_document(data + b"trailing junk")
+        assert rec["extracted_text"] == extract_document(
+            b"".join(members))["extracted_text"]
+        assert rec["extracted_text"].count(self.A) == 3
+        assert self._notes(rec) == ["gzip transport wrapper stripped"]
+
+    def test_notes_innermost_capture_first(self):
+        from pdf_extractor_spark.operators.document import extract_document
+
+        inner = http_response(f"<p>{self.A}</p>".encode(), gzip_body=True)
+        capture = warc_record("response", {
+            "WARC-Target-URI": "https://x.example/a",
+            "WARC-Date": "2024-01-01T00:00:00Z",
+        }, inner)
+        rec = extract_document(http_response(capture, gzip_body=True,
+                                             chunked=True))
+        assert rec["extracted_text"] == self.A
+        http = "http response headers stripped (charset=utf-8)"
+        gz = "gzip transport wrapper stripped"
+        assert self._notes(rec) == [
+            http, gz, "warc response record unwrapped", http, gz]
+
+    def test_layer_bound(self):
+        from pdf_extractor_spark.operators.document import extract_document
+        from pdf_extractor_spark.operators.transport import MAX_LAYERS
+
+        payload = f"<p>{self.A}</p>".encode()
+        for _ in range(MAX_LAYERS):
+            payload = gzip.compress(payload, mtime=0)
+        assert extract_document(payload)["extracted_text"] == self.A
+        rec = extract_document(gzip.compress(payload, mtime=0))
+        assert rec["extracted_text"] == ""
+        assert [e["type"] for e in rec["errors"]] == ["resource_limit"]
+        assert rec["errors"][0]["severity"] == "error"
+
+    def test_deep_warc_nesting_fails_fast(self):
+        import time
+
+        from pdf_extractor_spark.operators.document import extract_document
+
+        # 1,200 WARC-in-HTTP wrappers used to hit the recursion limit
+        payload = http_response(f"<p>{self.A}</p>".encode())
+        for _ in range(1200):
+            payload = http_response(warc_record("response", {
+                "WARC-Target-URI": "https://x.example/a",
+                "WARC-Date": "2024-01-01T00:00:00Z",
+            }, payload))
+        t0 = time.perf_counter()
+        rec = extract_document(payload)
+        assert time.perf_counter() - t0 < 1.0
+        assert len(rec["errors"]) <= 10
+        assert [e["type"] for e in rec["errors"]] == ["resource_limit"]
+        assert rec["errors"][0]["severity"] == "error"
