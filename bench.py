@@ -1,19 +1,20 @@
-"""Benchmark harness — one JSON record to stdout, then its headline.
+"""Catalog timing — one JSON record to stdout, then its headline.
 
-Runs the headline catalog queries plus the end-to-end extraction
-throughput measure at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
-test data) on ``local[$SPARK_GRAFT_CPUS]`` (default: this machine's
-``os.cpu_count()``).
+Times every catalog query (``functions/query_catalog.py``) at
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data) on
+``local[$SPARK_GRAFT_CPUS]`` (default: this machine's
+``os.cpu_count()``), and flags keys more than 2x slower than the last
+committed ``BENCH_FULL_R<n>.json`` at the same scale factor and core
+count.
 
-    {"metric": "extraction_docs_per_sec", "value": N, "unit": "docs/sec",
-     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1, ...}
-    {"metric": "extraction_docs_per_sec", "value": N, "unit": "docs/sec",
+    {"metric": "catalog_total_sec", "value": S, "unit": "s",
+     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1,
+     "cores": 4, "flagged_over_2x": {...}}
+    {"metric": "catalog_total_sec", "value": S, "unit": "s",
      "cores": 4, "sf": 0.1}
 
-The headline metric is docs/sec through the FULL extraction pipeline
-(payload synthesis + parse + layout + serialize, both branches) — the
-comparable number to the reference's 0.1–0.5 docs/sec single-thread
-baseline (BASELINE.md).
+The production job's throughput (docs/s through
+``run_extraction_job``) is measured by ``perfbench/run.py``, not here.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 from pdf_extractor_spark.functions.query_catalog import CATALOG  # noqa: E402
 from pdf_extractor_spark.plans.session import build_session  # noqa: E402
 
+_RUNS = 2  # best-of-N samples per headline catalog key
+
 
 def latest_full_record(root: pathlib.Path) -> list[pathlib.Path]:
     """The ``BENCH_FULL_R<n>.json`` under ``root`` with the highest
@@ -40,6 +43,23 @@ def latest_full_record(root: pathlib.Path) -> list[pathlib.Path]:
         if n.isdigit():
             rounds.append((int(n), p))
     return [max(rounds)[1]] if rounds else []
+
+
+def flag_movers(queries: dict[str, float], ref: dict, sf: float,
+                cores: int) -> dict[str, list[float]]:
+    """Keys of ``queries`` more than 2x slower than in the reference
+    record ``ref``, as ``{key: [old, new]}``. A reference measured at
+    another scale factor or core count is not comparable and flags
+    nothing."""
+    if ref.get("sf") != sf or ref.get("cores") != cores:
+        return {}
+    old_queries = ref.get("queries", {})
+    flagged = {}
+    for k, v in queries.items():
+        old = old_queries.get(k)
+        if isinstance(old, (int, float)) and old > 0.05 and v > 2 * old:
+            flagged[k] = [old, v]
+    return flagged
 
 
 def headline(record: dict) -> str:
@@ -61,96 +81,48 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup: JVM, parquet footers, AND the Python worker pool — the
-    # first Arrow stage otherwise pays worker spawn + import cost
-    from pdf_extractor_spark.sources.docwrap import html_roundtrip as _hw
+    # untimed warm-up: JVM, parquet footers and the Python worker pool
+    # — the first Arrow stage otherwise pays worker spawn + import cost
+    from pdf_extractor_spark.sources.docwrap import html_roundtrip
 
     warm = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(
         cores * 2
     )
-    _hw(warm, num_partitions=cores).count()
+    html_roundtrip(warm, num_partitions=cores).count()
 
-    # Each timing is best-of-N: this sandbox is a shared VM whose host
-    # exhibits minute-scale contention windows (measured 3-10x swings
-    # with ~0% steal — memory-bandwidth noise, see BASELINE.md), so a
-    # single sample can land 5x off steady-state. Min over N runs of
-    # the SAME plan is the standard steady-state estimator here.
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-
-    # headline extraction throughput is measured FIRST, in a clean
-    # JVM: the catalog battery below leaves checkpoint blocks / heap
-    # fragmentation behind, and measuring after it was worth a 2x
-    # pessimization of the docs/sec figure (measured 3.3 s vs 1.6 s
-    # for the identical plan)
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.sources.docwrap import (
-        html_roundtrip,
-        pdf_roundtrip,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_docs = docs.count() * 2
-    wall = float("inf")
-    for _ in range(max(n_runs, 3)):
-        t0 = time.perf_counter()
-        both = html_roundtrip(docs).unionByName(pdf_roundtrip(docs))
-        both.select("doc_id", F.length("extracted_text").alias("n")) \
-            .write.format("noop").mode("overwrite").save()
-        wall = min(wall, time.perf_counter() - t0)
-    docs_per_sec = round(n_docs / wall, 2)
-
-    # Every catalog entry gets a recorded wall time (VERDICT r4 #5:
-    # 90 of 181 keys had none).  Headline keys keep best-of-N; the
-    # long tail runs once — a single sample is enough to flag a
-    # >2x regression, and N runs of 181 keys would blow the bench
-    # window for noise reduction the headline set already provides.
+    # Every catalog entry gets a recorded wall time. Headline keys are
+    # best of _RUNS: a shared host has minute-scale contention windows
+    # (3-10x swings, BASELINE.md), so one sample can land far off
+    # steady state. The long tail runs once — one sample is enough to
+    # flag a >2x regression.
     queries: dict[str, float] = {}
     for name, qd in CATALOG.items():
         best = float("inf")
-        for _ in range(n_runs if qd.headline else 1):
+        for _ in range(_RUNS if qd.headline else 1):
             t0 = time.perf_counter()
             df = qd.spark(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         queries[name] = round(best, 3)
 
-    total = round(sum(queries.values()) + wall, 3)
-    queries["extraction_throughput"] = round(wall, 3)
-
     # self-flag >2x movers against the last committed full-battery
-    # record (BENCH_FULL_R*.json) so a regression is visible in the
-    # output line itself, not only to a human diffing rounds. A/B
-    # rules from BASELINE.md still apply before believing a flag —
-    # this box has minute-scale contention windows.
+    # record; BASELINE.md's A/B rule still applies before believing a
+    # flag
     flagged: dict[str, list[float]] = {}
-    ref_path = os.environ.get("SPARK_GRAFT_BENCH_REF")
-    candidates = (
-        [pathlib.Path(ref_path)] if ref_path
-        else latest_full_record(pathlib.Path(__file__).resolve().parent)
-    )
-    for ref_file in candidates:
+    root = pathlib.Path(__file__).resolve().parent
+    for ref_file in latest_full_record(root):
         try:
-            rec = json.loads(ref_file.read_text())
+            ref = json.loads(ref_file.read_text())
         except (OSError, ValueError):
             continue
-        if rec.get("sf") != sf:
-            continue  # cross-SF wall times are not comparable
-        ref = rec.get("queries", {})
-        for k, v in queries.items():
-            old = ref.get(k)
-            if isinstance(old, (int, float)) and old > 0.05 \
-                    and v > 2 * old:
-                flagged[k] = [old, v]
+        flagged.update(flag_movers(queries, ref, sf, cores))
 
     record = {
-        "metric": "extraction_docs_per_sec",
-        "value": docs_per_sec,
-        "unit": "docs/sec",
+        "metric": "catalog_total_sec",
+        "value": round(sum(queries.values()), 3),
+        "unit": "s",
         "queries": queries,
         "sf": sf,
-        "n_docs_extracted": n_docs,
-        "total_sec": total,
         "cores": cores,
         "flagged_over_2x": flagged,
     }

@@ -5275,49 +5275,29 @@ _MULTIMODAL_GIF_SQL = _multimodal_gif_sql()
 # ================================================================ catalog
 
 CATALOG: dict[str, QueryDef] = {
-    # --- ordering note (round 4) ----------------------------------------
-    # The driver's correctness gate checks the FIRST 50 entries of this
-    # dict.  Rotation policy (VERDICT r3 "Next round" #1): 27 of the 29
-    # entries whose only driver row was round 2 (TPC-H battery, events,
-    # basic dedup, j2/w_tumbling/d5) lead this round so catalog queries
-    # have a driver row no older than one round; the extraction roundtrips are
-    # the product invariant and are NEVER rotated out; entries whose code
-    # changed THIS round (pii scrub, multimodal, SRP ANN) stay inside the
-    # window so the changes get fresh hard signal.  Every entry is always
-    # exposed through __spark_entry__.queries()/oracle_sql().
-    # ALL entries NEW this round sit inside the window — an entry
-    # with no driver row ever outranks any entry that has one.
-    # Window arithmetic UPDATE (second resumed session, catalog at
-    # 176): nine new entries landed inside the window at positions
-    # 17-25 (multimodal_jpeg_decode, corpus_pdf_images,
-    # corpus_inline_images, multimodal_jpeg_thumbnail,
-    # text_trigram_kn, corpus_weighted_sample, multimodal_exif_strip,
-    # multimodal_cross_format_dup, multimodal_g711_audio), each with
-    # a written make-room rationale at its insertion point; the nine
-    # displaced entries (corpus_cdx_latest .. corpus_host_templates
-    # region) all carry THIS session's full-catalog crosscheck rows
-    # (174/174 sf0.001 and 175/175 sf0.01, FAILURES: none) plus
-    # their unit suites. Historical arithmetic below kept for the
-    # audit trail.
-    # Window arithmetic (resumed session of round 4, catalog at 125):
-    # 47 never-driver-checked round-4 entries (the five source
-    # roundtrips warc/feed/sitemap/wet/cdx, the discovery/corpus
-    # battery, this session's corpus_warc_revisits /
-    # corpus_conditional_fetch / corpus_hreflang_clusters at 8-10,
-    # and the harvest entries corpus_structured_data /
-    # corpus_pdf_links / corpus_pdf_metadata / corpus_html_tables
-    # closing the window at 47-50) + dedup_exact (the one remaining
-    # r2-rotated slot; the other four dedup entries were displaced
-    # past the edge this session, each with a written rationale at
-    # its new position) + the 2 pinned flagship roundtrips (html/pdf,
-    # r3-green) + multimodal_decode (r3-green but its codec changed
-    # in r4) = 50 exactly.  The displacements
-    # that made that fit are documented at the window edge below;
-    # everything past position 50 is r2/r3-green AND carries a
-    # this-session local DuckDB crosscheck at both SFs (full-catalog
-    # runs recorded in BASELINE.md).
-    #
-    # extraction roundtrips (the flagship correctness gates — pinned)
+    # The driver's correctness gate checks the first 50 entries: the
+    # entries with no driver row in any CORRECTNESS_r*.json come first.
+    "corpus_distinct_hll": QueryDef(
+        _hll_distinct, _HLL_DISTINCT_SQL, True
+    ),
+    "corpus_heavy_hitters_cms": QueryDef(
+        _cms_heavy_hitters, _CMS_HH_SQL, True
+    ),
+    "corpus_zorder_shards": QueryDef(
+        _zorder_shards, _ZORDER_SHARDS_SQL, True
+    ),
+    "corpus_table_pruning": QueryDef(
+        _table_pruning, _TABLE_PRUNING_SQL, True
+    ),
+    "corpus_analyze_stats": QueryDef(
+        _analyze_stats, _ANALYZE_SQL, True
+    ),
+    "text_char_entropy": QueryDef(
+        _char_entropy, _CHAR_ENTROPY_SQL, True
+    ),
+    "corpus_idn_hosts": QueryDef(_idn_fold, _IDN_FOLD_SQL, True),
+    "ann_int8_recall": QueryDef(_int8_recall, _INT8_RECALL_SQL, True),
+    # extraction roundtrips (the flagship correctness gates)
     "extract_html_roundtrip": QueryDef(_html_roundtrip, _ROUNDTRIP_SQL, True),
     "extract_pdf_roundtrip": QueryDef(_pdf_roundtrip, _ROUNDTRIP_SQL, True),
     "extract_warc_roundtrip": QueryDef(
@@ -5332,43 +5312,19 @@ CATALOG: dict[str, QueryDef] = {
     "extract_wet_roundtrip": QueryDef(
         _wet_roundtrip, _WARC_ROUNDTRIP_SQL
     ),
-    # -------- the 29 rotated-in entries (driver rows last seen r2) ------
-    # d5_shingle_uniqueness displaced past the window edge by
-    # corpus_html_tables (same rotation rationale as q1/q3 below)
-    # dedup_lsh_pair_count moved past the window edge this session —
-    # see the note at its new position
-    # dedup_simhash displaced past the window edge by
-    # corpus_warc_revisits (never driver-checked outranks r2-green);
-    # simhash banding machinery stays in-window-adjacent via
-    # dedup_simhash_near_dup's r3 row and both keep the every-session
-    # local both-SF crosscheck.
     "corpus_warc_revisits": QueryDef(
         _warc_revisits, _WARC_REVISITS_SQL, True
     ),
-    # dedup_minhash_signatures displaced past the window edge by
-    # corpus_conditional_fetch (never driver-checked outranks
-    # r2-green); its signature kernel is pinned bit-identical by
-    # tests/test_kernels.py and it keeps the local both-SF crosscheck.
     "corpus_conditional_fetch": QueryDef(
         _conditional_fetch, _CONDITIONAL_FETCH_SQL, True
     ),
-    # dedup_lsh_precision displaced past the window edge by
-    # corpus_hreflang_clusters (never driver-checked outranks
-    # r2-green); the LSH candidate machinery keeps its local both-SF
-    # crosscheck and the skew bench.
     "corpus_hreflang_clusters": QueryDef(
         _hreflang_clusters, _HREFLANG_SQL, True
     ),
-    # q1_pricing_summary / q3_shipping_priority displaced past the
-    # window edge by corpus_structured_data / corpus_pdf_links
-    # (r2-green + every-session local crosscheck vs
-    # never-driver-checked)
-    # -------- changed this round: keep inside the driver window ---------
     "text_bpe_token_counts": QueryDef(
         _bpe_token_counts, _BPE_COUNTS_SQL, True
     ),
     "corpus_span_dedup": QueryDef(_span_dedup, _SPAN_DEDUP_SQL, True),
-    # -------- new this round (4): must sit inside the driver window -----
     "corpus_decontaminate": QueryDef(_decontaminate, _DECONTAM_SQL, True),
     "text_quality_classifier": QueryDef(
         _quality_classifier, _QUALITY_CLASSIFIER_SQL, True
@@ -5380,79 +5336,37 @@ CATALOG: dict[str, QueryDef] = {
     "multimodal_decode": QueryDef(
         _multimodal_decode, _MULTIMODAL_DECODE_SQL, True
     ),
-    # new this session: the full JPEG codec gate. Window make-room:
-    # corpus_url_param_rules moves past the edge (both never driver-
-    # checked; a whole new decode capability outranks a URL-rewrite
-    # rule whose kernel is unit-test-pinned with a local both-SF
-    # crosscheck).
     "multimodal_jpeg_decode": QueryDef(
         _multimodal_jpeg, _MULTIMODAL_JPEG_SQL, True
     ),
-    # new this session: embedded-JPEG harvest out of PDFs (tokenizer
-    # x jpeg_codec capstone). Window make-room: corpus_host_templates
-    # moves past the edge (never driver-checked both; the cross-
-    # subsystem capstone with an encrypted-decode leg outranks the
-    # template miner, which keeps its unit suite + local crosscheck).
     "corpus_pdf_images": QueryDef(_pdf_images, _PDF_IMAGES_SQL, True),
-    # new this session: the HTML twin of the PDF image harvest.
-    # Window make-room: corpus_crawl_budget moves past the edge
-    # (never driver-checked both; same capstone-over-miner rationale
-    # as the two entries above — budget keeps unit suite + local
-    # both-SF crosscheck).
     "corpus_inline_images": QueryDef(
         _inline_images, _INLINE_IMAGES_SQL, True
     ),
-    # new this session: the encoder as a production surface (same
-    # make-room rationale; corpus_crawl_frontier_bloom past the edge,
-    # keeping its unit suite + local both-SF crosscheck).
     "multimodal_jpeg_thumbnail": QueryDef(
         _jpeg_thumbnail, _JPEG_THUMB_SQL, True
     ),
-    # new this session: KN trigram LM (make-room: corpus_fetch_batch
-    # past the edge, same never-checked-vs-never-checked rationale,
-    # keeps unit suite + local both-SF crosscheck).
     "text_trigram_kn": QueryDef(_trigram_kn, _TRIGRAM_KN_SQL, True),
-    # new this session (make-room: corpus_html_redirect_edges past
-    # the edge, same rationale chain as above).
     "corpus_weighted_sample": QueryDef(
         _weighted_sample, _WEIGHTED_SAMPLE_SQL, True
     ),
-    # new this session (make-room: corpus_resolve_redirects past the
-    # edge, same rationale chain).
     "multimodal_exif_strip": QueryDef(
         _exif_strip, _EXIF_STRIP_SQL, True
     ),
-    # new this session (make-room: corpus_cdx_latest past the edge,
-    # same rationale chain).
     "multimodal_cross_format_dup": QueryDef(
         _cross_format_dup, _CROSS_FORMAT_SQL, True
     ),
-    # new this session (make-room: corpus_cdx_latest past the edge
-    # — it keeps its r4-part-1 unit suite and the cdx battery's
-    # local both-SF crosscheck; extract_cdx_roundtrip holds the
-    # window's position 50).
     "multimodal_g711_audio": QueryDef(
         _g711_audio, _G711_SQL, True
     ),
-    # new this session (make-room: corpus_resolve_redirects past the
-    # edge, same rationale chain).
     "multimodal_jpeg_salvage": QueryDef(
         _jpeg_salvage, _JPEG_SALVAGE_SQL, True
     ),
-    # new this session (make-room: corpus_recrawl_schedule past the
-    # edge, same rationale chain).
     "multimodal_ico_decode": QueryDef(_ico_decode, _ICO_SQL, True),
-    # new this session (make-room: corpus_html_redirect_edges past
-    # the edge, same rationale chain).
     "multimodal_apng_frames": QueryDef(_apng_frames, _APNG_SQL, True),
-    # new this session (make-room: corpus_fetch_batch past the edge,
-    # same rationale chain). Positioned with the extraction
-    # roundtrips in spirit: it IS one (7th source format).
     "extract_svg_roundtrip": QueryDef(
         _svg_roundtrip, _SVG_ROUNDTRIP_SQL, True
     ),
-    # new this session (make-room: corpus_crawl_frontier_bloom past
-    # the edge, same rationale chain).
     "corpus_jsonl_parse": QueryDef(_jsonl_parse, _JSONL_SQL, True),
     "multimodal_features": QueryDef(
         _multimodal_features, _MULTIMODAL_FEATURES_SQL
@@ -5466,7 +5380,6 @@ CATALOG: dict[str, QueryDef] = {
     "text_mojibake_repair": QueryDef(_mojibake_repair, _MOJIBAKE_SQL),
     "corpus_meta_robots": QueryDef(_meta_robots, _META_ROBOTS_SQL),
     "corpus_soft404": QueryDef(_soft404, _SOFT404_SQL),
-    # -------- new this session (round 4, continued) ----------------------
     "corpus_url_blocklist": QueryDef(
         _url_blocklist, _URL_BLOCKLIST_SQL, True
     ),
@@ -5493,7 +5406,6 @@ CATALOG: dict[str, QueryDef] = {
     "corpus_host_pagerank": QueryDef(
         _host_pagerank, _HOST_PAGERANK_SQL, True
     ),
-    # -------- new this session (round 4, fourth) -------------------------
     "corpus_dsir_weights": QueryDef(
         _dsir_weights, _DSIR_WEIGHTS_SQL, True
     ),
@@ -5505,11 +5417,9 @@ CATALOG: dict[str, QueryDef] = {
     ),
     "corpus_anchor_text": QueryDef(_anchor_text, _ANCHOR_TEXT_SQL, True),
     "corpus_bloom_seen": QueryDef(_bloom_seen, _BLOOM_SEEN_SQL, True),
-    # -------- new this session (round 4, fifth) --------------------------
     "corpus_crawl_frontier": QueryDef(
         _crawl_frontier, _CRAWL_FRONTIER_SQL, True
     ),
-    # -------- new this session (round 4, sixth) ---------------------------
     "extract_cdx_roundtrip": QueryDef(
         _cdx_roundtrip, _CDX_ROUNDTRIP_SQL, True
     ),
@@ -5534,10 +5444,6 @@ CATALOG: dict[str, QueryDef] = {
     "corpus_url_param_rules": QueryDef(
         _url_param_rules, _URL_PARAM_RULES_SQL
     ),
-    # dedup_exact displaced past the window edge by corpus_dust_strip
-    # (never driver-checked outranks r2-green); the exact-hash dedup
-    # machinery stays in-window via corpus_incremental_dedup, which
-    # runs the same hash-groupBy shape.
     "corpus_dust_strip": QueryDef(_dust_strip, _DUST_STRIP_SQL, True),
     "corpus_crawl_traps": QueryDef(_crawl_traps, _CRAWL_TRAPS_SQL),
     "corpus_mime_sniff": QueryDef(_mime_sniff, _MIME_SNIFF_SQL),
@@ -5547,11 +5453,6 @@ CATALOG: dict[str, QueryDef] = {
     "corpus_pdf_links": QueryDef(_pdf_links, _PDF_LINKS_SQL),
     "corpus_pdf_metadata": QueryDef(_pdf_metadata, _PDF_META_SQL, True),
     "corpus_html_tables": QueryDef(_html_tables, _HTML_TABLES_SQL),
-    # -------- position 51: first entry past the window edge ----------
-    # The window is saturated with never-driver-checked entries (plus
-    # the two pinned roundtrips and multimodal_decode, whose codec
-    # changed in r4); corpus_section_chunks carries this session's
-    # local both-SF crosscheck as its evidence until a slot opens.
     "corpus_section_chunks": QueryDef(
         _section_chunks, _SECTION_CHUNKS_SQL
     ),
@@ -5595,11 +5496,6 @@ CATALOG: dict[str, QueryDef] = {
     "multimodal_image_sniff": QueryDef(
         _image_sniff, _IMAGE_SNIFF_SQL
     ),
-    # dedup_lsh_pair_count displaced past the window edge by
-    # corpus_pdf_metadata (never driver-checked outranks r2-green);
-    # its candidate machinery stays covered in-window by
-    # dedup_lsh_precision, and it keeps the every-session local
-    # both-SF crosscheck.
     "dedup_exact": QueryDef(_dedup_exact, _DEDUP_EXACT_SQL),
     "dedup_lsh_pair_count": QueryDef(_lsh_pairs, _LSH_PAIRS_SQL),
     "dedup_minhash_signatures": QueryDef(_minhash, _MINHASH_SQL, True),
@@ -5612,13 +5508,6 @@ CATALOG: dict[str, QueryDef] = {
     ),
     "q1_pricing_summary": QueryDef(_q1_pricing_summary, _Q1_SQL, True),
     "q3_shipping_priority": QueryDef(_q3_shipping_priority, _Q3_SQL, True),
-    # -------- displaced past the window edge THIS session (window
-    # demand: 21 never-driver-checked entries + 27 r2-stale rotations
-    # + 2 pinned roundtrips > 50).  extract_full_stats is r3-green
-    # with quality.py/inventory.py UNCHANGED since r3;
-    # set_ops_customers / q14_promo_revenue are r2-green pure
-    # relational bodies unchanged since r2, both re-crosschecked
-    # locally vs DuckDB at sf0.001 AND sf0.01 this session. --------
     "extract_full_stats": QueryDef(_full_extract_stats, _FULL_STATS_SQL),
     "events_pivot_hourly": QueryDef(
         _events_pivot_hourly, _EVENTS_PIVOT_SQL
@@ -5626,53 +5515,27 @@ CATALOG: dict[str, QueryDef] = {
     "events_json_props": QueryDef(_json_props_rollup, _JSON_PROPS_SQL),
     "j2_asof_band": QueryDef(_j2_asof_band, _J2_ASOF_SQL),
     "w_tumbling_hour": QueryDef(_w_tumbling_hour, _W_TUMBLING_SQL),
-    # q5 / q6 / q7 displaced by corpus_url_param_rules,
-    # corpus_crawl_traps and corpus_mime_sniff (never driver-checked
-    # outranks r2-green): pure relational bodies, plan-pinned by
-    # tests/test_plans.py (q5 broadcast chain, q6 pushdown+pruning),
-    # re-crosschecked locally vs DuckDB at both SFs this session
-    # (q7 non-vacuous at both — the crosscheck's vacuous guard holds).
     "q5_region_volume": QueryDef(_q5_region_volume, _Q5_SQL, True),
     "q6_forecast_revenue": QueryDef(_q6_forecast_revenue, _Q6_SQL, True),
     "q7_volume_shipping": QueryDef(_q7_volume_shipping, _Q7_SQL),
     "q14_promo_revenue": QueryDef(_q14_promo_revenue, _Q14_SQL),
     "set_ops_customers": QueryDef(_set_ops_customers, _SET_OPS_SQL),
-    # q13 / rollup_returns / q8 displaced by extract_sitemap_roundtrip,
-    # corpus_crawl_frontier and extract_wet_roundtrip (never
-    # driver-checked outranks r2-green): pure relational bodies
-    # unchanged since r2, re-crosschecked locally vs DuckDB at
-    # sf0.001 AND sf0.01 this session (FAILURES: none, 99/99).
     "q13_customer_distribution": QueryDef(
         _q13_customer_distribution, _Q13_SQL
     ),
     "rollup_returns": QueryDef(_rollup_returns, _ROLLUP_SQL),
     "q8_market_share": QueryDef(_q8_market_share, _Q8_SQL),
-    # q15 / q19 displaced by the CDX source pair (never driver-checked
-    # outranks r2-green): pure relational bodies unchanged since r2,
-    # re-crosschecked locally vs DuckDB at sf0.001 AND sf0.01 this
-    # session.
     "q15_top_supplier": QueryDef(_q15_top_supplier, _Q15_SQL),
     "q19_disjunctive_revenue": QueryDef(
         _q19_disjunctive_revenue, _Q19_SQL
     ),
-    # q21 / q12 / q10 / q22 / q17 displaced by the redirect resolver,
-    # the recrawl scheduler, the directive harvester, the composed
-    # fetch batch and the bloom-frontier variant (same rule + same
-    # local both-SF crosscheck evidence as q15/q19 above).
     "q21_waiting_suppliers": QueryDef(_q21_waiting_suppliers, _Q21_SQL),
     "q12_late_shipments": QueryDef(_q12_late_shipments, _Q12_SQL),
     "q10_returned_items": QueryDef(_q10_returned_items, _Q10_SQL),
     "q22_global_sales": QueryDef(_q22_global_sales, _Q22_SQL),
     "q17_small_quantity": QueryDef(_q17_small_quantity, _Q17_SQL),
-    # q18 / q4 displaced by the water-filling crawl budget and the
-    # host-template detector (same rule + same local both-SF
-    # crosscheck evidence).
     "q18_large_orders": QueryDef(_q18_large_orders, _Q18_SQL),
     "q4_order_priority": QueryDef(_q4_order_priority, _Q4_SQL),
-    # -------- displaced by the fourth-session additions (all with r3
-    # driver rows; text_pii_scrub and multimodal_resize changed in r4
-    # but carry this session's crosscheck + their unit/golden suites —
-    # the four never-validated new entries outrank them for slots) ----
     "text_pii_scrub": QueryDef(_pii_scrub, _PII_SCRUB_SQL, True),
     "multimodal_resize": QueryDef(_multimodal_resize, _MULTIMODAL_RESIZE_SQL),
     "ann_srp_bucketed": QueryDef(_ann_srp, _ANN_SRP_SQL),
@@ -5697,7 +5560,6 @@ CATALOG: dict[str, QueryDef] = {
     "search_bm25_topk": QueryDef(_bm25_topk, _BM25_SQL, True),
     "text_gopher_rules": QueryDef(_gopher_rules, _GOPHER_SQL, True),
     "text_c4_rules": QueryDef(_c4_rules, _C4_SQL),
-    # -------- position 51+: driver-green in round 3 ---------------------
     "corpus_domain_cap": QueryDef(_domain_cap, _DOMAIN_CAP_SQL),
     "corpus_hash_sample": QueryDef(_hash_sample, _HASH_SAMPLE_SQL),
     "corpus_length_quantiles": QueryDef(
@@ -5741,21 +5603,11 @@ CATALOG: dict[str, QueryDef] = {
     "a2_trimmed_mean": QueryDef(_a2_trimmed_mean, _A2_TRIMMED_SQL),
     "a3_inventory_bands": QueryDef(_a3_inventory_bands, _A3_INVENTORY_SQL),
     "j1_range_containment": QueryDef(_j1_range_containment, _J1_RANGE_SQL),
-    # -------- new this session (round 4, eighth): sketches ----------------
-    "corpus_distinct_hll": QueryDef(
-        _hll_distinct, _HLL_DISTINCT_SQL, True
-    ),
-    "corpus_heavy_hitters_cms": QueryDef(
-        _cms_heavy_hitters, _CMS_HH_SQL, True
-    ),
     "multimodal_video_frames": QueryDef(
         _multimodal_video, _MULTIMODAL_VIDEO_SQL, True
     ),
     "multimodal_exif": QueryDef(
         _multimodal_exif, _MULTIMODAL_EXIF_SQL, True
-    ),
-    "corpus_zorder_shards": QueryDef(
-        _zorder_shards, _ZORDER_SHARDS_SQL, True
     ),
     "corpus_recipe_whatif": QueryDef(
         _recipe_whatif, _RECIPE_WHATIF_SQL, True
@@ -5767,13 +5619,6 @@ CATALOG: dict[str, QueryDef] = {
         _mirror_hosts, _MIRROR_HOSTS_SQL, True
     ),
     "corpus_link_spam": QueryDef(_link_spam, _LINK_SPAM_SQL, True),
-    "text_char_entropy": QueryDef(
-        _char_entropy, _CHAR_ENTROPY_SQL, True
-    ),
-    "ann_int8_recall": QueryDef(_int8_recall, _INT8_RECALL_SQL, True),
-    "corpus_analyze_stats": QueryDef(
-        _analyze_stats, _ANALYZE_SQL, True
-    ),
     "multimodal_tiff_decode": QueryDef(
         _multimodal_tiff, _MULTIMODAL_TIFF_SQL, True
     ),
@@ -5783,112 +5628,4 @@ CATALOG: dict[str, QueryDef] = {
     "multimodal_bmp_decode": QueryDef(
         _multimodal_bmp, _MULTIMODAL_BMP_SQL, True
     ),
-    "corpus_table_pruning": QueryDef(
-        _table_pruning, _TABLE_PRUNING_SQL, True
-    ),
-    "corpus_idn_hosts": QueryDef(_idn_fold, _IDN_FOLD_SQL, True),
-}
-
-
-# ================================================== round-5 window rotation
-#
-# The driver's correctness gate hashes the FIRST 50 entries of CATALOG.
-# Round-5 policy (VERDICT r4 "Next round" #1/#3, applied verbatim): the
-# window is the 3 entries whose oracles carried the r4 CAST bug — now
-# fixed and needing a green driver row — plus 47 of the 55 entries that
-# have NEVER had a driver row in any round (priority order from the
-# verdict: compliance gate, the corpus_pdf_* metadata family,
-# corpus_crawl_*, mime sniff, image links — the things a user hits
-# first).  The catalog is FROZEN this round (no new entries) so the
-# window arithmetic finally closes: 55 - 47 = 8 never-checked remain,
-# meeting the "never-checked <= 8 after r5" invariant, and those 8 are
-# documented in _R5_DEFERRED below with their compensating evidence
-# (each has a dedicated unit suite, and the sketches/layout entries
-# additionally carry scale benches: BENCH_HLL.json, BENCH_TABLE.json,
-# BENCH_SHARD_PREFIX.json).  The two flagship roundtrips rotate OUT for
-# exactly one round — both are r4 driver-green, their kernels are
-# unchanged this round, and the golden byte-equality suite (158 files)
-# re-pins them every pytest run.  Entries whose kernels changed this
-# round but are not in the window (extract_svg_roundtrip,
-# corpus_jsonl_parse, multimodal_g711_audio, multimodal_audio_decode)
-# all have r4 driver rows predating the change; the change is covered
-# by the dtype-strict full-catalog crosscheck at both SFs recorded in
-# BASELINE.md plus new targeted unit tests (ITU A-law table,
-# surrogate-pair escapes, skip-subtree pops).  Rotation is a pure
-# reordering: every entry stays exposed through queries()/oracle_sql().
-
-_R5_WINDOW: list[str] = [
-    # the 3 oracle-CAST fixes (r4 hash FAILs, values were exact)
-    "corpus_hreflang_clusters",
-    "corpus_pack_sequences",
-    "corpus_shard_manifest",
-    # 47 never-driver-checked entries, verdict priority first
-    "corpus_compliance_gate",
-    "corpus_pdf_metadata",
-    "corpus_pdf_full_meta",
-    "corpus_pdf_xmp",
-    "corpus_pdf_annotations",
-    "corpus_pdf_form_fields",
-    "corpus_pdf_attachments",
-    "corpus_pdf_links",
-    "corpus_crawl_frontier",
-    "corpus_crawl_frontier_bloom",
-    "corpus_crawl_budget",
-    "corpus_crawl_traps",
-    "corpus_mime_sniff",
-    "corpus_image_links",
-    "corpus_caption_filter",
-    "corpus_robots_filter",
-    "corpus_ai_optout",
-    "corpus_license_signals",
-    "corpus_anchor_text",
-    "corpus_bloom_seen",
-    "extract_cdx_roundtrip",
-    "corpus_cdx_latest",
-    "corpus_resolve_redirects",
-    "corpus_html_redirect_edges",
-    "corpus_recrawl_schedule",
-    "corpus_fetch_batch",
-    "corpus_host_templates",
-    "corpus_url_param_rules",
-    "corpus_dust_strip",
-    "corpus_structured_data",
-    "corpus_html_tables",
-    "corpus_section_chunks",
-    "corpus_resolved_links",
-    "corpus_mirror_hosts",
-    "corpus_link_spam",
-    "corpus_recipe_whatif",
-    "dedup_semantic",
-    "dedup_confusable_exact",
-    "text_confusable_skeleton",
-    "streaming_host_sessions",
-    "multimodal_jpeg_dims",
-    "multimodal_image_sniff",
-    "multimodal_video_frames",
-    "multimodal_exif",
-    "multimodal_gif_decode",
-    "multimodal_tiff_decode",
-    "multimodal_bmp_decode",
-]
-
-# The 8 never-driver-checked entries deliberately deferred to round 6
-# (window arithmetic: 3 + 47 = 50).  Compensating evidence per entry:
-_R5_DEFERRED: list[str] = [
-    "corpus_distinct_hll",       # BENCH_HLL.json 10M-row sketch-vs-exact
-    "corpus_heavy_hitters_cms",  # tests/test_sketches.py exact compare
-    "corpus_zorder_shards",      # tests/test_zorder.py interleave oracle
-    "corpus_table_pruning",      # BENCH_TABLE.json + tests/test_icetable.py
-    "corpus_analyze_stats",      # exact NDV beside the sketch in the
-                                 # entry itself + both-SF crosscheck
-    "text_char_entropy",         # closed-form entropy unit oracle
-    "corpus_idn_hosts",          # tests/test_idn.py punycode vectors
-    "ann_int8_recall",           # tests/test_int8_recall.py measured recall
-]
-
-assert len(_R5_WINDOW) == 50, len(_R5_WINDOW)
-assert not (set(_R5_WINDOW) & set(_R5_DEFERRED))
-CATALOG = {
-    **{n: CATALOG[n] for n in _R5_WINDOW},
-    **{n: v for n, v in CATALOG.items() if n not in set(_R5_WINDOW)},
 }

@@ -5,7 +5,7 @@ Physical plan (SURVEY.md §3.4):
     read pages (column-pruned: url, warc_ts, html)
       → anti-join vs existing output          (checkpoint resume, S5/S6)
       → size-routed repartition by url-hash   (skew defusal, SURVEY §4.2)
-      → mapInPandas(extract_batch)            (ONE fused Arrow stage)
+      → mapInPandas(extract_iter)             (ONE fused Arrow stage)
       → append extracted; metrics = groupBy(part_id) rollup
 
 Skew handling: AQE cannot split a straggler *map* task, so layout is

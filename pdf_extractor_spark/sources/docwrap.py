@@ -17,10 +17,12 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG
 from ..operators.document import extract_document
 from ..operators.pdf_generator import PageSpec, build_pdf, text_advance
+from ..plans.pipeline import _FAIL_SEVERITIES, fan_out
 
 ROUNDTRIP_SCHEMA = "doc_id long, extracted_text string"
 
@@ -184,19 +186,18 @@ def wrap_pdf_layout(text: str, doc_id: int) -> bytes:
                      ocg_layers=ocg_layers, encrypt=encrypt)
 
 
-def _roundtrip_iter(text_of):
-    """``mapInPandas`` body: ``text_of(doc_id, text)`` per row →
-    (doc_id, extracted_text)."""
+def _rows_iter(rows_of, columns: list[str]):
+    """``mapInPandas`` body: ``rows_of(doc_id, text)`` returns one
+    document's output tuples (none, one, or one per error) → one frame
+    of ``columns`` per batch."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts = [
-                text_of(int(d), t)
+            rows = [
+                row
                 for d, t in zip(pdf["doc_id"], pdf["text"])
+                for row in rows_of(int(d), t)
             ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(),
-                 "extracted_text": texts}
-            )
+            yield pd.DataFrame(rows, columns=columns)
 
     return fn
 
@@ -210,12 +211,19 @@ def _spread(docs: DataFrame, num_partitions: int | None) -> DataFrame:
     parquet table arrives as ONE input split, which would serialize the
     whole extraction onto one task. Same fan-out rule as the production
     pipeline's url-hash repartition (plans/pipeline.py)."""
-    from pyspark.sql import functions as F
-
-    from ..plans.pipeline import fan_out
-
     return docs.select("doc_id", "text").repartition(
         fan_out(docs, num_partitions), F.col("doc_id")
+    )
+
+
+def _roundtrip(docs: DataFrame, num_partitions: int | None,
+               text_of) -> DataFrame:
+    """``text_of(doc_id, text)`` per document → (doc_id,
+    extracted_text)."""
+    return _spread(docs, num_partitions).mapInPandas(
+        _rows_iter(lambda d, t: [(d, text_of(d, t))],
+                   ["doc_id", "extracted_text"]),
+        ROUNDTRIP_SCHEMA,
     )
 
 
@@ -223,11 +231,9 @@ def html_roundtrip(docs: DataFrame, num_partitions: int | None = None) -> DataFr
     """documents → synth HTML (transport container rotating plain /
     HTTP+gzip / HTTP+chunked / BOM'd UTF-16LE with a lying meta /
     bare-gzip by doc_id) → extract → (doc_id, extracted_text)."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _roundtrip_iter(
-            lambda d, t: _extracted_text(wrap_html_transport(t, d))
-        ),
-        ROUNDTRIP_SCHEMA,
+    return _roundtrip(
+        docs, num_partitions,
+        lambda d, t: _extracted_text(wrap_html_transport(t, d)),
     )
 
 
@@ -235,15 +241,25 @@ def pdf_roundtrip(docs: DataFrame, num_partitions: int | None = None) -> DataFra
     """documents → synth PDF (writer layout rotating classic /
     xref-stream / hybrid-reference by doc_id) → extract →
     (doc_id, extracted_text)."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _roundtrip_iter(
-            lambda d, t: _extracted_text(wrap_pdf_layout(t, d))
-        ),
-        ROUNDTRIP_SCHEMA,
+    return _roundtrip(
+        docs, num_partitions,
+        lambda d, t: _extracted_text(wrap_pdf_layout(t, d)),
     )
 
 
 GARBAGE_PAYLOAD = b"\x80\x81\x82\x83garbage\x9f\x9e"
+
+
+def _error_rows(doc_id: int, text: str) -> list[tuple]:
+    """One (doc_id, error_type, severity) row per kernel error."""
+    if doc_id % 10 == 3:
+        payload = b""
+    elif doc_id % 10 == 7:
+        payload = GARBAGE_PAYLOAD
+    else:
+        payload = wrap_html(text)
+    r = extract_document(payload, DEFAULT_CONFIG)
+    return [(doc_id, e["type"], e["severity"]) for e in r["errors"]]
 
 
 def error_rollup(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -254,30 +270,9 @@ def error_rollup(docs: DataFrame, num_partitions: int | None = None) -> DataFram
     the rest wrap cleanly (→ no errors) — so the DuckDB oracle can
     predict every row from doc_id arithmetic while the counts flow
     through the real kernel + explode + hash-aggregate path."""
-    from pyspark.sql import functions as F
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id % 10 == 3:
-                    payload = b""
-                elif doc_id % 10 == 7:
-                    payload = GARBAGE_PAYLOAD
-                else:
-                    payload = wrap_html(text)
-                r = extract_document(payload, DEFAULT_CONFIG)
-                for e in r["errors"]:
-                    rows.append(
-                        {"doc_id": doc_id, "error_type": e["type"],
-                         "severity": e["severity"]}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "error_type", "severity"]
-            )
-
     recs = _spread(docs, num_partitions).mapInPandas(
-        it, "doc_id long, error_type string, severity string"
+        _rows_iter(_error_rows, ["doc_id", "error_type", "severity"]),
+        "doc_id long, error_type string, severity string",
     )
     return (
         recs.groupBy("error_type", "severity")
@@ -296,42 +291,28 @@ FULL_RECORD_SCHEMA = (
 )
 
 
-def _full_record_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _full_record_rows(doc_id: int, text: str) -> list[tuple]:
     """Full extraction record per document: even doc ids wrap as PDF,
     odd as HTML — both branches exercised in one stage."""
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            wrapper = wrap_pdf if doc_id % 2 == 0 else wrap_html
-            r = extract_document(wrapper(text), DEFAULT_CONFIG)
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "branch": r["branch"],
-                    "ok": not any(
-                        e["severity"] in ("error", "critical")
-                        for e in r["errors"]
-                    ),
-                    "score": r["quality"]["score"],
-                    "grade": r["quality"]["grade"],
-                    "coverage": r["quality"]["coverage"],
-                    "status": r["quality"]["status"],
-                    "n_spans": len(r["spans"]),
-                    "n_errors": len(r["errors"]),
-                    "inv_total": r["inventory"]["total"],
-                }
-            )
-        yield pd.DataFrame(rows)
+    wrapper = wrap_pdf if doc_id % 2 == 0 else wrap_html
+    r = extract_document(wrapper(text), DEFAULT_CONFIG)
+    q = r["quality"]
+    ok = not any(e["severity"] in _FAIL_SEVERITIES for e in r["errors"])
+    return [(
+        doc_id, r["branch"], ok, q["score"], q["grade"], q["coverage"],
+        q["status"], len(r["spans"]), len(r["errors"]),
+        r["inventory"]["total"],
+    )]
 
 
 def full_extract_stats(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Per-branch rollup of the FULL extraction record (quality score,
     coverage status, inventory, error counts) — the surfaces beyond
     ``extracted_text`` that the roundtrip queries don't reach."""
-    from pyspark.sql import functions as F
-
     recs = _spread(docs, num_partitions).mapInPandas(
-        _full_record_iter, FULL_RECORD_SCHEMA
+        _rows_iter(_full_record_rows,
+                   [f.split()[0] for f in FULL_RECORD_SCHEMA.split(", ")]),
+        FULL_RECORD_SCHEMA,
     )
     return (
         recs.groupBy("branch", "grade", "status")
@@ -356,7 +337,6 @@ def svg_roundtrip(docs: DataFrame,
     from geometry, not document order."""
     from ..operators.svg_extract import build_svg, svg_extract_text
 
-    return _spread(docs, num_partitions).mapInPandas(
-        _roundtrip_iter(lambda d, t: svg_extract_text(build_svg(t, d))),
-        ROUNDTRIP_SCHEMA,
+    return _roundtrip(
+        docs, num_partitions, lambda d, t: svg_extract_text(build_svg(t, d))
     )

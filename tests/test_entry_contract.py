@@ -33,6 +33,9 @@ SAMPLE = [
     "extract_pdf_roundtrip",
     "j2_asof_band",
     "w_tumbling_hour",
+    "a11_error_rollup",
+    "extract_full_stats",
+    "extract_svg_roundtrip",
 ]
 
 
@@ -88,18 +91,13 @@ def test_query_matches_duckdb_oracle(spark, duck, name):
 
 
 def test_rotation_invariant_never_checked_bounded():
-    """Driver-window rotation invariant (VERDICT r4 #3): every
-    catalog entry without a driver row in ANY CORRECTNESS_r*.json
-    must sit inside the current 50-entry driver window, except a
-    documented deferral set of at most 8 names (which must reach 0
-    by round 6)."""
+    """Driver-window invariant: every catalog entry without a driver
+    row in ANY CORRECTNESS_r*.json sits inside the 50-entry driver
+    window."""
     import json
     import pathlib
 
-    from pdf_extractor_spark.functions.query_catalog import (
-        CATALOG,
-        _R5_DEFERRED,
-    )
+    from pdf_extractor_spark.functions.query_catalog import CATALOG
 
     root = pathlib.Path(__file__).resolve().parents[1]
     seen: set[str] = set()
@@ -108,5 +106,4 @@ def test_rotation_invariant_never_checked_bounded():
     window = set(list(CATALOG)[:50])
     never = {n for n in CATALOG if n not in seen}
     leftover = never - window
-    assert leftover <= set(_R5_DEFERRED), leftover - set(_R5_DEFERRED)
-    assert len(leftover) <= 8, sorted(leftover)
+    assert not leftover, sorted(leftover)
