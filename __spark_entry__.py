@@ -63,8 +63,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each query."""
-    return {
-        name: qd.oracle
-        for name, qd in CATALOG.items()
-        if qd.oracle is not None
-    }
+    return {name: qd.oracle for name, qd in CATALOG.items()}

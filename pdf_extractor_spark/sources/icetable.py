@@ -392,6 +392,12 @@ N_CHUNKS = 5
 
 
 def table_pruning_catalog(spark, sf_dir: str):
+    """Catalog body, driver-gated: five range-clustered appends, then
+    a range scan whose PLANNED FILE COUNT, predicate row count,
+    time-travel row count (snapshot 1) and snapshot-log length are all
+    recomputed relationally by the oracle. A pruning bug (wrong file
+    set) or an isolation bug (snapshot 1 seeing later data) both
+    hash-mismatch."""
     import tempfile
 
     from pyspark.sql import functions as F

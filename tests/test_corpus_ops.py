@@ -131,14 +131,12 @@ class TestUrlCanonical:
     def test_report_matches_duckdb_oracle(self, spark):
         import duckdb
 
-        from pdf_extractor_spark.functions.query_catalog import (
-            _URL_CANONICAL_SQL,
-            _url_canonical,
-        )
+        from pdf_extractor_spark.functions.query_catalog import CATALOG
 
+        qd = CATALOG["corpus_url_canonical"]
         sf = "/root/testdata/sf0.001"
         got = (
-            _url_canonical(spark, sf)
+            qd.spark(spark, sf)
             .toPandas()
             .sort_values("doc_id")
             .reset_index(drop=True)
@@ -149,7 +147,7 @@ class TestUrlCanonical:
             f"read_parquet('{sf}/documents.parquet')"
         )
         exp = (
-            con.execute(_URL_CANONICAL_SQL)
+            con.execute(qd.oracle)
             .df()
             .sort_values("doc_id")
             .reset_index(drop=True)

@@ -65,11 +65,21 @@ def test_entry_returns_rows(spark):
     assert all(r["n_byte_identical"] == r["n_docs"] for r in rows)
 
 
-def test_every_query_has_matching_oracle_keys():
+def test_every_query_has_matching_oracle_keys(spark, duck):
+    """Every registration pairs a Spark plan with an oracle of the
+    same column names: an entry pointed at the wrong function or table
+    fails here. Only column names are read; no result is collected."""
     q = entry_mod.queries()
     o = entry_mod.oracle_sql()
-    assert set(o) <= set(q)
+    assert set(o) == set(q)
     assert len(q) >= 20
+    mismatched = {}
+    for name, build in q.items():
+        spark_cols = [c.lower() for c in build(spark, SF_DIR).columns]
+        duck_cols = [c.lower() for c in duck.sql(o[name]).columns]
+        if spark_cols != duck_cols:
+            mismatched[name] = (spark_cols, duck_cols)
+    assert not mismatched, mismatched
 
 
 @pytest.mark.parametrize("name", SAMPLE)

@@ -654,12 +654,11 @@ class TestImageFeatures:
     def test_features_match_closed_form_oracle(self, spark, docs):
         import duckdb
 
-        from pdf_extractor_spark.functions.query_catalog import (
-            _MULTIMODAL_FEATURES_SQL,
-            _multimodal_features,
-        )
+        from pdf_extractor_spark.functions.query_catalog import CATALOG
+
+        qd = CATALOG["multimodal_features"]
         sdf = (
-            _multimodal_features(spark, SF)
+            qd.spark(spark, SF)
             .toPandas()
             .sort_values(["doc_id", "channel"])
             .reset_index(drop=True)
@@ -670,7 +669,7 @@ class TestImageFeatures:
             f"read_parquet('{SF}/documents.parquet')"
         )
         odf = (
-            con.execute(_MULTIMODAL_FEATURES_SQL)
+            con.execute(qd.oracle)
             .df()
             .sort_values(["doc_id", "channel"])
             .reset_index(drop=True)
@@ -730,12 +729,11 @@ class TestAudioDecode:
     def test_decode_matches_closed_form_oracle(self, spark, docs):
         import duckdb
 
-        from pdf_extractor_spark.functions.query_catalog import (
-            _MULTIMODAL_AUDIO_SQL,
-            _multimodal_audio,
-        )
+        from pdf_extractor_spark.functions.query_catalog import CATALOG
+
+        qd = CATALOG["multimodal_audio_decode"]
         sdf = (
-            _multimodal_audio(spark, SF)
+            qd.spark(spark, SF)
             .toPandas()
             .sort_values("doc_id")
             .reset_index(drop=True)
@@ -746,7 +744,7 @@ class TestAudioDecode:
             f"read_parquet('{SF}/documents.parquet')"
         )
         odf = (
-            con.execute(_MULTIMODAL_AUDIO_SQL)
+            con.execute(qd.oracle)
             .df()
             .sort_values("doc_id")
             .reset_index(drop=True)
