@@ -31,12 +31,11 @@ the signals visible and exact.
 from __future__ import annotations
 
 import html as _html
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.html_extract import harvest_directives
+from ..plans.pipeline import map_rows, spread
 
 
 def parse_ai_tokens(content: str) -> tuple[bool, bool]:
@@ -125,38 +124,21 @@ AIOPTOUT_SCHEMA = (
 )
 
 
-def _aioptout_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text, hdr_noai, hdr_tdm in zip(
-            pdf["doc_id"], pdf["text"], pdf["hdr_noai"], pdf["hdr_tdm"]
-        ):
-            payload = wrap_html_aioptout(text, int(doc_id))
-            noai = noimg = tdm = False
-            policy = ""
-            for kind, value in harvest_directives(payload):
-                if kind == "robots":
-                    a, i = parse_ai_tokens(value)
-                    noai, noimg = noai or a, noimg or i
-                elif kind == "tdm-reservation":
-                    tdm = tdm or value.strip() == "1"
-                elif kind == "tdm-policy":
-                    policy = value
-            tdm = tdm or bool(hdr_tdm)
-            rows.append({
-                "doc_id": int(doc_id),
-                "noai": noai or bool(hdr_noai),
-                "noimageai": noimg,
-                "tdm_reserved": tdm,
-                # a policy URL is only meaningful under a reservation
-                "tdm_policy": policy if tdm else "",
-            })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "noai", "noimageai",
-                           "tdm_reserved", "tdm_policy"],
-        )
+def _aioptout_rows(doc_id: int, text: str, hdr_noai: bool,
+                   hdr_tdm: bool) -> list[tuple]:
+    noai = noimg = tdm = False
+    policy = ""
+    for kind, value in harvest_directives(wrap_html_aioptout(text, doc_id)):
+        if kind == "robots":
+            a, i = parse_ai_tokens(value)
+            noai, noimg = noai or a, noimg or i
+        elif kind == "tdm-reservation":
+            tdm = tdm or value.strip() == "1"
+        elif kind == "tdm-policy":
+            policy = value
+    tdm = tdm or hdr_tdm
+    # a policy URL is only meaningful under a reservation
+    return [(doc_id, noai or hdr_noai, noimg, tdm, policy if tdm else "")]
 
 
 def ai_optout_signals(docs: DataFrame,
@@ -166,12 +148,10 @@ def ai_optout_signals(docs: DataFrame,
     Meta leg rides the extraction pass (one Arrow stage); header leg
     is a native narrow map computed BEFORE the spread so the Python
     stage never sees raw headers — only its boolean verdicts."""
-    n = (num_partitions
-         or docs.sparkSession.sparkContext.defaultParallelism)
-    return (
-        synth_aioptout_headers(docs)
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(_aioptout_iter, AIOPTOUT_SCHEMA)
+    return map_rows(
+        spread(synth_aioptout_headers(docs),
+               ["doc_id", "text", "hdr_noai", "hdr_tdm"], num_partitions),
+        _aioptout_rows, AIOPTOUT_SCHEMA,
     )
 
 

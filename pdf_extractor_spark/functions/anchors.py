@@ -28,13 +28,11 @@ the corpus.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.html_extract import harvest_anchors
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 from .linkgraph import _LINK_PRIMES, N_HOSTS
 
 _ABS_HOST_RE = re.compile(r"^https?://([^/]+)/")
@@ -70,30 +68,20 @@ def wrap_html_anchors(text: str, doc_id: int) -> bytes:
 ANCHOR_ROWS_SCHEMA = "doc_id long, dst_host string, anchor_text string"
 
 
-def _anchor_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_html_anchors(text, int(doc_id))
-            for href, atext in harvest_anchors(payload):
-                m = _ABS_HOST_RE.match(href)
-                if m:
-                    rows.append({
-                        "doc_id": int(doc_id),
-                        "dst_host": m.group(1),
-                        "anchor_text": atext,
-                    })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "dst_host", "anchor_text"]
-        )
+def _anchor_rows(doc_id: int, text: str) -> list[tuple]:
+    out = []
+    for href, atext in harvest_anchors(wrap_html_anchors(text, doc_id)):
+        m = _ABS_HOST_RE.match(href)
+        if m:
+            out.append((doc_id, m.group(1), atext))
+    return out
 
 
 def anchor_rows(docs: DataFrame,
                 num_partitions: int | None = None) -> DataFrame:
     """(doc_id, dst_host, anchor_text) via the real parser."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _anchor_iter, ANCHOR_ROWS_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _anchor_rows, ANCHOR_ROWS_SCHEMA)
 
 
 def anchor_text_report(docs: DataFrame,

@@ -28,13 +28,11 @@ the catalog query emits the per-document edge rows directly.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.html_extract import harvest_directives, parse_refresh
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 from .redirects import _DUCK_NEXT_T, next_hop
 
 _TARGET_ID_RE = re.compile(r"/(?:page|canon)/(\d+)$")
@@ -92,44 +90,32 @@ REDIRECT_EDGE_SCHEMA = ("doc_id long, kind string, target_id long,"
                         " delay_s int")
 
 
-def _directive_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_html_directives(text, int(doc_id))
-            for kind, value in harvest_directives(payload):
-                if kind == "canonical":
-                    url, delay = value, -1
-                elif kind == "refresh":
-                    parsed = parse_refresh(value)
-                    if parsed is None or parsed[1] is None:
-                        continue  # self-reload / garbage: no edge
-                    delay, url = parsed
-                else:
-                    continue  # other directive kinds (e.g. robots)
-                m = _TARGET_ID_RE.search(url)
-                if not m:
-                    continue
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "kind": kind,
-                    "target_id": int(m.group(1)),
-                    "delay_s": delay,
-                })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "kind", "target_id", "delay_s"]
-        )
+def _directive_rows(doc_id: int, text: str) -> list[tuple]:
+    out = []
+    for kind, value in harvest_directives(
+        wrap_html_directives(text, doc_id)
+    ):
+        if kind == "canonical":
+            url, delay = value, -1
+        elif kind == "refresh":
+            parsed = parse_refresh(value)
+            if parsed is None or parsed[1] is None:
+                continue  # self-reload / garbage: no edge
+            delay, url = parsed
+        else:
+            continue  # other directive kinds (e.g. robots)
+        m = _TARGET_ID_RE.search(url)
+        if m:
+            out.append((doc_id, kind, int(m.group(1)), delay))
+    return out
 
 
 def html_redirect_edges(docs: DataFrame,
                         num_partitions: int | None = None) -> DataFrame:
     """(doc_id, kind, target_id, delay_s) — canonical/refresh edges
     recovered from page heads by the real parser."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _directive_iter, REDIRECT_EDGE_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _directive_rows, REDIRECT_EDGE_SCHEMA)
 
 
 def duck_canonical_sql(source: str = "documents") -> str:

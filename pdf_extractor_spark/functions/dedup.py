@@ -40,6 +40,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.pipeline import map_rows, spread
+
 N_HASHES = 128
 N_BANDS = 16
 ROWS_PER_BAND = 8
@@ -223,13 +225,8 @@ def minhash_mapinpandas(docs: DataFrame) -> DataFrame:
                 out[c] = [k[b] for k in keys]
             yield pd.DataFrame(out)
 
-    n = docs.sparkSession.sparkContext.defaultParallelism
     schema = "doc_id long, " + ", ".join(f"{c} string" for c in cols)
-    return (
-        docs.select("doc_id", "text")
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(fn, schema)
-    )
+    return spread(docs, ["doc_id", "text"]).mapInPandas(fn, schema)
 
 
 def enriched_mapinpandas(docs: DataFrame) -> DataFrame:
@@ -259,16 +256,11 @@ def enriched_mapinpandas(docs: DataFrame) -> DataFrame:
                 out[c] = [k[b] for k, _sh in enriched]
             yield pd.DataFrame(out)
 
-    n = docs.sparkSession.sparkContext.defaultParallelism
     schema = (
         "doc_id long, sh array<long>, "
         + ", ".join(f"{c} string" for c in cols)
     )
-    return (
-        docs.select("doc_id", "text")
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(fn, schema)
-    )
+    return spread(docs, ["doc_id", "text"]).mapInPandas(fn, schema)
 
 
 def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
@@ -459,13 +451,8 @@ def simhash_mapinpandas(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    # hash-spread before the Arrow stage: a small parquet table arrives
-    # as one split, which would serialize the whole stage onto one task
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select("doc_id", "text")
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(fn, "doc_id long, simhash long")
+    return spread(docs, ["doc_id", "text"]).mapInPandas(
+        fn, "doc_id long, simhash long"
     )
 
 
@@ -1162,33 +1149,21 @@ def span_dedup_report(
     )
     hot_set = frozenset(r["h"] for r in hot.collect())
 
-    def body(batches):
-        import pandas as pd  # noqa: PLC0415 (worker-side import)
+    def rows(doc_id: int, text: str | None) -> list[tuple]:
+        ws = (text or "").split(" ")
+        covered: set[int] = set()
+        n_dup = 0
+        if len(ws) >= k:
+            for s in range(0, len(ws) - k + 1, stride):
+                win = " ".join(ws[s : s + k])
+                if _hl.md5(win.encode()).hexdigest() in hot_set:
+                    covered.update(range(s, s + k))
+                    n_dup += 1
+        kept = [w for i, w in enumerate(ws) if i not in covered]
+        return [(doc_id, len(kept), n_dup, " ".join(kept))]
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_words_kept": [],
-                "n_dup_windows": [], "kept_text": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = (text or "").split(" ")
-                covered: set[int] = set()
-                n_dup = 0
-                if len(ws) >= k:
-                    for s in range(0, len(ws) - k + 1, stride):
-                        win = " ".join(ws[s : s + k])
-                        if _hl.md5(win.encode()).hexdigest() in hot_set:
-                            covered.update(range(s, s + k))
-                            n_dup += 1
-                kept = [w for i, w in enumerate(ws) if i not in covered]
-                out["doc_id"].append(int(doc_id))
-                out["n_words_kept"].append(len(kept))
-                out["n_dup_windows"].append(n_dup)
-                out["kept_text"].append(" ".join(kept))
-            yield pd.DataFrame(out)
-
-    return base.mapInPandas(
-        body,
+    return map_rows(
+        base, rows,
         "doc_id long, n_words_kept long, n_dup_windows long, "
         "kept_text string",
     )

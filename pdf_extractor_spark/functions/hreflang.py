@@ -33,14 +33,12 @@ any shuffle)."""
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.html_extract import harvest_directives
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 LANGS = ("en", "zh", "es", "de", "fr")
 _GROUP = len(LANGS)
@@ -94,40 +92,29 @@ HREFLANG_EDGE_SCHEMA = (
     "src long, hreflang string, target_id long, is_default boolean, "
     "valid boolean"
 )
-_EDGE_COLS = ["src", "hreflang", "target_id", "is_default", "valid"]
 
 
-def _hreflang_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_html_hreflang(text, int(doc_id))
-            for kind, value in harvest_directives(payload):
-                if kind != "hreflang":
-                    continue
-                code, _sp, url = value.partition(" ")
-                m = _TARGET_ID_RE.search(url)
-                if not m:
-                    continue
-                rows.append({
-                    "src": int(doc_id),
-                    "hreflang": code,
-                    "target_id": int(m.group(1)),
-                    "is_default": code == "x-default",
-                    "valid": bool(_VALID_CODE_RE.match(code)),
-                })
-        yield pd.DataFrame(rows, columns=_EDGE_COLS)
+def _hreflang_rows(doc_id: int, text: str) -> list[tuple]:
+    out = []
+    for kind, value in harvest_directives(wrap_html_hreflang(text, doc_id)):
+        if kind != "hreflang":
+            continue
+        code, _sp, url = value.partition(" ")
+        m = _TARGET_ID_RE.search(url)
+        if m:
+            out.append((
+                doc_id, code, int(m.group(1)), code == "x-default",
+                bool(_VALID_CODE_RE.match(code)),
+            ))
+    return out
 
 
 def hreflang_edges(docs: DataFrame,
                    num_partitions: int | None = None) -> DataFrame:
     """(src, hreflang, target_id, is_default, valid) — translation
     declarations recovered from page heads by the real parser."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _hreflang_iter, HREFLANG_EDGE_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _hreflang_rows, HREFLANG_EDGE_SCHEMA)
 
 
 def hreflang_clusters(docs: DataFrame,

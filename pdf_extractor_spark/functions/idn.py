@@ -25,10 +25,9 @@ fixture entry keeps it narrow-map-only.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..plans.pipeline import map_rows, spread
 
 # RFC 3492 §5 parameter values
 _BASE = 36
@@ -127,31 +126,18 @@ def fixture_idn_host(doc_id: int) -> str:
     return IDN_HOSTS[doc_id % len(IDN_HOSTS)]
 
 
-def idn_fold_report(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def idn_fold_report(docs: DataFrame,
+                    num_partitions: int | None = None) -> DataFrame:
     """(doc_id, host_unicode, host_ascii): the ACE fold over the
     deterministic fixture hosts, Arrow-batched."""
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            hosts = [fixture_idn_host(int(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "host_unicode": hosts,
-                    "host_ascii": [host_to_ascii(h) for h in hosts],
-                }
-            )
+    def rows(doc_id: int) -> list[tuple]:
+        host = fixture_idn_host(doc_id)
+        return [(doc_id, host, host_to_ascii(host))]
 
-    from pyspark.sql import functions as F
-
-    return (
-        docs.select("doc_id")
-        .repartition(num_partitions, F.col("doc_id"))
-        .mapInPandas(
-            body,
-            "doc_id long, host_unicode string, host_ascii string",
-        )
+    return map_rows(
+        spread(docs, ["doc_id"], num_partitions), rows,
+        "doc_id long, host_unicode string, host_ascii string",
     )
 
 

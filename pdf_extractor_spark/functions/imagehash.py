@@ -57,14 +57,13 @@ the training-pipeline extension the task brief grades alongside §2.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.png_codec import png_encode, png_decode
-from .multimodal import _partitioned_payloads
+from ..plans.pipeline import map_rows, spread
+from .multimodal import _decode_leg
 
 #: member flip masks (XOR'd into the 60 md5 bits); even bits 2..58
 #: give member 3 Hamming distance 29 from base — far outside every
@@ -137,34 +136,25 @@ def ahash64(pixels: np.ndarray) -> int:
 PHASH_SCHEMA = "doc_id long, phash long"
 
 
-def phash_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (doc_id, payload) → (doc_id, phash) — one
-    real PNG decode + aHash per row, one Python hop per Arrow batch."""
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "phash": [
-                    ahash64(png_decode(bytes(p))) for p in pdf["payload"]
-                ],
-            }
-        )
-
-
-def phash_signatures(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def phash_signatures(docs: DataFrame,
+                     num_partitions: int | None = None) -> DataFrame:
     """documents → (doc_id, phash): payload synthesis after the id
     repartition (layout rule shared with every multimodal leg via
-    ``_partitioned_payloads``), then the Arrow decode+hash stage."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_phash_image
-    ).mapInPandas(phash_pandas, PHASH_SCHEMA)
+    ``_decode_leg``), then the Arrow decode+hash stage — one real PNG
+    decode + aHash per row."""
+    return _decode_leg(
+        docs, fixture_phash_image,
+        lambda d, payload: [(d, ahash64(png_decode(payload)))],
+        PHASH_SCHEMA, num_partitions,
+    )
 
 
 PHASH_BANDS = 4  # 64 bits → 4 bands of 16: Hamming ≤ 3 ⟹ a band matches
 
 
 def phash_near_dup_pairs(
-    docs: DataFrame, max_hamming: int = 3, num_partitions: int = 8
+    docs: DataFrame, max_hamming: int = 3,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """Banded Hamming-ball join over the perceptual hashes — the same
     lossless two-stage shape as SimHash near-dup (recall from the band
@@ -272,7 +262,7 @@ CROSS_FORMAT_SCHEMA = "doc_id long, hamming int, matched boolean"
 
 
 def cross_format_report(
-    docs: DataFrame, num_partitions: int = 8
+    docs: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """(doc_id, hamming, matched) — aHash distance between the PNG
     and JPEG renderings. This is the dedup case exact hashing cannot
@@ -284,26 +274,16 @@ def cross_format_report(
     doc_id partition; only (id, distance) rows flow on."""
     from ..operators.jpeg_codec import jpeg_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "hamming": [], "matched": [],
-            }
-            for doc_id in pdf["doc_id"]:
-                png, jpg = fixture_cross_format(int(doc_id))
-                hp = ahash64(png_decode(png))
-                planes, _m = jpeg_decode(jpg)
-                hj = ahash64(planes[0][:, :, None])
-                d = bin((hp ^ hj) & (2**64 - 1)).count("1")
-                rows["doc_id"].append(int(doc_id))
-                rows["hamming"].append(d)
-                rows["matched"].append(d <= 3)
-            yield pd.DataFrame(rows).astype({"hamming": "int32"})
+    def rows(doc_id: int) -> list[tuple]:
+        png, jpg = fixture_cross_format(doc_id)
+        hp = ahash64(png_decode(png))
+        planes, _m = jpeg_decode(jpg)
+        hj = ahash64(planes[0][:, :, None])
+        d = bin((hp ^ hj) & (2**64 - 1)).count("1")
+        return [(doc_id, d, d <= 3)]
 
-    slim = docs.select("doc_id").repartition(
-        num_partitions, F.col("doc_id")
-    )
-    return slim.mapInPandas(body, CROSS_FORMAT_SCHEMA)
+    return map_rows(spread(docs, ["doc_id"], num_partitions), rows,
+                    CROSS_FORMAT_SCHEMA)
 
 
 def duck_cross_format_sql(source: str = "documents") -> str:

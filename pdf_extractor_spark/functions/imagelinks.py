@@ -19,13 +19,10 @@ page bytes."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.html_extract import harvest_images
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 from .urlresolve import resolve_ref
 
 _N = 100000
@@ -91,43 +88,27 @@ def _srcset_urls(srcset: str) -> list[str]:
     return out
 
 
-def _image_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            doc_id = int(doc_id)
-            payload = wrap_html_images(text, doc_id)
-            page_url = _PAGE_URL_FMT.format(doc_id % 8)
-            for tag, src, srcset, alt in harvest_images(payload):
-                if srcset:
-                    for u in _srcset_urls(srcset):
-                        rows.append({
-                            "doc_id": doc_id,
-                            "kind": "srcset" if tag == "img"
-                                    else "source",
-                            "url": resolve_ref(page_url, u),
-                            "alt": alt,
-                        })
-                if src:
-                    rows.append({
-                        "doc_id": doc_id, "kind": tag,
-                        "url": resolve_ref(page_url, src),
-                        "alt": alt,
-                    })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "kind", "url", "alt"]
-        )
+def _image_rows(doc_id: int, text: str) -> list[tuple]:
+    out = []
+    page_url = _PAGE_URL_FMT.format(doc_id % 8)
+    for tag, src, srcset, alt in harvest_images(
+        wrap_html_images(text, doc_id)
+    ):
+        if srcset:
+            kind = "srcset" if tag == "img" else "source"
+            out.extend((doc_id, kind, resolve_ref(page_url, u), alt)
+                       for u in _srcset_urls(srcset))
+        if src:
+            out.append((doc_id, tag, resolve_ref(page_url, src), alt))
+    return out
 
 
 def image_links(docs: DataFrame,
                 num_partitions: int | None = None) -> DataFrame:
     """(doc_id, kind, url, alt) — image candidates recovered by the
     real parser and resolved per RFC 3986."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _image_iter, IMAGE_ROWS_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _image_rows, IMAGE_ROWS_SCHEMA)
 
 
 def duck_image_links_sql(source: str = "documents") -> str:

@@ -36,10 +36,8 @@ Same closed-form luma oracle as the other JPEG legs.
 from __future__ import annotations
 
 import base64
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.html_extract import harvest_images
@@ -49,7 +47,7 @@ from ..operators.jpeg_codec import (
     jpeg_encode,
     jpeg_encode_progressive,
 )
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 
 def _fixture_jpeg(doc_id: int, j: int) -> tuple[bytes, int, int, bool]:
@@ -116,40 +114,27 @@ INLINE_IMAGES_SCHEMA = (
     "gray boolean, y_sum long"
 )
 
-_COLS = ["doc_id", "alt", "width", "height", "gray", "y_sum"]
 
-
-def _inline_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            page = wrap_html_inline_images(text, int(doc_id))
-            for _tag, src, _srcset, alt in harvest_images(page):
-                if not src.startswith("data:image/"):
-                    continue
-                head, sep, body = src.partition(";base64,")
-                if not sep:
-                    continue
-                try:
-                    payload = base64.b64decode(body, validate=True)
-                    planes, meta = jpeg_decode(payload)
-                except (ValueError, JpegError):
-                    continue  # damaged inline image: skip, not crash
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "alt": alt,
-                    "width": meta["width"],
-                    "height": meta["height"],
-                    "gray": meta["n_components"] == 1,
-                    "y_sum": int(
-                        planes[0].astype(np.int64).sum()
-                    ),
-                })
-        yield pd.DataFrame(rows, columns=_COLS).astype(
-            {"width": "int32", "height": "int32"}
-        )
+def _inline_rows(doc_id: int, text: str) -> list[tuple]:
+    out = []
+    page = wrap_html_inline_images(text, doc_id)
+    for _tag, src, _srcset, alt in harvest_images(page):
+        if not src.startswith("data:image/"):
+            continue
+        head, sep, body = src.partition(";base64,")
+        if not sep:
+            continue
+        try:
+            payload = base64.b64decode(body, validate=True)
+            planes, meta = jpeg_decode(payload)
+        except (ValueError, JpegError):
+            continue  # damaged inline image: skip, not crash
+        out.append((
+            doc_id, alt, meta["width"], meta["height"],
+            meta["n_components"] == 1,
+            int(planes[0].astype(np.int64).sum()),
+        ))
+    return out
 
 
 def inline_images(docs: DataFrame,
@@ -157,9 +142,8 @@ def inline_images(docs: DataFrame,
     """(doc_id, alt, width, height, gray, y_sum) for every
     decodable inline data-URI image. Page bytes stay partition-
     local; only these fixed-shape rows flow on."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _inline_iter, INLINE_IMAGES_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _inline_rows, INLINE_IMAGES_SCHEMA)
 
 
 def duck_inline_images_sql(source: str = "documents") -> str:

@@ -29,13 +29,11 @@ from __future__ import annotations
 import html as _html
 import json
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.html_extract import harvest_license
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 _CC_RE = re.compile(
     r"creativecommons\.org/licenses/([a-z][a-z-]*)/(\d+\.\d+)"
@@ -152,28 +150,15 @@ LICENSE_SCHEMA = (
     "version string, allows_commercial boolean, "
     "allows_derivatives boolean"
 )
-_COLS = ["doc_id", "source", "url", "family", "version",
-         "allows_commercial", "allows_derivatives"]
 
 
-def _license_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_html_license(text, int(doc_id))
-            decls, islands = harvest_license(payload)
-            urls = [(src, u) for src, u in decls]
-            for raw in islands:
-                urls.extend(
-                    ("jsonld", u) for u in ldjson_license_urls(raw)
-                )
-            for src, url in urls:
-                fam, ver, com, der = normalize_license(url)
-                rows.append((int(doc_id), src, url, fam, ver,
-                             com, der))
-        yield pd.DataFrame(rows, columns=_COLS)
+def _license_rows(doc_id: int, text: str) -> list[tuple]:
+    decls, islands = harvest_license(wrap_html_license(text, doc_id))
+    urls = [(src, u) for src, u in decls]
+    for raw in islands:
+        urls.extend(("jsonld", u) for u in ldjson_license_urls(raw))
+    return [(doc_id, src, url, *normalize_license(url))
+            for src, url in urls]
 
 
 def license_signals(docs: DataFrame,
@@ -184,9 +169,8 @@ def license_signals(docs: DataFrame,
     strictest-wins resolution is a trivial downstream aggregate and
     deliberately NOT baked in (conflicts must stay visible to an
     auditor)."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _license_iter, LICENSE_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _license_rows, LICENSE_SCHEMA)
 
 
 def duck_license_sql(source: str = "documents") -> str:

@@ -37,12 +37,10 @@ The catalog query emits per-document verdicts directly — no shuffle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.html_extract import harvest_directives
+from ..plans.pipeline import map_rows, spread
 
 #: fixture meta variants, doc_id % 8 (7 = template-wrapped, inert)
 META_VARIANTS: dict[int, str | None] = {
@@ -109,34 +107,15 @@ META_SCHEMA = (
 )
 
 
-def _meta_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow body: parse the page, OR the meta tokens together, and
-    pass the natively-computed header verdict through unchanged."""
-    for pdf in batches:
-        rows = []
-        for doc_id, text, hdr_ni in zip(
-            pdf["doc_id"], pdf["text"], pdf["hdr_noindex"]
-        ):
-            payload = wrap_html_robots(text, int(doc_id))
-            noindex = nofollow = False
-            for kind, value in harvest_directives(payload):
-                if kind == "robots":
-                    ni, nf = parse_robots_tokens(value)
-                    noindex, nofollow = noindex or ni, nofollow or nf
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "meta_noindex": noindex,
-                    "meta_nofollow": nofollow,
-                    "hdr_noindex": bool(hdr_ni),
-                }
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "meta_noindex", "meta_nofollow", "hdr_noindex",
-            ],
-        )
+def _meta_rows(doc_id: int, text: str, hdr_noindex: bool) -> list[tuple]:
+    """Parse the page, OR the meta tokens together, and pass the
+    natively-computed header verdict through unchanged."""
+    noindex = nofollow = False
+    for kind, value in harvest_directives(wrap_html_robots(text, doc_id)):
+        if kind == "robots":
+            ni, nf = parse_robots_tokens(value)
+            noindex, nofollow = noindex or ni, nofollow or nf
+    return [(doc_id, noindex, nofollow, hdr_noindex)]
 
 
 #: header-channel extraction (native): header VALUE up to CRLF, then
@@ -160,10 +139,9 @@ def meta_robots_verdicts(docs: DataFrame) -> DataFrame:
         .rlike(_HDR_TOKEN_RE)
         .alias("hdr_noindex"),
     )
-    # same layout rule as docwrap._spread, keeping the flag column
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    meta = with_flag.repartition(n, F.col("doc_id")).mapInPandas(
-        _meta_iter, META_SCHEMA
+    meta = map_rows(
+        spread(with_flag, ["doc_id", "text", "hdr_noindex"]),
+        _meta_rows, META_SCHEMA,
     )
     return meta.select(
         "doc_id",

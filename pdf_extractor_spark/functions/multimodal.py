@@ -33,10 +33,7 @@ pipeline.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,6 +44,7 @@ from ..operators.image_sniff import (
 )
 from ..operators.jpeg_markers import build_jpeg_header, jpeg_dimensions
 from ..operators.png_codec import PngError, png_decode, png_encode
+from ..plans.pipeline import map_rows, spread
 
 DECODE_SCHEMA = (
     "doc_id long, width int, height int, channels int, "
@@ -77,117 +75,70 @@ def fixture_image(doc_id: int) -> bytes:
     return png_encode(pixels, row_filters=filters)
 
 
-def attach_binary_payload_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (doc_id) → (doc_id, payload). In production
-    this column IS the crawl's raw image bytes; the fixture builds a
-    real PNG per document (no external data)."""
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "payload": [
-                    fixture_image(int(d)) for d in pdf["doc_id"]
-                ],
-            }
-        )
+PAYLOAD_SCHEMA = "doc_id long, payload binary"
 
 
 def attach_binary_payload(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, payload binary): a real PNG per row."""
-    return docs.select("doc_id").mapInPandas(
-        attach_binary_payload_pandas, "doc_id long, payload binary"
-    )
+    """documents → (doc_id, payload binary): a real PNG per row. In
+    production this column IS the crawl's raw image bytes; the fixture
+    builds a real PNG per document (no external data)."""
+    return map_rows(docs.select("doc_id"),
+                    lambda d: [(d, fixture_image(d))], PAYLOAD_SCHEMA)
 
 
-def _partitioned_payloads(
-    docs: DataFrame, num_partitions: int, synth_fn
-) -> DataFrame:
+def _decode_leg(docs: DataFrame, synth_fn, rows_of, schema: str,
+                num_partitions: int | None) -> DataFrame:
     """THE layout rule for every decode leg, stated once: doc_ids
     hash-repartition BEFORE payload synthesis (``synth_fn``: doc_id →
     bytes), so the exchange carries 8-byte ids and the payload bytes
     are born on the partition that decodes them — media bytes never
     cross an exchange. (Against real stored blobs the same holds via
-    parquet bucketing / AQE split sizing on the scan.)"""
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "payload": [
-                        synth_fn(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    slim = docs.select("doc_id").repartition(
-        num_partitions, F.col("doc_id")
-    )
-    return slim.mapInPandas(body, "doc_id long, payload binary")
+    parquet bucketing / AQE split sizing on the scan.) Then
+    ``rows_of(doc_id, payload)`` decodes, one Python hop per Arrow
+    batch, never per row."""
+    payloads = map_rows(spread(docs, ["doc_id"], num_partitions),
+                        lambda d: [(d, synth_fn(d))], PAYLOAD_SCHEMA)
+    return map_rows(payloads, rows_of, schema)
 
 
-def decode_image_meta_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: Arrow batch of (doc_id, payload) → decoded
-    metadata frame. One Python hop per batch, never per row. The
-    emitted values are MEASURED from the decoded pixel array — the
-    oracle predicts them from the generation parameters, so the two
-    meet only if the codec is correct."""
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "width": [], "height": [], "channels": [],
-            "n_pixels": [], "pixel_sum": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            px = png_decode(bytes(payload))
-            h, w, c = px.shape
-            rows["doc_id"].append(int(doc_id))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["channels"].append(c)
-            rows["n_pixels"].append(w * h)
-            rows["pixel_sum"].append(int(px.astype(np.int64).sum()))
-        yield pd.DataFrame(rows)
+def _decode_image_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """The emitted values are MEASURED from the decoded pixel array —
+    the oracle predicts them from the generation parameters, so the
+    two meet only if the codec is correct."""
+    px = png_decode(payload)
+    h, w, c = px.shape
+    return [(doc_id, w, h, c, w * h, int(px.astype(np.int64).sum()))]
 
 
-def decode_image_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def decode_image_meta(docs: DataFrame,
+                      num_partitions: int | None = None) -> DataFrame:
     """Distributed decode: hash-repartition by doc_id (same layout rule
     as the extraction pipeline — a small parquet arrives as one split
     otherwise), then the Arrow-batched decode stage.
 
     Layout rule (repartition before synthesis, payloads never cross
-    an exchange) lives in :func:`_partitioned_payloads`."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_image
-    ).mapInPandas(decode_image_meta_pandas, DECODE_SCHEMA)
+    an exchange) lives in :func:`_decode_leg`."""
+    return _decode_leg(docs, fixture_image, _decode_image_rows,
+                       DECODE_SCHEMA, num_partitions)
 
 
 def decode_error_report(
-    payloads: DataFrame, num_partitions: int = 8
+    payloads: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Crash-proof decode over UNTRUSTED payloads: per-doc ok flag +
     error text instead of a task failure (the crawl regime — a corrupt
     image must never kill the batch)."""
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], "error": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    png_decode(bytes(payload))
-                    out["ok"].append(True)
-                    out["error"].append(None)
-                except PngError as exc:
-                    out["ok"].append(False)
-                    out["error"].append(str(exc))
-                out["doc_id"].append(int(doc_id))
-            yield pd.DataFrame(out)
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        try:
+            png_decode(payload)
+        except PngError as exc:
+            return [(doc_id, False, str(exc))]
+        return [(doc_id, True, None)]
 
-    return payloads.repartition(num_partitions, F.col("doc_id")).mapInPandas(
-        body, "doc_id long, ok boolean, error string"
+    return map_rows(
+        spread(payloads, ["doc_id", "payload"], num_partitions), rows,
+        "doc_id long, ok boolean, error string",
     )
 
 
@@ -224,40 +175,29 @@ FEATURES_SCHEMA = (
 )
 
 
-def image_features_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (doc_id, payload) → one row per channel with
-    per-channel sum/min/max MEASURED from the decoded pixel array.
-    The oracle predicts all three closed-form from the generation
-    parameters (exact integers — no float in the compared output), so
-    a channel mixup, plane transposition, or filter defect that
-    happens to preserve the global pixel_sum still breaks the hash."""
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "channel": [], "ch_sum": [], "ch_min": [],
-            "ch_max": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            px = png_decode(bytes(payload)).astype(np.int64)
-            for c in range(px.shape[2]):
-                plane = px[:, :, c]
-                rows["doc_id"].append(int(doc_id))
-                rows["channel"].append(c)
-                rows["ch_sum"].append(int(plane.sum()))
-                rows["ch_min"].append(int(plane.min()))
-                rows["ch_max"].append(int(plane.max()))
-        yield pd.DataFrame(rows)
+def _image_features_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """One row per channel with per-channel sum/min/max MEASURED from
+    the decoded pixel array. The oracle predicts all three
+    closed-form from the generation parameters (exact integers — no
+    float in the compared output), so a channel mixup, plane
+    transposition, or filter defect that happens to preserve the
+    global pixel_sum still breaks the hash."""
+    px = png_decode(payload).astype(np.int64)
+    return [
+        (doc_id, c, int(px[:, :, c].sum()), int(px[:, :, c].min()),
+         int(px[:, :, c].max()))
+        for c in range(px.shape[2])
+    ]
 
 
-def image_features(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def image_features(docs: DataFrame,
+                   num_partitions: int | None = None) -> DataFrame:
     """Distributed per-channel feature extraction (the feature-extract
     verb of the multimodal battery, next to decode / resize /
     frame-sample). Layout rule shared via
-    :func:`_partitioned_payloads`."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_image
-    ).mapInPandas(image_features_pandas, FEATURES_SCHEMA)
+    :func:`_decode_leg`."""
+    return _decode_leg(docs, fixture_image, _image_features_rows,
+                       FEATURES_SCHEMA, num_partitions)
 
 
 # ---------------------------------------------------------------- audio
@@ -293,34 +233,22 @@ def fixture_audio(doc_id: int) -> bytes:
     return wav_encode(samples, sample_rate=rate)
 
 
-def audio_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def audio_decode_meta(
+    docs: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """Distributed WAV decode (the audio leg of the multimodal
     battery): rate/frames/channels plus the MEASURED sample sum from
     the decoded int16 array; the oracle predicts the sum closed-form.
-    Layout rule shared via :func:`_partitioned_payloads`."""
+    Layout rule shared via :func:`_decode_leg`."""
     from ..operators.wav_codec import wav_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "sample_rate": [], "n_samples": [],
-                "channels": [], "sample_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples, rate = wav_decode(bytes(payload))
-                n, c = samples.shape
-                rows["doc_id"].append(int(doc_id))
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                rows["channels"].append(c)
-                rows["sample_sum"].append(
-                    int(samples.astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows)
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        samples, rate = wav_decode(payload)
+        n, c = samples.shape
+        return [(doc_id, rate, n, c, int(samples.astype(np.int64).sum()))]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_audio
-    ).mapInPandas(body, AUDIO_DECODE_SCHEMA)
+    return _decode_leg(docs, fixture_audio, rows, AUDIO_DECODE_SCHEMA,
+                       num_partitions)
 
 
 # ================================================= JPEG dimension sniff
@@ -346,34 +274,20 @@ JPEG_DIMS_SCHEMA = (
 )
 
 
-def jpeg_dims_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "width": [], "height": [],
-            "components": [], "progressive": [], "readable": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, c, prog, ok = jpeg_dimensions(bytes(payload))
-            rows["doc_id"].append(int(doc_id))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["components"].append(c)
-            rows["progressive"].append(prog)
-            rows["readable"].append(ok)
-        yield pd.DataFrame(rows)
+def _jpeg_dims_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    return [(doc_id, *jpeg_dimensions(payload))]
 
 
-def jpeg_dims(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def jpeg_dims(
+    docs: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """(doc_id, width, height, components, progressive, readable) —
     the size-filter pass an image pipeline runs BEFORE paying for
     fetch+full-decode: marker-length walk only (ITU-T T.81 §B), no
     entropy decode; an Exif payload embedding a thumbnail's own SOF
     cannot fool it (a byte-pattern scan would report 16x16)."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg
-    ).mapInPandas(jpeg_dims_pandas, JPEG_DIMS_SCHEMA)
+    return _decode_leg(docs, fixture_jpeg, _jpeg_dims_rows,
+                       JPEG_DIMS_SCHEMA, num_partitions)
 
 
 def duck_jpeg_dims_sql(source: str = "documents") -> str:
@@ -429,30 +343,19 @@ def fixture_mixed_image(doc_id: int) -> bytes:
 SNIFF_SCHEMA = "doc_id long, format string, width int, height int"
 
 
-def image_sniff_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "doc_id": [], "format": [], "width": [], "height": [],
-        }
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            fmt, w, h = sniff_image(bytes(payload))
-            rows["doc_id"].append(int(doc_id))
-            rows["format"].append(fmt)
-            rows["width"].append(w)
-            rows["height"].append(h)
-        yield pd.DataFrame(rows)
+def _image_sniff_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    return [(doc_id, *sniff_image(payload))]
 
 
-def image_sniff(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def image_sniff(
+    docs: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """(doc_id, format, width, height) — magic-number routing + per-
     format header dims over a MIXED payload column: the first pass an
     image pipeline runs to size-filter and format-route a crawl
     before any decode. Unknown bytes come back ('unknown', -1, -1)."""
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_mixed_image
-    ).mapInPandas(image_sniff_pandas, SNIFF_SCHEMA)
+    return _decode_leg(docs, fixture_mixed_image, _image_sniff_rows,
+                       SNIFF_SCHEMA, num_partitions)
 
 
 def duck_image_sniff_sql(source: str = "documents") -> str:
@@ -583,14 +486,14 @@ VIDEO_STATS_SCHEMA = (
 
 
 def video_frame_stats(
-    docs: DataFrame, every: int = 2, num_partitions: int = 8
+    docs: DataFrame, every: int = 2, num_partitions: int | None = None
 ) -> DataFrame:
     """Distributed video decode + frame sampling (the video leg of
     the multimodal battery): parse the container, keep every
     ``every``-th frame — the standard decimation ahead of per-frame
     feature extraction — and report the MEASURED luma sum over the
     sampled frames from the decoded planes. Same layout rule as every
-    decode leg (`_partitioned_payloads`): ids shuffle, media bytes
+    decode leg (`_decode_leg`): ids shuffle, media bytes
     are born on the partition that decodes them and never cross an
     exchange. At 100 TB frame sampling is the step that divides all
     downstream per-frame cost by ``every`` — it belongs INSIDE the
@@ -602,42 +505,22 @@ def video_frame_stats(
     from ..operators.avi_codec import avi_decode_luma_frames
     from ..operators.y4m_codec import y4m_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "fps_num": [],
-                "fps_den": [], "colorspace": [], "n_frames": [],
-                "n_sampled": [], "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                if payload[:4] == b"RIFF":
-                    frames, meta = avi_decode_luma_frames(payload)
-                    cs = "mjpg"
-                else:
-                    frames, meta = y4m_decode(payload)
-                    cs = meta["colorspace"]
-                sampled = frames[::every]
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["fps_num"].append(meta["fps_num"])
-                rows["fps_den"].append(meta["fps_den"])
-                rows["colorspace"].append(cs)
-                rows["n_frames"].append(len(frames))
-                rows["n_sampled"].append(len(sampled))
-                rows["luma_sum"].append(
-                    int(
-                        sum(
-                            fr.astype(np.int64).sum() for fr in sampled
-                        )
-                    )
-                )
-            yield pd.DataFrame(rows)
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        if payload[:4] == b"RIFF":
+            frames, meta = avi_decode_luma_frames(payload)
+            cs = "mjpg"
+        else:
+            frames, meta = y4m_decode(payload)
+            cs = meta["colorspace"]
+        sampled = frames[::every]
+        return [(
+            doc_id, meta["width"], meta["height"], meta["fps_num"],
+            meta["fps_den"], cs, len(frames), len(sampled),
+            int(sum(fr.astype(np.int64).sum() for fr in sampled)),
+        )]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_video
-    ).mapInPandas(body, VIDEO_STATS_SCHEMA)
+    return _decode_leg(docs, fixture_video, rows, VIDEO_STATS_SCHEMA,
+                       num_partitions)
 
 
 def duck_video_stats_sql(source: str = "documents", every: int = 2) -> str:
@@ -770,7 +653,9 @@ EXIF_SCHEMA = (
 )
 
 
-def exif_harvest(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def exif_harvest(
+    docs: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """Per-image Exif harvest: orientation (the field a perceptual-
     hash stage must apply BEFORE hashing, or rotated duplicates split
     into distinct hashes), capture timestamp, camera make, and the
@@ -785,45 +670,26 @@ def exif_harvest(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
         parse_exif_tiff,
     )
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "has_exif": [], "ok": [],
-                "byte_order": [], "orientation": [], "make": [],
-                "taken_at": [], "x_res_num": [], "x_res_den": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                tiff = exif_from_jpeg(bytes(payload))
-                vals: dict = {}
-                ok = True
-                if tiff is not None:
-                    try:
-                        vals = parse_exif_tiff(tiff)
-                    except ExifError:
-                        ok = False
-                        vals = {}
-                # sentinels, not NULLs: the cross-engine value compare
-                # (and the driver's value hash) treats NaN != NaN
-                rows["doc_id"].append(int(doc_id))
-                rows["has_exif"].append(tiff is not None)
-                rows["ok"].append(ok)
-                rows["byte_order"].append(vals.get("byte_order") or "")
-                rows["orientation"].append(vals.get("orientation") or -1)
-                rows["make"].append(vals.get("make") or "")
-                rows["taken_at"].append(vals.get("datetime") or "")
-                rows["x_res_num"].append(vals.get("x_res_num") or -1)
-                rows["x_res_den"].append(vals.get("x_res_den") or -1)
-            yield pd.DataFrame(rows).astype(
-                {
-                    "orientation": "int32",
-                    "x_res_num": "int64",
-                    "x_res_den": "int64",
-                }
-            )
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        tiff = exif_from_jpeg(payload)
+        vals: dict = {}
+        ok = True
+        if tiff is not None:
+            try:
+                vals = parse_exif_tiff(tiff)
+            except ExifError:
+                ok = False
+        # sentinels, not NULLs: the cross-engine value compare (and
+        # the driver's value hash) treats NaN != NaN
+        return [(
+            doc_id, tiff is not None, ok, vals.get("byte_order") or "",
+            vals.get("orientation") or -1, vals.get("make") or "",
+            vals.get("datetime") or "", vals.get("x_res_num") or -1,
+            vals.get("x_res_den") or -1,
+        )]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_exif_jpeg
-    ).mapInPandas(body, EXIF_SCHEMA)
+    return _decode_leg(docs, fixture_exif_jpeg, rows, EXIF_SCHEMA,
+                       num_partitions)
 
 
 def duck_exif_harvest_sql(source: str = "documents") -> str:
@@ -894,38 +760,25 @@ GIF_DECODE_SCHEMA = (
 )
 
 
-def gif_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def gif_decode_meta(
+    docs: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """Distributed GIF decode: full LZW + interlace + animation
     frames, measured luma sums vs the closed-form oracle. Same
     layout rule as every decode leg (media bytes never cross an
     exchange)."""
     from ..operators.gif_codec import gif_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "n_frames": [], "interlaced": [], "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames, meta = gif_decode(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["n_frames"].append(meta["n_frames"])
-                rows["interlaced"].append(meta["interlaced"])
-                rows["luma_sum"].append(
-                    int(
-                        sum(
-                            fr.astype(np.int64).sum() for fr in frames
-                        )
-                    )
-                )
-            yield pd.DataFrame(rows)
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        frames, meta = gif_decode(payload)
+        return [(
+            doc_id, meta["width"], meta["height"], meta["n_frames"],
+            meta["interlaced"],
+            int(sum(fr.astype(np.int64).sum() for fr in frames)),
+        )]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_gif
-    ).mapInPandas(body, GIF_DECODE_SCHEMA)
+    return _decode_leg(docs, fixture_gif, rows, GIF_DECODE_SCHEMA,
+                       num_partitions)
 
 
 def duck_gif_decode_sql(source: str = "documents") -> str:
@@ -992,7 +845,9 @@ TIFF_DECODE_SCHEMA = (
 )
 
 
-def tiff_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def tiff_decode_meta(
+    docs: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """Distributed TIFF decode: strip reassembly (short last strip,
     out-of-line offset arrays, both byte orders, PackBits), measured
     luma sums vs a closed-form oracle. Strips are TIFF's parallel-
@@ -1001,29 +856,16 @@ def tiff_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
     the layout here exercises."""
     from ..operators.tiff_codec import tiff_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "byte_order": [], "compression": [], "n_strips": [],
-                "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img, meta = tiff_decode(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["byte_order"].append(meta["byte_order"])
-                rows["compression"].append(meta["compression"])
-                rows["n_strips"].append(meta["n_strips"])
-                rows["luma_sum"].append(
-                    int(img.astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows)
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        img, meta = tiff_decode(payload)
+        return [(
+            doc_id, meta["width"], meta["height"], meta["byte_order"],
+            meta["compression"], meta["n_strips"],
+            int(img.astype(np.int64).sum()),
+        )]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_tiff
-    ).mapInPandas(body, TIFF_DECODE_SCHEMA)
+    return _decode_leg(docs, fixture_tiff, rows, TIFF_DECODE_SCHEMA,
+                       num_partitions)
 
 
 def duck_tiff_decode_sql(source: str = "documents") -> str:
@@ -1083,33 +925,23 @@ BMP_DECODE_SCHEMA = (
 )
 
 
-def bmp_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def bmp_decode_meta(
+    docs: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """Distributed BMP decode: bottom-up vs top-down row order,
     4-byte row strides on odd widths, palette and true-color depths;
     measured luma sums vs a closed-form oracle."""
     from ..operators.bmp_codec import bmp_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [], "bits": [],
-                "top_down": [], "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img, meta = bmp_decode(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["bits"].append(meta["bits"])
-                rows["top_down"].append(meta["top_down"])
-                rows["luma_sum"].append(
-                    int(img.astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows)
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        img, meta = bmp_decode(payload)
+        return [(
+            doc_id, meta["width"], meta["height"], meta["bits"],
+            meta["top_down"], int(img.astype(np.int64).sum()),
+        )]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_bmp
-    ).mapInPandas(body, BMP_DECODE_SCHEMA)
+    return _decode_leg(docs, fixture_bmp, rows, BMP_DECODE_SCHEMA,
+                       num_partitions)
 
 
 def duck_bmp_decode_sql(source: str = "documents") -> str:
@@ -1201,43 +1033,27 @@ JPEG_DECODE_SCHEMA = (
 )
 
 
-def jpeg_decode_meta(docs: DataFrame, num_partitions: int = 8) -> DataFrame:
+def jpeg_decode_meta(
+    docs: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """Distributed baseline-JPEG decode (5th full image codec):
     Huffman entropy decode + dequant + IDCT per payload, plane sums
     measured from the decoded arrays. Same layout rule as every
     decode leg (media bytes never cross an exchange)."""
     from ..operators.jpeg_codec import jpeg_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "width": [], "height": [],
-                "n_components": [], "subsampled": [],
-                "progressive": [],
-                "y_sum": [], "cb_sum": [], "cr_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                planes, meta = jpeg_decode(bytes(payload))
-                sums = [
-                    int(p.astype(np.int64).sum()) for p in planes
-                ]
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["n_components"].append(meta["n_components"])
-                rows["subsampled"].append(meta["subsampled"])
-                rows["progressive"].append(meta["progressive"])
-                rows["y_sum"].append(sums[0])
-                rows["cb_sum"].append(sums[1] if len(sums) == 3 else 0)
-                rows["cr_sum"].append(sums[2] if len(sums) == 3 else 0)
-            yield pd.DataFrame(rows).astype({
-                "width": "int32", "height": "int32",
-                "n_components": "int32",
-            })
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        planes, meta = jpeg_decode(payload)
+        sums = [int(p.astype(np.int64).sum()) for p in planes]
+        if len(sums) != 3:
+            sums = [sums[0], 0, 0]
+        return [(
+            doc_id, meta["width"], meta["height"], meta["n_components"],
+            meta["subsampled"], meta["progressive"], *sums,
+        )]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg_full
-    ).mapInPandas(body, JPEG_DECODE_SCHEMA)
+    return _decode_leg(docs, fixture_jpeg_full, rows, JPEG_DECODE_SCHEMA,
+                       num_partitions)
 
 
 def duck_jpeg_decode_sql(source: str = "documents") -> str:
@@ -1314,7 +1130,7 @@ THUMB_SCHEMA = (
 
 
 def jpeg_thumbnail_meta(
-    docs: DataFrame, num_partitions: int = 8
+    docs: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Thumbnail WRITE path: decode the fixture JPEG, 2:1
     area-average the luma plane (edge-replicated for odd dims, the
@@ -1331,40 +1147,24 @@ def jpeg_thumbnail_meta(
     exchange, output rows are fixed-shape."""
     from ..operators.jpeg_codec import jpeg_decode, jpeg_encode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "thumb_width": [],
-                "thumb_height": [], "y_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                planes, _meta = jpeg_decode(bytes(payload))
-                y = planes[0].astype(np.float64)
-                if y.shape[0] % 2:
-                    y = np.vstack([y, y[-1:]])
-                if y.shape[1] % 2:
-                    y = np.hstack([y, y[:, -1:]])
-                small = np.floor(
-                    (y[0::2, 0::2] + y[0::2, 1::2]
-                     + y[1::2, 0::2] + y[1::2, 1::2]) / 4.0
-                    + (0.5 + 1e-9)
-                ).astype(np.uint8)
-                tplanes, tmeta = jpeg_decode(
-                    jpeg_encode([small], quality=60)
-                )
-                rows["doc_id"].append(int(doc_id))
-                rows["thumb_width"].append(tmeta["width"])
-                rows["thumb_height"].append(tmeta["height"])
-                rows["y_sum"].append(
-                    int(tplanes[0].astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows).astype({
-                "thumb_width": "int32", "thumb_height": "int32",
-            })
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        planes, _meta = jpeg_decode(payload)
+        y = planes[0].astype(np.float64)
+        if y.shape[0] % 2:
+            y = np.vstack([y, y[-1:]])
+        if y.shape[1] % 2:
+            y = np.hstack([y, y[:, -1:]])
+        small = np.floor(
+            (y[0::2, 0::2] + y[0::2, 1::2]
+             + y[1::2, 0::2] + y[1::2, 1::2]) / 4.0
+            + (0.5 + 1e-9)
+        ).astype(np.uint8)
+        tplanes, tmeta = jpeg_decode(jpeg_encode([small], quality=60))
+        return [(doc_id, tmeta["width"], tmeta["height"],
+                 int(tplanes[0].astype(np.int64).sum()))]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg_full
-    ).mapInPandas(body, THUMB_SCHEMA)
+    return _decode_leg(docs, fixture_jpeg_full, rows, THUMB_SCHEMA,
+                       num_partitions)
 
 
 def duck_jpeg_thumbnail_sql(source: str = "documents") -> str:
@@ -1452,7 +1252,7 @@ EXIF_STRIP_SCHEMA = (
 
 
 def exif_strip_report(
-    docs: DataFrame, num_partitions: int = 8
+    docs: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Privacy scrub as a gated surface: read the metadata that IS
     there (Exif harvest incl. the GPS sub-IFD flag), strip every
@@ -1482,35 +1282,21 @@ def exif_strip_report(
             i += 2 + seglen
         return None
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "had_exif": [], "had_gps": [],
-                "bytes_removed": [], "y_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                tiff = _exif_of(payload)
-                had_gps = False
-                if tiff is not None:
-                    try:
-                        had_gps = parse_exif_tiff(tiff)["has_gps"]
-                    except ExifError:
-                        pass
-                stripped, removed = jpeg_strip_metadata(payload)
-                planes, _meta = jpeg_decode(stripped)
-                rows["doc_id"].append(int(doc_id))
-                rows["had_exif"].append(tiff is not None)
-                rows["had_gps"].append(bool(had_gps))
-                rows["bytes_removed"].append(removed)
-                rows["y_sum"].append(
-                    int(planes[0].astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows).astype({"bytes_removed": "int32"})
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        tiff = _exif_of(payload)
+        had_gps = False
+        if tiff is not None:
+            try:
+                had_gps = parse_exif_tiff(tiff)["has_gps"]
+            except ExifError:
+                pass
+        stripped, removed = jpeg_strip_metadata(payload)
+        planes, _meta = jpeg_decode(stripped)
+        return [(doc_id, tiff is not None, bool(had_gps), removed,
+                 int(planes[0].astype(np.int64).sum()))]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg_private
-    ).mapInPandas(body, EXIF_STRIP_SCHEMA)
+    return _decode_leg(docs, fixture_jpeg_private, rows, EXIF_STRIP_SCHEMA,
+                       num_partitions)
 
 
 def duck_exif_strip_sql(source: str = "documents") -> str:
@@ -1576,7 +1362,7 @@ G711_SCHEMA = (
 
 
 def g711_decode_meta(
-    docs: DataFrame, num_partitions: int = 8
+    docs: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Distributed G.711 decode: the WAV container routes tag 6/7
     8-bit streams through the from-scratch companding expanders;
@@ -1585,37 +1371,17 @@ def g711_decode_meta(
     integer encode+decode arithmetic in SQL)."""
     from ..operators.wav_codec import wav_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "law": [], "n_samples": [],
-                "pcm_sum": [], "max_err": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                doc_id = int(doc_id)
-                pcm, _rate = wav_decode(bytes(payload))
-                n = pcm.shape[0]
-                i = np.arange(n, dtype=np.int64)
-                orig = (doc_id * 131 + i * 277) % 60001 - 30000
-                err = np.abs(
-                    pcm[:, 0].astype(np.int64) - orig
-                ).max()
-                rows["doc_id"].append(doc_id)
-                rows["law"].append(
-                    "ulaw" if doc_id % 2 == 0 else "alaw"
-                )
-                rows["n_samples"].append(n)
-                rows["pcm_sum"].append(
-                    int(pcm[:, 0].astype(np.int64).sum())
-                )
-                rows["max_err"].append(int(err))
-            yield pd.DataFrame(rows).astype({
-                "n_samples": "int32", "max_err": "int32",
-            })
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        pcm, _rate = wav_decode(payload)
+        n = pcm.shape[0]
+        i = np.arange(n, dtype=np.int64)
+        orig = (doc_id * 131 + i * 277) % 60001 - 30000
+        err = np.abs(pcm[:, 0].astype(np.int64) - orig).max()
+        return [(doc_id, "ulaw" if doc_id % 2 == 0 else "alaw", n,
+                 int(pcm[:, 0].astype(np.int64).sum()), int(err))]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_g711_wav
-    ).mapInPandas(body, G711_SCHEMA)
+    return _decode_leg(docs, fixture_g711_wav, rows, G711_SCHEMA,
+                       num_partitions)
 
 
 def duck_g711_sql(source: str = "documents") -> str:
@@ -1721,7 +1487,7 @@ JPEG_SALVAGE_SCHEMA = (
 
 
 def jpeg_salvage_meta(
-    docs: DataFrame, num_partitions: int = 8
+    docs: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Browser-style decode of crawl-truncated progressive JPEGs:
     reconstruct from the complete scans, report how many landed.
@@ -1730,25 +1496,13 @@ def jpeg_salvage_meta(
     mis-ran the refinement bit machine, lands on different pixels."""
     from ..operators.jpeg_codec import jpeg_decode_salvage
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "scans_done": [], "salvaged": [],
-                "y_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                planes, meta = jpeg_decode_salvage(bytes(payload))
-                rows["doc_id"].append(int(doc_id))
-                rows["scans_done"].append(meta["n_scans"])
-                rows["salvaged"].append(meta["salvaged"])
-                rows["y_sum"].append(
-                    int(planes[0].astype(np.int64).sum())
-                )
-            yield pd.DataFrame(rows).astype({"scans_done": "int32"})
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        planes, meta = jpeg_decode_salvage(payload)
+        return [(doc_id, meta["n_scans"], meta["salvaged"],
+                 int(planes[0].astype(np.int64).sum()))]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_jpeg_truncated
-    ).mapInPandas(body, JPEG_SALVAGE_SCHEMA)
+    return _decode_leg(docs, fixture_jpeg_truncated, rows, JPEG_SALVAGE_SCHEMA,
+                       num_partitions)
 
 
 def duck_jpeg_salvage_sql(source: str = "documents") -> str:
@@ -1824,7 +1578,7 @@ ICO_SCHEMA = (
 
 
 def ico_decode_meta(
-    docs: DataFrame, num_partitions: int = 8
+    docs: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Distributed favicon decode: ICONDIR walk, PNG entries
     through the PNG codec, legacy DIB entries through the
@@ -1832,32 +1586,16 @@ def ico_decode_meta(
     transparency counts vs the closed-form oracle."""
     from ..operators.ico_codec import ico_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "idx": [], "kind": [], "width": [],
-                "height": [], "luma_sum": [], "transparent_px": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for idx, ent in enumerate(ico_decode(bytes(payload))):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["idx"].append(idx)
-                    rows["kind"].append(ent["kind"])
-                    rows["width"].append(ent["width"])
-                    rows["height"].append(ent["height"])
-                    rows["luma_sum"].append(
-                        int(ent["luma"].astype(np.int64).sum())
-                    )
-                    rows["transparent_px"].append(
-                        ent["transparent_px"]
-                    )
-            yield pd.DataFrame(rows).astype({
-                "idx": "int32", "width": "int32", "height": "int32",
-            })
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        return [
+            (doc_id, idx, ent["kind"], ent["width"], ent["height"],
+             int(ent["luma"].astype(np.int64).sum()),
+             ent["transparent_px"])
+            for idx, ent in enumerate(ico_decode(payload))
+        ]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_ico
-    ).mapInPandas(body, ICO_SCHEMA)
+    return _decode_leg(docs, fixture_ico, rows, ICO_SCHEMA,
+                       num_partitions)
 
 
 def duck_ico_sql(source: str = "documents") -> str:
@@ -1923,7 +1661,7 @@ APNG_SCHEMA = (
 
 
 def apng_decode_meta(
-    docs: DataFrame, num_partitions: int = 8
+    docs: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Distributed APNG decode: acTL/fcTL/fdAT walk, per-frame zlib
     streams, sub-region compositing — every composited frame's luma
@@ -1932,30 +1670,16 @@ def apng_decode_meta(
     unit test."""
     from ..operators.apng_codec import apng_decode
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame": [], "n_frames": [],
-                "num_plays": [], "luma_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames, meta = apng_decode(bytes(payload))
-                for k, fr in enumerate(frames):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame"].append(k)
-                    rows["n_frames"].append(meta["n_frames"])
-                    rows["num_plays"].append(meta["num_plays"])
-                    rows["luma_sum"].append(
-                        int(fr[:, :, 0].astype(np.int64).sum())
-                    )
-            yield pd.DataFrame(rows).astype({
-                "frame": "int32", "n_frames": "int32",
-                "num_plays": "int32",
-            })
+    def rows(doc_id: int, payload: bytes) -> list[tuple]:
+        frames, meta = apng_decode(payload)
+        return [
+            (doc_id, k, meta["n_frames"], meta["num_plays"],
+             int(fr[:, :, 0].astype(np.int64).sum()))
+            for k, fr in enumerate(frames)
+        ]
 
-    return _partitioned_payloads(
-        docs, num_partitions, fixture_apng
-    ).mapInPandas(body, APNG_SCHEMA)
+    return _decode_leg(docs, fixture_apng, rows, APNG_SCHEMA,
+                       num_partitions)
 
 
 def duck_apng_sql(source: str = "documents") -> str:

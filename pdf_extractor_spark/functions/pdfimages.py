@@ -37,10 +37,7 @@ decoded but not reported, keeping the oracle to one quant constant.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.jpeg_codec import (
@@ -51,7 +48,7 @@ from ..operators.jpeg_codec import (
 )
 from ..operators.pdf_generator import PageSpec, build_pdf
 from ..operators.pdf_tokenizer import parse_pdf
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 
 def _fixture_image(doc_id: int, j: int) -> tuple:
@@ -110,46 +107,27 @@ PDF_IMAGES_SCHEMA = (
     "gray boolean, n_draws int, y_sum long"
 )
 
-_COLS = [
-    "doc_id", "name", "width", "height", "gray", "n_draws", "y_sum",
-]
 
-
-def _images_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_images(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for (
-                _page, name, _dw, _dh, cs, _bpc, filt, n_draws, data
-            ) in doc.images:
-                if filt != "DCTDecode":
-                    continue
-                try:
-                    planes, meta = jpeg_decode(bytes(data))
-                except JpegError:
-                    # crawl-damaged raster: skip the image, never
-                    # the task (text already survived upstream)
-                    continue
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "name": name,
-                    # decoded-frame dims, not the dict's claim: the
-                    # oracle match proves the entropy decode ran
-                    "width": meta["width"],
-                    "height": meta["height"],
-                    "gray": cs == "DeviceGray",
-                    "n_draws": n_draws,
-                    "y_sum": int(
-                        planes[0].astype(np.int64).sum()
-                    ),
-                })
-        yield pd.DataFrame(rows, columns=_COLS).astype(
-            {"width": "int32", "height": "int32", "n_draws": "int32"}
-        )
+def _images_rows(doc_id: int, text: str) -> list[tuple]:
+    out = []
+    doc = parse_pdf(wrap_pdf_images(text, doc_id))
+    for _page, name, _dw, _dh, cs, _bpc, filt, n_draws, data in doc.images:
+        if filt != "DCTDecode":
+            continue
+        try:
+            planes, meta = jpeg_decode(bytes(data))
+        except JpegError:
+            # crawl-damaged raster: skip the image, never the task
+            # (text already survived upstream)
+            continue
+        # decoded-frame dims, not the dict's claim: the oracle match
+        # proves the entropy decode ran
+        out.append((
+            doc_id, name, meta["width"], meta["height"],
+            cs == "DeviceGray", n_draws,
+            int(planes[0].astype(np.int64).sum()),
+        ))
+    return out
 
 
 def pdf_images(docs: DataFrame,
@@ -159,9 +137,8 @@ def pdf_images(docs: DataFrame,
     measured from the DECODED pixels. Same layout rule as the
     extraction pipeline: documents hash-spread before the Arrow
     stage, media bytes never cross an exchange."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _images_iter, PDF_IMAGES_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _images_rows, PDF_IMAGES_SCHEMA)
 
 
 def duck_pdf_images_sql(source: str = "documents") -> str:

@@ -23,14 +23,12 @@ when a consumer aggregates (the id is extracted before any exchange).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.pdf_generator import PageSpec, build_pdf
 from ..operators.pdf_tokenizer import parse_pdf
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 _TARGET_ID_RE = re.compile(r"/page/(\d+)$")
 
@@ -66,33 +64,21 @@ def wrap_pdf_links(text: str, doc_id: int) -> bytes:
 PDF_LINKS_SCHEMA = "doc_id long, target_id long"
 
 
-def _links_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_links(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for page in doc.pages:
-                for url in page.links:
-                    m = _TARGET_ID_RE.search(url)
-                    if not m:
-                        continue
-                    rows.append(
-                        {"doc_id": int(doc_id),
-                         "target_id": int(m.group(1))}
-                    )
-        yield pd.DataFrame(rows, columns=["doc_id", "target_id"])
+def _links_rows(doc_id: int, text: str) -> list[tuple]:
+    doc = parse_pdf(wrap_pdf_links(text, doc_id))
+    return [
+        (doc_id, int(m.group(1)))
+        for page in doc.pages for url in page.links
+        if (m := _TARGET_ID_RE.search(url))
+    ]
 
 
 def pdf_links(docs: DataFrame,
               num_partitions: int | None = None) -> DataFrame:
     """(doc_id, target_id) — URI-annotation edges recovered from PDF
     pages by the real tokenizer."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _links_iter, PDF_LINKS_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _links_rows, PDF_LINKS_SCHEMA)
 
 
 def duck_pdf_links_sql(source: str = "documents") -> str:

@@ -28,14 +28,11 @@ metadata bytes.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.pdf_generator import PageSpec, build_pdf
 from ..operators.pdf_tokenizer import parse_pdf
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 
 def wrap_pdf_meta(text: str, doc_id: int) -> bytes:
@@ -77,36 +74,15 @@ PDF_META_SCHEMA = (
     "n_outline long, max_depth long, has_cycle boolean"
 )
 
-_COLS = [
-    "doc_id", "title", "author", "producer",
-    "n_outline", "max_depth", "has_cycle",
-]
-
-
-def _meta_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_meta(text, int(doc_id))
-            doc = parse_pdf(payload)
-            depths = [d for d, _t in doc.outline]
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "title": doc.info.get("Title", ""),
-                    "author": doc.info.get("Author", ""),
-                    "producer": doc.info.get("Producer", ""),
-                    "n_outline": len(doc.outline),
-                    "max_depth": max(depths) if depths else -1,
-                    "has_cycle": any(
-                        "sibling ring" in e["message"]
-                        for e in doc.errors
-                    ),
-                }
-            )
-        yield pd.DataFrame(rows, columns=_COLS)
+def _meta_rows(doc_id: int, text: str) -> list[tuple]:
+    doc = parse_pdf(wrap_pdf_meta(text, doc_id))
+    depths = [d for d, _t in doc.outline]
+    return [(
+        doc_id, doc.info.get("Title", ""), doc.info.get("Author", ""),
+        doc.info.get("Producer", ""), len(doc.outline),
+        max(depths) if depths else -1,
+        any("sibling ring" in e["message"] for e in doc.errors),
+    )]
 
 
 def pdf_metadata(docs: DataFrame,
@@ -114,9 +90,8 @@ def pdf_metadata(docs: DataFrame,
     """(doc_id, title, author, producer, n_outline, max_depth,
     has_cycle) — /Info + outline metadata recovered from PDF
     documents by the real tokenizer."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _meta_iter, PDF_META_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _meta_rows, PDF_META_SCHEMA)
 
 
 def duck_pdf_meta_sql(source: str = "documents") -> str:
@@ -181,25 +156,13 @@ SECTION_DOC_SCHEMA = (
 )
 
 
-def _sections_iter(
-    batches: "Iterator[pd.DataFrame]",
-) -> "Iterator[pd.DataFrame]":
+def _sections_rows(doc_id: int, text: str) -> list[tuple]:
     from ..operators.document import extract_document
 
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_sections(text, int(doc_id))
-            rec = extract_document(payload)
-            doc = parse_pdf(payload)
-            rows.append({
-                "doc_id": int(doc_id),
-                "extracted_text": rec["extracted_text"],
-                "titles": [t for _d, t in doc.outline],
-            })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "extracted_text", "titles"]
-        )
+    payload = wrap_pdf_sections(text, doc_id)
+    rec = extract_document(payload)
+    doc = parse_pdf(payload)
+    return [(doc_id, rec["extracted_text"], [t for _d, t in doc.outline])]
 
 
 def section_chunks(docs: DataFrame,
@@ -216,9 +179,8 @@ def section_chunks(docs: DataFrame,
     exchange after the doc-id spread at all."""
     from pyspark.sql import functions as F
 
-    base = _spread(docs, num_partitions).mapInPandas(
-        _sections_iter, SECTION_DOC_SCHEMA
-    )
+    base = map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _sections_rows, SECTION_DOC_SCHEMA)
     ex = base.select(
         "doc_id", "extracted_text", "titles",
         F.posexplode("titles").alias("section_idx", "title"),
@@ -295,23 +257,9 @@ def wrap_pdf_form(text: str, doc_id: int) -> bytes:
 PDF_FORM_SCHEMA = "doc_id long, field_name string, field_value string"
 
 
-def _form_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_form(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for name, value in doc.form_fields:
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "field_name": name,
-                    "field_value": value,
-                })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "field_name", "field_value"]
-        )
+def _form_rows(doc_id: int, text: str) -> list[tuple]:
+    doc = parse_pdf(wrap_pdf_form(text, doc_id))
+    return [(doc_id, name, value) for name, value in doc.form_fields]
 
 
 def pdf_form_fields(docs: DataFrame,
@@ -321,9 +269,8 @@ def pdf_form_fields(docs: DataFrame,
     (ISO 32000 §12.7) — invisible to text extraction, which is why a
     corpus pipeline harvests it as its own pass over the same
     resolved objects."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _form_iter, PDF_FORM_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _form_rows, PDF_FORM_SCHEMA)
 
 
 def duck_pdf_form_sql(source: str = "documents") -> str:
@@ -376,23 +323,10 @@ def wrap_pdf_attachments(text: str, doc_id: int) -> bytes:
 PDF_ATTACH_SCHEMA = "doc_id long, filename string, content string"
 
 
-def _attach_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_attachments(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for fname, content in doc.attachments:
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "filename": fname,
-                    "content": content.decode("utf-8", "replace"),
-                })
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "filename", "content"]
-        )
+def _attach_rows(doc_id: int, text: str) -> list[tuple]:
+    doc = parse_pdf(wrap_pdf_attachments(text, doc_id))
+    return [(doc_id, fname, content.decode("utf-8", "replace"))
+            for fname, content in doc.attachments]
 
 
 def pdf_attachments(docs: DataFrame,
@@ -401,9 +335,8 @@ def pdf_attachments(docs: DataFrame,
     the /EmbeddedFiles name tree by the real tokenizer.  Attachments
     are how e-invoice XML and source data travel inside PDFs —
     payload text extraction never sees."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _attach_iter, PDF_ATTACH_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _attach_rows, PDF_ATTACH_SCHEMA)
 
 
 def duck_pdf_attach_sql(source: str = "documents") -> str:
@@ -471,32 +404,16 @@ PDF_FULL_META_SCHEMA = (
     "doc_id long, title string, n_outline long, has_cycle boolean, "
     "n_form_fields long, n_attachments long, n_links long"
 )
-_FULL_COLS = [
-    "doc_id", "title", "n_outline", "has_cycle",
-    "n_form_fields", "n_attachments", "n_links",
-]
 
 
-def _full_meta_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_everything(text, int(doc_id))
-            doc = parse_pdf(payload)  # ONE parse, every surface
-            rows.append({
-                "doc_id": int(doc_id),
-                "title": doc.info.get("Title", ""),
-                "n_outline": len(doc.outline),
-                "has_cycle": any(
-                    "sibling ring" in e["message"] for e in doc.errors
-                ),
-                "n_form_fields": len(doc.form_fields),
-                "n_attachments": len(doc.attachments),
-                "n_links": sum(len(p.links) for p in doc.pages),
-            })
-        yield pd.DataFrame(rows, columns=_FULL_COLS)
+def _full_meta_rows(doc_id: int, text: str) -> list[tuple]:
+    doc = parse_pdf(wrap_pdf_everything(text, doc_id))  # ONE parse
+    return [(
+        doc_id, doc.info.get("Title", ""), len(doc.outline),
+        any("sibling ring" in e["message"] for e in doc.errors),
+        len(doc.form_fields), len(doc.attachments),
+        sum(len(p.links) for p in doc.pages),
+    )]
 
 
 def pdf_full_metadata(docs: DataFrame,
@@ -506,9 +423,8 @@ def pdf_full_metadata(docs: DataFrame,
     extraction pass, zero extra scans"), demonstrated as a single
     Arrow stage whose output row carries /Info, outline, AcroForm,
     attachment and link-annotation results simultaneously."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _full_meta_iter, PDF_FULL_META_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _full_meta_rows, PDF_FULL_META_SCHEMA)
 
 
 def duck_pdf_full_meta_sql(source: str = "documents") -> str:
@@ -561,32 +477,16 @@ PDF_XMP_SCHEMA = (
     "doc_id long, xmp_title string, creator string, "
     "create_date string, has_xmp boolean, agrees_info boolean"
 )
-_XMP_COLS = [
-    "doc_id", "xmp_title", "creator", "create_date",
-    "has_xmp", "agrees_info",
-]
 
 
-def _xmp_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_xmp(text, int(doc_id))
-            doc = parse_pdf(payload)
-            rows.append({
-                "doc_id": int(doc_id),
-                "xmp_title": doc.xmp.get("title", ""),
-                "creator": doc.xmp.get("creator", ""),
-                "create_date": doc.xmp.get("create_date", ""),
-                "has_xmp": bool(doc.xmp),
-                "agrees_info": (
-                    doc.xmp.get("title") == doc.info.get("Title")
-                    if doc.xmp else False
-                ),
-            })
-        yield pd.DataFrame(rows, columns=_XMP_COLS)
+def _xmp_rows(doc_id: int, text: str) -> list[tuple]:
+    doc = parse_pdf(wrap_pdf_xmp(text, doc_id))
+    x = doc.xmp
+    return [(
+        doc_id, x.get("title", ""), x.get("creator", ""),
+        x.get("create_date", ""), bool(x),
+        x.get("title") == doc.info.get("Title") if x else False,
+    )]
 
 
 def pdf_xmp_metadata(docs: DataFrame,
@@ -594,9 +494,8 @@ def pdf_xmp_metadata(docs: DataFrame,
     """(doc_id, xmp_title, creator, create_date, has_xmp,
     agrees_info) — the modern metadata channel beside legacy /Info,
     with the stale-Info disagreement surfaced as an audit flag."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _xmp_iter, PDF_XMP_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _xmp_rows, PDF_XMP_SCHEMA)
 
 
 def duck_pdf_xmp_sql(source: str = "documents") -> str:
@@ -660,26 +559,9 @@ PDF_ANNOT_SCHEMA = (
 )
 
 
-def _annot_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_pdf_annots(text, int(doc_id))
-            doc = parse_pdf(payload)
-            for page, subtype, contents, author in doc.annotations:
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "page": page,
-                    "subtype": subtype,
-                    "contents": contents,
-                    "author": author,
-                })
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "page", "subtype", "contents", "author"],
-        )
+def _annot_rows(doc_id: int, text: str) -> list[tuple]:
+    doc = parse_pdf(wrap_pdf_annots(text, doc_id))
+    return [(doc_id, *a) for a in doc.annotations]
 
 
 def pdf_annotations(docs: DataFrame,
@@ -690,9 +572,8 @@ def pdf_annotations(docs: DataFrame,
     invisible to text extraction — and carry reviewer names and
     remarks a corpus pipeline either harvests deliberately or scrubs
     as PII; either way it must SEE them first."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _annot_iter, PDF_ANNOT_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _annot_rows, PDF_ANNOT_SCHEMA)
 
 
 def duck_pdf_annot_sql(source: str = "documents") -> str:

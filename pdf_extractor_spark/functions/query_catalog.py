@@ -24,11 +24,14 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.window import Window
 
 from ..operators import encoding, markers, ocrfix
+from ..plans.pipeline import fan_out
 from ..sources import cdx, docwrap, feeds, icetable, sitemaps, warc
 from ..streaming import sessions
 from . import (
@@ -51,7 +54,16 @@ class QueryDef:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """One test table, read under the schema in its parquet footer
+    instead of the schema-inference Spark job ``spark.read.parquet``
+    launches without one (the tables are written by pyarrow, so the
+    footer holds no Spark schema: the Arrow schema is converted, and
+    ``prefer_timestamp_ntz`` gives the ``TimestampNTZType`` that Spark
+    infers for pyarrow's zone-less timestamps)."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = from_arrow_schema(pq.read_schema(path),
+                               prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _on(fn: Callable[[DataFrame], DataFrame], table: str = "documents"):
@@ -1478,11 +1490,7 @@ def _j6_consensus_pick(spark, sf_dir):
     # O(len^2) Levenshtein work of the whole corpus lands on 1-2 tasks
     # (measured 23 s -> ~2 s at sf0.1 on local[32])
     docs = _t(spark, sf_dir, "documents")
-    v = _consensus_variants(
-        docs.repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
-    )
+    v = _consensus_variants(docs.repartition(fan_out(docs, None), "doc_id"))
     # distances on a 2000-char prefix probe: bounds the O(len^2)
     # Levenshtein cost AND keeps every int64 product below overflow
     # (10^4 * 3 * 2000^3 < 2^63); an identity at the test corpus's

@@ -35,13 +35,11 @@ value) and nothing shuffles until a consumer aggregates.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.html_extract import harvest_structured
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 # JSON-LD keys a training pipeline actually budgets on; author
 # flattens one level (dict -> author.name, bare string -> author)
@@ -170,33 +168,23 @@ def ldjson_rows(raw: str) -> list[tuple[str, str]]:
 STRUCTURED_SCHEMA = "doc_id long, src string, key string, value string"
 
 
-def _structured_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_html_structured(text, int(doc_id))
-            metas, islands, micro = harvest_structured(payload)
-            for key, value in metas:
-                rows.append((int(doc_id), "meta", key, value))
-            for raw in islands:
-                for key, value in ldjson_rows(raw):
-                    rows.append((int(doc_id), "jsonld", key, value))
-            for key, value in micro:
-                rows.append((int(doc_id), "microdata", key, value))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "src", "key", "value"]
-        )
+def _structured_rows(doc_id: int, text: str) -> list[tuple]:
+    metas, islands, micro = harvest_structured(
+        wrap_html_structured(text, doc_id)
+    )
+    rows = [(doc_id, "meta", key, value) for key, value in metas]
+    for raw in islands:
+        rows.extend((doc_id, "jsonld", k, v) for k, v in ldjson_rows(raw))
+    rows.extend((doc_id, "microdata", key, value) for key, value in micro)
+    return rows
 
 
 def structured_data(docs: DataFrame,
                     num_partitions: int | None = None) -> DataFrame:
     """(doc_id, src, key, value) — Open Graph + JSON-LD rows
     recovered from page heads by the real parser."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _structured_iter, STRUCTURED_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _structured_rows, STRUCTURED_SCHEMA)
 
 
 def duck_structured_sql(source: str = "documents") -> str:

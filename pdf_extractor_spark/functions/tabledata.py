@@ -27,13 +27,11 @@ rows are narrow and fixed-width per cell; nothing shuffles here.
 from __future__ import annotations
 
 import html as _html
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.html_tables import extract_tables
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 
 def _dims(doc_id: int) -> tuple[int, int]:
@@ -86,33 +84,17 @@ TABLE_SCHEMA = ("doc_id long, table_idx int, row_idx int, col_idx int,"
                 " is_header boolean, cell string")
 
 
-def _tables_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = wrap_html_table(text, int(doc_id))
-            for t, r, c, hdr, cell in extract_tables(payload):
-                rows.append({
-                    "doc_id": int(doc_id), "table_idx": t,
-                    "row_idx": r, "col_idx": c,
-                    "is_header": hdr, "cell": cell,
-                })
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "table_idx", "row_idx", "col_idx",
-                     "is_header", "cell"],
-        )
+def _tables_rows(doc_id: int, text: str) -> list[tuple]:
+    return [(doc_id, *cell)
+            for cell in extract_tables(wrap_html_table(text, doc_id))]
 
 
 def html_tables(docs: DataFrame,
                 num_partitions: int | None = None) -> DataFrame:
     """(doc_id, table_idx, row_idx, col_idx, is_header, cell) — table
     grids recovered from pages by the real streaming parse."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _tables_iter, TABLE_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _tables_rows, TABLE_SCHEMA)
 
 
 def duck_tables_sql(source: str = "documents") -> str:

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.pipeline import spread
 from .robots import DUCK_HOST, SPARK_HOST
 
 MIN_DOCS = 5        # below this a diversity verdict is noise
@@ -83,10 +84,8 @@ def host_template_report(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    sigs = (
-        variant.repartition(n, F.col("doc_id"))
-        .mapInPandas(fn, "host string, simhash long")
+    sigs = spread(variant, ["doc_id", "host", "text"]).mapInPandas(
+        fn, "host string, simhash long"
     )
     return (
         sigs.groupBy("host")

@@ -21,13 +21,11 @@ fixed-grammar URL whose target id is extracted before any exchange.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..operators.html_extract import harvest_anchors, harvest_directives
-from ..sources.docwrap import _spread
+from ..plans.pipeline import map_rows, spread
 
 # RFC 3986 appendix B
 _URI_RE = re.compile(
@@ -168,37 +166,29 @@ REL_EDGE_SCHEMA = "doc_id long, kind string, url string"
 _PAGE_URL_FMT = "https://host{}.example/dir/sub/index.html"
 
 
-def _rel_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    kinds = ["dotted", "plain", "rooted", "scheme_rel", "absolute"]
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            doc_id = int(doc_id)
-            payload = wrap_html_rel_links(text, doc_id)
-            page_url = _PAGE_URL_FMT.format(doc_id % 9)
-            base = page_url
-            for k, v in harvest_directives(payload):
-                if k == "base":
-                    # the harvester already kept only the FIRST base
-                    base = resolve_ref(page_url, v)
-                    break
-            idx = 0
-            for href, _text in harvest_anchors(payload):
-                if href.startswith("#"):
-                    # same-document reference: never a fetch edge
-                    continue
-                resolved = resolve_ref(base, href).split("#", 1)[0]
-                if not resolved:
-                    continue
-                rows.append({
-                    "doc_id": doc_id,
-                    "kind": kinds[idx] if idx < len(kinds) else "extra",
-                    "url": resolved,
-                })
-                idx += 1
-        yield pd.DataFrame(rows, columns=["doc_id", "kind", "url"])
+_REL_KINDS = ["dotted", "plain", "rooted", "scheme_rel", "absolute"]
+
+
+def _rel_rows(doc_id: int, text: str) -> list[tuple]:
+    payload = wrap_html_rel_links(text, doc_id)
+    page_url = _PAGE_URL_FMT.format(doc_id % 9)
+    base = page_url
+    for k, v in harvest_directives(payload):
+        if k == "base":
+            # the harvester already kept only the FIRST base
+            base = resolve_ref(page_url, v)
+            break
+    rows = []
+    for href, _text in harvest_anchors(payload):
+        if href.startswith("#"):
+            # same-document reference: never a fetch edge
+            continue
+        resolved = resolve_ref(base, href).split("#", 1)[0]
+        if resolved:
+            idx = len(rows)
+            kind = _REL_KINDS[idx] if idx < len(_REL_KINDS) else "extra"
+            rows.append((doc_id, kind, resolved))
+    return rows
 
 
 def resolved_links(docs: DataFrame,
@@ -206,9 +196,8 @@ def resolved_links(docs: DataFrame,
     """(doc_id, kind, url) — every harvested anchor resolved per RFC
     3986 against the page's harvested <base href> (or its own URL);
     fragment-only references never become edges."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _rel_iter, REL_EDGE_SCHEMA
-    )
+    return map_rows(spread(docs, ["doc_id", "text"], num_partitions),
+                    _rel_rows, REL_EDGE_SCHEMA)
 
 
 def duck_resolved_links_sql(source: str = "documents") -> str:

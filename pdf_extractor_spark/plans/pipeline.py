@@ -270,6 +270,58 @@ def fan_out(df: DataFrame, num_partitions: int | None) -> int:
     return num_partitions or df.sparkSession.sparkContext.defaultParallelism
 
 
+def spread(
+    df: DataFrame, cols: list[str], num_partitions: int | None = None
+) -> DataFrame:
+    """``df`` pruned to ``cols`` and hash-repartitioned on the first
+    (the doc id) into :func:`fan_out` tasks. A small parquet table
+    arrives as ONE input split, which would serialize a whole Python
+    stage onto one task; the projection keeps the exchange and the
+    Arrow hand-off to the columns the stage reads (``mapInPandas``
+    ships every input column — Spark cannot see into the function)."""
+    return df.select(*cols).repartition(
+        fan_out(df, num_partitions), F.col(cols[0])
+    )
+
+
+def _map_batches(df: DataFrame, schema: str, outputs) -> DataFrame:
+    """One ``mapInPandas`` stage: ``outputs(rows)`` turns one Arrow
+    batch's input rows (tuples of Python objects, in ``df``'s column
+    order) into its output rows — tuples in ``schema`` order, or dicts
+    keyed by column name. One Python call per batch, never per row."""
+    names = T.StructType.fromDDL(schema).fieldNames()
+
+    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = zip(*(pdf[c].tolist() for c in pdf.columns))
+            yield pd.DataFrame(list(outputs(rows)), columns=names)
+
+    return df.mapInPandas(body, schema)
+
+
+def map_rows(df: DataFrame, rows_of, schema: str) -> DataFrame:
+    """Row-function stage: ``rows_of(*row)`` gets one input row's
+    values and returns that row's output rows — none, one or many."""
+    return _map_batches(
+        df, schema, lambda rows: (o for r in rows for o in rows_of(*r))
+    )
+
+
+def map_groups(df: DataFrame, size: int, rows_of, schema: str) -> DataFrame:
+    """Container stage: within each Arrow batch the rows group by
+    ``doc_id // size`` (``doc_id`` is the first column), and
+    ``rows_of(gid, rows)`` builds and reads one container per group
+    (input row tuples in batch order)."""
+
+    def outputs(rows):
+        groups: dict[int, list[tuple]] = {}
+        for r in rows:
+            groups.setdefault(r[0] // size, []).append(r)
+        return (o for gid, g in groups.items() for o in rows_of(gid, g))
+
+    return _map_batches(df, schema, outputs)
+
+
 def extract_pages(
     pages: DataFrame,
     num_partitions: int | None = None,

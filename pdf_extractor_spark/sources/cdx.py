@@ -47,11 +47,11 @@ from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..plans.pipeline import map_groups, spread
 
 CDX_EPOCH = datetime(2024, 1, 1)
 DOCS_PER_FILE = 32
@@ -225,35 +225,17 @@ CDX_SCHEMA = ("doc_id long, cap_idx int, surt_key string, ts14 string,"
               " is_revisit boolean")
 
 
-def _cdx_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        groups: dict[int, list[int]] = {}
-        for doc_id in pdf["doc_id"]:
-            groups.setdefault(
-                int(doc_id) // DOCS_PER_FILE, []
-            ).append(int(doc_id))
-        rows: list[dict] = []
-        for ids in groups.values():
-            for rec in parse_cdxj(build_cdxj(ids)):
-                m = _URL_ID_RE.search(rec["surt_key"])
-                if not m:
-                    continue
-                rows.append({
-                    "doc_id": int(m.group(1)),
-                    "cap_idx": rec["cap_idx"],
-                    "surt_key": rec["surt_key"],
-                    "ts14": rec["ts14"],
-                    "status": rec["status"],
-                    "mime": rec["mime"],
-                    "digest_x": int(rec["digest"][1:]),
-                    "length": rec["length"],
-                    "is_revisit": rec["is_revisit"],
-                })
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "cap_idx", "surt_key", "ts14", "status",
-                     "mime", "digest_x", "length", "is_revisit"],
-        )
+def _cdx_rows(gid: int, rows: list[tuple]) -> list[tuple]:
+    out = []
+    for rec in parse_cdxj(build_cdxj([d for d, in rows])):
+        m = _URL_ID_RE.search(rec["surt_key"])
+        if m:
+            out.append((
+                int(m.group(1)), rec["cap_idx"], rec["surt_key"],
+                rec["ts14"], rec["status"], rec["mime"],
+                int(rec["digest"][1:]), rec["length"], rec["is_revisit"],
+            ))
+    return out
 
 
 def cdx_roundtrip(docs: DataFrame,
@@ -262,13 +244,8 @@ def cdx_roundtrip(docs: DataFrame,
     SURT key, ordered capture index and revisit verdict.  One Arrow
     stage after a doc_id-only scan (mapInPandas ships every input
     column, so the projection happens before the stage)."""
-    n = (num_partitions
-         or docs.sparkSession.sparkContext.defaultParallelism)
-    return (
-        docs.select("doc_id")
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(_cdx_iter, CDX_SCHEMA)
-    )
+    return map_groups(spread(docs, ["doc_id"], num_partitions),
+                      DOCS_PER_FILE, _cdx_rows, CDX_SCHEMA)
 
 
 def cdx_latest(docs: DataFrame,

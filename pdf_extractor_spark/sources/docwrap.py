@@ -13,16 +13,14 @@ documents``.
 from __future__ import annotations
 
 import html as _html
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG
 from ..operators.document import extract_document
 from ..operators.pdf_generator import PageSpec, build_pdf, text_advance
-from ..plans.pipeline import _FAIL_SEVERITIES, fan_out
+from ..plans.pipeline import _FAIL_SEVERITIES, map_rows, spread
 
 ROUNDTRIP_SCHEMA = "doc_id long, extracted_text string"
 
@@ -186,44 +184,17 @@ def wrap_pdf_layout(text: str, doc_id: int) -> bytes:
                      ocg_layers=ocg_layers, encrypt=encrypt)
 
 
-def _rows_iter(rows_of, columns: list[str]):
-    """``mapInPandas`` body: ``rows_of(doc_id, text)`` returns one
-    document's output tuples (none, one, or one per error) → one frame
-    of ``columns`` per batch."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                row
-                for d, t in zip(pdf["doc_id"], pdf["text"])
-                for row in rows_of(int(d), t)
-            ]
-            yield pd.DataFrame(rows, columns=columns)
-
-    return fn
-
-
 def _extracted_text(payload: bytes) -> str:
     return extract_document(payload, DEFAULT_CONFIG)["extracted_text"]
-
-
-def _spread(docs: DataFrame, num_partitions: int | None) -> DataFrame:
-    """Hash-repartition by doc id before the Arrow stage — a small
-    parquet table arrives as ONE input split, which would serialize the
-    whole extraction onto one task. Same fan-out rule as the production
-    pipeline's url-hash repartition (plans/pipeline.py)."""
-    return docs.select("doc_id", "text").repartition(
-        fan_out(docs, num_partitions), F.col("doc_id")
-    )
 
 
 def _roundtrip(docs: DataFrame, num_partitions: int | None,
                text_of) -> DataFrame:
     """``text_of(doc_id, text)`` per document → (doc_id,
     extracted_text)."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _rows_iter(lambda d, t: [(d, text_of(d, t))],
-                   ["doc_id", "extracted_text"]),
-        ROUNDTRIP_SCHEMA,
+    return map_rows(
+        spread(docs, ["doc_id", "text"], num_partitions),
+        lambda d, t: [(d, text_of(d, t))], ROUNDTRIP_SCHEMA,
     )
 
 
@@ -270,8 +241,8 @@ def error_rollup(docs: DataFrame, num_partitions: int | None = None) -> DataFram
     the rest wrap cleanly (→ no errors) — so the DuckDB oracle can
     predict every row from doc_id arithmetic while the counts flow
     through the real kernel + explode + hash-aggregate path."""
-    recs = _spread(docs, num_partitions).mapInPandas(
-        _rows_iter(_error_rows, ["doc_id", "error_type", "severity"]),
+    recs = map_rows(
+        spread(docs, ["doc_id", "text"], num_partitions), _error_rows,
         "doc_id long, error_type string, severity string",
     )
     return (
@@ -309,10 +280,9 @@ def full_extract_stats(docs: DataFrame, num_partitions: int | None = None) -> Da
     """Per-branch rollup of the FULL extraction record (quality score,
     coverage status, inventory, error counts) — the surfaces beyond
     ``extracted_text`` that the roundtrip queries don't reach."""
-    recs = _spread(docs, num_partitions).mapInPandas(
-        _rows_iter(_full_record_rows,
-                   [f.split()[0] for f in FULL_RECORD_SCHEMA.split(", ")]),
-        FULL_RECORD_SCHEMA,
+    recs = map_rows(
+        spread(docs, ["doc_id", "text"], num_partitions),
+        _full_record_rows, FULL_RECORD_SCHEMA,
     )
     return (
         recs.groupBy("branch", "grade", "status")

@@ -10,7 +10,7 @@ content recovery, link/date field extraction; the recovered item HTML
 goes through ``operators.document.extract_document`` like any other
 capture.
 
-Spark stage: one Arrow ``mapInPandas`` pass (the docwrap pattern) —
+Spark stage: one Arrow pass (``plans.pipeline.map_groups``) —
 documents synthesize into multi-item feeds (RSS for even doc_ids,
 Atom for odd; CDATA vs escaped alternating by ``doc_id % 3``), parse
 back, extract; doc_id and timestamp are recovered FROM the feed
@@ -22,15 +22,14 @@ from __future__ import annotations
 
 import html as _html
 import re
-from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG
 from ..operators.document import extract_document
-from .docwrap import _spread, wrap_html
+from ..plans.pipeline import map_groups, spread
+from .docwrap import wrap_html
 
 FEED_EPOCH = datetime(2024, 1, 1)
 _URL_RE = re.compile(r"/doc/(\d+)$")
@@ -228,20 +227,9 @@ FEED_ROUNDTRIP_SCHEMA = (
 )
 
 
-def _feed_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        groups: dict[int, list[tuple[int, str]]] = {}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            groups.setdefault(
-                int(doc_id) // _ITEMS_PER_FEED, []
-            ).append((int(doc_id), text))
-        rows: list[dict] = []
-        for gid, pages in groups.items():
-            build = build_rss if gid % 2 == 0 else build_atom
-            rows.extend(extract_items(build(pages)))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "ts_offset", "extracted_text"]
-        )
+def _feed_rows(gid: int, pages: list) -> list[dict]:
+    build = build_rss if gid % 2 == 0 else build_atom
+    return extract_items(build(pages))
 
 
 def feed_roundtrip(docs: DataFrame,
@@ -249,6 +237,7 @@ def feed_roundtrip(docs: DataFrame,
     """documents → multi-item RSS/Atom feeds (CDATA and escaped
     content variants) → parse → extract.  One Arrow stage after the
     doc-id spread; per-row output independent of Arrow batching."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _feed_iter, FEED_ROUNDTRIP_SCHEMA
+    return map_groups(
+        spread(docs, ["doc_id", "text"], num_partitions),
+        _ITEMS_PER_FEED, _feed_rows, FEED_ROUNDTRIP_SCHEMA,
     )

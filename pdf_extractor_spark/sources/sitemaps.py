@@ -22,7 +22,7 @@ Protocol details exercised for real, not assumed:
   is a protocol violation and is skipped loudly (counted, not
   silently followed), capping traversal depth at the spec's 2.
 
-Spark stage: one Arrow ``mapInPandas`` pass (the docwrap pattern) —
+Spark stage: one Arrow pass (``plans.pipeline.map_groups``) —
 each group of 32 doc_ids synthesizes into one sitemapindex + 4 child
 urlsets, the reader walks index → children → url entries, and every
 output field is recovered FROM the XML; nothing rides along from the
@@ -45,11 +45,11 @@ from __future__ import annotations
 
 import html as _html
 import re
-from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from ..plans.pipeline import map_groups, spread
 
 from .feeds import tag_field
 
@@ -226,39 +226,22 @@ SITEMAP_SCHEMA = ("doc_id long, lastmod_offset long, priority_x10 int,"
                   " changefreq string, url string, is_new boolean")
 
 
-def _sitemap_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        groups: dict[int, list[int]] = {}
-        for doc_id in pdf["doc_id"]:
-            groups.setdefault(
-                int(doc_id) // DOCS_PER_INDEX, []
-            ).append(int(doc_id))
-        rows: list[dict] = []
-        for index_id, ids in groups.items():
-            index_xml, children = build_index(index_id, ids)
-            entries, violations = parse_index(index_xml, children)
-            if violations:  # fixture indexes are well-formed
-                raise ValueError(f"sitemap index {index_id}: "
-                                 f"{violations} bad child refs")
-            for ent in entries:
-                m = _URL_ID_RE.search(ent["url"])
-                if not m:
-                    continue
-                rows.append({
-                    "doc_id": int(m.group(1)),
-                    "lastmod_offset": ent["lastmod_offset"],
-                    "priority_x10": ent["priority_x10"],
-                    "changefreq": ent["changefreq"],
-                    "url": ent["url"],
-                    "is_new": ent["lastmod_offset"] > NEW_CUTOFF,
-                })
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "lastmod_offset", "priority_x10",
-                     "changefreq", "url", "is_new"],
-        )
+def _sitemap_rows(index_id: int, rows: list[tuple]) -> list[tuple]:
+    index_xml, children = build_index(index_id, [d for d, in rows])
+    entries, violations = parse_index(index_xml, children)
+    if violations:  # fixture indexes are well-formed
+        raise ValueError(f"sitemap index {index_id}: "
+                         f"{violations} bad child refs")
+    out = []
+    for ent in entries:
+        m = _URL_ID_RE.search(ent["url"])
+        if m:
+            off = ent["lastmod_offset"]
+            out.append((
+                int(m.group(1)), off, ent["priority_x10"],
+                ent["changefreq"], ent["url"], off > NEW_CUTOFF,
+            ))
+    return out
 
 
 def sitemap_roundtrip(docs: DataFrame,
@@ -266,18 +249,10 @@ def sitemap_roundtrip(docs: DataFrame,
     """documents → sitemapindex + child urlsets → two-level parse →
     per-URL rows with the incremental-crawl verdict.  One Arrow stage
     after the doc-id spread; every output field recovered from XML.
-    Only ``doc_id`` is selected before the Arrow stage so the parquet
-    scan prunes to one column (mapInPandas ships every input column —
-    Spark cannot see into the Python function); the doc-id
-    hash-repartition is the same spread rule as the other sources
-    (docwrap._spread selects text too, which sitemaps never read)."""
-    n = (num_partitions
-         or docs.sparkSession.sparkContext.defaultParallelism)
-    return (
-        docs.select("doc_id")
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(_sitemap_iter, SITEMAP_SCHEMA)
-    )
+    Only ``doc_id`` is spread, so the parquet scan prunes to one
+    column."""
+    return map_groups(spread(docs, ["doc_id"], num_partitions),
+                      DOCS_PER_INDEX, _sitemap_rows, SITEMAP_SCHEMA)
 
 
 def duck_sitemap_sql(source: str = "documents") -> str:

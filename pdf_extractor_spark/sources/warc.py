@@ -31,17 +31,16 @@ from __future__ import annotations
 
 import gzip
 import re
-from collections.abc import Iterator
 from datetime import datetime, timedelta
 from hashlib import md5
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG
 from ..operators.document import extract_document
 from ..operators.transport import header_end, parse_headers, parse_warc
-from .docwrap import _spread, wrap_html
+from ..plans.pipeline import map_groups, spread
+from .docwrap import wrap_html
 
 WARC_EPOCH = datetime(2024, 1, 1)
 _CRLF = b"\r\n"
@@ -195,20 +194,8 @@ def extract_responses(archive: bytes) -> list[dict]:
 WARC_ROUNDTRIP_SCHEMA = "doc_id long, warc_ts string, extracted_text string"
 
 
-def _warc_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        groups: dict[int, list[tuple[int, str]]] = {}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            groups.setdefault(
-                int(doc_id) // _DOCS_PER_ARCHIVE, []
-            ).append((int(doc_id), text))
-        rows: list[dict] = []
-        for gid, pages in groups.items():
-            archive = build_archive(pages, gzip_members=(gid % 2 == 0))
-            rows.extend(extract_responses(archive))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "warc_ts", "extracted_text"]
-        )
+def _warc_rows(gid: int, pages: list) -> list[dict]:
+    return extract_responses(build_archive(pages, gzip_members=(gid % 2 == 0)))
 
 
 def build_wet(converted: list[tuple[int, str, str]],
@@ -272,34 +259,22 @@ def warc_roundtrip(docs: DataFrame,
     shuffle beyond it; per-row output is independent of how rows fall
     into Arrow batches, because an archive is a pure function of the
     rows grouped into it and extraction is per-record."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _warc_iter, WARC_ROUNDTRIP_SCHEMA
+    return map_groups(
+        spread(docs, ["doc_id", "text"], num_partitions),
+        _DOCS_PER_ARCHIVE, _warc_rows, WARC_ROUNDTRIP_SCHEMA,
     )
 
 
-def _wet_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        groups: dict[int, list[tuple[int, str]]] = {}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            groups.setdefault(
-                int(doc_id) // _DOCS_PER_ARCHIVE, []
-            ).append((int(doc_id), text))
-        rows: list[dict] = []
-        for gid, pages in groups.items():
-            # the FULL loop: WARC write → record parse → HTTP
-            # unwrap → kernel extraction → WET write → WET parse.
-            # Equality with the documents oracle gates every hop.
-            archive = build_archive(pages, gzip_members=(gid % 2 == 0))
-            extracted = extract_responses(archive)
-            wet = build_wet(
-                [(r["doc_id"], r["warc_ts"], r["extracted_text"])
-                 for r in extracted],
-                gzip_members=(gid % 2 == 1),
-            )
-            rows.extend(parse_wet(wet))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "warc_ts", "extracted_text"]
-        )
+def _wet_rows(gid: int, pages: list) -> list[dict]:
+    # the FULL loop: WARC write → record parse → HTTP unwrap → kernel
+    # extraction → WET write → WET parse. Equality with the documents
+    # oracle gates every hop.
+    extracted = _warc_rows(gid, pages)
+    return parse_wet(build_wet(
+        [(r["doc_id"], r["warc_ts"], r["extracted_text"])
+         for r in extracted],
+        gzip_members=(gid % 2 == 1),
+    ))
 
 
 def wet_roundtrip(docs: DataFrame,
@@ -309,8 +284,9 @@ def wet_roundtrip(docs: DataFrame,
     warc_roundtrip with the WET serialization loop added on top; the
     gzip-member variant flips parity vs the WARC leg so both framings
     are exercised on each side."""
-    return _spread(docs, num_partitions).mapInPandas(
-        _wet_iter, WARC_ROUNDTRIP_SCHEMA
+    return map_groups(
+        spread(docs, ["doc_id", "text"], num_partitions),
+        _DOCS_PER_ARCHIVE, _wet_rows, WARC_ROUNDTRIP_SCHEMA,
     )
 
 
@@ -448,28 +424,12 @@ CAPTURES_SCHEMA = (
     "capture_id long, doc_id long, kind string, warc_ts string, "
     "digest string, extracted_text string"
 )
-_CAPTURE_COLS = [
-    "capture_id", "doc_id", "kind", "warc_ts", "digest",
-    "extracted_text",
-]
 
 
-def _captures_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        groups: dict[int, list[tuple[int, str]]] = {}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            groups.setdefault(
-                int(doc_id) // _DOCS_PER_ARCHIVE, []
-            ).append((int(doc_id), text))
-        rows: list[dict] = []
-        for gid, pages in groups.items():
-            archive = build_crawl_archive(
-                pages, gzip_members=(gid % 2 == 0)
-            )
-            rows.extend(extract_captures(archive))
-        yield pd.DataFrame(rows, columns=_CAPTURE_COLS)
+def _captures_rows(gid: int, pages: list) -> list[dict]:
+    return extract_captures(
+        build_crawl_archive(pages, gzip_members=(gid % 2 == 0))
+    )
 
 
 def resolve_revisits(docs: DataFrame,
@@ -490,8 +450,9 @@ def resolve_revisits(docs: DataFrame,
     final capture-id attach that the output itself requires."""
     import pyspark.sql.functions as F
 
-    caps = _spread(docs, num_partitions).mapInPandas(
-        _captures_iter, CAPTURES_SCHEMA
+    caps = map_groups(
+        spread(docs, ["doc_id", "text"], num_partitions),
+        _DOCS_PER_ARCHIVE, _captures_rows, CAPTURES_SCHEMA,
     ).localCheckpoint(eager=False)
     resp = caps.where(F.col("kind") == "response")
     winners = (
@@ -672,25 +633,12 @@ RECRAWL_SCHEMA = (
     "doc_id long, http_status int, warc_ts string, etag string, "
     "new_text string"
 )
-_RECRAWL_COLS = ["doc_id", "http_status", "warc_ts", "etag", "new_text"]
 
 
-def _recrawl_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        groups: dict[int, list[tuple[int, str]]] = {}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            groups.setdefault(
-                int(doc_id) // _DOCS_PER_ARCHIVE, []
-            ).append((int(doc_id), text))
-        rows: list[dict] = []
-        for gid, pages in groups.items():
-            archive = build_recrawl_archive(
-                pages, gzip_members=(gid % 2 == 0)
-            )
-            rows.extend(extract_recrawl(archive))
-        yield pd.DataFrame(rows, columns=_RECRAWL_COLS)
+def _recrawl_rows(gid: int, pages: list) -> list[dict]:
+    return extract_recrawl(
+        build_recrawl_archive(pages, gzip_members=(gid % 2 == 0))
+    )
 
 
 def process_recrawl(docs: DataFrame,
@@ -708,8 +656,9 @@ def process_recrawl(docs: DataFrame,
     rows never touch the state table)."""
     import pyspark.sql.functions as F
 
-    recs = _spread(docs, num_partitions).mapInPandas(
-        _recrawl_iter, RECRAWL_SCHEMA
+    recs = map_groups(
+        spread(docs, ["doc_id", "text"], num_partitions),
+        _DOCS_PER_ARCHIVE, _recrawl_rows, RECRAWL_SCHEMA,
     )
     fetched = recs.where(F.col("http_status") != 304).select(
         "doc_id", "http_status", "warc_ts",

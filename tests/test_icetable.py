@@ -767,13 +767,15 @@ def _receiver_attrs(node) -> set[str]:
             return names
 
 
-@pytest.mark.parametrize("module", ["icetable", "pages"])
+@pytest.mark.parametrize("module", ["icetable", "pages", "query_catalog"])
 def test_parquet_reads_carry_a_schema(module):
     from pathlib import Path
 
-    import pdf_extractor_spark.sources as sources
+    import pdf_extractor_spark
 
-    path = Path(sources.__file__).parent / f"{module}.py"
+    package = "functions" if module == "query_catalog" else "sources"
+    path = Path(pdf_extractor_spark.__file__).parent / package
+    path = path / f"{module}.py"
     tree = ast.parse(path.read_text(encoding="utf-8"))
     allowed = {
         id(n)
@@ -798,3 +800,25 @@ def test_parquet_reads_carry_a_schema(module):
                 inferring.append(node.lineno)
     assert reads, f"{module}: no parquet read found"
     assert inferring == [], f"{module}: reads without a schema at {inferring}"
+
+
+def test_catalog_table_reads_launch_no_job(spark):
+    """``query_catalog._t`` reads each sf0.001 test table under the
+    schema Spark infers for it, but builds the frame without running
+    the inference job."""
+    from pdf_extractor_spark.functions.query_catalog import _t
+
+    from .test_plans import SF
+
+    sc = spark.sparkContext
+    names = sorted(f[: -len(".parquet")] for f in os.listdir(SF))
+    assert len(names) == 10
+    sc.setJobGroup("catalog-reads", "query_catalog._t")
+    try:
+        schemas = {n: _t(spark, SF, n).schema for n in names}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup("catalog-reads")
+    for n in names:
+        assert schemas[n] == spark.read.parquet(f"{SF}/{n}.parquet").schema

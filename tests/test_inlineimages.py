@@ -9,7 +9,7 @@ import pandas as pd
 
 from pdf_extractor_spark.functions.inlineimages import (
     _fixture_jpeg,
-    _inline_iter,
+    _inline_rows,
     wrap_html_inline_images,
 )
 from pdf_extractor_spark.operators.html_extract import harvest_images
@@ -17,12 +17,10 @@ from pdf_extractor_spark.operators.jpeg_codec import jpeg_decode
 
 
 def _rows(doc_ids):
-    docs = pd.DataFrame({
-        "doc_id": np.asarray(doc_ids, dtype=np.int64),
-        "text": ["lorem ipsum dolor"] * len(doc_ids),
-    })
-    return pd.concat(list(_inline_iter(iter([docs])))).reset_index(
-        drop=True
+    return pd.DataFrame(
+        [row for d in doc_ids
+         for row in _inline_rows(d, "lorem ipsum dolor")],
+        columns=["doc_id", "alt", "width", "height", "gray", "y_sum"],
     )
 
 

@@ -250,6 +250,28 @@ def test_extract_to_table_runs_one_python_wave(
     assert wide == [want]
 
 
+def test_decode_leg_runs_one_python_wave(spark):
+    """A multimodal decode leg takes the default fan-out too: its
+    Python stages (payload synthesis, then decode) run one task per
+    task slot. The input is one partition, so the scan stage has a
+    single task and the spread stage is the only wider one."""
+    from pdf_extractor_spark.functions.multimodal import decode_image_meta
+
+    sc = spark.sparkContext
+    docs = spark.range(24, numPartitions=1).withColumnRenamed(
+        "id", "doc_id"
+    )
+    group = "decode-one-wave"
+    sc.setJobGroup(group, "decode_image_meta task count")
+    try:
+        assert len(decode_image_meta(docs).collect()) == 24
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.defaultParallelism > 1
+    wide = [n for n in _stage_task_counts(spark, group) if n > 1]
+    assert wide == [sc.defaultParallelism]
+
+
 def test_reused_worker_keeps_its_zip_directory(spark):
     """Once a Python worker has imported the package, its tasks stop
     re-reading pyspark.zip's central directory (``zipguard``): after
