@@ -47,7 +47,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 QUANT = 1 << 20  # power-of-two quantization scale: floor(x * QUANT)
@@ -457,40 +457,6 @@ def ivf_probe_topk(
         assigned, codebook, query_vec, k=k, n_probe=n_probe,
         exclude_id=exclude_id,
     )
-
-
-def save_ivf_index(
-    assigned: DataFrame,
-    codebook: list[tuple[int, list[int]]],
-    path: str,
-) -> None:
-    """Persist an :func:`ivf_index` with the layout that makes probes
-    partition-pruned scans: vectors written ``partitionBy(cell_id)``
-    (each cell its own directory — a probe of 2 cells reads 2/n_cells
-    of the bytes, enforced by the planner, not a filter), codebook as
-    a one-row-per-cell parquet sidecar (tiny, driver-loadable)."""
-    assigned.write.partitionBy("cell_id").mode("overwrite").parquet(
-        f"{path}/vectors"
-    )
-    spark = assigned.sparkSession
-    spark.createDataFrame(
-        [(cid, c) for cid, c in codebook], "cell_id int, cxq array<bigint>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
-
-
-def load_ivf_index(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, list[tuple[int, list[int]]]]:
-    """Reload a saved index: returns ``(assigned, codebook)`` in the
-    shape :func:`ivf_search` consumes. ``assigned`` keeps cell_id as a
-    partition column, so ``where(cell_id.isin(probe))`` prunes
-    directories."""
-    assigned = spark.read.parquet(f"{path}/vectors")
-    codebook = sorted(
-        (r["cell_id"], [int(v) for v in r["cxq"]])
-        for r in spark.read.parquet(f"{path}/codebook").collect()
-    )
-    return assigned, codebook
 
 
 # -------------------------------------------------------------- near-dup

@@ -60,16 +60,8 @@ def _classify_token(t: str) -> tuple[bool, bool, bool]:
     )
 
 
-def is_section_number(text: str) -> bool:
-    return bool(SECTION_NUMBER_RE.match(text))
-
-
 def is_page_number(text: str) -> bool:
     return bool(PAGE_NUMBER_RE.match(text))
-
-
-def is_footnote_marker(text: str) -> bool:
-    return bool(FOOTNOTE_MARKER_RE.match(text))
 
 
 def detect_repeating_elements(

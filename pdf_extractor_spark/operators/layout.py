@@ -56,8 +56,8 @@ def group_lines(col_words: pd.DataFrame, line_threshold: float) -> pd.DataFrame:
 
 def column_texts(words: Words, cfg) -> list[str]:
     """Fused C1 → C2 → O1/O2 → W2 body serialization on raw arrays —
-    byte-identical to the detect_columns/group_lines/
-    join_words_with_spacing pandas chain (asserted in tests), minus the
+    byte-identical to the detect_columns/group_lines/join_tokens
+    pandas chain (asserted in tests), minus the
     per-page pandas object overhead that dominates ~10²-word frames.
     Returns one serialized string per detected column."""
     import numpy as np

@@ -171,32 +171,6 @@ def png_encode(
     )
 
 
-def png_encode_palette(
-    indices: np.ndarray, palette: np.ndarray,
-    interlace: bool = False,
-) -> bytes:
-    """(H, W) uint8 index array + (N, 3) uint8 palette → color-type-3
-    PNG with a PLTE chunk."""
-    if indices.dtype != np.uint8 or indices.ndim != 2:
-        raise PngError("palette encoder expects uint8 (H, W) indices")
-    if palette.ndim != 2 or palette.shape[1] != 3:
-        raise PngError("palette must be (N, 3)")
-    if int(indices.max(initial=0)) >= palette.shape[0]:
-        raise PngError("index exceeds palette size")
-    h, w = indices.shape
-    ihdr = struct.pack(
-        ">IIBBBBB", w, h, 8, 3, 0, 0, 1 if interlace else 0
-    )
-    body = _serialize_scanlines(indices[:, :, None], 1, interlace)
-    return (
-        SIGNATURE
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-        + _chunk(b"IDAT", zlib.compress(body, 6))
-        + _chunk(b"IEND", b"")
-    )
-
-
 def _pass_dims(w: int, h: int, p: tuple[int, int, int, int]):
     x0, y0, dx, dy = p
     return (w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy

@@ -11,9 +11,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
-import pandas as pd
-
 from ..config import ExtractConfig
 from . import bidi as _bidi
 from .charclass import JP_PARTICLES, JP_PUNCT, LINE_TERMINATORS, is_japanese_char
@@ -33,17 +30,6 @@ _BULLET_PREFIXES = ("-", "•", "・", "*", "◦", "‣")
 _SECTION_LINE_RE = re.compile(
     r"^(?:\d+(?:\.\d+)*\.?|\(\d+\)|\d+\)|[①-⑳]|第\d+[章条項節款目]|[一二三四五六七八九十]+、)"
 )
-
-
-def join_words_with_spacing(line: pd.DataFrame, cfg: ExtractConfig) -> str:
-    """W2 over a DataFrame line — thin wrapper around
-    :func:`join_tokens` (the array hot path)."""
-    return join_tokens(
-        line["text"].to_numpy(),
-        line["x0"].to_numpy(),
-        line["x1"].to_numpy(),
-        cfg,
-    )
 
 
 def join_tokens(texts, x0s, x1s, cfg: ExtractConfig) -> str:

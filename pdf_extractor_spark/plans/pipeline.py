@@ -378,35 +378,3 @@ def metrics_from_extracted(extracted: DataFrame) -> DataFrame:
         F.first("host").alias("host"),
         F.max("attempt").alias("attempt"),
     )
-
-
-def eta_from_metrics(metrics: DataFrame, n_remaining: int) -> float:
-    """F12 ETA (reference ``large_doc_extractor.py:302-314``: mean
-    batch time × remaining batches): estimate seconds to finish
-    ``n_remaining`` documents from the completed partitions' metrics.
-
-    Throughput model: partitions run concurrently, so effective
-    docs/sec = Σ n_docs ÷ (Σ wall_ms / n_partitions / 1000). The
-    metrics frame is one row per partition — the aggregate is a single
-    tiny driver scalar, not a data-path collect."""
-    row = metrics.agg(
-        F.sum("n_docs").alias("docs"),
-        F.sum("wall_ms").alias("wall_ms"),
-        F.count("*").alias("parts"),
-    ).first()
-    if not row or not row["docs"] or not row["wall_ms"]:
-        return 0.0
-    wall_sec = row["wall_ms"] / row["parts"] / 1000.0
-    docs_per_sec = row["docs"] / wall_sec if wall_sec > 0 else 0.0
-    return n_remaining / docs_per_sec if docs_per_sec > 0 else 0.0
-
-
-def format_eta(eta_seconds: float) -> str:
-    """Reference ETA formatting thresholds (``:309-314``)."""
-    if eta_seconds <= 0:
-        return ""
-    if eta_seconds < 60:
-        return f"(ETA: {eta_seconds:.0f}s)"
-    if eta_seconds < 3600:
-        return f"(ETA: {eta_seconds / 60:.1f}m)"
-    return f"(ETA: {eta_seconds / 3600:.1f}h)"

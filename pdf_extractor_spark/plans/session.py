@@ -65,10 +65,12 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # bucketed-table home (plans/bucketing.py) — kept out of the
-        # repo tree and suffixed per user+process so concurrent runs
-        # and other users never collide; on a cluster this is the
-        # metastore warehouse
+        # Spark creates the default database's directory here on the
+        # first catalog access, and saved tables (plans/bucketing.py)
+        # land here: keep it out of the repo tree (and of the working
+        # directory), suffixed per user+process so
+        # concurrent runs and other users never collide; on a cluster
+        # this is the metastore warehouse
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

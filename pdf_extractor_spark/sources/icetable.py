@@ -39,6 +39,11 @@ Iceberg, Delta, Hudi — shares, reimplemented over plain files):
   written by Spark, so a reader takes the schema from one footer
   (pyarrow, no data read) instead of letting Spark run a
   schema-inference job per read.
+- **Writes are schema-enforced**: an append or merge whose frame
+  differs from the table in column names, order or types raises
+  before it writes a data file (Delta Lake's schema enforcement), so
+  every data file of a table shares one schema and the one-footer
+  read above is sound.
 
 Deliberately minimal: single table version lineage (optimistic
 last-writer-wins with a staleness check), no partition spec (the
@@ -62,6 +67,10 @@ from pyspark.sql.types import StructType
 
 class CommitConflict(RuntimeError):
     """The table advanced underneath an in-flight commit."""
+
+
+class SchemaMismatch(ValueError):
+    """A write's schema differs from the table's."""
 
 
 def _meta_dir(path: str) -> str:
@@ -212,13 +221,16 @@ def append(
     df: DataFrame, path: str, stat_cols: list[str]
 ) -> int | None:
     """Append the rows of ``df`` and return the new snapshot id, or
-    None (nothing committed) when ``df`` has no rows."""
+    None (nothing committed) when ``df`` has no rows. A ``df`` whose
+    schema differs from the table's raises :class:`SchemaMismatch`
+    before any file is written."""
     parent = current_snapshot_id(path)
+    manifest = read_snapshot(path, parent)["manifest"]
+    _check_schema(df, manifest)
     entries = _drop_empty(_write_data_files(df, path, stat_cols))
     if not entries:
         return None
-    manifest = read_snapshot(path, parent)["manifest"] + entries
-    return _commit(path, manifest, parent, "append")
+    return _commit(path, manifest + entries, parent, "append")
 
 
 def _overlaps(stats: dict | None, lo, hi) -> bool:
@@ -269,13 +281,32 @@ def plan_files(
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
+def _footer_schema(fpath: str) -> StructType:
+    """The frame schema Spark wrote into a data file's footer."""
+    footer = pq.read_metadata(fpath).metadata
+    return StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
+
+
 def _read(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Read data files under the schema Spark wrote into the first
     one's footer: a footer read here, instead of the schema-inference
     Spark job that ``spark.read.parquet`` launches without a schema."""
-    footer = pq.read_metadata(paths[0]).metadata
-    schema = StructType.fromJson(json.loads(footer[_SPARK_SCHEMA_KEY]))
-    return spark.read.schema(schema).parquet(*paths)
+    return spark.read.schema(_footer_schema(paths[0])).parquet(*paths)
+
+
+def _check_schema(df: DataFrame, manifest: list[dict]) -> None:
+    """Raise :class:`SchemaMismatch` unless ``df`` has the table's
+    column names, order and types. Nullability is not compared: a
+    footer keeps the nullability of the frame that wrote it, and a
+    literal column is non-nullable. The table's schema is read from
+    one footer, as :func:`_read` does, so the check runs no Spark
+    job."""
+    if not manifest:
+        return
+    want = _footer_schema(manifest[0]["path"]).simpleString()
+    got = df.schema.simpleString()
+    if got != want:
+        raise SchemaMismatch(f"table has {want}, write has {got}")
 
 
 def read_table(
@@ -321,9 +352,12 @@ def merge_upsert(
     written, and all other files carry over BY REFERENCE. One atomic
     snapshot flip commits untouched + survivors + incoming; a crash
     before it leaves only unreferenced files for
-    :func:`remove_orphan_files`."""
+    :func:`remove_orphan_files`. A ``df`` whose schema differs from
+    the table's raises :class:`SchemaMismatch` before any file is
+    written."""
     parent = current_snapshot_id(path)
     manifest = read_snapshot(path)["manifest"]
+    _check_schema(df, manifest)
     incoming = _drop_empty(_write_data_files(df, path, stat_cols))
     if not incoming:
         return None
@@ -675,43 +709,6 @@ def remove_orphan_files(
             shutil.rmtree(f)
             counts["staging_removed"] += 1
     return counts
-
-
-# ------------------------------------------------- schema evolution
-#
-# Additive schema evolution, the table-format feature that makes
-# "re-extract the whole corpus to add one column" unnecessary: new
-# files carry the new column, OLD FILES ARE NOT REWRITTEN, and
-# readers surface the union schema with nulls for pre-evolution
-# rows. Parquet is self-describing per file, so the union is
-# computed at read time (mergeSchema); the manifest needs no schema
-# registry for the additive case. Dropping or retyping columns is
-# NOT supported — those need a registry with field ids (the full
-# Iceberg design); the omission is documented scope, not oversight.
-
-
-def read_table_merged(
-    spark: SparkSession,
-    path: str,
-    predicate: tuple[str, str, object] | None = None,
-    snap_id: int | None = None,
-) -> DataFrame:
-    """:func:`read_table` with union-schema semantics across
-    evolution boundaries: files written before a column existed
-    contribute nulls for it."""
-    files = plan_files(path, predicate, snap_id)
-    manifest = read_snapshot(path, snap_id)["manifest"]
-    if not manifest:
-        raise ValueError("empty table has no schema source")
-    if not files:
-        return (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[e["path"] for e in manifest])
-            .limit(0)
-        )
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[e["path"] for e in files]
-    )
 
 
 def count_rows(

@@ -15,7 +15,6 @@ nothing new commits no snapshot.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,10 +23,6 @@ from . import icetable
 PAGES_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
-
-
-def pages_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-    return spark.createDataFrame(pdf, schema=PAGES_SCHEMA_DDL)
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:

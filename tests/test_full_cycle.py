@@ -24,7 +24,7 @@ from pdf_extractor_spark.functions.recipe import pretraining_filter
 from pdf_extractor_spark.functions.sampling import holdout_split_report
 from pdf_extractor_spark.sources.icetable import read_table
 from pdf_extractor_spark.sources.pages import (
-    pages_from_pandas,
+    PAGES_SCHEMA_DDL,
     read_pages,
     run_extraction_job,
     write_pages,
@@ -40,7 +40,7 @@ def extracted(spark, tmp_path_factory):
     dup = frame.iloc[[0]].copy()
     dup["url"] = ["https://mirror.example.org/copy-of-first"]
     frame = pd.concat([frame, dup], ignore_index=True)
-    pages = pages_from_pandas(spark, frame)
+    pages = spark.createDataFrame(frame, PAGES_SCHEMA_DDL)
     write_pages(pages, str(tmp / "pages"))
     run_extraction_job(
         spark,

@@ -9,6 +9,7 @@ import os
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from pdf_extractor_spark.sources import icetable as it
 
@@ -153,7 +154,7 @@ class TestExtractToTable:
             extract_to_table,
         )
         from pdf_extractor_spark.sources.pages import (
-            pages_from_pandas,
+            PAGES_SCHEMA_DDL,
         )
 
         path = str(tmp_path / "extracted")
@@ -161,15 +162,15 @@ class TestExtractToTable:
         w1, w2 = frame.iloc[:10], frame.iloc[10:20]
 
         s1 = extract_to_table(
-            spark, pages_from_pandas(spark, w1), path, 2
+            spark, spark.createDataFrame(w1, PAGES_SCHEMA_DDL), path, 2
         )
         assert s1 == 1
         assert it.read_table(spark, path).count() == 10
 
         # second wave: only the new urls extract, one new snapshot
-        both = pages_from_pandas(
-            spark,
+        both = spark.createDataFrame(
             __import__("pandas").concat([w1, w2], ignore_index=True),
+            PAGES_SCHEMA_DDL,
         )
         s2 = extract_to_table(spark, both, path, 2)
         assert s2 == 2
@@ -185,7 +186,7 @@ class TestExtractToTable:
         # snapshot; time travel to s2 still shows the old commit
         s4 = extract_to_table(
             spark,
-            pages_from_pandas(spark, w1),
+            spark.createDataFrame(w1, PAGES_SCHEMA_DDL),
             path,
             2,
             upsert=True,
@@ -230,11 +231,12 @@ class TestOnePassUpsert:
     ):
         from pdf_extractor_spark.fixtures.corpus import build_pages_frame
         from pdf_extractor_spark.plans import pipeline
-        from pdf_extractor_spark.sources.pages import pages_from_pandas
+        from pdf_extractor_spark.sources.pages import PAGES_SCHEMA_DDL
 
         path = str(tmp_path / "extracted")
         w1 = build_pages_frame().iloc[:10]
-        it.extract_to_table(spark, pages_from_pandas(spark, w1), path, 2)
+        pages = spark.createDataFrame(w1, PAGES_SCHEMA_DDL)
+        it.extract_to_table(spark, pages, path, 2)
         real = pipeline.extract_pages
         accs = []
 
@@ -244,9 +246,7 @@ class TestOnePassUpsert:
             return df
 
         monkeypatch.setattr(pipeline, "extract_pages", counted_extract)
-        it.extract_to_table(
-            spark, pages_from_pandas(spark, w1), path, 2, upsert=True
-        )
+        it.extract_to_table(spark, pages, path, 2, upsert=True)
         assert [a.value for a in accs] == [10]
         assert it.read_table(spark, path).count() == 10
 
@@ -260,18 +260,22 @@ class TestOnePassExtract:
         import pandas as pd
 
         from pdf_extractor_spark.fixtures.corpus import build_pages_frame
-        from pdf_extractor_spark.sources.pages import pages_from_pandas
+        from pdf_extractor_spark.sources.pages import PAGES_SCHEMA_DDL
 
         path = str(tmp_path / "extracted")
         frame = build_pages_frame()
         w1 = frame.iloc[:10]
         both = pd.concat([w1, frame.iloc[10:20]], ignore_index=True)
 
-        pages, acc = _counted(spark, pages_from_pandas(spark, w1))
+        pages, acc = _counted(
+            spark, spark.createDataFrame(w1, PAGES_SCHEMA_DDL)
+        )
         assert it.extract_to_table(spark, pages, path, 2) == 1
         assert acc.value == 10
 
-        pages, acc = _counted(spark, pages_from_pandas(spark, both))
+        pages, acc = _counted(
+            spark, spark.createDataFrame(both, PAGES_SCHEMA_DDL)
+        )
         assert it.extract_to_table(spark, pages, path, 2) == 2
         assert acc.value == 20
         assert it.read_table(spark, path).count() == 20
@@ -347,13 +351,15 @@ class TestSchemaCarryingReads:
     def test_read_pages_launches_no_job(self, spark, tmp_path):
         from pdf_extractor_spark.fixtures.corpus import build_pages_frame
         from pdf_extractor_spark.sources.pages import (
-            pages_from_pandas,
+            PAGES_SCHEMA_DDL,
             read_pages,
             write_pages,
         )
 
         src = str(tmp_path / "pages")
-        write_pages(pages_from_pandas(spark, build_pages_frame()), src)
+        write_pages(
+            spark.createDataFrame(build_pages_frame(), PAGES_SCHEMA_DDL), src
+        )
         assert _jobs_run_by(spark, lambda: read_pages(spark, src)) == []
         assert read_pages(spark, src).count() == len(build_pages_frame())
 
@@ -415,25 +421,36 @@ class TestMaintenance:
         assert len(it.snapshot_log(path)) == 1
 
 
-class TestSchemaEvolution:
-    def test_added_column_nulls_for_old_files(self, spark, tmp_path):
+class TestSchemaEnforcement:
+    @pytest.mark.parametrize("reshape", [
+        lambda df: df.withColumn("lang", F.lit("en")),
+        lambda df: df.select("doc_id", "text", "host"),
+        lambda df: df.withColumn("doc_id", F.col("doc_id").cast("int")),
+    ], ids=["wider", "reordered", "retyped"])
+    def test_mismatched_write_raises_and_commits_nothing(
+        self, spark, tmp_path, reshape
+    ):
         path = str(tmp_path / "t")
         s1 = it.create_table(_df(spark, 0, 10), path, STATS)
-        wide = spark.createDataFrame(
-            [(i, "b.com", f"text {i}", "en") for i in range(10, 20)],
-            "doc_id long, host string, text string, lang string",
-        ).coalesce(1)
-        it.append(wide, path, STATS)
-        got = it.read_table_merged(spark, path)
-        assert set(got.columns) == {"doc_id", "host", "text", "lang"}
-        assert got.count() == 20
-        # pre-evolution rows: lang is null; post: populated
-        assert got.where("lang is null").count() == 10
-        assert got.where("lang = 'en'").count() == 10
-        # old files were NOT rewritten
-        assert it.read_table(spark, path, snap_id=s1).columns == [
-            "doc_id", "host", "text",
-        ]
+        files = sorted(os.listdir(it._data_dir(path)))
+        bad = reshape(_df(spark, 10, 20))
+        with pytest.raises(it.SchemaMismatch):
+            it.append(bad, path, STATS)
+        with pytest.raises(it.SchemaMismatch):
+            it.merge_upsert(spark, bad, path, "doc_id", STATS)
+        assert it.current_snapshot_id(path) == s1
+        assert sorted(os.listdir(it._data_dir(path))) == files
+        assert it.read_table(spark, path).count() == 10
+
+    def test_nullability_is_not_compared(self, spark, tmp_path):
+        # a literal column is non-nullable; the table's is nullable
+        path = str(tmp_path / "t")
+        it.create_table(_df(spark, 0, 10), path, STATS)
+        it.append(
+            _df(spark, 10, 20).withColumn("host", F.lit("b.com")),
+            path, STATS,
+        )
+        assert it.read_table(spark, path).count() == 20
 
 
 class TestMetadataCount:
@@ -747,10 +764,7 @@ def test_commit_conflict_retry_succeeds(spark, tmp_path):
 
 # Every parquet read of the table and pages sources names its schema
 # (``.schema(...)`` on the reader): without one, Spark launches a
-# schema-inference job on every read. ``read_table_merged`` is the one
-# exception: it needs the union of the files' schemas, which only
-# inference (``mergeSchema``) gives.
-INFERRING_READS_ALLOWED = {"read_table_merged"}
+# schema-inference job on every read.
 
 
 def _receiver_attrs(node) -> set[str]:
@@ -777,20 +791,12 @@ def test_parquet_reads_carry_a_schema(module):
     path = Path(pdf_extractor_spark.__file__).parent / package
     path = path / f"{module}.py"
     tree = ast.parse(path.read_text(encoding="utf-8"))
-    allowed = {
-        id(n)
-        for fn in ast.walk(tree)
-        if isinstance(fn, ast.FunctionDef)
-        and fn.name in INFERRING_READS_ALLOWED
-        for n in ast.walk(fn)
-    }
     reads, inferring = 0, []
     for node in ast.walk(tree):
         if not (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
             and node.func.attr == "parquet"
-            and id(node) not in allowed
         ):
             continue
         chain = _receiver_attrs(node.func.value)

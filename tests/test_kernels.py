@@ -12,11 +12,11 @@ from pdf_extractor_spark.operators.charclass import (
     text_advance,
 )
 from pdf_extractor_spark.operators.filters import (
+    FOOTNOTE_MARKER_RE,
+    SECTION_NUMBER_RE,
     detect_repeating_elements,
     filter_metadata,
-    is_footnote_marker,
     is_page_number,
-    is_section_number,
 )
 from pdf_extractor_spark.operators.html_extract import (
     classify_blocks,
@@ -32,7 +32,7 @@ from pdf_extractor_spark.operators.layout import (
 from pdf_extractor_spark.operators.spacing import (
     cleanup_text,
     join_lines,
-    join_words_with_spacing,
+    join_tokens,
 )
 from pdf_extractor_spark.operators.words import WORD_COLUMNS, Words
 
@@ -120,7 +120,9 @@ def test_spacing_decision_table(gap, a, b, expect):
             (b, x1a + gap, x1a + gap + 20, 100, 112, 12, 1),
         ]
     )
-    assert join_words_with_spacing(w, CFG) == expect
+    assert join_tokens(
+        w["text"].to_numpy(), w["x0"].to_numpy(), w["x1"].to_numpy(), CFG
+    ) == expect
 
 
 def test_join_lines_particle_and_comma():
@@ -155,7 +157,7 @@ def test_cleanup_chain():
     ],
 )
 def test_section_number_predicate(text, expect):
-    assert is_section_number(text) is expect
+    assert bool(SECTION_NUMBER_RE.match(text)) is expect
 
 
 @pytest.mark.parametrize(
@@ -179,7 +181,7 @@ def test_page_number_predicate(text, expect):
     ],
 )
 def test_footnote_marker_predicate(text, expect):
-    assert is_footnote_marker(text) is expect
+    assert bool(FOOTNOTE_MARKER_RE.match(text)) is expect
 
 
 def test_repeating_header_detection_needs_three_pages():

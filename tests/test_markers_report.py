@@ -110,11 +110,11 @@ class TestCsvReport:
         from pdf_extractor_spark.fixtures.corpus import build_pages_frame
         from pdf_extractor_spark.plans.pipeline import extract_pages
         from pdf_extractor_spark.sources.pages import (
-            pages_from_pandas,
+            PAGES_SCHEMA_DDL,
             write_report_csv,
         )
 
-        pages = pages_from_pandas(spark, build_pages_frame())
+        pages = spark.createDataFrame(build_pages_frame(), PAGES_SCHEMA_DDL)
         extracted = extract_pages(pages, num_partitions=4)
         out = str(tmp_path / "report_csv")
         write_report_csv(extracted, out)
@@ -133,11 +133,11 @@ class TestHtmlReport:
         from pdf_extractor_spark.fixtures.corpus import build_pages_frame
         from pdf_extractor_spark.plans.pipeline import extract_pages
         from pdf_extractor_spark.sources.pages import (
-            pages_from_pandas,
+            PAGES_SCHEMA_DDL,
             write_report_html,
         )
 
-        pages = pages_from_pandas(spark, build_pages_frame())
+        pages = spark.createDataFrame(build_pages_frame(), PAGES_SCHEMA_DDL)
         extracted = extract_pages(pages, num_partitions=4)
         out = tmp_path / "report.html"
         write_report_html(extracted, str(out), top_n=5)

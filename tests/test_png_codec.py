@@ -77,6 +77,21 @@ def _chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
+def png_encode_palette(indices: np.ndarray, palette: np.ndarray) -> bytes:
+    """(H, W) uint8 index array + (N, 3) uint8 palette → color-type-3
+    PNG with a PLTE chunk, every row unfiltered: the decoder's palette
+    input."""
+    h, w = indices.shape
+    rows = b"".join(b"\x00" + row.tobytes() for row in indices)
+    return (
+        SIGNATURE
+        + _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0))
+        + _chunk(b"PLTE", palette.tobytes())
+        + _chunk(b"IDAT", zlib.compress(rows))
+        + _chunk(b"IEND", b"")
+    )
+
+
 class TestIndependentVector:
     def test_hand_assembled_png_decodes(self):
         """2x2 RGB image built chunk-by-chunk here (filters 0 and 2 by
@@ -185,10 +200,6 @@ class TestRejection:
         # color-type-3 stream WITHOUT its PLTE must fail loudly
         import numpy as np
 
-        from pdf_extractor_spark.operators.png_codec import (
-            png_encode_palette,
-        )
-
         pal = np.arange(48, dtype=np.uint8).reshape(16, 3)
         idx = (np.arange(30, dtype=np.uint8) % 16).reshape(5, 6)
         assert (png_decode(png_encode_palette(idx, pal))
@@ -205,10 +216,6 @@ class TestRejection:
 
     def test_palette_index_out_of_range_rejected(self):
         import numpy as np
-
-        from pdf_extractor_spark.operators.png_codec import (
-            png_encode_palette,
-        )
 
         pal = np.zeros((4, 3), dtype=np.uint8)
         idx = np.zeros((2, 2), dtype=np.uint8)

@@ -2,7 +2,7 @@
 kernels (SURVEY.md §7.2 stage 1 risk note).
 
 The fused array path in ``layout.column_texts`` replaced the
-detect_columns → group_lines → join_words_with_spacing pandas chain in
+detect_columns → group_lines → join_tokens pandas chain in
 the document kernel; the headline property here is byte-identity of the
 two implementations over arbitrary word geometries.
 """
@@ -22,7 +22,6 @@ from pdf_extractor_spark.operators.layout import (
 from pdf_extractor_spark.operators.spacing import (
     cleanup_text,
     join_tokens,
-    join_words_with_spacing,
 )
 from pdf_extractor_spark.operators.words import Words
 
@@ -88,13 +87,15 @@ def word_frames(draw, max_words: int = 40):
 
 def _unfused_column_texts(words: pd.DataFrame) -> list[str]:
     """The original pandas chain column_texts replaced (document.py
-    pre-fusion body), kept verbatim as the oracle."""
+    pre-fusion body), kept as the oracle; each line goes to
+    ``join_tokens`` as the pandas line wrapper passed it."""
     cols = detect_columns(words, CFG.column_gap_threshold)
     out = []
     for _cid, cw in cols.groupby("col_id", sort=True):
         lines = group_lines(cw, CFG.line_height_threshold)
         line_strs = [
-            join_words_with_spacing(lw, CFG)
+            join_tokens(lw["text"].to_numpy(), lw["x0"].to_numpy(),
+                        lw["x1"].to_numpy(), CFG)
             for _lid, lw in lines.groupby("line_id", sort=True)
         ]
         out.append("\n".join(line_strs))

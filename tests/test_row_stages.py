@@ -1,10 +1,14 @@
 """Row stages: the per-row Python stages of the catalog legs go through
 ``plans.pipeline.map_rows`` / ``map_groups`` after a ``spread``, and
-every doc-id spread sizes itself with ``fan_out``."""
+every doc-id spread sizes itself with ``fan_out``.
+
+The package's AST walk (:func:`package_modules`) also serves the
+reachability guard in ``test_reachability.py``."""
 
 from __future__ import annotations
 
 import ast
+import functools
 import pathlib
 
 import pytest
@@ -26,25 +30,37 @@ BATCH_KERNELS = {
 }
 
 
+@functools.cache
+def package_modules() -> dict[str, ast.Module]:
+    """Every package module, parsed once: path relative to the package
+    (``functions/dedup.py``) → its AST."""
+    return {
+        path.relative_to(PKG).as_posix():
+            ast.parse(path.read_text(encoding="utf-8"))
+        for path in sorted(PKG.rglob("*.py"))
+    }
+
+
 def _uses(attr: str, subdirs: tuple[str, ...]) -> list[tuple[str, str]]:
     """(module, top-level function or "<module>") for every use of
-    the attribute ``attr`` in the package modules under ``subdirs``."""
+    the attribute ``attr`` in the package modules under ``subdirs``
+    (``"."`` is the whole package)."""
     found = []
-    for sub in subdirs:
-        for path in sorted((PKG / sub).rglob("*.py")):
-            rel = path.relative_to(PKG).as_posix()
-            tree = ast.parse(path.read_text(encoding="utf-8"))
-            owner = {
-                id(n): top.name
-                for top in tree.body
-                if isinstance(top, (ast.FunctionDef, ast.ClassDef))
-                for n in ast.walk(top)
-            }
-            found += [
-                (rel, owner.get(id(n), "<module>"))
-                for n in ast.walk(tree)
-                if isinstance(n, ast.Attribute) and n.attr == attr
-            ]
+    for rel, tree in package_modules().items():
+        if not any(sub == "." or rel.startswith(f"{sub}/")
+                   for sub in subdirs):
+            continue
+        owner = {
+            id(n): top.name
+            for top in tree.body
+            if isinstance(top, (ast.FunctionDef, ast.ClassDef))
+            for n in ast.walk(top)
+        }
+        found += [
+            (rel, owner.get(id(n), "<module>"))
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr == attr
+        ]
     return found
 
 

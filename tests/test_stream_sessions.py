@@ -8,7 +8,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from pdf_extractor_spark.sources.pages import pages_from_pandas
+from pdf_extractor_spark.sources.pages import PAGES_SCHEMA_DDL
 from pdf_extractor_spark.streaming.sessions import stream_host_sessions
 
 GAP = 100  # seconds, small for tests
@@ -66,7 +66,7 @@ class TestSessions:
             ("a.com", 500), ("a.com", 510),
             ("b.com", 0), ("b.com", 90),
         ]
-        pages_from_pandas(spark, _frame(rows)).write.mode(
+        spark.createDataFrame(_frame(rows), PAGES_SCHEMA_DDL).write.mode(
             "append"
         ).parquet(dirs["pages"])
         _drain(spark, dirs)
@@ -84,13 +84,14 @@ class TestSessions:
         # fresh query, same checkpoint) extends then closes it — the
         # closed row reflects BOTH waves and is emitted exactly once
         base = int(T0.timestamp())
-        pages_from_pandas(spark, _frame([("c.com", 0), ("c.com", 60)])
-                          ).write.mode("append").parquet(dirs["pages"])
+        spark.createDataFrame(
+            _frame([("c.com", 0), ("c.com", 60)]), PAGES_SCHEMA_DDL
+        ).write.mode("append").parquet(dirs["pages"])
         _drain(spark, dirs)
         assert _sessions(spark, dirs) == []  # still open
 
-        pages_from_pandas(
-            spark, _frame([("c.com", 130), ("c.com", 1000)])
+        spark.createDataFrame(
+            _frame([("c.com", 130), ("c.com", 1000)]), PAGES_SCHEMA_DDL
         ).write.mode("append").parquet(dirs["pages"])
         _drain(spark, dirs)
         got = _sessions(spark, dirs)
@@ -111,13 +112,13 @@ class TestSessions:
         # session at 100; batch 2 delivers 40 (older than the open
         # session's last) and 600 (the closer).
         base = int(T0.timestamp())
-        pages_from_pandas(spark, _frame([("d.com", 100)])).write.mode(
-            "append"
-        ).parquet(dirs["pages"])
+        spark.createDataFrame(
+            _frame([("d.com", 100)]), PAGES_SCHEMA_DDL
+        ).write.mode("append").parquet(dirs["pages"])
         _drain(spark, dirs)
         # batch 2: a LATE event (40) plus the closer (600)
-        pages_from_pandas(
-            spark, _frame([("d.com", 40), ("d.com", 600)])
+        spark.createDataFrame(
+            _frame([("d.com", 40), ("d.com", 600)]), PAGES_SCHEMA_DDL
         ).write.mode("append").parquet(dirs["pages"])
         _drain(spark, dirs)
         got = _sessions(spark, dirs)

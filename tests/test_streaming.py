@@ -17,8 +17,12 @@ from pdf_extractor_spark.sources.icetable import (
     current_snapshot_id,
     read_table,
 )
-from pdf_extractor_spark.sources.pages import pages_from_pandas
+from pdf_extractor_spark.sources.pages import PAGES_SCHEMA_DDL
 from pdf_extractor_spark.streaming.incremental import stream_extract
+
+
+def pages_from_pandas(spark, frame: pd.DataFrame):
+    return spark.createDataFrame(frame, PAGES_SCHEMA_DDL)
 
 
 @pytest.fixture()

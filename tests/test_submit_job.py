@@ -32,13 +32,13 @@ def test_spark_submit_pyfiles_extraction_and_resume(spark, tmp_path):
         read_table,
     )
     from pdf_extractor_spark.sources.pages import (
-        pages_from_pandas,
+        PAGES_SCHEMA_DDL,
         write_pages,
     )
 
     pdf = build_pages_frame()
     pages = str(tmp_path / "pages")
-    write_pages(pages_from_pandas(spark, pdf), pages)
+    write_pages(spark.createDataFrame(pdf, PAGES_SCHEMA_DDL), pages)
 
     zip_path = tmp_path / "engine.zip"
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:

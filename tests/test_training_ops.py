@@ -538,46 +538,6 @@ class TestIvfFastPathTwins:
         assert 0 < len(rows_a) <= 8
 
 
-class TestIvfPersistence:
-    def test_saved_index_probe_matches_and_prunes(self, emb, tmp_path):
-        """A reloaded index must serve queries identically to the
-        one-shot path, and the probe must be PARTITION pruning — the
-        scan reads only the probed cell directories."""
-        from pdf_extractor_spark.functions.similarity import (
-            ivf_index,
-            ivf_probe_topk,
-            ivf_search,
-            load_ivf_index,
-            save_ivf_index,
-        )
-
-        qvec = [
-            float(v)
-            for v in emb.where("vec_id = 0").select("embedding").first()[0]
-        ]
-        assigned, codebook = ivf_index(emb, 8)
-        path = str(tmp_path / "ivf")
-        save_ivf_index(assigned, codebook, path)
-
-        spark = emb.sparkSession
-        loaded, codebook2 = load_ivf_index(spark, path)
-        assert codebook2 == sorted(codebook)
-        got = ivf_search(
-            loaded, codebook2, qvec, k=10, n_probe=2, exclude_id=0
-        )
-        want = ivf_probe_topk(
-            emb, qvec, k=10, n_cells=8, n_probe=2, exclude_id=0
-        ).collect()
-        assert got.collect() == want
-
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        # the cell_id predicate must reach PartitionFilters, not a
-        # post-scan Filter over all partitions
-        assert "PartitionFilters: [cell_id" in plan.replace(
-            "PartitionFilters: [isnotnull(cell_id", "PartitionFilters: [cell_id"
-        ), plan[:2000]
-
-
 class TestUnigramCost:
     def test_hand_computed_costs(self, spark):
         import pandas as pd
